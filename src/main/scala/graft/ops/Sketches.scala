@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Maintained
 import graft.tables.VersionedTable
 
 /** Mergeable distinct-count sketch rollups — the incremental answer to
@@ -45,7 +46,8 @@ object Sketches {
     * read as permanently fresh against a source that never reaches
     * that version. */
   val EpochProp = "graft.sketch.epoch"
-  private val TxnApp = "graft-sketch:"
+  private val Family =
+    Maintained.Family(VersionProp, EpochProp, "graft-sketch:", 0L)
 
   /** One-shot rollup: per group, exact row count + HLL sketch of
     * `distinctCol`. */
@@ -61,189 +63,42 @@ object Sketches {
     rollup.withColumn("approx_distinct",
       call_function("hll_sketch_estimate", col("distinct_sketch")))
 
-  /** Per-TOUCHED-group recompute+replace — the retraction path for
-    * rollups whose state cannot subtract (HLL registers, CMS counters):
-    * the change feed names WHICH groups moved; only those groups
-    * re-aggregate from the pinned snapshot (`mkRollup` over a semi-join
-    * — AQE broadcasts the touched-key set when small, so the source
-    * never shuffles) and REPLACE-merge into the rollup; vanished groups
-    * tombstone FIRST so the replace's txn marker drives crash resume
-    * (the same ordering as GraftSql.mergeTouchedGroups, for the same
-    * reason). O(touched groups' rows), never O(table). None = NULL
-    * group keys in the slice (cannot merge) — the caller rebuilds. */
-  private def touchedGroupsRefresh(mv: VersionedTable, feed: DataFrame,
-      snapshot: DataFrame, mkRollup: DataFrame => DataFrame,
-      replaceCols: Seq[String], groupCols: Seq[String],
-      txnApp: String, head: Long): Option[Unit] = {
-    val touched = graft.tables.VersionedTable.persistAdaptive(
-      feed.select(groupCols.map(col): _*).distinct())
-    try {
-      // one full-consumption probe that also materializes the persist
-      val (nTouched, nNullKeys) =
-        graft.tables.GraftSql.probeDelta(touched, groupCols)
-      if (nTouched == 0L) Some(())
-      else if (nNullKeys > 0L) None
-      else {
-        val fresh = graft.tables.VersionedTable.persistAdaptive(mkRollup(
-          snapshot.join(touched, groupCols, "left_semi")))
-        try {
-          val gone = touched.join(
-            fresh.select(groupCols.map(col): _*), groupCols, "left_anti")
-          if (!gone.isEmpty) {
-            mv.merge(gone.withColumn(graft.ops.Merge.DeleteCol, lit(true)),
-              groupCols, txn = Some((txnApp + ":del", head)))
-            ()
-          }
-          mv.merge(fresh, groupCols, updateExprs = replaceCols.map(c =>
-            c -> ((_: Column, u: Column) => u)).toMap,
-            txn = Some((txnApp, head)))
-          Some(())
-        } finally { fresh.unpersist(); () }
-      }
-    } finally { touched.unpersist(); () }
-  }
-
-  /** Every maintained-rollup definition property across ALL families —
-    * exact MVs, join MVs, HLL/CMS/quantile rollups. A table carries AT
-    * MOST ONE live definition: each creator sweeps every OTHER family's
-    * props (and its own, harmlessly re-set just after) so a REPLACE can
-    * never leave two refreshers claiming the same table — otherwise
-    * REFRESH MATERIALIZED VIEW dispatches on the stale definition
-    * against the overwritten data. Epoch props deliberately survive:
-    * they namespace each family's txn-marker ledger across re-creates,
-    * and resetting one would let a later same-family re-create resume
-    * from a dead era's markers. */
-  private def definitionProps: Seq[String] = Seq(
-    graft.tables.GraftSql.MvSourceProp, graft.tables.GraftSql.MvGroupProp,
-    graft.tables.GraftSql.MvAggsProp, graft.tables.GraftSql.MvVersionProp,
-    graft.tables.GraftSql.MvWhereProp,
-    graft.plans.JoinMv.FactProp, graft.plans.JoinMv.DimProp,
-    graft.plans.JoinMv.KeysProp, graft.plans.JoinMv.GroupProp,
-    graft.plans.JoinMv.AggsProp, graft.plans.JoinMv.FactVersionProp,
-    graft.plans.JoinMv.DimVersionProp, graft.plans.JoinMv.DimFilterProp,
-    SourceProp, GroupProp, DistinctProp, LgkProp, VersionProp,
-    FreqSourceProp, FreqGroupProp, FreqItemProp, FreqParamsProp,
-    FreqVersionProp,
-    QuantSourceProp, QuantGroupProp, QuantValueProp, QuantParamsProp,
-    QuantVersionProp)
-
-  /** Pre-REPLACE sweep shared by all rollup creators: drop the old
-    * definition's merge bucketing (the overwrite would try to bucket by
-    * a column the new rollup lacks) and every family's definition
-    * props. */
-  /** Deliberately fail-loud on a half-finished REPLACE: the sweep runs
-    * BEFORE the new materialization, so a creator that throws mid-way
-    * leaves the table with its old DATA but no definition — REFRESH then
-    * errors ("not a … rollup") until the CREATE OR REPLACE is re-run,
-    * which recovers cleanly (the sweep is idempotent). The alternative
-    * orderings are both worse: sweeping AFTER the overwrite leaves the
-    * OLD definition live on the NEW data (a stale refresher silently
-    * corrupting the replacement — the round-11 bug this sweep fixed),
-    * and restoring the saved definition on failure cannot also restore
-    * the cleared bucket spec, leaving a definition whose merges would
-    * mis-route. */
-  private[graft] def clearReplacedDefinition(mv: VersionedTable): Unit =
-    if (mv.exists) {
-      mv.clearBucketSpec()
-      mv.unsetProperties(definitionProps)
-    }
+  /** `mv`'s recorded source, or a loud "not a <what>" error. */
+  private def sourceOf(spark: SparkSession, mv: VersionedTable,
+                       props: Map[String, String], prop: String,
+                       what: String): VersionedTable =
+    VersionedTable(spark, props.getOrElse(prop,
+      sys.error(s"${mv.root} is not a $what (no $prop)")))
 
   /** Materialize the rollup of `src` into `mv` at the current snapshot
     * and persist the definition for [[refresh]]. */
   def create(src: VersionedTable, mv: VersionedTable,
              groupCols: Seq[String], distinctCol: String,
              lgK: Int = 12): Unit = {
-    val v = src.latestVersion.getOrElse(
-      sys.error(s"sketch rollup: empty table at ${src.root}"))
-    clearReplacedDefinition(mv)
-    mv.overwrite(rollup(src.readVersion(v), groupCols, distinctCol, lgK))
-    val epoch = mv.properties.get(EpochProp)
-      .flatMap(e => scala.util.Try(e.toLong).toOption).getOrElse(-1L) + 1
-    mv.setProperties(Map(
+    Maintained.create(Family, src, mv, "sketch rollup", Map(
       SourceProp -> src.root, GroupProp -> groupCols.mkString(","),
-      DistinctProp -> distinctCol, LgkProp -> lgK.toString,
-      VersionProp -> v.toString, EpochProp -> epoch.toString))
-    // retention floor on the source (same contract as the exact MV
-    // families): vacuum must not reclaim the covered version or the
-    // added/change sets the next refresh reads
-    src.setPin(graft.plans.JoinMv.pinName(mv), v)
+      DistinctProp -> distinctCol, LgkProp -> lgK.toString))(
+      rollup(_, groupCols, distinctCol, lgK))
+    ()
   }
 
-  /** Catch the rollup up with its source. Append-only tails absorb as
-    * partial-sketch merges (`"incremental"` — O(appended rows));
+  /** Catch the rollup up with its source ([[Maintained.refresh]]).
+    * Append-only tails absorb as partial-sketch merges
+    * (`"incremental"` — O(appended rows)); registers cannot retract, so
     * retractions recompute only the feed-named touched groups
     * (`"groups"`) when the change feed is on, and rebuild (`"full"`)
-    * otherwise; nothing new is `"noop"`. Crash replays are txn-ledger
-    * no-ops like every other maintenance merge. */
+    * otherwise; nothing new is `"noop"`. */
   def refresh(spark: SparkSession, mv: VersionedTable): String = {
     val props = mv.properties
-    val src = VersionedTable(spark, props.getOrElse(SourceProp,
-      sys.error(s"${mv.root} is not a sketch rollup (no $SourceProp)")))
     val groupCols = props(GroupProp).split(",").toSeq
-    val distinctCol = props(DistinctProp)
-    val lgK = props(LgkProp).toInt
-    val txnApp = TxnApp + props.getOrElse(EpochProp, "0") + ":" + mv.root
-    val v0Prop = props(VersionProp).toLong
-    val v0 = math.max(v0Prop, mv.lastTxnVersion(txnApp).getOrElse(v0Prop))
-    val hist = src.history
-    val head = hist.lastOption.map(_.version).getOrElse(v0)
-    val later = hist.filter(e => e.version > v0 && e.version <= head)
-    val absorbless = graft.tables.GraftSql.AbsorblessActions
-    def finish(mode: String): String = {
-      if (head > v0Prop)
-        mv.setProperties(Map(VersionProp -> head.toString))
-      if (hist.exists(_.version == head))
-        src.setPin(graft.plans.JoinMv.pinName(mv), head)
-      mode
-    }
-    def incremental(): Option[String] = {
-      // persisted: the NULL-key probe and the merge share the one
-      // aggregation pass (the delta is group-count-sized)
-      val delta = graft.tables.VersionedTable.persistAdaptive(
-        rollup(src.readAddedBetween(v0, head), groupCols,
-          distinctCol, lgK))
-      try {
-        // NULL group values cannot ride the merge (SQL MERGE: NULL
-        // never matches — every refresh would INSERT a fresh NULL row,
-        // splitting the group's count and sketch across duplicates).
-        // Full-consumption probe so the persist actually materializes
-        // before the merge plans on it (GraftSql.probeDelta).
-        if (graft.tables.GraftSql.probeDelta(delta, groupCols)._2 > 0L) None
-        else {
-          mv.merge(delta, groupCols, updateExprs = Map(
-            "n_rows" -> ((t: Column, u: Column) => t + u),
-            // register-wise max: the union sketch is EXACTLY the sketch
-            // a full rebuild would produce
-            "distinct_sketch" -> ((t: Column, u: Column) =>
-              call_function("hll_union", t, u))),
-            txn = Some((txnApp, head)))
-          Some(finish("incremental"))
-        }
-      } finally { delta.unpersist(); () }
-    }
-    if (later.isEmpty || later.forall(e => absorbless(e.action)))
-      finish("noop")
-    else if (later.forall(e =>
-        e.action == "append" || absorbless(e.action)) &&
-        src.addedSetsLive(v0, head) && incremental().isDefined)
-      "incremental"
-    else {
-      // registers cannot retract, but the feed names WHICH groups
-      // moved — recompute only those ("groups"), rebuild otherwise
-      val groups: Option[String] =
-        if (!src.changeFeedEnabled) None
-        else try touchedGroupsRefresh(mv,
-          src.readChangeFeed(v0, Some(head)), src.readVersion(head),
-          d => rollup(d, groupCols, distinctCol, lgK),
-          Seq("n_rows", "distinct_sketch"), groupCols, txnApp, head)
-          .map(_ => finish("groups"))
-        catch { case _: graft.tables.CdfNotExpressible => None }
-      groups.getOrElse {
-        mv.overwrite(rollup(src.readVersion(head), groupCols,
-          distinctCol, lgK))
-        finish("full")
-      }
-    }
+    Maintained.refresh(Maintained.Rollup(Family, props, mv,
+      sourceOf(spark, mv, props, SourceProp, "sketch rollup"), groupCols,
+      rollup(_, groupCols, props(DistinctProp), props(LgkProp).toInt),
+      Map("n_rows" -> ((t: Column, u: Column) => t + u),
+        // register-wise max: the union sketch is EXACTLY the sketch a
+        // full rebuild would produce
+        "distinct_sketch" -> ((t: Column, u: Column) =>
+          call_function("hll_union", t, u)))))._1
   }
 
   // ---------------------------------------------------------------------
@@ -256,7 +111,8 @@ object Sketches {
   val FreqParamsProp = "graft.cms.params" // "eps,confidence,seed,topM"
   val FreqVersionProp = "graft.cms.sourceVersion"
   val FreqEpochProp = "graft.cms.epoch"
-  private val FreqTxnApp = "graft-cms:"
+  private val FreqFamily =
+    Maintained.Family(FreqVersionProp, FreqEpochProp, "graft-cms:", 0L)
 
   /** How many candidate items a rollup may carry per group before the
     * refresh prunes them back to the estimate-ranked top `topM`. */
@@ -291,7 +147,13 @@ object Sketches {
       .groupBy(gc: _*)
       .agg(expr("transform(array_sort(collect_list(struct(-cnt AS nc, " +
         "item))), s -> s.item)").as("top_candidates"))
-    sketch.join(cands, groupCols)
+    // null-safe on the group keys: the NULL group is a group like any
+    // other (an equi-join would silently drop it from the rollup)
+    val keyed = cands.select(groupCols.map(c => col(c).as(s"__k_$c")) :+
+      col("top_candidates"): _*)
+    sketch.join(keyed, groupCols.map(c => col(c) <=> col(s"__k_$c"))
+        .reduce(_ && _))
+      .drop(groupCols.map(c => s"__k_$c"): _*)
   }
 
   /** The heavy-hitter readout: per group, the candidate items ranked by
@@ -322,103 +184,42 @@ object Sketches {
                  groupCols: Seq[String], itemCol: String,
                  eps: Double = 0.0005, confidence: Double = 0.99,
                  seed: Int = 42, topM: Int = 20): Unit = {
-    val v = src.latestVersion.getOrElse(
-      sys.error(s"frequency rollup: empty table at ${src.root}"))
-    clearReplacedDefinition(mv)
-    mv.overwrite(freqRollup(src.readVersion(v), groupCols, itemCol,
-      eps, confidence, seed, topM))
-    val epoch = mv.properties.get(FreqEpochProp)
-      .flatMap(e => scala.util.Try(e.toLong).toOption).getOrElse(-1L) + 1
-    mv.setProperties(Map(
+    Maintained.create(FreqFamily, src, mv, "frequency rollup", Map(
       FreqSourceProp -> src.root, FreqGroupProp -> groupCols.mkString(","),
       FreqItemProp -> itemCol,
-      FreqParamsProp -> s"$eps,$confidence,$seed,$topM",
-      FreqVersionProp -> v.toString, FreqEpochProp -> epoch.toString))
-    // retention floor on the source (same contract as the exact MV
-    // families): vacuum must not reclaim the covered version or the
-    // added/change sets the next refresh reads
-    src.setPin(graft.plans.JoinMv.pinName(mv), v)
+      FreqParamsProp -> s"$eps,$confidence,$seed,$topM"))(
+      freqRollup(_, groupCols, itemCol, eps, confidence, seed, topM))
+    ()
   }
 
   /** Catch the frequency rollup up with its source. Append-only tails
     * absorb as counter-wise sketch sums plus a candidate-set union
     * (`"incremental"` — O(appended rows)); CMS counters cannot
-    * retract, so slices with deletes rebuild (`"full"`). When a
+    * retract, so retractions recompute the feed-named touched groups
+    * (`"groups"`) or rebuild without the feed (`"full"`). When a
     * group's candidate union outgrows 4×topM, it is pruned back to the
     * estimate-ranked topM in the same refresh — candidate state stays
     * O(groups × topM) forever. */
   def refreshFreq(spark: SparkSession, mv: VersionedTable): String = {
     graft.functions.SketchFunctions.register(spark)
     val props = mv.properties
-    val src = VersionedTable(spark, props.getOrElse(FreqSourceProp,
-      sys.error(s"${mv.root} is not a frequency rollup (no $FreqSourceProp)")))
     val groupCols = props(FreqGroupProp).split(",").toSeq
-    val itemCol = props(FreqItemProp)
     val Array(eps, conf, seed, topM) = props(FreqParamsProp).split(",")
-    val txnApp = FreqTxnApp + props.getOrElse(FreqEpochProp, "0") +
-      ":" + mv.root
-    val v0Prop = props(FreqVersionProp).toLong
-    val v0 = math.max(v0Prop, mv.lastTxnVersion(txnApp).getOrElse(v0Prop))
-    val hist = src.history
-    val head = hist.lastOption.map(_.version).getOrElse(v0)
-    val later = hist.filter(e => e.version > v0 && e.version <= head)
-    val absorbless = graft.tables.GraftSql.AbsorblessActions
-    def finish(mode: String): String = {
-      if (head > v0Prop)
-        mv.setProperties(Map(FreqVersionProp -> head.toString))
-      if (hist.exists(_.version == head))
-        src.setPin(graft.plans.JoinMv.pinName(mv), head)
-      mode
-    }
-    def incremental(): Option[String] = {
-      val delta = graft.tables.VersionedTable.persistAdaptive(
-        freqRollup(src.readAddedBetween(v0, head), groupCols,
-          itemCol, eps.toDouble, conf.toDouble, seed.toInt, topM.toInt))
-      try {
-        // full-consumption probe: materializes the persist too
-        if (graft.tables.GraftSql.probeDelta(delta, groupCols)._2 > 0L) None
-        else {
-          mv.merge(delta, groupCols, updateExprs = Map(
-            "n_rows" -> ((t: Column, u: Column) => t + u),
-            // counter-wise sum — merged counters EXACTLY equal a
-            // rebuild's (CMS is a monoid under cell addition)
-            "freq_sketch" -> ((t: Column, u: Column) => coalesce(
-              call_function("graft_cms_merge", t, u), t, u)),
-            // both sides are non-null by construction (freqRollup's
-            // inner join yields candidates for every emitted group)
-            "top_candidates" -> ((t: Column, u: Column) =>
-              array_distinct(concat(t, u)))),
-            txn = Some((txnApp, head)))
-          pruneCandidates(mv, groupCols, topM.toInt, txnApp, head)
-          Some(finish("incremental"))
-        }
-      } finally { delta.unpersist(); () }
-    }
-    if (later.isEmpty || later.forall(e => absorbless(e.action)))
-      finish("noop")
-    else if (later.forall(e =>
-        e.action == "append" || absorbless(e.action)) &&
-        src.addedSetsLive(v0, head) && incremental().isDefined)
-      "incremental"
-    else {
-      // counters cannot retract; recompute only the touched groups
-      // when the feed can name them ("groups"), rebuild otherwise
-      val groups: Option[String] =
-        if (!src.changeFeedEnabled) None
-        else try touchedGroupsRefresh(mv,
-          src.readChangeFeed(v0, Some(head)), src.readVersion(head),
-          d => freqRollup(d, groupCols, itemCol, eps.toDouble,
-            conf.toDouble, seed.toInt, topM.toInt),
-          Seq("n_rows", "freq_sketch", "top_candidates"), groupCols,
-          txnApp, head)
-          .map(_ => finish("groups"))
-        catch { case _: graft.tables.CdfNotExpressible => None }
-      groups.getOrElse {
-        mv.overwrite(freqRollup(src.readVersion(head), groupCols, itemCol,
-          eps.toDouble, conf.toDouble, seed.toInt, topM.toInt))
-        finish("full")
-      }
-    }
+    Maintained.refresh(Maintained.Rollup(FreqFamily, props, mv,
+      sourceOf(spark, mv, props, FreqSourceProp, "frequency rollup"),
+      groupCols,
+      freqRollup(_, groupCols, props(FreqItemProp), eps.toDouble,
+        conf.toDouble, seed.toInt, topM.toInt),
+      Map("n_rows" -> ((t: Column, u: Column) => t + u),
+        // counter-wise sum — merged counters EXACTLY equal a rebuild's
+        // (CMS is a monoid under cell addition)
+        "freq_sketch" -> ((t: Column, u: Column) => coalesce(
+          call_function("graft_cms_merge", t, u), t, u)),
+        // both sides are non-null by construction (freqRollup's inner
+        // join yields candidates for every emitted group)
+        "top_candidates" -> ((t: Column, u: Column) =>
+          array_distinct(concat(t, u)))),
+      afterAppend = pruneCandidates(mv, groupCols, topM.toInt, _, _)))._1
   }
 
   // ---------------------------------------------------------------------
@@ -431,7 +232,8 @@ object Sketches {
   val QuantParamsProp = "graft.quant.params" // "scale,subBuckets"
   val QuantVersionProp = "graft.quant.sourceVersion"
   val QuantEpochProp = "graft.quant.epoch"
-  private val QuantTxnApp = "graft-quant:"
+  private val QuantFamily =
+    Maintained.Family(QuantVersionProp, QuantEpochProp, "graft-quant:", 0L)
 
   /** Attach the histogram bucket key of `valueCol` as `__qk`.
     *
@@ -586,21 +388,11 @@ object Sketches {
   def createQuant(src: VersionedTable, mv: VersionedTable,
                   groupCols: Seq[String], valueCol: String,
                   scale: Long = 100L, sub: Int = 16): Unit = {
-    val v = src.latestVersion.getOrElse(
-      sys.error(s"quantile rollup: empty table at ${src.root}"))
-    clearReplacedDefinition(mv)
-    mv.overwrite(quantRollup(src.readVersion(v), groupCols, valueCol,
-      scale, sub))
-    val epoch = mv.properties.get(QuantEpochProp)
-      .flatMap(e => scala.util.Try(e.toLong).toOption).getOrElse(-1L) + 1
-    mv.setProperties(Map(
+    Maintained.create(QuantFamily, src, mv, "quantile rollup", Map(
       QuantSourceProp -> src.root, QuantGroupProp -> groupCols.mkString(","),
-      QuantValueProp -> valueCol, QuantParamsProp -> s"$scale,$sub",
-      QuantVersionProp -> v.toString, QuantEpochProp -> epoch.toString))
-    // retention floor on the source (same contract as the exact MV
-    // families): vacuum must not reclaim the covered version or the
-    // added/change sets the next refresh reads
-    src.setPin(graft.plans.JoinMv.pinName(mv), v)
+      QuantValueProp -> valueCol, QuantParamsProp -> s"$scale,$sub"))(
+      quantRollup(_, groupCols, valueCol, scale, sub))
+    ()
   }
 
   /** Catch the quantile rollup up with its source. Append-only tails
@@ -608,92 +400,35 @@ object Sketches {
     * retractions still absorb when the source's change feed is on —
     * deletes subtract from exactly the buckets they once incremented,
     * so the merged histogram EQUALS a rebuild's (`"cdf"` — the
-    * capability HLL and CMS rollups structurally lack). Only a
-    * feed-inexpressible slice (overwrite/restore mid-range, NULL group
-    * keys) rebuilds (`"full"`). Crash replays are txn-ledger no-ops. */
+    * capability HLL and CMS rollups structurally lack), and emptied
+    * groups drop inside the same merge commit. Only a feed-inexpressible
+    * slice (overwrite/restore mid-range, NULL group keys) rebuilds
+    * (`"full"`). */
   def refreshQuant(spark: SparkSession, mv: VersionedTable): String = {
     val props = mv.properties
-    val src = VersionedTable(spark, props.getOrElse(QuantSourceProp,
-      sys.error(s"${mv.root} is not a quantile rollup (no $QuantSourceProp)")))
     val groupCols = props(QuantGroupProp).split(",").toSeq
     val valueCol = props(QuantValueProp)
     val Array(scale, sub) = props(QuantParamsProp).split(",")
-    val txnApp = QuantTxnApp + props.getOrElse(QuantEpochProp, "0") +
-      ":" + mv.root
-    val v0Prop = props(QuantVersionProp).toLong
-    val v0 = math.max(v0Prop, mv.lastTxnVersion(txnApp).getOrElse(v0Prop))
-    val hist = src.history
-    val head = hist.lastOption.map(_.version).getOrElse(v0)
-    val later = hist.filter(e => e.version > v0 && e.version <= head)
-    val absorbless = graft.tables.GraftSql.AbsorblessActions
-    def finish(mode: String): String = {
-      if (head > v0Prop)
-        mv.setProperties(Map(QuantVersionProp -> head.toString))
-      if (hist.exists(_.version == head))
-        src.setPin(graft.plans.JoinMv.pinName(mv), head)
-      mode
-    }
-    def recompute(): String = {
-      mv.overwrite(quantRollup(src.readVersion(head), groupCols, valueCol,
-        scale.toLong, sub.toInt))
-      finish("full")
-    }
-    // shared by the append and CDF paths — only the slice and sign differ
-    def absorb(slice: DataFrame, sgn: Column,
-               mode: String): Option[String] = {
-      val delta = graft.tables.VersionedTable.persistAdaptive(
-        quantAgg(slice, groupCols, valueCol, scale.toLong,
-          sub.toInt, sgn))
-      try {
-        // one full-consumption probe (empties + NULL keys) that also
-        // materializes the persist (GraftSql.probeDelta)
-        val (nRows, nNullKeys) =
-          graft.tables.GraftSql.probeDelta(delta, groupCols)
-        // a DML commit that matched zero rows feeds an empty slice
-        if (nRows == 0L) Some(finish("noop"))
-        // NULL group values cannot ride the merge (NULL never matches)
-        else if (nNullKeys > 0L) None
-        else {
-          mv.merge(delta, groupCols, updateExprs = Map(
-            "n_rows" -> ((t: Column, u: Column) => t + u),
-            "n_vals" -> ((t: Column, u: Column) => t + u),
-            // bucket-wise signed addition, zero-count buckets dropped:
-            // the merged map is EXACTLY the map a rebuild would produce
-            "quant_sketch" -> ((t: Column, u: Column) => map_filter(
-              map_zip_with(t, u, (_, a, b) =>
-                coalesce(a, lit(0L)) + coalesce(b, lit(0L))),
-              (_, x) => x =!= 0L))),
-            txn = Some((txnApp, head)))
-          // emptied groups drop, as a recompute would (idempotent —
-          // a crash replay that no-ops the merge still converges)
-          if (!mv.read.filter(col("n_rows") === 0L).limit(1).isEmpty) {
-            mv.delete(col("n_rows") === 0L)
-            ()
-          }
-          Some(finish(mode))
-        }
-      } finally { delta.unpersist(); () }
-    }
-    if (later.isEmpty || later.forall(e => absorbless(e.action)))
-      finish("noop")
-    else if (later.forall(e =>
-        e.action == "append" || absorbless(e.action)) &&
-        src.addedSetsLive(v0, head) &&
-        absorb(src.readAddedBetween(v0, head), lit(1L), "incremental")
-          .isDefined)
-      "incremental"
-    else if (src.changeFeedEnabled) {
-      try {
-        val sgn = when(col("_change_type")
-            .isin("insert", "update_postimage"), 1L)
-          .when(col("_change_type")
-            .isin("delete", "update_preimage"), -1L)
-        absorb(src.readChangeFeed(v0, Some(head)), sgn, "cdf")
-          .getOrElse(recompute())
-      } catch {
-        case _: graft.tables.CdfNotExpressible => recompute()
-      }
-    } else recompute()
+    def agg(sgn: Column)(df: DataFrame): DataFrame =
+      quantAgg(df, groupCols, valueCol, scale.toLong, sub.toInt, sgn)
+    val sgn = when(col("_change_type")
+        .isin("insert", "update_postimage"), 1L)
+      .when(col("_change_type").isin("delete", "update_preimage"), -1L)
+    Maintained.refresh(Maintained.Rollup(QuantFamily, props, mv,
+      sourceOf(spark, mv, props, QuantSourceProp, "quantile rollup"),
+      groupCols, agg(lit(1L)),
+      Map("n_rows" -> ((t: Column, u: Column) => t + u),
+        "n_vals" -> ((t: Column, u: Column) => t + u),
+        // bucket-wise signed addition, zero-count buckets dropped: the
+        // merged map is EXACTLY the map a rebuild would produce
+        "quant_sketch" -> ((t: Column, u: Column) => map_filter(
+          map_zip_with(t, u, (_, a, b) =>
+            coalesce(a, lit(0L)) + coalesce(b, lit(0L))),
+          (_, x) => x =!= 0L))),
+      // emptied groups drop, as a recompute would
+      retract = Some(Maintained.Retract(agg(sgn),
+        graft.ops.Merge.PostCombine(
+          deleteWhen = Some(col("n_rows") === 0L))))))._1
   }
 
   /** Bounded candidate state: any group whose union exceeded the cap

@@ -115,15 +115,11 @@ object JoinMv {
                      groupCols: Seq[String],
                      aggs: Seq[(String, String, String)],
                      factV: Long, dimVs: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.col
     GraftSql.registerMvFunctions(fact.spark)
-    val joined = joinAll(fact.readVersion(factV),
+    GraftSql.mvAggregate(groupCols, aggs)(joinAll(fact.readVersion(factV),
       dims.zip(dimVs).map { case (d, v) =>
         (sided(d, d.table.readVersion(v)), d.keys)
-      })
-    joined.groupBy(groupCols.map(col): _*)
-      .agg(GraftSql.mvAggColumns(aggs).head,
-        GraftSql.mvAggColumns(aggs).tail: _*)
+      }))
   }
 
   /** Left-fold the dim sides onto `f` (shared with the streaming
@@ -164,7 +160,7 @@ object JoinMv {
     // definition's merge bucketing; and a replaced definition of ANY
     // other rollup family (single-table MV, sketch/CMS/quantile) must
     // go, or REFRESH would see two definitions
-    graft.ops.Sketches.clearReplacedDefinition(mv)
+    Maintained.clearReplacedDefinition(mv)
     mv.overwrite(rollup(fact, dims, groupCols, specs, factV, dimVs))
     val epoch = mv.properties.get(EpochProp)
       .flatMap(e => scala.util.Try(e.toLong).toOption).getOrElse(-1L) + 1
@@ -339,7 +335,7 @@ object JoinMv {
     // touching group/key columns and re-key agg specs, so those commits
     // are metadata-only on any side — a dim rename must not trigger
     // an O(fact) re-materialization
-    val absorbless = GraftSql.AbsorblessActions
+    val absorbless = Maintained.AbsorblessActions
     def moved(h: Seq[VersionedTable.LogEntry], lo: Long, hi: Long): Boolean =
       h.exists(e => e.version > lo && e.version <= hi &&
         !absorbless(e.action))
@@ -490,19 +486,21 @@ object JoinMv {
     else {
       // min/max: per-touched-group recompute — the CDF (joined to the
       // pinned dims) names which groups moved; only those re-aggregate.
-      // The recompute+tombstone+replace core is GraftSql's shared
-      // helper — only the source relation (fact⋈dims) differs here.
+      // The recompute+tombstone+replace core is the rollup driver's
+      // shared helper — only the source relation (fact⋈dims) differs.
       import org.apache.spark.sql.functions.col
       lazy val pinnedDims = d.dims.zip(dimPins)
         .map { case (dim, dv) => (sided(dim, dim.table.readVersion(dv)),
           dim.keys) }
       try {
         val feed = d.fact.readChangeFeed(factPin, Some(factHead))
-        GraftSql.mergeTouchedGroups(mv,
+        GraftSql.registerMvFunctions(spark)
+        Maintained.mergeTouchedGroups(mv,
           joinAll(feed, pinnedDims)
             .select(d.groupCols.map(col): _*).distinct(),
           joinAll(d.fact.readVersion(factHead), pinnedDims),
-          d.groupCols, d.aggs, txnApp, factHead)
+          d.groupCols, GraftSql.mvAggregate(d.groupCols, d.aggs),
+          d.aggs.map(_._3), txnApp, factHead)
         finish("groups", factHead, dimHeads)
       } catch {
         case _: graft.tables.CdfNotExpressible => recompute()

@@ -1,0 +1,344 @@
+package graft.plans
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
+
+import graft.ops.Merge
+import graft.tables.{CdfNotExpressible, VersionedTable}
+
+/** The one maintenance driver for single-source rollups — exact SQL
+  * MVs and the HLL, CMS and quantile sketch families. Each family is a
+  * [[Rollup]] spec (partial aggregate, per-column combines, optional
+  * signed partial); this object alone decides HOW a refresh catches the
+  * rollup up with its source:
+  *
+  *   - `"noop"`: nothing new, or only data-identical commits
+  *     ([[AbsorblessActions]]);
+  *   - `"incremental"`: an append-only tail absorbs as the partial over
+  *     the added rows, combine-merged (O(appended rows));
+  *   - `"cdf"`: retractions with the change feed on, for families whose
+  *     state can retract (sum/count/quant histograms) — the signed
+  *     partial over the feed absorbs the same way;
+  *   - `"groups"`: retractions with the feed on for state that cannot
+  *     retract (HLL registers, CMS counters, min/max) — the feed names
+  *     the touched groups, only those recompute ([[mergeTouchedGroups]]);
+  *   - `"full"`: anything else — no feed, a feed-inexpressible slice, or
+  *     NULL group keys in the slice.
+  *
+  * The mode names the rung the slice's history selects: a slice that
+  * turns out to carry zero rows (a DML commit that matched nothing, an
+  * append a filtered MV's WHERE excludes) keeps its rung's mode and
+  * takes no MV commit. Every merge is txn-markered with the covered
+  * version, so a crash replay is a ledger no-op; the join-MV refresher keeps its own
+  * multi-side ladder but shares [[mergeTouchedGroups]] and the absorb
+  * step. */
+object Maintained {
+
+  /** History actions that change NO data an incremental maintainer can
+    * observe: compaction/z-order/REORG rewrite identical rows;
+    * rename/drop-column commits are metadata-only (zero rows — the DDL
+    * guards refuse touching maintained columns and re-key agg/distinct
+    * specs on rename); partition-layout evolution re-tags future
+    * writes. A slice of only these is a covered-version bump, and any
+    * of them interleaved with data commits must NOT demote the
+    * incremental path. ONE definition — this driver and the join-MV
+    * refresher both consult it, and they must agree. */
+  private[graft] val AbsorblessActions: Set[String] = Set(
+    "compact", "zorder", "purge_dv",
+    "rename_column", "drop_column", "set_partition_layout",
+    "expire_pins")
+
+  /** A rollup family's on-disk names: covered-version and epoch
+    * property keys, txn-app prefix, and the epoch a first CREATE gets
+    * (SQL MVs number from 1, the sketch families from 0). */
+  final case class Family(versionProp: String, epochProp: String,
+                          txnPrefix: String, firstEpoch: Long)
+
+  /** Retractable state: a change-feed slice's SIGNED partial, and the
+    * repair that rides inside its merge (emptied groups drop, …). */
+  final case class Retract(partial: DataFrame => DataFrame,
+                           repair: Merge.PostCombine)
+
+  /** One single-source rollup definition, as its refresh reads it.
+    * `partial` aggregates a slice into MV-shaped rows (a full recompute
+    * is the partial over the pinned snapshot); `combine` folds a
+    * partial row into the stored one, per non-key column; `slice`
+    * narrows every source read (a filtered MV's WHERE); `afterAppend`
+    * runs after a non-empty append absorb with the (txn app, version)
+    * of its merge. */
+  final case class Rollup(family: Family, props: Map[String, String],
+                          mv: VersionedTable, src: VersionedTable,
+                          groupCols: Seq[String],
+                          partial: DataFrame => DataFrame,
+                          combine: Map[String, (Column, Column) => Column],
+                          retract: Option[Retract] = None,
+                          slice: DataFrame => DataFrame = identity,
+                          afterAppend: (String, Long) => Unit =
+                            (_, _) => ())
+
+  /** Every maintained-rollup definition property across ALL families —
+    * exact MVs, join MVs, HLL/CMS/quantile rollups. A table carries AT
+    * MOST ONE live definition: each creator sweeps every OTHER family's
+    * props (and its own, harmlessly re-set just after) so a REPLACE can
+    * never leave two refreshers claiming the same table — otherwise
+    * REFRESH MATERIALIZED VIEW dispatches on the stale definition
+    * against the overwritten data. Epoch props deliberately survive:
+    * they namespace each family's txn-marker ledger across re-creates,
+    * and resetting one would let a later same-family re-create resume
+    * from a dead era's markers. */
+  private def definitionProps: Seq[String] = {
+    import graft.ops.Sketches._
+    import graft.tables.GraftSql._
+    Seq(MvSourceProp, MvGroupProp, MvAggsProp, MvVersionProp, MvWhereProp,
+      JoinMv.FactProp, JoinMv.DimProp, JoinMv.KeysProp, JoinMv.GroupProp,
+      JoinMv.AggsProp, JoinMv.FactVersionProp, JoinMv.DimVersionProp,
+      JoinMv.DimFilterProp,
+      SourceProp, GroupProp, DistinctProp, LgkProp, VersionProp,
+      FreqSourceProp, FreqGroupProp, FreqItemProp, FreqParamsProp,
+      FreqVersionProp,
+      QuantSourceProp, QuantGroupProp, QuantValueProp, QuantParamsProp,
+      QuantVersionProp)
+  }
+
+  /** Pre-REPLACE sweep shared by all rollup creators: drop the old
+    * definition's merge bucketing (the overwrite would try to bucket by
+    * a column the new rollup lacks) and every family's definition
+    * props. Deliberately fail-loud on a half-finished REPLACE: the
+    * sweep runs BEFORE the new materialization, so a creator that
+    * throws mid-way leaves the table with its old DATA but no
+    * definition — REFRESH then errors ("not a … rollup") until the
+    * CREATE OR REPLACE is re-run, which recovers cleanly (the sweep is
+    * idempotent). The alternative orderings are both worse: sweeping
+    * AFTER the overwrite leaves the OLD definition live on the NEW data
+    * (a stale refresher silently corrupting the replacement), and
+    * restoring the saved definition on failure cannot also restore the
+    * cleared bucket spec, leaving a definition whose merges would
+    * mis-route. */
+  private[graft] def clearReplacedDefinition(mv: VersionedTable): Unit =
+    if (mv.exists) {
+      mv.clearBucketSpec()
+      mv.unsetProperties(definitionProps)
+    }
+
+  /** The shared CREATE bookkeeping: sweep any replaced definition,
+    * materialize `partial` over the source PINNED at its current
+    * version (a concurrent commit between the version read and the
+    * scan must stay uncovered, or the next refresh absorbs it twice),
+    * record `props` with the covered version and the next epoch (a
+    * REPLACE starts a fresh txn-ledger namespace, so markers from a
+    * replaced era can never masquerade as this era's slices), and pin
+    * the source (retention must not reclaim the covered version or the
+    * added/change sets above it). Returns the covered version. */
+  def create(family: Family, src: VersionedTable, mv: VersionedTable,
+             what: String, props: Map[String, String])
+            (partial: DataFrame => DataFrame): Long = {
+    val v = src.latestVersion.getOrElse(
+      sys.error(s"$what: empty table at ${src.root}"))
+    val epoch = mv.properties.get(family.epochProp)
+      .flatMap(e => scala.util.Try(e.toLong).toOption)
+      .fold(family.firstEpoch)(_ + 1)
+    clearReplacedDefinition(mv)
+    mv.overwrite(partial(src.readVersion(v)))
+    mv.setProperties(props ++ Map(family.versionProp -> v.toString,
+      family.epochProp -> epoch.toString))
+    src.setPin(JoinMv.pinName(mv), v)
+    v
+  }
+
+  /** The txn-app id a rollup's maintenance merges carry: the family
+    * prefix, the CREATE epoch, the MV root. */
+  private def txnApp(r: Rollup): String =
+    r.family.txnPrefix + r.props.getOrElse(r.family.epochProp, "0") +
+      ":" + r.mv.root
+
+  /** Catch `r` up with its source; returns (mode, covered version). */
+  def refresh(r: Rollup): (String, Long) = {
+    val app = txnApp(r)
+    val vProp = r.props(r.family.versionProp).toLong
+    // exactly-once across crash+retry: the txn ledger is the record of
+    // the last slice actually ABSORBED. A crash between a merge commit
+    // and the covered-version bump leaves the ledger ahead of the
+    // property — and if the source takes new commits before the retry,
+    // a property-based resume would absorb a LARGER slice whose merge
+    // passes the replay guard and double-counts the merged prefix.
+    // Resuming from max(property, ledger) applies only the uncovered
+    // tail; when they agree this is the property.
+    val ledgerV = r.mv.lastTxnVersion(app)
+    val v0 = math.max(vProp, ledgerV.getOrElse(vProp))
+    // ledger-healed resume of a retractable rollup: a slice committed
+    // by an older binary ran its emptied-group repair OUTSIDE the
+    // marker, and a resume that reads that slice as covered would keep
+    // serving its phantoms — entry is the one place left to repair them
+    if (ledgerV.exists(_ > vProp)) r.retract.foreach(x => sweep(r.mv, x.repair))
+    // ONE history read: the covered version and the slice maintained
+    // over must agree even while concurrent writers advance the head.
+    // Every rung reads the PINNED range (v0, head] — never the live
+    // head — so concurrent commits stay uncovered until the next refresh
+    val hist = r.src.history
+    val head = hist.lastOption.map(_.version).getOrElse(v0)
+    val later = hist.filter(e => e.version > v0 && e.version <= head)
+    def full(): String = {
+      r.mv.overwrite(r.partial(r.slice(r.src.readVersion(head))))
+      "full"
+    }
+    // only the curated refusals (a feed-inexpressible slice: overwrite/
+    // restore mid-range, reclaimed sets, NULL group keys) fall back to
+    // the always-safe recompute — every other error propagates, since
+    // masking a misconfiguration as a recompute would hide the bug
+    def orFull(rung: => String): String =
+      try rung catch { case _: CdfNotExpressible => full() }
+    val txn = Some((app, head))
+    val out =
+      if (later.forall(e => AbsorblessActions(e.action))) "noop"
+      // readAddedBetween reads exactly the appended rows under the
+      // CURRENT column mapping; addedSetsLive guards the rare vacuum-
+      // reclaimed-original case into the fallback
+      else if (later.forall(e => e.action == "append" ||
+          AbsorblessActions(e.action)) &&
+          r.src.addedSetsLive(v0, head)) orFull {
+        if (absorb(r.mv, r.partial(r.slice(r.src.readAddedBetween(v0, head))),
+            r.groupCols, r.combine, txn) > 0L)
+          r.afterAppend(app, head)
+        "incremental"
+      }
+      else if (!r.src.changeFeedEnabled) full()
+      else orFull {
+        val feed = r.slice(r.src.readChangeFeed(v0, Some(head)))
+        r.retract match {
+          case Some(x) =>
+            absorb(r.mv, x.partial(feed), r.groupCols, r.combine, txn,
+              Some(x.repair))
+            "cdf"
+          case None =>
+            mergeTouchedGroups(r.mv,
+              feed.select(r.groupCols.map(col): _*).distinct(),
+              r.slice(r.src.readVersion(head)), r.groupCols, r.partial,
+              r.combine.keys.toSeq, app, head)
+            "groups"
+        }
+      }
+    // bump on PROPERTY lag, not on mode: a ledger-healed retry whose
+    // uncovered tail is empty reads as noop but must still repair the
+    // stale property. The retention floor advances with it (a crash
+    // before this just retains more until the next refresh).
+    if (head > vProp)
+      r.mv.setProperties(Map(r.family.versionProp -> head.toString))
+    if (hist.exists(_.version == head))
+      r.src.setPin(JoinMv.pinName(r.mv), head)
+    (out, head)
+  }
+
+  /** ONE full-consumption pass over a PERSISTED group-count-sized
+    * delta: (row count, NULL-key row count) — and, critically, the
+    * pass COMPLETES the cache. Limit-style probes (`isEmpty`) abort
+    * partition iterators mid-way and Spark only caches fully-consumed
+    * partitions, so probing a persisted delta that way leaves it cold
+    * and the merge that follows re-pays the whole upstream scan + join
+    * + aggregation (measured 4.5 s of a 13.5 s slice). Every
+    * maintainer that persists a delta then merges it probes here. */
+  private[graft] def probeDelta(delta: DataFrame,
+                                groupCols: Seq[String]): (Long, Long) = {
+    val r = delta.agg(count(lit(1)), coalesce(sum(
+      when(groupCols.map(col(_).isNull).reduce(_ || _), 1L).otherwise(0L)),
+      lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def nullKeys(groupCols: Seq[String]): CdfNotExpressible =
+    new CdfNotExpressible("rollup maintenance: NULL value in group " +
+      s"column(s) ${groupCols.mkString(",")} — NULL keys cannot merge " +
+      "(SQL MERGE: NULL never matches); coalesce them upstream")
+
+  /** The one absorb step: persist `partial` (AQE-sized — it is a
+    * group-count-sized shuffle output), probe it once, and combine-merge
+    * it into `mv` under `txn`, with `repair` riding inside the same
+    * commit. Returns the partial's row count: 0 means an empty slice
+    * and no commit. Throws [[CdfNotExpressible]] on NULL group keys
+    * (NULL never matches a merge key — every slice would insert a fresh
+    * NULL row, splitting the group across duplicates). */
+  def absorb(mv: VersionedTable, partial: DataFrame, groupCols: Seq[String],
+             combine: Map[String, (Column, Column) => Column],
+             txn: Option[(String, Long)],
+             repair: Option[Merge.PostCombine] = None,
+             partitionBy: Seq[String] = Nil,
+             numBuckets: Int = VersionedTable.DefaultMergeBuckets): Long = {
+    val delta = VersionedTable.persistAdaptive(partial)
+    try {
+      val (n, nulls) = probeDelta(delta, groupCols)
+      if (nulls > 0L) throw nullKeys(groupCols)
+      if (n > 0L)
+        mv.merge(delta, groupCols, numBuckets = numBuckets,
+          updateExprs = combine, txn = txn, partitionBy = partitionBy,
+          postCombine = repair)
+      n
+    } finally { delta.unpersist(); () }
+  }
+
+  /** Idempotent standalone form of a [[Merge.PostCombine]] repair: drop
+    * the rows `deleteWhen` names and rewrite each `set` column where it
+    * differs from its repaired value. Probes guard the commits, so a
+    * clean table costs a short read per clause and commits nothing. */
+  private[graft] def sweep(mv: VersionedTable, repair: Merge.PostCombine): Unit = {
+    repair.deleteWhen.foreach { d =>
+      if (!mv.read.filter(d).limit(1).isEmpty) { mv.delete(d); () }
+    }
+    repair.set.foreach { case (c, e) =>
+      val stale = !(col(c) <=> e)
+      if (!mv.read.filter(stale).limit(1).isEmpty) {
+        mv.update(Map(c -> e), stale); ()
+      }
+    }
+  }
+
+  /** Per-touched-group recompute+merge — the maintenance core for state
+    * that cannot absorb retractions as signed deltas (HLL registers,
+    * CMS counters, min/max, companion-less sums). `touchedKeys` names
+    * the groups the change slice moved; ONLY those groups re-aggregate
+    * (`partial`) from `freshRows` (the caller's pinned-snapshot
+    * relation — filtered single-table scan or fact⋈dim join) and
+    * replace `replaceCols` in the MV, with vanished groups riding the
+    * SAME commit as tombstone-marked rows — one markered merge per
+    * slice, atomic under crash replay by construction; nothing touched
+    * commits nothing. Throws [[CdfNotExpressible]] on NULL group keys
+    * (the caller recomputes). */
+  private[graft] def mergeTouchedGroups(mv: VersionedTable,
+      touchedKeys: DataFrame, freshRows: => DataFrame,
+      groupCols: Seq[String], partial: DataFrame => DataFrame,
+      replaceCols: Seq[String], txnApp: String, version: Long): Unit = {
+    // both persisted deltas (touched keys, fresh aggregates) are
+    // group-count-sized shuffle outputs: AQE-sized caches
+    val touched = VersionedTable.persistAdaptive(touchedKeys)
+    try {
+      val (nTouched, nNulls) = probeDelta(touched, groupCols)
+      if (nNulls > 0L) throw nullKeys(groupCols)
+      if (nTouched > 0L) {
+        // semi-join the SOURCE ROWS before aggregating — the point is
+        // to shuffle only the touched groups' rows (AQE broadcasts the
+        // touched-key set when small, so the semi join adds no shuffle)
+        val fresh = VersionedTable.persistAdaptive(
+          partial(freshRows.join(touched, groupCols, "left_semi")))
+        try {
+          // ONE commit: vanished groups ride the same merge as the
+          // re-aggregated ones — tombstone-marked key rows union with
+          // the fresh rows (missing columns pad NULL; tombstones only
+          // need their keys), so the replace, the deletes and the txn
+          // marker are atomic. The count completes fresh's cache and
+          // says whether any touched group vanished (fresh holds one
+          // row per surviving touched group); without one the merge
+          // skips the anti-join and the delete-bearing union, which
+          // cost more jobs than the count
+          val merged =
+            if (fresh.count() == nTouched) fresh
+            else fresh.withColumn(Merge.DeleteCol, lit(false)).unionByName(
+              touched.join(fresh.select(groupCols.map(col): _*), groupCols,
+                "left_anti").withColumn(Merge.DeleteCol, lit(true)),
+              allowMissingColumns = true)
+          mv.merge(merged, groupCols, updateExprs = replaceCols.map(c =>
+              c -> ((_: Column, u: Column) => u)).toMap,
+            txn = Some((txnApp, version)))
+          ()
+        } finally { fresh.unpersist(); () }
+      }
+    } finally { touched.unpersist(); () }
+  }
+}

@@ -591,52 +591,25 @@ final class GraftTableSink(root: String, appId: String,
         // but an INSERT-ONLY stream (a CDF over an append-only table —
         // the shape every bronze landing produces) absorbs every agg
         // through its combine: least/greatest for min/max, register
-        // union for hll sketches, addition for sum/count. The batch is
-        // aggregated ONCE, with a per-group retraction flag riding the
-        // same pass; a retraction anywhere fails the query loudly —
-        // there is no source table here to recompute from, and a wrong
-        // rollup must never land quietly.
-        import org.apache.spark.sql.functions.{col, max, when}
+        // union for hll sketches, addition for sum/count. A retraction
+        // anywhere fails the query loudly — raised inside the batch's
+        // one aggregation pass (the absorb step's probe), since there is
+        // no source table here to recompute from, and a wrong rollup
+        // must never land quietly.
+        import org.apache.spark.sql.functions.{col, lit, raise_error, when}
         graft.tables.GraftSql.registerMvFunctions(sliced.sparkSession)
-        // group-count-sized cached shuffle output: AQE scope, same as
-        // applyCdfDelta (un-scoped it pins shuffle.partitions cache
-        // partitions per trigger — fixed per-task overhead × partitions)
-        graft.tables.VersionedTable.withAqeCachedPartitioning(
-            sliced.sparkSession) {
-        val delta = sliced.groupBy(mergeKeys.map(col): _*)
-          .agg(graft.tables.GraftSql.mvAggColumns(aggs).head,
-            graft.tables.GraftSql.mvAggColumns(aggs).tail :+
-              max(when(col("_change_type") =!= "insert", 1).otherwise(0))
-                .as("__retract"): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // ONE full-consumption probe: both guards in a single pass
-          // that also COMPLETES the persist — limit-style probes abort
-          // partition iterators and void caching, so the merge below
-          // would re-pay the batch aggregation (GraftSql.probeDelta)
-          import org.apache.spark.sql.functions.{coalesce, lit, sum}
-          val guards = delta.agg(
-            coalesce(sum(col("__retract")), lit(0)).as("retract"),
-            coalesce(sum(when(
-              mergeKeys.map(col(_).isNull).reduce(_ || _), 1L)
-              .otherwise(0L)), lit(0L)).as("nullkeys")).head()
-          require(guards.getLong(0) == 0L,
-            "graft-table sink: this aggregate spec has min/max or " +
-              "approx_count_distinct — those cannot retract, so the " +
-              "stream must be insert-only (append-only source); got " +
-              "update/delete change rows")
-          require(guards.getLong(1) == 0L,
-            "graft-table sink: NULL group key in the aggregate batch — " +
-              "NULL keys cannot merge (SQL MERGE: NULL never matches)")
-          table.merge(delta.drop("__retract"), mergeKeys,
-            numBuckets = numBuckets,
-            updateExprs = aggs.map { case (f, _, o) =>
-              o -> graft.tables.GraftSql.mvCombine(f)
-            }.toMap,
-            txn = Some((appId, batchId)), partitionBy = partitionBy)
-          ()
-        } finally { delta.unpersist(); () }
-        }
+        val inserts = sliced.filter(
+          when(col("_change_type") === "insert", lit(true))
+            .otherwise(raise_error(lit("graft-table sink: this aggregate " +
+              "spec has min/max or approx_count_distinct — those cannot " +
+              "retract, so the stream must be insert-only (append-only " +
+              "source); got update/delete change rows"))))
+        graft.plans.Maintained.absorb(table,
+          graft.tables.GraftSql.mvAggregate(mergeKeys, aggs)(inserts),
+          mergeKeys, graft.tables.GraftSql.mvCombines(aggs),
+          txn = Some((appId, batchId)), partitionBy = partitionBy,
+          numBuckets = numBuckets)
+        ()
       }
     } else if (applyChanges) {
       // APPLY CHANGES INTO (DLT) over a CDF stream: the micro-batch

@@ -1109,56 +1109,29 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     val mv = VersionedTable(spark, targetRoot(mvIdent))
     require(orReplace || !mv.exists,
       s"materialized view target exists: $mvIdent (use CREATE OR REPLACE)")
-    val srcV = src.latestVersion.getOrElse(
-      sys.error(s"materialized view over empty table $srcIdent"))
-    // materialize from the PINNED snapshot, not the live head: a
-    // concurrent commit between latestVersion and the read would land
-    // rows the recorded covered-version does not cover, and the next
-    // REFRESH would absorb them a second time
-    // OR REPLACE with a DIFFERENT group set: the old definition's
-    // refresh merges bucketed the MV on the old keys — a stale spec
-    // would fail (or mis-bucket) every later incremental refresh
-    // epoch bump: a REPLACE starts a fresh txn-ledger namespace, so
-    // merge markers from the previous definition (or from a source
-    // recreated at the same root with a restarted version counter)
-    // cannot masquerade as this era's absorbed slices
-    val epoch = (if (mv.exists)
-      mv.properties.get(GraftSql.MvEpochProp).map(_.toLong).getOrElse(0L)
-    else 0L) + 1L
-    // a replaced JOIN / sketch / CMS / quantile definition's properties
-    // must go, or the REFRESH dispatch would see two definitions
-    graft.ops.Sketches.clearReplacedDefinition(mv)
-    val base0 = src.readVersion(srcV)
-    val base = where.fold(base0) { p =>
-      val f = base0.filter(expr(p))
-      // resolution runs now (bad columns fail the CREATE loudly); a
-      // nondeterministic predicate (rand()) would make every
-      // maintenance slice disagree with the materialization — refuse
-      val cond = f.queryExecution.analyzed.collectFirst {
+    // resolution runs now (bad columns fail the CREATE loudly); a
+    // nondeterministic predicate (rand()) would make every maintenance
+    // slice disagree with the materialization — refuse
+    where.foreach { p =>
+      val cond = src.read.filter(expr(p)).queryExecution.analyzed.collectFirst {
         case fl: org.apache.spark.sql.catalyst.plans.logical.Filter =>
           fl.condition
       }
       require(cond.exists(_.deterministic),
         s"materialized view WHERE must be deterministic: $p")
-      f
     }
-    mv.overwrite(base.groupBy(groupCols.map(col): _*)
-      .agg(GraftSql.mvAggColumns(aggs).head,
-        GraftSql.mvAggColumns(aggs).tail: _*))
-    // a REPLACE that drops the predicate must also drop the property
-    if (where.isEmpty) mv.unsetProperties(Seq(GraftSql.MvWhereProp))
-    mv.setProperties(Map(
-      GraftSql.MvSourceProp -> src.root,
-      GraftSql.MvGroupProp -> groupCols.mkString(","),
-      GraftSql.MvAggsProp ->
-        aggs.map { case (f, c, o) => s"$f:$c:$o" }.mkString(";"),
-      GraftSql.MvVersionProp -> srcV.toString,
-      GraftSql.MvEpochProp -> epoch.toString) ++
-      where.map(GraftSql.MvWhereProp -> _))
-    // retention floor on the source: vacuum must not reclaim the
-    // covered version or the change/added sets above it, or every
-    // REFRESH after retention degrades to a full recompute
-    src.setPin(graft.plans.JoinMv.pinName(mv), srcV)
+    // the shared CREATE bookkeeping also sweeps a replaced JOIN /
+    // sketch / CMS / quantile definition (REFRESH must never see two)
+    // and the old merge bucketing (a REPLACE with a different GROUP BY)
+    val srcV = graft.plans.Maintained.create(GraftSql.MvFamily, src, mv,
+      "materialized view", Map(
+        GraftSql.MvSourceProp -> src.root,
+        GraftSql.MvGroupProp -> groupCols.mkString(","),
+        GraftSql.MvAggsProp ->
+          aggs.map { case (f, c, o) => s"$f:$c:$o" }.mkString(";")) ++
+        where.map(GraftSql.MvWhereProp -> _))(
+      df => GraftSql.mvAggregate(groupCols, aggs)(
+        where.fold(df)(p => df.filter(expr(p)))))
     // filtered definitions never arm transparent routing: the rewrite
     // rule serves only shapes it can prove equivalent, and a query
     // without the predicate must keep scanning the source. A REPLACE
@@ -1242,185 +1215,47 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
   }
 
   /** REFRESH MATERIALIZED VIEW mv — cheapest maintenance the source's
-    * history shape allows, O(changed data) whenever expressible:
+    * history shape allows, O(changed data) whenever expressible, through
+    * the shared rollup driver ([[graft.plans.Maintained.refresh]]):
     *
-    *   - append-only tail → delta aggregate over `readAddedSince` +
+    *   - append-only tail → delta aggregate over the added rows +
     *     combining bucket-COW merge ("incremental");
     *   - retractions (UPDATE/DELETE/merge) with the source's change feed
     *     on → signed-delta refresh from the row-level CDF
-    *     (+postimage/insert, −preimage/delete), provided every aggregate
-    *     is sum/count, count(*) is materialized (emptied groups must
-    *     drop, as a recompute would) and every sum(c) has a count(c)
-    *     companion (a group whose surviving c-values are all NULL must
-    *     show sum NULL, not an arithmetic 0 — the classic incremental-MV
-    *     retraction bug) ("cdf");
+    *     (+postimage/insert, −preimage/delete), provided the aggs are
+    *     [[GraftSql.cdfMaintainable]]: emptied groups drop and all-NULL
+    *     sums NULL-fix inside the same merge commit ("cdf");
     *   - retractions with CDF on but min/max (or a sum missing its
-    *     count companion) in the agg set → per-touched-group recompute:
-    *     the feed names the groups that moved, only those groups
-    *     re-aggregate from the pinned snapshot and merge (vanished
-    *     groups delete as merge tombstones) — O(changed groups), not
-    *     O(table) ("groups");
-    *   - anything else → full recompute ("full").
+    *     count companion) in the agg set → per-touched-group recompute
+    *     from the pinned snapshot ("groups");
+    *   - nothing to absorb → "noop"; anything else → full recompute
+    *     ("full").
     *
-    * Either way the covered version advances and the rewrite rule
-    * re-arms — REFRESH is also the re-arm point after a process restart
-    * (the rewrite registry is in-memory; the definition is not). */
+    * A FILTERED definition applies its predicate to every slice — each
+    * incremental delta, the change feed (an update moving a row across
+    * the predicate boundary keeps exactly the matching image: in =
+    * +post, out = −pre, the correct signed delta), the touched-group
+    * set, and the recompute. Either way the covered version advances
+    * and the rewrite rule re-arms — REFRESH is also the re-arm point
+    * after a process restart (the rewrite registry is in-memory; the
+    * definition is not). */
   private def refreshMaterializedView(mvIdent: String): DataFrame = {
     import spark.implicits._
     GraftSql.registerMvFunctions(spark)
     val mv = resolve(mvIdent)
     val props = mv.properties
-    val srcRoot = props.getOrElse(GraftSql.MvSourceProp,
+    val src = VersionedTable(spark, props.getOrElse(GraftSql.MvSourceProp,
       sys.error(s"$mvIdent is not a materialized view (no " +
-        s"${GraftSql.MvSourceProp} property)"))
-    val src = VersionedTable(spark, srcRoot)
+        s"${GraftSql.MvSourceProp} property)")))
     val groupCols = props(GraftSql.MvGroupProp).split(",").toSeq
     val aggs = GraftSql.parseAggSpecs(props(GraftSql.MvAggsProp))
-    val v0Prop = props(GraftSql.MvVersionProp).toLong
-    // exactly-once across crash+retry: the merge's txn ledger is the
-    // authoritative record of the last slice actually ABSORBED. A crash
-    // between the merge commit and the MvVersionProp bump leaves the
-    // ledger ahead of the property — and if the source takes new commits
-    // before the retry, a property-based resume would recompute a LARGER
-    // slice whose merge passes the replay guard (lastTxn < new srcV) and
-    // double-counts the already-merged prefix. Resuming from
-    // max(property, ledger) makes the retry apply only the uncovered
-    // tail; when they agree this is the property, unchanged behavior.
-    // The app id carries the CREATE epoch so ledger entries from a
-    // replaced definition era can never be consulted.
-    val txnApp = GraftSql.MvTxnApp +
-      props.getOrElse(GraftSql.MvEpochProp, "0") + ":" + mv.root
-    val ledgerV = mv.lastTxnVersion(txnApp)
-    val v0 = math.max(v0Prop, ledgerV.getOrElse(v0Prop))
-    // ledger-healed resume: the ledger ahead of the property means the
-    // last slice's markered merge committed but the refresh died before
-    // its follow-up emptied-group delete / sum NULL-fix (and property
-    // bump) ran. Those follow-ups live OUTSIDE the marker's txn, so a
-    // resume that reads the slice as covered would otherwise serve
-    // phantom zero-count groups until the next non-empty delta. The
-    // sweep is idempotent and probe-guarded — a clean resume pays two
-    // short reads and commits nothing.
-    if (ledgerV.exists(_ > v0Prop) && GraftSql.cdfMaintainable(aggs))
-      GraftSql.sweepCdfPhantoms(mv, aggs)
-    // ONE history read: srcV (the version this refresh will cover) and
-    // the commit slice it maintains over must agree even while
-    // concurrent writers advance the head
-    val srcHistory = src.history
-    val srcV = srcHistory.lastOption.map(_.version).getOrElse(v0)
-    val later = srcHistory.filter(e => e.version > v0 && e.version <= srcV)
-    val cdfCapable = src.changeFeedEnabled && GraftSql.cdfMaintainable(aggs)
-    // a FILTERED definition applies its predicate to every slice — the
-    // materialization, each incremental delta, the change feed (an
-    // update moving a row across the predicate boundary keeps exactly
-    // the matching image: in = +post, out = −pre, the correct signed
-    // delta), the touched-group set, and the per-group recompute
     val where = props.get(GraftSql.MvWhereProp)
-    def filt(df: DataFrame): DataFrame = where.fold(df)(p => df.filter(expr(p)))
-    // every maintenance path reads the PINNED range (v0, srcV] — never
-    // the live head — so concurrent commits stay uncovered until the
-    // NEXT refresh instead of being absorbed now and re-absorbed then
-    def recompute(): Unit =
-      mv.overwrite(filt(src.readVersion(srcV)).groupBy(groupCols.map(col): _*)
-        .agg(GraftSql.mvAggColumns(aggs).head,
-          GraftSql.mvAggColumns(aggs).tail: _*))
-    // compact/zorder/REORG PURGE are data-identical by construction,
-    // and rename/drop-column commits are metadata-only (zero rows; the
-    // DDL guards above refuse touching MV-referenced columns and re-key
-    // agg specs on rename) — a slice of pure maintenance/DDL has
-    // NOTHING to absorb (the covered version still bumps and routing
-    // re-arms on the new snapshot), and either kind interleaved with
-    // appends keeps the incremental path: readAddedBetween reads
-    // exactly the appended rows by their original file-set ids under
-    // the CURRENT column mapping (addedSetsLive guards the rare
-    // vacuum-reclaimed-original case into the fallback instead of a
-    // mid-read failure). Without this, the first OPTIMIZE or RENAME on
-    // the source demoted every later REFRESH to a full recompute.
-    val absorbless = GraftSql.AbsorblessActions
-    val mode =
-      if (later.isEmpty) "noop"
-      else if (later.forall(e => absorbless(e.action))) "noop"
-      else if (later.forall(e =>
-          e.action == "append" || absorbless(e.action)) &&
-          src.addedSetsLive(v0, srcV)) {
-        // persisted: the NULL-key probe and the merge share one
-        // aggregation pass (the delta is group-count-sized, so the
-        // cache is AQE-sized — persistAdaptive)
-        val delta = VersionedTable.persistAdaptive(
-          filt(src.readAddedBetween(v0, srcV))
-            .groupBy(groupCols.map(col): _*)
-            .agg(GraftSql.mvAggColumns(aggs).head,
-              GraftSql.mvAggColumns(aggs).tail: _*))
-        try {
-          // NULL group values cannot ride the merge (SQL MERGE: NULL
-          // never matches, so every refresh would INSERT a fresh NULL
-          // row) — a delta touching the NULL group recomputes instead.
-          // Full-consumption probe: materializes the persist too.
-          if (GraftSql.probeDelta(delta, groupCols)._2 > 0L) {
-            recompute(); "full" }
-          else {
-            // txn marker: a crash between this commit and the covered-
-            // version bump replays as a metadata no-op, not a double-count
-            mv.merge(delta, groupCols, updateExprs = aggs.map {
-              case (f, _, o) => o -> GraftSql.mvCombine(f)
-            }.toMap, txn = Some((txnApp, srcV)))
-            "incremental"
-          }
-        } finally { delta.unpersist(); () }
-      } else if (cdfCapable) {
-        // the feed can refuse mid-slice shapes it cannot express
-        // (overwrite/restore commit no change set; vacuum may have
-        // reclaimed old sets; NULL group keys cannot merge) — ONLY those
-        // curated refusals fall back to the full recompute, which is
-        // always safe: the refusal happens while PLANNING the feed read,
-        // before any merge commits, and even a post-merge failure is
-        // healed by the overwrite. Every other error (merge-key/bucket
-        // mismatch, missing MV columns, schema drift) propagates —
-        // masking a misconfiguration as a silent recompute would hide
-        // the bug behind a performance blip.
-        try {
-          GraftSql.applyCdfDelta(mv,
-            filt(src.readChangeFeed(v0, Some(srcV))), groupCols, aggs,
-            txn = Some((txnApp, srcV)))
-          "cdf"
-        } catch {
-          case _: CdfNotExpressible => recompute(); "full"
-        }
-      } else if (src.changeFeedEnabled) {
-        // min/max (or a sum without its count companion) cannot absorb
-        // retractions as signed deltas — but the feed still identifies
-        // WHICH groups moved. Recompute ONLY those groups from the
-        // pinned snapshot and merge: the aggregation shuffles only the
-        // touched groups' rows (AQE broadcasts the touched-key set when
-        // small, so the semi join adds no shuffle of the source), and MV
-        // writes are O(touched cells) bucket-COW — untouched MV rows
-        // ride their file-sets unrewritten, never recomputed. Vanished
-        // groups delete through the merge-tombstone path, committed
-        // BEFORE the replace merge: the replace's txn marker drives
-        // crash resume, so it must land last (a crash in between replays
-        // the tombstones as a txn no-op, then completes the replace).
-        try {
-          GraftSql.mergeTouchedGroups(mv,
-            filt(src.readChangeFeed(v0, Some(srcV)))
-              .select(groupCols.map(col): _*).distinct(),
-            filt(src.readVersion(srcV)), groupCols, aggs, txnApp, srcV)
-          "groups"
-        } catch {
-          case _: CdfNotExpressible => recompute(); "full"
-        }
-      } else {
-        recompute()
-        "full"
-      }
-    // bump on PROPERTY lag, not on mode: a ledger-healed retry whose
-    // uncovered tail is empty reads as "noop" but must still repair the
-    // stale covered-version property left by the crash
-    if (srcV > v0Prop)
-      mv.setProperties(Map(GraftSql.MvVersionProp -> srcV.toString))
-    // advance the retention floor with the covered version (no-op when
-    // already there); a crash before this just retains more until the
-    // next refresh
-    if (srcHistory.exists(_.version == srcV))
-      src.setPin(graft.plans.JoinMv.pinName(mv), srcV)
+    val (mode, srcV) = graft.plans.Maintained.refresh(
+      graft.plans.Maintained.Rollup(GraftSql.MvFamily, props, mv, src,
+        groupCols, GraftSql.mvAggregate(groupCols, aggs),
+        GraftSql.mvCombines(aggs),
+        retract = GraftSql.mvRetract(groupCols, aggs),
+        slice = df => where.fold(df)(p => df.filter(expr(p)))))
     if (where.isEmpty) armMvRewrite(src, mv, groupCols, aggs, srcV)
     else graft.plans.MvRewrite.deregisterRoot(mv.root) // defensive: never serve a filtered MV
     Seq((mvIdent, mode, srcV)).toDF("mv", "mode", "source_version")
@@ -2979,112 +2814,24 @@ object GraftSql {
   /** Txn-app-id prefix for MV maintenance merges (replay idempotence). */
   private[graft] val MvTxnApp = "graft-mv:"
 
-  /** History actions that change NO data an incremental maintainer can
-    * observe: compaction/z-order/REORG rewrite identical rows;
-    * rename/drop-column commits are metadata-only (zero rows — the DDL
-    * guards refuse touching maintained columns and re-key agg/distinct
-    * specs on rename); partition-layout evolution re-tags future
-    * writes. A slice of only these is a covered-version bump, and any
-    * of them interleaved with data commits must NOT demote the
-    * incremental path. ONE definition — the single-table MV, join MV,
-    * and sketch-rollup refreshers all consult it, and they must agree. */
-  private[graft] val AbsorblessActions: Set[String] = Set(
-    "compact", "zorder", "purge_dv",
-    "rename_column", "drop_column", "set_partition_layout",
-    "expire_pins")
+  /** The single-table MV family's on-disk names for the shared rollup
+    * driver (epochs number from 1). */
+  private[graft] val MvFamily = graft.plans.Maintained.Family(
+    MvVersionProp, MvEpochProp, MvTxnApp, 1L)
 
-  /** Shared per-touched-group recompute+merge — the maintenance core
-    * for agg sets that cannot absorb retractions as signed deltas
-    * (min/max, companion-less sums). `touched` names the groups the
-    * change slice moved; ONLY those groups re-aggregate from
-    * `freshRows` (the caller's pinned-snapshot relation — filtered
-    * single-table scan or fact⋈dim join) and replace-merge into the
-    * MV, with vanished groups riding the SAME commit as tombstone-
-    * marked rows — one markered merge per slice, atomic under crash
-    * replay by construction (no delete-then-replace ordering to keep
-    * straight). Throws [[CdfNotExpressible]] on NULL group keys (NULL
-    * never matches in a SQL MERGE — the caller recomputes). Kept in
-    * ONE place so the single-table and join-MV paths cannot drift. */
-  private[graft] def mergeTouchedGroups(mv: VersionedTable,
-      touchedKeys: DataFrame, freshRows: => DataFrame,
-      groupCols: Seq[String], aggs: Seq[(String, String, String)],
-      txnApp: String, version: Long): Unit = {
-    registerMvFunctions(touchedKeys.sparkSession)
-    // both persisted deltas (touched keys, fresh aggregates) are
-    // group-count-sized shuffle outputs: cached under the AQE scope so
-    // their partitioning collapses to the data, not shuffle.partitions
-    // (the un-scoped cache ran 32-task stages over ≤12 rows — ProfQ r17)
-    VersionedTable.withAqeCachedPartitioning(touchedKeys.sparkSession) {
-    val touched = touchedKeys
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one full-consumption probe: both guards AND the persist
-      // materializes (limit-style probes void caching — [[probeDelta]])
-      val (nTouched, nNullKeys) = probeDelta(touched, groupCols)
-      if (nTouched == 0L) () // DDL-only slice: nothing moved
-      else if (nNullKeys > 0L)
-        throw new CdfNotExpressible("group-recompute refresh: NULL " +
-          s"value in group column(s) ${groupCols.mkString(",")} — " +
-          "NULL keys cannot merge; recomputing")
-      else {
-        // semi-join the SOURCE ROWS before aggregating — the whole
-        // point is to shuffle only the touched groups' rows, never
-        // aggregate the full source and discard (AQE broadcasts the
-        // touched-key set when small, so the semi join adds no shuffle)
-        val fresh = freshRows
-          .join(touched, groupCols, "left_semi")
-          .groupBy(groupCols.map(col): _*)
-          .agg(mvAggColumns(aggs).head, mvAggColumns(aggs).tail: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // ONE commit: vanished groups ride the SAME merge as the
-          // re-aggregated ones — tombstone-marked key rows union with
-          // the fresh rows (missing agg columns pad NULL; tombstones
-          // only need their keys), so the replace, the deletes, and the
-          // txn marker are atomic. The previous tombstones-first /
-          // replace-second two-commit ordering was crash-resume
-          // sensitive (the doc here once had to pin WHY the order
-          // mattered); folded, there is no window to reason about and
-          // no emptiness probe job for the gone set.
-          val gone = touched.join(
-              fresh.select(groupCols.map(col): _*), groupCols, "left_anti")
-            .withColumn(graft.ops.Merge.DeleteCol, lit(true))
-          mv.merge(
-            fresh.withColumn(graft.ops.Merge.DeleteCol, lit(false))
-              .unionByName(gone, allowMissingColumns = true),
-            groupCols, updateExprs = aggs.map {
-              case (_, _, o) => o -> ((_: Column, u: Column) => u)
-            }.toMap, txn = Some((txnApp, version)))
-          ()
-        } finally { fresh.unpersist(); () }
-      }
-    } finally { touched.unpersist(); () }
-    }
+  /** The exact-MV partial aggregate: `aggs` over `df` by `groupCols`.
+    * Callers must have registerMvFunctions'd. */
+  private[graft] def mvAggregate(groupCols: Seq[String],
+      aggs: Seq[(String, String, String)])(df: DataFrame): DataFrame = {
+    val cols = mvAggColumns(aggs)
+    df.groupBy(groupCols.map(col): _*).agg(cols.head, cols.tail: _*)
   }
 
-  /** Any row with a NULL in a group column? (one short-circuit probe) */
-  private[graft] def hasNullKeys(df: DataFrame, cols: Seq[String]): Boolean =
-    !df.filter(cols.map(col(_).isNull).reduce(_ || _)).limit(1).isEmpty
-
-  /** ONE full-consumption pass over a PERSISTED group-count-sized
-    * delta: (row count, NULL-key row count) — and, critically, the
-    * pass COMPLETES the cache. Limit-style probes ([[hasNullKeys]],
-    * `isEmpty`) abort partition iterators mid-way and Spark only
-    * caches fully-consumed partitions, so probing a persisted delta
-    * that way leaves it cold and the merge that follows re-pays the
-    * whole upstream scan + join + aggregation (measured 4.5 s of a
-    * 13.5 s slice, ProfScd2). Every incremental maintainer that
-    * persists a delta then merges it must probe through here. */
-  private[graft] def probeDelta(delta: DataFrame,
-                                groupCols: Seq[String]): (Long, Long) = {
-    val r = delta.agg(
-      org.apache.spark.sql.functions.count(lit(1)),
-      org.apache.spark.sql.functions.coalesce(
-        org.apache.spark.sql.functions.sum(
-          when(groupCols.map(col(_).isNull).reduce(_ || _), 1L)
-            .otherwise(0L)), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
+  /** Per-output-column merge combines ([[mvCombine]]) of an agg set —
+    * the same for append partials and signed CDF partials. */
+  private[graft] def mvCombines(aggs: Seq[(String, String, String)])
+      : Map[String, (Column, Column) => Column] =
+    aggs.map { case (f, _, o) => o -> mvCombine(f) }.toMap
 
   /** Whether `aggs` can absorb retractions from a row-level change feed:
     * sum/count/quant only, count(*) materialized (emptied groups must
@@ -3098,20 +2845,57 @@ object GraftSql {
           a._1 == "count" && a._2 == c))
       }
 
+  /** The retractable form of a [[cdfMaintainable]] agg set (None
+    * otherwise): the SIGNED partial over a change-feed slice
+    * (+postimage/insert, −preimage/delete) and the in-commit repair.
+    * The repair's post-combine values already hold the post-merge
+    * counts, so the merge itself (a) drops a group whose count(*)
+    * reached zero — including a group inserted AND deleted within one
+    * slice, which must never land — and (b) NULL-fixes a sum whose
+    * count(c) companion hit zero (signed arithmetic leaves 0 where a
+    * recompute shows NULL — the classic incremental-MV retraction bug). */
+  private[graft] def mvRetract(groupCols: Seq[String],
+      aggs: Seq[(String, String, String)]): Option[graft.plans.Maintained.Retract] =
+    if (!cdfMaintainable(aggs)) None
+    else {
+      import org.apache.spark.sql.functions.{call_function, sum}
+      val signedAggs = aggs.map {
+        case ("count", "*", o) => sum(col("__sgn")).as(o)
+        case ("count", c, o) =>
+          sum(when(col(c).isNotNull, col("__sgn")).otherwise(0L)).as(o)
+        case ("sum", c, o) => sum(col(c) * col("__sgn")).as(o)
+        // the sign rides INTO the histogram: preimages subtract from
+        // exactly the buckets they once incremented
+        case (qf, c, o) => call_function("graft_quant_hist",
+          col(c).cast("double"), col("__sgn"),
+          lit(MvQuantScale), lit(MvQuantSub)).as(o)
+      }
+      val sgn = when(col("_change_type")
+          .isin("insert", "update_postimage"), 1L)
+        .when(col("_change_type").isin("delete", "update_preimage"), -1L)
+      val countStar = aggs.collectFirst { case ("count", "*", o) => o }.get
+      val nullFixes = aggs.collect {
+        case ("sum", c, o) =>
+          val cnt = aggs.collectFirst { case ("count", `c`, oc) => oc }.get
+          o -> when(col(cnt) === 0L, lit(null)).otherwise(col(o))
+      }.toMap
+      Some(graft.plans.Maintained.Retract(
+        feed => feed.withColumn("__sgn", sgn)
+          .groupBy(groupCols.map(col): _*)
+          .agg(signedAggs.head, signedAggs.tail: _*),
+        graft.ops.Merge.PostCombine(set = nullFixes,
+          deleteWhen = Some(col(countStar) === 0L))))
+    }
+
   /** Apply one slice of a row-level change feed to an MV table as
-    * SIGNED deltas (+postimage/insert, −preimage/delete) — shared by
-    * `REFRESH MATERIALIZED VIEW` (one catch-up slice) and the
-    * `graft-table` sink's `aggregate` mode (one micro-batch per call,
-    * `txn`-markered for exactly-once replay). O(changed rows) + the
-    * touched MV cells; emptied groups drop; a surviving group whose
-    * values went all-NULL gets its sum NULL-fixed via the count(c)
-    * companion. Requires [[cdfMaintainable]] aggs. The emptied-group
-    * drop and sum NULL-fix ride INSIDE the markered merge commit
-    * ([[graft.ops.Merge.PostCombine]]): one commit per slice, no
-    * post-merge probe reads of the MV, and no crash window between the
-    * marker and a follow-up repair — a replayed batch no-ops the whole
-    * thing atomically. ([[sweepCdfPhantoms]] remains the healed-resume
-    * repair for phantoms committed by pre-fold binaries.) */
+    * SIGNED deltas through the shared absorb step — used by the join-MV
+    * refresher (each telescoped slice) and the `graft-table` sink's
+    * `aggregate` mode (one micro-batch per call, `txn`-markered for
+    * exactly-once replay). O(changed rows) + the touched MV cells; the
+    * emptied-group drop and sum NULL-fix ride INSIDE the markered merge
+    * commit ([[mvRetract]]), so a replayed batch no-ops the whole thing
+    * atomically. An empty slice commits nothing; NULL group keys throw
+    * [[CdfNotExpressible]] (REFRESH recomputes, the sink surfaces it). */
   private[graft] def applyCdfDelta(mv: VersionedTable, feed: DataFrame,
                                    groupCols: Seq[String],
                                    aggs: Seq[(String, String, String)],
@@ -3120,124 +2904,24 @@ object GraftSql {
                                    numBuckets: Int =
                                      VersionedTable.DefaultMergeBuckets): Unit = {
     registerMvFunctions(feed.sparkSession)
-    require(cdfMaintainable(aggs),
+    val retract = mvRetract(groupCols, aggs)
+    require(retract.isDefined,
       "CDF aggregate maintenance needs count(*) plus sum/count/quant " +
         s"aggregates (with count(c) for every sum(c)); got ${aggs.mkString(",")}")
-    val sgn = when(col("_change_type")
-      .isin("insert", "update_postimage"), 1L)
-      .when(col("_change_type")
-        .isin("delete", "update_preimage"), -1L)
-    val signedAggs = aggs.map {
-      case ("count", "*", o) =>
-        org.apache.spark.sql.functions.sum(col("__sgn")).as(o)
-      case ("count", c, o) => org.apache.spark.sql.functions.sum(
-        when(col(c).isNotNull, col("__sgn")).otherwise(0L)).as(o)
-      case ("sum", c, o) =>
-        org.apache.spark.sql.functions.sum(col(c) * col("__sgn")).as(o)
-      // the sign rides INTO the histogram: preimages subtract from
-      // exactly the buckets they once incremented
-      case (qf, c, o) if isQuantFn(qf) =>
-        org.apache.spark.sql.functions.call_function("graft_quant_hist",
-          col(c).cast("double"), col("__sgn"),
-          lit(MvQuantScale), lit(MvQuantSub)).as(o)
-      case (f, c, _) => sys.error(s"unreachable: $f($c) on the cdf path")
-    }
-    // persisted: the emptiness probe and the merge must not each pay
-    // the feed scan + aggregation shuffle (this is the streaming sink's
-    // per-trigger hot path); the materialized delta is group-count-sized
-    val session = feed.sparkSession
-    // let AQE right-size the CACHED delta's partitioning: by default
-    // Spark pins a cached plan's output partitioning (the conf below is
-    // false), so a handful of changed groups stays spread over
-    // shuffle.partitions cache partitions and every consumer (probe,
-    // staged split) pays that many fixed task overheads per read —
-    // measured ~60-100ms each on the scd2 slice (ProfScd2). Scoped to
-    // this delta's lifecycle and restored in the finally.
-    val cachedPartConf =
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCachedPart = session.conf.getOption(cachedPartConf)
-    session.conf.set(cachedPartConf, "true")
-    val delta = feed.withColumn("__sgn", sgn)
-      .groupBy(groupCols.map(col): _*)
-      .agg(signedAggs.head, signedAggs.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one full-consumption probe: answers emptiness + NULL keys AND
-      // completes the persist (see [[probeDelta]])
-      val (nRows, nNullKeys) = probeDelta(delta, groupCols)
-      // a DDL-only slice (rename/property commits carry no change rows)
-      // must not stage an empty merge — and in the streaming sink a
-      // pure-DDL version range batches as zero rows
-      if (nRows == 0L) return
-      // NULL group values cannot ride the merge (NULL never matches a
-      // key — each batch would insert a fresh NULL row): refuse loudly.
-      // REFRESH catches this and recomputes; the streaming sink surfaces
-      // it to the user (coalesce the group column upstream).
-      if (nNullKeys > 0L)
-        throw new CdfNotExpressible("CDF aggregate maintenance: NULL " +
-          s"value in group column(s) ${groupCols.mkString(",")} — NULL " +
-          "keys cannot merge incrementally; coalesce them upstream")
-      // the in-commit repair: post-combine values already hold the
-      // post-merge counts, so the merge itself can (a) drop a group
-      // whose count(*) reached zero — including a group inserted AND
-      // deleted within this one slice, which must never land — and
-      // (b) NULL-fix a sum whose count(c) companion hit zero (signed
-      // arithmetic leaves 0 where a recompute would show NULL)
-      val countStar = aggs.collectFirst { case ("count", "*", o) => o }.get
-      val nullFixes = aggs.collect {
-        case ("sum", c, o) =>
-          val cnt = aggs.collectFirst { case ("count", `c`, oc) => oc }.get
-          o -> when(col(cnt) === 0L, lit(null)).otherwise(col(o))
-      }.toMap
-      mv.merge(delta, groupCols, numBuckets = numBuckets,
-        updateExprs = aggs.map {
-        case ("count", _, o)              => o -> ((t: Column, u: Column) => t + u)
-        case (qf, _, o) if isQuantFn(qf)  => o -> mvCombine(qf)
-        case (_, _, o)                    => o -> mvCombine("sum")
-      }.toMap, txn = txn, partitionBy = partitionBy,
-        postCombine = Some(graft.ops.Merge.PostCombine(
-          set = nullFixes, deleteWhen = Some(col(countStar) === 0L))))
-    } finally {
-      delta.unpersist()
-      prevCachedPart.fold(session.conf.unset(cachedPartConf))(
-        session.conf.set(cachedPartConf, _))
-    }
+    graft.plans.Maintained.absorb(mv, retract.get.partial(feed), groupCols,
+      mvCombines(aggs), txn, Some(retract.get.repair), partitionBy, numBuckets)
+    ()
   }
 
-  /** Idempotent standalone repair of the CDF maintenance invariants:
-    * drop emptied groups (count(*) == 0, as a recompute would) and
-    * NULL-fix sums whose count(c) companion hit zero (signed arithmetic
-    * leaves a number where a recompute would show NULL). Probes guard
-    * the commits, so a clean table costs two short-circuit reads and no
-    * commit. Since the repair was folded INTO [[applyCdfDelta]]'s merge
-    * commit (PostCombine), this runs ONLY at REFRESH entry on a
-    * ledger-healed resume: new commits can't leave phantoms, but a
-    * slice committed by a pre-fold binary whose process died between
-    * the markered merge and the then-separate follow-ups would — the
-    * healed resume reads that slice as covered and short-circuits to
-    * noop, so entry is the one place left to repair it. */
+  /** Idempotent standalone repair of the CDF maintenance invariants
+    * ([[mvRetract]]'s in-commit repair as probe-guarded commits). It
+    * runs only where a slice committed by an older binary — whose
+    * process died between the markered merge and the then-separate
+    * follow-ups — could have left phantoms: REFRESH entry on a
+    * ledger-healed resume, and a CDF sink's first trigger. */
   private[graft] def sweepCdfPhantoms(mv: VersionedTable,
-      aggs: Seq[(String, String, String)]): Unit = {
-    aggs.collectFirst { case ("count", "*", o) => o }.foreach { countStar =>
-      if (!mv.read.filter(col(countStar) === 0L).limit(1).isEmpty) {
-        mv.delete(col(countStar) === 0L)
-        ()
-      }
-      aggs.foreach {
-        case ("sum", c, o) =>
-          aggs.collectFirst { case ("count", `c`, oc) => oc }.foreach { cnt =>
-            val stale = mv.read
-              .filter(col(cnt) === 0L && col(o).isNotNull).limit(1)
-            if (!stale.isEmpty) {
-              mv.update(Map(o -> lit(null).cast(mv.read.schema(o).dataType)),
-                col(cnt) === 0L && col(o).isNotNull)
-              ()
-            }
-          }
-        case _ => ()
-      }
-    }
-  }
+      aggs: Seq[(String, String, String)]): Unit =
+    mvRetract(Nil, aggs).foreach(x => graft.plans.Maintained.sweep(mv, x.repair))
 
   /** Parse the `fn:col:out;…` agg-spec string (the [[MvAggsProp]]
     * format, also the sink's `aggregate` option). */

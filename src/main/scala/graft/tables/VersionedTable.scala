@@ -4403,8 +4403,8 @@ object VersionedTable {
     * wrapping the persist site is sufficient; session-global flipping
     * would change behavior of caller-owned caches. Every incremental
     * maintainer that persists a group-count-sized delta then merges it
-    * must persist under this scope (see GraftSql.applyCdfDelta, which
-    * pioneered the pattern in r15 — measured ~60-100ms/task there). */
+    * must persist under this scope (see graft.plans.Maintained.absorb;
+    * the CDF absorb path measured ~60-100ms/task before it did). */
   private[graft] def withAqeCachedPartitioning[T](
       spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
