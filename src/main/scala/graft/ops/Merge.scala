@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanShim
 
 /** Join-based MERGE upsert — the engine's implementation of the reference's
   * declared `MERGE INTO silver.live_event` semantics
@@ -35,9 +38,9 @@ object Merge {
     * of its branch are evaluated IN ORDER and the first one whose condition
     * holds wins; a row no clause claims passes through unchanged (matched /
     * target-only) or is skipped (source-only). Conditions and assignment
-    * values are SQL TEXT referencing the two rows as `<tAlias>.col` /
-    * `<sAlias>.col` — unqualified references fail analysis loudly rather
-    * than resolve ambiguously. */
+    * values are Columns referencing the two rows as `<tAlias>.col` /
+    * `<sAlias>.col` (`expr("s.amt > 0")`) — unqualified references fail
+    * analysis loudly rather than resolve ambiguously. */
   sealed trait MergeAction
   /** UPDATE SET * — every target column takes the source value (source
     * must carry all target columns). */
@@ -45,21 +48,21 @@ object Merge {
   /** UPDATE SET c = expr, … — listed columns take their expression,
     * UNLISTED KEEP THE TARGET VALUE (SQL column-level semantics — the
     * contrast with [[upsert]]'s whole-row replacement). */
-  final case class UpdateSet(sets: Seq[(String, String)]) extends MergeAction
+  final case class UpdateSet(sets: Seq[(String, Column)]) extends MergeAction
   case object DeleteRow extends MergeAction
   /** INSERT * — the inserted row takes every source value. */
   case object InsertAll extends MergeAction
   /** INSERT (cols) VALUES (exprs) — unlisted target columns insert NULL. */
-  final case class InsertValues(cols: Seq[String], values: Seq[String])
+  final case class InsertValues(cols: Seq[String], values: Seq[Column])
     extends MergeAction
 
-  final case class MatchedClause(cond: Option[String], action: MergeAction)
-  final case class NotMatchedClause(cond: Option[String], action: MergeAction)
+  final case class MatchedClause(cond: Option[Column], action: MergeAction)
+  final case class NotMatchedClause(cond: Option[Column], action: MergeAction)
   /** WHEN NOT MATCHED BY SOURCE — target-only rows (Delta 2.3's
     * extension). Forces a full-table pass in VersionedTable.merge: every
     * target row must meet the join to know it is unmatched. Expressions
     * may reference only the target alias. */
-  final case class BySourceClause(cond: Option[String], action: MergeAction)
+  final case class BySourceClause(cond: Option[Column], action: MergeAction)
 
   final case class Clauses(tAlias: String, sAlias: String,
                            matched: Seq[MatchedClause],
@@ -68,6 +71,23 @@ object Merge {
     def mayDelete: Boolean =
       matched.exists(_.action == DeleteRow) ||
         bySource.exists(_.action == DeleteRow)
+  }
+
+  /** Is `e` an attribute reference qualified by `alias` (matched
+    * case-insensitively, as Spark's resolver does)? Tested on the parsed
+    * expression tree, so a string literal such as 'mail a@s.com' is a
+    * value and never matches. */
+  private def qualifiedBy(alias: String)(e: Expression): Boolean = e match {
+    case a: UnresolvedAttribute =>
+      a.nameParts.length > 1 && a.nameParts.head.equalsIgnoreCase(alias)
+    case _ => false
+  }
+
+  /** `e` with every `alias.c…` reference rewritten to `to(c) ++ …`. */
+  def requalify(e: Expression, alias: String)(
+      to: String => Seq[String]): Expression = e.transform {
+    case a: UnresolvedAttribute if qualifiedBy(alias)(a) =>
+      UnresolvedAttribute(to(a.nameParts(1)) ++ a.nameParts.drop(2))
   }
 
   /** Post-combine repair riding the SAME merge commit: after
@@ -138,7 +158,7 @@ object Merge {
         s"$what requires the source to carry every target column; " +
           s"missing ${missing.mkString(",")}")
     }
-    def requireAssignable(sets: Seq[(String, String)], what: String): Unit = {
+    def requireAssignable(sets: Seq[(String, Column)], what: String): Unit = {
       val unknown = sets.map(_._1).filterNot(cols.contains)
       require(unknown.isEmpty,
         s"$what assigns unknown column(s) ${unknown.mkString(",")}")
@@ -165,49 +185,35 @@ object Merge {
       case NotMatchedClause(_, bad) =>
         sys.error(s"WHEN NOT MATCHED cannot $bad")
     }
-    val srcRef = ("(?i)\\b" +
-      java.util.regex.Pattern.quote(cl.sAlias) + "\\s*\\.").r
     cl.bySource.foreach { c =>
       (c.cond.toSeq ++ (c.action match {
         case UpdateSet(sets) => requireAssignable(sets,
           "NOT MATCHED BY SOURCE UPDATE SET"); sets.map(_._2)
         case DeleteRow => Nil
         case bad => sys.error(s"WHEN NOT MATCHED BY SOURCE cannot $bad")
-      })).foreach(t => require(srcRef.findFirstIn(t).isEmpty,
+      })).foreach(e => require(
+        !PlanShim.expression(e).exists(qualifiedBy(cl.sAlias)),
         s"NOT MATCHED BY SOURCE expressions cannot reference the source " +
-          s"alias `${cl.sAlias}`: $t"))
+          s"alias `${cl.sAlias}`: $e"))
     }
 
     val targetTypes = target.schema.fields.map(f => f.name -> f.dataType).toMap
     def tCol(c: String) = col(s"__t_$c")
     def uCol(c: String) = col(s"__u_$c")
-    // bind SQL text against the joined frame: alias-qualified references
-    // rewrite to the internal prefixed names (scanned text substitution,
-    // same convention as the time-travel rewriter). A match starting
-    // inside a '…'/"…" string literal is DATA — 'mail a@s.com' must not
-    // have its `s.com` rewritten — so the string-literal mask gates
-    // every replacement. Anything left unqualified fails analysis —
-    // loud, not ambiguous.
-    def bind(text: String): Column = {
-      def sub(t0: String, alias: String, pfx: String): String = {
-        val mask = graft.tables.GraftSql.stringLiteralMask(t0)
-        ("(?i)\\b" + java.util.regex.Pattern.quote(alias) +
-          "\\s*\\.\\s*(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)").r
-          .replaceAllIn(t0, m =>
-            if (mask(m.start)) java.util.regex.Matcher.quoteReplacement(m.matched)
-            else java.util.regex.Matcher.quoteReplacement(
-              "`" + pfx + m.group(1).stripPrefix("`").stripSuffix("`") + "`"))
-      }
-      expr(sub(sub(text, cl.tAlias, "__t_"), cl.sAlias, "__u_"))
-    }
-    def condOf(o: Option[String]): Column = o.map(bind).getOrElse(lit(true))
+    // bind against the joined frame: alias-qualified references rewrite
+    // to the internal prefixed names. Anything left unqualified fails
+    // analysis — loud, not ambiguous.
+    def bind(c: Column): Column = PlanShim.column(requalify(
+      requalify(PlanShim.expression(c), cl.tAlias)(n => Seq(s"__t_$n")),
+      cl.sAlias)(n => Seq(s"__u_$n")))
+    def condOf(o: Option[Column]): Column = o.map(bind).getOrElse(lit(true))
     // first-match fold: first clause (outermost when) whose condition is
     // TRUE wins; NULL conditions fall through (SQL: unknown ≠ satisfied)
-    def firstMatch(arms: Seq[(Option[String], Column)], dflt: Column): Column =
+    def firstMatch(arms: Seq[(Option[Column], Column)], dflt: Column): Column =
       arms.foldRight(dflt) { case ((c, v), els) =>
         when(condOf(c), v).otherwise(els)
       }
-    def anyFired(conds: Seq[Option[String]]): Column =
+    def anyFired(conds: Seq[Option[Column]]): Column =
       conds.map(c => coalesce(condOf(c), lit(false)))
         .foldLeft(lit(false))(_ || _)
 
@@ -235,7 +241,7 @@ object Merge {
         case _               => tCol(c)
       })
     }, tCol(c))
-    def deleteFlag(conds: Seq[(Option[String], MergeAction)]): Column =
+    def deleteFlag(conds: Seq[(Option[Column], MergeAction)]): Column =
       firstMatch(conds.map { case (c, a) => c -> lit(a == DeleteRow) },
         lit(false))
 

@@ -1,8 +1,29 @@
 package graft.tables
 
+import org.antlr.v4.runtime.ParserRuleContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+  UnresolvedFunction, UnresolvedIdentifier, UnresolvedRelation,
+  UnresolvedTable}
+import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo,
+  EvalMode, Expression, Literal}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment,
+  ColumnDefinition, CreateTable, CreateTableAsSelect, DeleteAction,
+  DeleteFromTable, InsertAction, InsertIntoStatement, InsertStarAction,
+  LogicalPlan, MergeIntoTable, MergeAction => ClauseAction,
+  OverwriteByExpression, ReplaceTable,
+  ReplaceTableAsSelect, SubqueryAlias, TableSpecBase, TruncateTable,
+  UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.execution.{SparkSqlAstBuilder, SparkSqlParser}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions.{col, expr, lit, when}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.PlanShim
+import org.apache.spark.sql.types.{DataType, DateType, LongType,
+  NumericType, StringType, StructField, StructType, TimestampType}
+import graft.ops.Merge
 
 /** The SQL maintenance surface (docs/backlog.md:103-106, the reference's
   * empty notebooks/05_ops/61_optimize_and_maintenance.sql): parsed
@@ -95,8 +116,9 @@ import org.apache.spark.sql.types.StructType
   *   UPDATE <table> SET c = expr [, ...] [WHERE cond]
   *   DELETE FROM <table> [WHERE cond]
   *   MERGE INTO <table> [AS] t USING <src> [AS] s ON t.k = s.k [AND ...]
-  *     WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
-  *     | WHEN NOT MATCHED THEN INSERT *     -- insert-if-absent
+  *     WHEN [NOT] MATCHED [BY SOURCE|TARGET] [AND cond] THEN …  -- any
+  *     clause list; UPDATE SET * + INSERT * is the bucket-COW upsert,
+  *     INSERT * alone insert-if-absent, DELETE alone a tombstone merge
   *   COPY INTO <table> FROM '<dir>' FILEFORMAT = PARQUET|JSON|CSV
   *   ALTER TABLE <table> ADD COLUMNS (c TYPE, ...)   -- metadata-only
   *   ALTER TABLE <table> ALTER COLUMN <c> SET DEFAULT <expr> | DROP DEFAULT
@@ -112,13 +134,14 @@ import org.apache.spark.sql.types.StructType
   *   DROP TABLE [IF EXISTS] <table>          -- moves to the catalog trash
   *   UNDROP TABLE <table>                    -- restore the newest drop
   *
-  * A DML identifier that is NOT a graft table (unknown layer, no catalog
-  * bound) delegates to vanilla `spark.sql`, so Spark catalog tables and
-  * temp views keep working through the same funnel. MERGE's source needs
-  * an alias and is a graft table, a temp view, or a parenthesized
-  * subquery (one that itself contains ` ON ` — e.g. an inner join —
-  * must be registered as a temp view instead; the statement regex cannot
-  * see paren nesting and the funnel refuses the mis-parse loudly).
+  * DML and CREATE TABLE are parsed by Spark's own parser: the plan node
+  * (MergeIntoTable, UpdateTable, InsertIntoStatement, CreateTable, …)
+  * maps onto the [[VersionedTable]] operation, and sources and queries
+  * stay parsed plans turned into DataFrames. A DML identifier that is
+  * NOT a graft table (unknown layer, no catalog bound) delegates to
+  * vanilla `spark.sql`, so Spark catalog tables and temp views keep
+  * working through the same funnel. MERGE's source is a graft table, a
+  * temp view, or an aliased subquery of any shape.
   * DML results are the committed `(version, action)` — affected-row
   * counts would cost an extra full scan per statement at 100 TB; the
   * commit metadata lives in DESCRIBE HISTORY.
@@ -427,108 +450,10 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         import spark.implicits._
         Seq(pin).toDF("dropped_pin")
       }
-    // DML statements delegate like ANALYZE below: an identifier that is
-    // not a graft table (unknown layer, no catalog bound) falls through
-    // to vanilla spark.sql — one funnel for the whole session
-    // PARTITIONED BY / TBLPROPERTIES forms first: the plain CREATE
-    // regex's greedy column capture would otherwise swallow the trailing
-    // clauses as column DDL
-    case CreateSchemaPartsStmt(orReplace, ident, colDefs, parts, props) =>
-      ownedRoot(ident).fold(spark.sql(stmt)) { r =>
-        val df = createEmpty(r, orReplace != null, colDefs,
-          splitTop(parts, ',').map(stripTicks))
-        if (props != null)
-          VersionedTable(spark, r).setProperties(parseProps(props).toMap)
-        df
-      }
-    case CreateSchemaPropsStmt(orReplace, ident, colDefs, props) =>
-      ownedRoot(ident).fold(spark.sql(stmt)) { r =>
-        val df = createEmpty(r, orReplace != null, colDefs)
-        VersionedTable(spark, r).setProperties(parseProps(props).toMap)
-        df
-      }
-    case CtasPropsStmt(orReplace, ident, parts, props, query) =>
-      ownedRoot(ident).fold(spark.sql(stmt)) { r =>
-        val df = ctas(r, orReplace != null,
-          Option(parts).toSeq.flatMap(splitTop(_, ',')).map(stripTicks), query)
-        VersionedTable(spark, r).setProperties(parseProps(props).toMap)
-        df
-      }
-    case CreateSchemaStmt(orReplace, ident, colDefs) =>
-      ownedRoot(ident).fold(spark.sql(stmt))(
-        createEmpty(_, orReplace != null, colDefs))
-    case CtasStmt(orReplace, ident, parts, query) =>
-      ownedRoot(ident).fold(spark.sql(stmt))(ctas(_, orReplace != null,
-        Option(parts).toSeq.flatMap(splitTop(_, ',')).map(stripTicks), query))
     case DropTableStmt(ifExists, ident) =>
       dropOwned(ident, ifExists != null).getOrElse(spark.sql(stmt))
     case UndropTableStmt(ident) =>
       undropOwned(ident)
-    case MergeStmt(tgt, tAlias, src, sAlias, on, clauses) =>
-      owned(tgt).fold(spark.sql(stmt))(
-        mergeInto(_, tAlias, src, sAlias, on, clauses))
-    case DeleteStmt(ident, cond) =>
-      // graft.enableDeletionVectors=true routes DELETE to the
-      // merge-on-read DV path (Delta's delta.enableDeletionVectors):
-      // a point delete writes kilobytes of (file, position) sidecar
-      // instead of rewriting every touched file-set. Otherwise a
-      // range/equality-shaped predicate takes the stats-pruned
-      // deleteRange (only overlapping file-sets rewrite — Delta prunes
-      // DELETE by file stats the same way); anything else is full COW.
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        versionDf(
-          if (t.boolProp("graft.enableDeletionVectors"))
-            t.deleteVectors(Option(cond).map(expr).getOrElse(lit(true)))
-          else Option(cond).map(_.trim) match {
-            case Some(c) => parseRangePred(c) match {
-              case Some((rc, lo, hi)) => t.deleteRange(rc, lo, hi)
-              case None               => t.delete(expr(c))
-            }
-            case None => t.delete(lit(true))
-          })
-      }
-    case UpdateStmt(ident, sets, cond) =>
-      // same stats-pruned routing for UPDATE (Delta's file-pruned
-      // UPDATE): range/equality predicates rewrite only overlapping
-      // file-sets — unless the assignment moves bucket/partition keys,
-      // which a touched-sets-only rewrite cannot relocate
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        val assigns = parseAssignments(sets)
-        val keyCols = t.bucketSpec.map(sp => sp.keys ++ sp.partitionKeys)
-          .getOrElse(t.partitionLayout).toSet
-        val movesKeys = assigns.keySet.exists(keyCols.contains)
-        versionDf(Option(cond).map(_.trim) match {
-          case Some(c) => parseRangePred(c).filter(_ => !movesKeys) match {
-            case Some((rc, lo, hi)) => t.updateRange(rc, lo, hi, assigns)
-            case None               => t.update(assigns, expr(c))
-          }
-          case None => t.update(assigns, lit(true))
-        })
-      }
-    case InsertReplaceStmt(ident, cond, query) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        versionDf(routeReplace(t, cond.trim,
-          alignPositional(t, spark.sql(query))))
-      }
-    case InsertColsStmt(kind, ident, cols, query) =>
-      owned(ident).fold(spark.sql(stmt))(
-        insert(_, kind.equalsIgnoreCase("OVERWRITE"), query,
-          Some(splitTop(cols, ',').map(stripTicks))))
-    case InsertStmt(kind, ident, query) =>
-      owned(ident).fold(spark.sql(stmt))(
-        insert(_, kind.equalsIgnoreCase("OVERWRITE"), query))
-    case TruncateStmt(ident) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        // schema-preserving empty overwrite: old versions stay readable
-        // (time travel), partition layout carries through the rewrite.
-        // Identity columns leave the frame (the write path stamps them
-        // and refuses supplied values — zero rows either way).
-        val empty = t.identityColumns.map(_._1)
-          .foldLeft(t.read.limit(0))(_.drop(_))
-        versionDf(t.overwrite(empty,
-          partitionBy =
-            t.bucketSpec.map(_.partitionKeys).getOrElse(t.partitionLayout)))
-      }
     case CopyIntoStmt(ident, dir, fmt) =>
       ownedRoot(ident).fold(spark.sql(stmt))(r =>
         copyInto(VersionedTable(spark, r), dir, fmt))
@@ -916,24 +841,77 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         graft.plans.MvRewrite.explainRewrite(spark.sql(tt))
           .toDF("aggregate", "mv", "decision", "reason")
       } finally ttViews.foreach(spark.catalog.dropTempView)
+    // DML and CREATE TABLE parse with Spark's own parser. A statement
+    // it rejects is malformed and refuses with its error, raised as a
+    // RuntimeException like every other refusal of this funnel — except
+    // the `t@v3` shorthand, the one graft syntax that reaches this arm,
+    // which parses once the time-travel rewrite has replaced it.
     case other =>
-      val (tt, ttViews) = rewriteTimeTravel(other)
-      val (rewritten, tcViews) = rewriteTableChanges(tt)
-      val views = ttViews ++ tcViews
-      // analysis inlines a temp view's plan into the DataFrame, so the
-      // views can drop as soon as spark.sql returns — nothing
-      // accumulates in the session and no later statement can observe
-      // (or race against) a stale pin. EXCEPT view-creating statements:
-      // since Spark 3.1 a SQL-created view stores the PARSED plan and
-      // re-resolves on every reference, so `CREATE TEMP VIEW x AS
-      // SELECT … VERSION AS OF n` must keep its asof pins registered or
-      // x fails with "table not found" on first use — those leak for
-      // the session, the price of deferred resolution
-      val createsView = """(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?""" +
-        """(GLOBAL\s+)?(TEMP(ORARY)?\s+)?VIEW\b.*"""
-      try spark.sql(rewritten)
-      finally if (!other.matches(createsView))
-        views.foreach(spark.catalog.dropTempView)
+      val plan =
+        try Some(parse(other))
+        catch { case e: ParseException =>
+          if (AtVersionProbe.findFirstIn(other).isEmpty)
+            throw new IllegalArgumentException(e.getMessage, e)
+          None
+        }
+      plan.flatMap(ownedStatement).getOrElse(query(other))
+  }
+
+  private def parse(stmt: String): LogicalPlan =
+    SQLConf.withExistingConf(spark.sessionState.conf)(Parser.parsePlan(stmt))
+
+  /** The plan nodes graft runs itself, each onto its [[VersionedTable]]
+    * operation; None when the plan is anything else or its table is
+    * not a graft table, so the statement delegates. */
+  private def ownedStatement(plan: LogicalPlan): Option[DataFrame] =
+    plan match {
+      case m: MergeIntoTable =>
+        target(m.targetTable).map { case (t, alias) => mergeInto(t, alias, m) }
+      case u: UpdateTable =>
+        target(u.table).map { case (t, alias) => update(t, alias, u) }
+      case d: DeleteFromTable =>
+        target(d.table).map { case (t, alias) =>
+          delete(t, unqualify(d.condition, alias)) }
+      case i: InsertIntoStatement =>
+        target(i.table).map { case (t, _) => insert(t, i) }
+      case o: OverwriteByExpression =>
+        target(o.table).map { case (t, alias) =>
+          versionDf(routeReplace(t, unqualify(o.deleteExpr, alias),
+            alignPositional(t, PlanShim.ofRows(spark, o.query))))
+        }
+      case TruncateTable(r: UnresolvedTable) =>
+        owned(identOf(r.multipartIdentifier)).map(truncate)
+      case c: CreateTable => createTable(c.name, c.tableSpec, c.partitioning,
+        orReplace = false, c.ignoreIfExists, columns = c.columns)
+      case r: ReplaceTable => createTable(r.name, r.tableSpec, r.partitioning,
+        orReplace = true, columns = r.columns)
+      case c: CreateTableAsSelect => createTable(c.name, c.tableSpec,
+        c.partitioning, orReplace = false, c.ignoreIfExists, Some(c.query))
+      case r: ReplaceTableAsSelect => createTable(r.name, r.tableSpec,
+        r.partitioning, orReplace = true, query = Some(r.query))
+      case _ => None
+    }
+
+  /** Reads and every statement that is not ours: inline time travel and
+    * `table_changes` become temp views, then `spark.sql` runs it. */
+  private def query(stmt: String): DataFrame = {
+    val (tt, ttViews) = rewriteTimeTravel(stmt)
+    val (rewritten, tcViews) = rewriteTableChanges(tt)
+    val views = ttViews ++ tcViews
+    // analysis inlines a temp view's plan into the DataFrame, so the
+    // views can drop as soon as spark.sql returns — nothing
+    // accumulates in the session and no later statement can observe
+    // (or race against) a stale pin. EXCEPT view-creating statements:
+    // since Spark 3.1 a SQL-created view stores the PARSED plan and
+    // re-resolves on every reference, so `CREATE TEMP VIEW x AS
+    // SELECT … VERSION AS OF n` must keep its asof pins registered or
+    // x fails with "table not found" on first use — those leak for
+    // the session, the price of deferred resolution
+    val createsView = """(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?""" +
+      """(GLOBAL\s+)?(TEMP(ORARY)?\s+)?VIEW\b.*"""
+    try spark.sql(rewritten)
+    finally if (!stmt.matches(createsView))
+      views.foreach(spark.catalog.dropTempView)
   }
 
   /** Delta's `table_changes('t', start [, end])` table-valued function:
@@ -1768,120 +1746,84 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     Seq(stmtText).toDF("createtab_stmt")
   }
 
-  /** CREATE [OR REPLACE] TABLE t (id INT, ...) — the reference smoke
-    * test's schema-first DDL (01_environment_smoke_test.py:74-80): an
-    * empty overwrite snapshot carrying the declared schema, so a
-    * following INSERT aligns positionally against it. */
-  private def createEmpty(root: String, orReplace: Boolean,
-                          colDefs: String,
-                          parts: Seq[String] = Nil): DataFrame = {
-    val t = VersionedTable(spark, root)
-    require(orReplace || !t.exists,
-      s"table already exists: $root (use CREATE OR REPLACE TABLE)")
-    // `id BIGINT GENERATED ALWAYS AS IDENTITY [(START WITH n INCREMENT
-    // BY s)]` — Delta's identity columns: strip the clause from the DDL
-    // (Spark's parser doesn't know it), create, then declare. REPLACE
-    // resets any previous declarations AND the high-water mark — a
-    // replaced table is a fresh table.
-    val IdentityDef = ("""(?is)\s*(`[^`]+`|\w+)\s+BIGINT\s+GENERATED\s+""" +
-      """ALWAYS\s+AS\s+IDENTITY(?:\s*\(\s*START\s+WITH\s+(-?\d+)\s+""" +
-      """INCREMENT\s+BY\s+(-?\d+)\s*\))?\s*""").r
-    // `c TYPE GENERATED ALWAYS AS (expr)` — Delta's generated columns in
-    // DDL; the write-path contract (compute-if-absent, verify-if-present)
-    // lives in VersionedTable.withGeneratedColumns
-    val GeneratedDef = ("""(?is)\s*(`[^`]+`|\w+)\s+([A-Za-z0-9_<>,()\s]+?)""" +
-      """\s+GENERATED\s+ALWAYS\s+AS\s*\((.+)\)\s*""").r
-    // `c TYPE DEFAULT <expr>` — the Spark/Delta DEFAULT clause; stripped
-    // from the DDL and declared after create (named INSERTs fill it)
-    val DefaultDef = ("""(?is)\s*(`[^`]+`|\w+)\s+([A-Za-z0-9_<>,()\s]+?)""" +
-      """\s+DEFAULT\s+(.+?)\s*""").r
-    // `c TYPE NOT NULL` — Delta's NOT NULL column constraint: stripped
-    // from the DDL and registered as a write-time CHECK (`c IS NOT
-    // NULL` evaluates FALSE, not unknown, for a NULL c — so the
-    // unknown-passes CHECK semantics still block it). The strip is
-    // scanner-based: only a TOP-LEVEL occurrence (outside quotes AND
-    // parentheses) is a column constraint — `DECIMAL(10,2) NOT NULL`
-    // and `NOT NULL DEFAULT 5` strip, while an `IS NOT NULL` inside a
-    // GENERATED/DEFAULT parenthesized expression (or a quoted literal)
-    // is expression text and stays
-    val ColName = """(?s)\s*(`[^`]+`|\w+).*""".r
-    val notNulls = scala.collection.mutable.ArrayBuffer.empty[String]
-    val defs = GraftSql.splitTop(colDefs, ',').map { d =>
-      stripTopLevelNotNull(d) match {
-        case Some(stripped) =>
-          d match { case ColName(n) => notNulls += stripTicks(n) }
-          stripped
-        case None => d
+  /** CREATE [OR REPLACE] TABLE t (col TYPE, ...) | AS query — the
+    * reference smoke test's DDL (01_environment_smoke_test.py:74-80);
+    * None when `name` is not a graft table. The schema form commits an
+    * empty snapshot carrying the declared schema, so a following INSERT
+    * aligns positionally against it; its column clauses are Delta's:
+    * `NOT NULL` registers a write-time CHECK (`c IS NOT NULL` evaluates
+    * FALSE, not unknown, for a NULL c), `DEFAULT` fills named INSERTs,
+    * `GENERATED ALWAYS AS (expr)` computes-if-absent and
+    * verifies-if-present, `BIGINT GENERATED ALWAYS AS IDENTITY` stamps
+    * ids, and `COMMENT` lands where COMMENT ON COLUMN puts it.
+    * TBLPROPERTIES apply once the table exists. A replaced table is a
+    * fresh table: previous declarations and the identity high-water
+    * mark do not survive. */
+  private def createTable(name: LogicalPlan, spec: TableSpecBase,
+                          partitioning: Seq[Transform], orReplace: Boolean,
+                          ifNotExists: Boolean = false,
+                          query: Option[LogicalPlan] = None,
+                          columns: Seq[ColumnDefinition] = Nil)
+      : Option[DataFrame] = name match {
+      case UnresolvedIdentifier(ident, _) =>
+        ownedRoot(identOf(ident)).map { root =>
+        val t = VersionedTable(spark, root)
+        if (ifNotExists && t.exists) versionDf(t.history.last) else {
+          require(orReplace || !t.exists,
+            s"table already exists: $root (use CREATE OR REPLACE TABLE)")
+          // validate and analyze EVERYTHING that can refuse BEFORE clearing
+          // the surviving table's declarations: a failed CREATE OR REPLACE
+          // must leave its checks/identity/generated/default metadata intact
+          require(!(t.exists && t.appendOnly),
+            s"CREATE OR REPLACE: table at $root is append-only " +
+              "(graft.appendOnly=true)")
+          require(spec.location.isEmpty, "CREATE TABLE: LOCATION is not " +
+            "supported — address the table as graft.`<path>`")
+          val parts = partitioning.map { p =>
+            require(p.name == "identity",
+              s"PARTITIONED BY supports plain columns, got ${p.describe}")
+            p.references.head.fieldNames.mkString(".")
+          }
+          columns.foreach(c => c.identityColumnSpec.foreach(id =>
+            require(c.dataType == LongType && !id.isAllowExplicitInsert,
+              s"identity column `${c.name}` must be BIGINT GENERATED ALWAYS")))
+          val df = query.fold(spark.createDataFrame(
+            java.util.Collections.emptyList[Row](),
+            CharVarcharUtils.replaceCharVarcharWithStringInSchema(
+              StructType(columns.map(c => StructField(c.name, c.dataType))))))(
+            PlanShim.ofRows(spark, _))
+          val unknown = parts.filterNot(df.columns.contains)
+          require(unknown.isEmpty,
+            s"PARTITIONED BY names unknown column(s): ${unknown.mkString(",")}")
+          t.clearIdentity()
+          t.clearGeneratedColumns()
+          t.clearDefaults()
+          t.clearChecks()
+          t.clearProperties()
+          // the schema form declares its layout BEFORE data exists (the
+          // empty snapshot stays flat so the partition columns remain in
+          // the readable schema); every later INSERT appends hive-layout
+          // file-sets against this record
+          val res = versionDf(t.overwrite(df,
+            partitionBy = if (query.isDefined) parts else Nil))
+          if (query.isEmpty && parts.nonEmpty) t.declarePartitionLayout(parts)
+          columns.foreach { c =>
+            c.identityColumnSpec.foreach(id =>
+              t.declareIdentity(c.name, id.getStart, id.getStep))
+            c.generationExpression.foreach(t.addGeneratedColumn(c.name, _))
+            c.defaultValue.foreach(d => t.setDefault(c.name, d.originalSQL))
+            if (!c.nullable)
+              t.addCheck(s"${c.name}_not_null", s"${c.name} IS NOT NULL")
+          }
+          val props = spec.properties ++ spec.comment.map("comment" -> _) ++
+            columns.flatMap(c =>
+              c.comment.map(GraftSql.ColumnCommentPrefix + c.name -> _))
+          if (props.nonEmpty) t.setProperties(props)
+          res
+        }
       }
+      case _ => None
     }
-    val idents = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val gens = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val dflts = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val plain = defs.map {
-      case IdentityDef(name, start, step) =>
-        val n = stripTicks(name)
-        idents += ((n, Option(start).map(_.toLong).getOrElse(1L),
-          Option(step).map(_.toLong).getOrElse(1L)))
-        s"$name BIGINT"
-      case GeneratedDef(name, dtype, genExpr) =>
-        gens += ((stripTicks(name), genExpr.trim))
-        s"$name $dtype"
-      case DefaultDef(name, dtype, dexpr) =>
-        dflts += ((stripTicks(name), dexpr.trim))
-        s"$name $dtype"
-      case other => other
-    }.mkString(", ")
-    // validate EVERYTHING that can refuse BEFORE clearing the surviving
-    // table's declarations: a failed CREATE OR REPLACE (bad type, bad
-    // partition column, append-only target) must leave the old table's
-    // checks/identity/generated/default metadata intact
-    require(!(t.exists && t.appendOnly),
-      s"CREATE OR REPLACE: table at $root is append-only " +
-        "(graft.appendOnly=true)")
-    val schema = StructType.fromDDL(plain)
-    val unknown = parts.filterNot(schema.fieldNames.contains)
-    require(unknown.isEmpty,
-      s"PARTITIONED BY names unknown column(s): ${unknown.mkString(",")}")
-    t.clearIdentity()
-    t.clearGeneratedColumns()
-    t.clearDefaults()
-    t.clearChecks()
-    t.clearProperties()
-    val res = versionDf(t.overwrite(spark.createDataFrame(
-      java.util.Collections.emptyList[Row](), schema)))
-    // layout declared BEFORE data exists (the empty snapshot stays flat
-    // so the partition columns remain in the readable schema); every
-    // later INSERT appends hive-layout file-sets against this record
-    if (parts.nonEmpty) t.declarePartitionLayout(parts)
-    idents.foreach { case (n, st, sp) => t.declareIdentity(n, st, sp) }
-    gens.foreach { case (n, e) => t.addGeneratedColumn(n, e) }
-    dflts.foreach { case (n, e) => t.setDefault(n, e) }
-    notNulls.foreach(c => t.addCheck(s"${c}_not_null", s"$c IS NOT NULL"))
-    res
-  }
-
-  /** CREATE [OR REPLACE] TABLE t [PARTITIONED BY (...)] AS query. */
-  private def ctas(root: String, orReplace: Boolean, parts: Seq[String],
-                   query: String): DataFrame = {
-    val t = VersionedTable(spark, root)
-    require(orReplace || !t.exists,
-      s"table already exists: $root (use CREATE OR REPLACE TABLE)")
-    // refuse/analyze BEFORE clearing: an append-only target or a query
-    // that fails analysis must leave the surviving table's declarations
-    // intact (a failed REPLACE may not strip constraints)
-    require(!(t.exists && t.appendOnly),
-      s"CREATE OR REPLACE: table at $root is append-only " +
-        "(graft.appendOnly=true)")
-    val df = spark.sql(query) // analysis errors throw here
-    // a REPLACEd table is a fresh table: previous identity/generated/
-    // default/check/property declarations do not survive
-    t.clearIdentity()
-    t.clearGeneratedColumns()
-    t.clearDefaults()
-    t.clearChecks()
-    t.clearProperties()
-    versionDf(t.overwrite(df, partitionBy = parts))
-  }
 
   // --------------------------------------------------------- governance
 
@@ -2160,56 +2102,102 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * MERGEs stay copy-on-write; hive layout preserved so pruning
     * survives); INSERT OVERWRITE replaces the snapshot. Standard SQL
     * positional semantics: the query's columns map to the table's by
-    * position and cast to its declared types. */
-  private def insert(tbl: VersionedTable, overwrite: Boolean,
-                     query: String,
-                     colList: Option[Seq[String]] = None): DataFrame = {
-    val df = spark.sql(query)
-    if (colList.isDefined) {
-      // named-column form: the query's columns bind POSITIONALLY to the
-      // listed names; unlisted columns land as typed NULLs — except
-      // identity (stamped by the write path; naming one is refused) and
-      // generated columns (compute-if-absent), which stay ABSENT here
-      val names = colList.get
-      val schemaByName = tbl.read.schema.fields.map(f => f.name -> f).toMap
-      val idCols = tbl.identityColumns.map(_._1).toSet
-      val genCols = tbl.generatedColumns.map(_._1).toSet
-      val unknown = names.filterNot(schemaByName.contains)
-      require(unknown.isEmpty,
-        s"INSERT: unknown column(s) ${unknown.mkString(",")} at ${tbl.root}")
-      require(names.distinct.length == names.length,
-        s"INSERT: duplicate column in list: ${names.mkString(",")}")
-      val namedIdent = names.filter(idCols.contains)
-      require(namedIdent.isEmpty,
-        s"INSERT: identity column(s) ${namedIdent.mkString(",")} are " +
-          "GENERATED ALWAYS — omit them")
-      require(df.columns.length == names.length,
-        s"INSERT: query has ${df.columns.length} columns, list names " +
-          s"${names.length}")
-      val listed = names.toSet
-      val dflts = tbl.defaultColumns.toMap
-      val projected = tbl.read.schema.fields.toSeq
-        .filterNot(f => idCols.contains(f.name))
-        .filterNot(f => genCols.contains(f.name) && !listed.contains(f.name))
-        .map { f =>
-          if (listed.contains(f.name)) col(s"`${f.name}`").cast(f.dataType)
-          // unlisted + DEFAULT declared → the default (constant-folded);
-          // unlisted otherwise → typed NULL
-          else dflts.get(f.name)
-            .map(e => expr(e).cast(f.dataType).as(f.name))
-            .getOrElse(lit(null).cast(f.dataType).as(f.name))
-        }
-      val aligned = df.toDF(names.toIndexedSeq: _*).select(projected: _*)
-      val parts = tbl.bucketSpec.map(_.partitionKeys)
-        .getOrElse(tbl.partitionLayout)
-      return versionDf(
-        if (overwrite) tbl.overwrite(aligned, partitionBy = parts)
-        else tbl.append(aligned, partitionBy = parts))
-    }
-    val aligned = alignPositional(tbl, df)
+    * position and cast to its declared types — or, with a column list,
+    * to the listed columns ([[alignNamed]]). */
+  private def insert(tbl: VersionedTable, i: InsertIntoStatement): DataFrame = {
+    require(i.partitionSpec.isEmpty && !i.byName,
+      "INSERT: PARTITION (…) and BY NAME are not supported on graft tables")
+    val df = PlanShim.ofRows(spark, i.query)
+    val aligned =
+      if (i.userSpecifiedCols.isEmpty) alignPositional(tbl, df)
+      else alignNamed(tbl, df, i.userSpecifiedCols)
     val parts = tbl.bucketSpec.map(_.partitionKeys).getOrElse(tbl.partitionLayout)
-    versionDf(if (overwrite) tbl.overwrite(aligned, partitionBy = parts)
+    versionDf(if (i.overwrite) tbl.overwrite(aligned, partitionBy = parts)
               else tbl.append(aligned, partitionBy = parts))
+  }
+
+  /** The named-column INSERT form: the query's columns bind POSITIONALLY
+    * to the listed names; unlisted columns land as their DEFAULT or as
+    * typed NULLs — except identity (stamped by the write path; naming
+    * one is refused) and generated columns (compute-if-absent), which
+    * stay ABSENT here. */
+  private def alignNamed(tbl: VersionedTable, df: DataFrame,
+                         names: Seq[String]): DataFrame = {
+    val schemaByName = tbl.read.schema.fields.map(f => f.name -> f).toMap
+    val idCols = tbl.identityColumns.map(_._1).toSet
+    val genCols = tbl.generatedColumns.map(_._1).toSet
+    val unknown = names.filterNot(schemaByName.contains)
+    require(unknown.isEmpty,
+      s"INSERT: unknown column(s) ${unknown.mkString(",")} at ${tbl.root}")
+    require(names.distinct.length == names.length,
+      s"INSERT: duplicate column in list: ${names.mkString(",")}")
+    val namedIdent = names.filter(idCols.contains)
+    require(namedIdent.isEmpty,
+      s"INSERT: identity column(s) ${namedIdent.mkString(",")} are " +
+        "GENERATED ALWAYS — omit them")
+    require(df.columns.length == names.length,
+      s"INSERT: query has ${df.columns.length} columns, list names " +
+        s"${names.length}")
+    val listed = names.toSet
+    val dflts = tbl.defaultColumns.toMap
+    val projected = tbl.read.schema.fields.toSeq
+      .filterNot(f => idCols.contains(f.name))
+      .filterNot(f => genCols.contains(f.name) && !listed.contains(f.name))
+      .map { f =>
+        if (listed.contains(f.name)) col(s"`${f.name}`").cast(f.dataType)
+        // unlisted + DEFAULT declared → the default (constant-folded);
+        // unlisted otherwise → typed NULL
+        else dflts.get(f.name)
+          .map(e => expr(e).cast(f.dataType).as(f.name))
+          .getOrElse(lit(null).cast(f.dataType).as(f.name))
+      }
+    df.toDF(names.toIndexedSeq: _*).select(projected: _*)
+  }
+
+  /** TRUNCATE TABLE: a schema-preserving empty overwrite — old versions
+    * stay readable (time travel), the partition layout carries through
+    * the rewrite. Identity columns leave the frame (the write path
+    * stamps them and refuses supplied values — zero rows either way). */
+  private def truncate(t: VersionedTable): DataFrame = {
+    val empty = t.identityColumns.map(_._1)
+      .foldLeft(t.read.limit(0))(_.drop(_))
+    versionDf(t.overwrite(empty,
+      partitionBy =
+        t.bucketSpec.map(_.partitionKeys).getOrElse(t.partitionLayout)))
+  }
+
+  /** DELETE FROM: graft.enableDeletionVectors=true routes to the
+    * merge-on-read DV path (Delta's delta.enableDeletionVectors): a
+    * point delete writes kilobytes of (file, position) sidecar instead
+    * of rewriting every touched file-set. Otherwise a range/equality
+    * predicate ([[rangeOf]]) takes the stats-pruned deleteRange (only
+    * overlapping file-sets rewrite — Delta prunes DELETE by file stats
+    * the same way); anything else is full COW. */
+  private def delete(t: VersionedTable, cond: Expression): DataFrame =
+    versionDf(
+      if (t.boolProp("graft.enableDeletionVectors"))
+        t.deleteVectors(PlanShim.column(cond))
+      else rangeOf(t, cond) match {
+        case Some((rc, lo, hi)) => t.deleteRange(rc, lo, hi)
+        case None               => t.delete(PlanShim.column(cond))
+      })
+
+  /** UPDATE: the same stats-pruned routing as DELETE (Delta's
+    * file-pruned UPDATE) — unless the assignment moves bucket/partition
+    * keys, which a touched-sets-only rewrite cannot relocate. */
+  private def update(t: VersionedTable, alias: String,
+                     u: UpdateTable): DataFrame = {
+    val assigns = u.assignments.map(a => assignee(a.key, alias) ->
+      PlanShim.column(unqualify(a.value, alias))).toMap
+    val keyCols = t.bucketSpec.map(sp => sp.keys ++ sp.partitionKeys)
+      .getOrElse(t.partitionLayout).toSet
+    val movesKeys = assigns.keySet.exists(keyCols.contains)
+    val cond = u.condition.map(unqualify(_, alias))
+      .getOrElse(Literal.TrueLiteral)
+    versionDf(rangeOf(t, cond).filter(_ => !movesKeys) match {
+      case Some((rc, lo, hi)) => t.updateRange(rc, lo, hi, assigns)
+      case None               => t.update(assigns, PlanShim.column(cond))
+    })
   }
 
   /** `INSERT INTO t REPLACE WHERE cond <query>` routing (Databricks'
@@ -2218,11 +2206,55 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * path — untouched file-sets are carried verbatim, the 100 TB
     * partition-backfill shape — anything else is a full COW
     * [[VersionedTable.replaceWhere]]. */
-  private def routeReplace(t: VersionedTable, cond: String,
+  private def routeReplace(t: VersionedTable, cond: Expression,
                            df: DataFrame): VersionedTable.LogEntry =
-    parseRangePred(cond) match {
+    rangeOf(t, cond) match {
       case Some((rc, lo, hi)) => t.replaceRange(rc, lo, hi, df)
-      case None               => t.replaceWhere(expr(cond), df)
+      case None               => t.replaceWhere(PlanShim.column(cond), df)
+    }
+
+  /** The range-routable shape DELETE, UPDATE and REPLACE WHERE share:
+    * `c = v` or `c BETWEEN lo AND hi` over one column of `t` → (column,
+    * lo, hi). The range paths compare `c` with the bounds CAST to its
+    * type, so a shape routes only where that selects exactly the rows
+    * Spark's own `=` / BETWEEN would ([[rangeBound]]); anything else is
+    * None, the general expression path. */
+  private def rangeOf(t: VersionedTable,
+                      cond: Expression): Option[(String, String, String)] = {
+    def bounds(c: Expression, lo: Expression, hi: Expression) =
+      (c, lo, hi) match {
+        case (UnresolvedAttribute(Seq(name)), l: Literal, h: Literal) =>
+          t.read.schema.find(_.name.equalsIgnoreCase(name)).flatMap(f =>
+            for (a <- rangeBound(l, f.dataType); b <- rangeBound(h, f.dataType))
+              yield (f.name, a, b))
+        case _ => None
+      }
+    cond match {
+      case EqualTo(c, v) => bounds(c, v, v)
+      case f: UnresolvedFunction if f.nameParts.map(_.toLowerCase) ==
+          Seq("between") && f.arguments.length == 3 && !f.isDistinct &&
+          f.filter.isEmpty =>
+        bounds(f.arguments(0), f.arguments(1), f.arguments(2))
+      case _ => None
+    }
+  }
+
+  /** A literal as a range bound on a column of type `dt`: a string on a
+    * string, date or timestamp column (Spark casts the string to the
+    * column's type, exactly as the range path does), or a number whose
+    * value survives the cast to the numeric column's type and back —
+    * `k = 1.5` on an INT column selects no row, where the cast bound
+    * would select `k = 1`. */
+  private def rangeBound(v: Literal, dt: DataType): Option[String] =
+    (v.dataType, dt) match {
+      case (_: StringType, _: StringType | DateType | TimestampType) =>
+        Option(v.value).map(_.toString)
+      case (lt: NumericType, ct: NumericType) =>
+        Option(Cast(v, ct, None, EvalMode.LEGACY).eval())
+          .filter(c =>
+            Cast(Literal(c, ct), lt, None, EvalMode.LEGACY).eval() == v.value)
+          .map(_.toString)
+      case _ => None
     }
 
   /** Positional bind + cast of a query result to `tbl`'s schema.
@@ -2334,178 +2366,139 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
 
   /** MERGE INTO t USING src ON t.k = s.k [AND ...] — the backlog's
     * "MERGE pattern (idempotent upsert)" (docs/backlog.md:49-51,77) as a
-    * statement. Two clause shapes, each mapping to a single engine
-    * primitive so the plan is exactly the hand-written one:
+    * statement. Three clause shapes map to a single engine primitive
+    * each, so the plan is exactly the hand-written one:
     *   UPDATE SET * + INSERT *  →  [[VersionedTable.merge]] (bucket-COW
     *     upsert: only touched (partition, bucket) cells rewrite);
     *   INSERT * alone           →  insert-if-absent: one left-anti join
-    *     against the target keys, then an O(new data) append.
-    * Row-level SET expressions belong to UPDATE (they'd force a
-    * whole-row join plan merge doesn't need); refused explicitly. */
-  private def mergeInto(tbl: VersionedTable, tAlias: String, src: String,
-                        sAlias: String, on: String,
-                        clauses: String): DataFrame = {
-    val EqPat = """(?s)\s*(\w+)\.(`[^`]+`|\w+)\s*=\s*(\w+)\.(`[^`]+`|\w+)\s*""".r
-    val keyPairs = on.split("(?i)\\s+AND\\s+").toSeq.map {
-      case EqPat(a1, c1, a2, c2) =>
-        if (a1 == tAlias && a2 == sAlias) (stripTicks(c1), stripTicks(c2))
-        else if (a1 == sAlias && a2 == tAlias) (stripTicks(c2), stripTicks(c1))
-        else sys.error(s"MERGE ON: aliases must be $tAlias/$sAlias: $on")
-      case other =>
-        sys.error(s"MERGE ON supports conjunctions of t.k = s.k, got: $other")
+    *     against the target keys, then an O(new data) append;
+    *   DELETE alone             →  a tombstone merge (delete-by-source).
+    * Any other clause list — conditional, column-level, NOT MATCHED BY
+    * SOURCE — evaluates first-match per row through
+    * Merge.applyClausesWithLineage on the same bucket-COW path. Source
+    * key references follow the rename the source frame gets (`ON t.k =
+    * s.sk` makes `s.sk` mean the column now called `k`). */
+  private def mergeInto(tbl: VersionedTable, tAlias: String,
+                        m: MergeIntoTable): DataFrame = {
+    val (srcPlan, sAlias) = m.sourceTable match {
+      case SubqueryAlias(a, child) => (child, a.name)
+      case r: UnresolvedRelation => (r, r.multipartIdentifier.last)
+      case _ => sys.error("MERGE USING: a subquery source needs an alias")
     }
-    val srcDf = sourceDf(src)
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other     => Seq(other)
+    }
+    def eqIc(a: String, b: String) = a.equalsIgnoreCase(b)
+    val keyPairs = conjuncts(m.mergeCondition).map {
+      case eq @ EqualTo(UnresolvedAttribute(Seq(a1, c1)),
+                        UnresolvedAttribute(Seq(a2, c2))) =>
+        if (eqIc(a1, tAlias) && eqIc(a2, sAlias)) (c1, c2)
+        else if (eqIc(a1, sAlias) && eqIc(a2, tAlias)) (c2, c1)
+        else sys.error(s"MERGE ON: aliases must be $tAlias/$sAlias: ${eq.sql}")
+      case other =>
+        sys.error("MERGE ON supports conjunctions of t.k = s.k, got: " +
+          other.sql)
+    }
+    val srcDf = srcPlan match {
+      case r: UnresolvedRelation =>
+        owned(identOf(r.multipartIdentifier))
+          .fold(PlanShim.ofRows(spark, r))(_.read)
+      case p => PlanShim.ofRows(spark, p)
+    }
     val renamed = keyPairs.foldLeft(srcDf) { case (d, (tk, sk)) =>
       if (tk == sk) d else d.withColumnRenamed(sk, tk)
     }
     val keys = keyPairs.map(_._1)
-    clauses match {
-      case UpsertClauses() => versionDf(tbl.merge(renamed, keys))
-      case InsertOnlyClauses() =>
+    (m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions) match {
+      case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Seq()) =>
+        versionDf(tbl.merge(renamed, keys))
+      case (Seq(), Seq(InsertStarAction(None)), Seq()) =>
         val fresh = graft.ops.Keyed.notIn(renamed, tbl.read, keys)
         val parts = tbl.bucketSpec.map(_.partitionKeys)
           .getOrElse(tbl.partitionLayout)
         versionDf(tbl.append(fresh, partitionBy = parts))
-      case DeleteClauses() =>
-        // WHEN MATCHED THEN DELETE alone (Delta's delete-by-source
-        // shape): every source key becomes a merge tombstone — matched
-        // target rows are removed through the same bucket-COW path an
-        // upsert takes (only touched cells rewrite); unmatched source
-        // keys are no-ops. Keys route the tombstone; on a PARTITIONED
-        // merge table the partition columns must ride too (they pick
-        // the cell) — carried when the source has them, and their
-        // absence fails the staging write loudly, exactly as it would
-        // for an upsert without them.
+      case (Seq(DeleteAction(None)), Seq(), Seq()) =>
+        // every source key becomes a merge tombstone — matched target
+        // rows are removed through the same bucket-COW path an upsert
+        // takes (only touched cells rewrite); unmatched source keys are
+        // no-ops. Keys route the tombstone; on a PARTITIONED merge table
+        // the partition columns must ride too (they pick the cell) —
+        // carried when the source has them, and their absence fails the
+        // staging write loudly, exactly as it would for an upsert
+        // without them.
         val parts = tbl.bucketSpec.map(_.partitionKeys).getOrElse(Nil)
         val keep = (keys ++ parts.filter(renamed.columns.contains)).distinct
         versionDf(tbl.merge(
           renamed.select(keep.map(col): _*)
-            .withColumn(graft.ops.Merge.DeleteCol, lit(true)),
+            .withColumn(Merge.DeleteCol, lit(true)),
           keys))
-      case other =>
-        // the general grammar: conditional / column-level clauses, any
-        // number, first-match per row — parsed here, evaluated by
-        // Merge.applyClausesWithLineage through the same bucket-COW path
-        val cl = parseMergeClauses(other, tAlias, sAlias, keyPairs)
+      case (matched, notMatched, bySource) =>
+        val renames = keyPairs.collect {
+          case (tk, sk) if tk != sk => sk.toLowerCase -> tk
+        }.toMap
+        def bound(e: Expression): Column = PlanShim.column(
+          Merge.requalify(e, sAlias)(n =>
+            Seq(sAlias, renames.getOrElse(n.toLowerCase, n))))
+        def sets(as: Seq[Assignment]): Seq[(String, Column)] =
+          as.map(a => assignee(a.key, tAlias) -> bound(a.value))
+        def updateOrDelete(a: ClauseAction): Merge.MergeAction = a match {
+          case _: UpdateStarAction => Merge.UpdateAll
+          case u: UpdateAction     => Merge.UpdateSet(sets(u.assignments))
+          case _: DeleteAction     => Merge.DeleteRow
+          case other => sys.error(s"MERGE: unsupported action $other")
+        }
+        val cl = Merge.Clauses(tAlias, sAlias,
+          matched.map(a => Merge.MatchedClause(a.condition.map(bound),
+            updateOrDelete(a))),
+          notMatched.map(a => Merge.NotMatchedClause(a.condition.map(bound),
+            a match {
+              case _: InsertStarAction => Merge.InsertAll
+              case i: InsertAction =>
+                Merge.InsertValues(
+                  i.assignments.map(x => assignee(x.key, tAlias)),
+                  i.assignments.map(x => bound(x.value)))
+              case other => sys.error(s"MERGE: unsupported action $other")
+            })),
+          bySource.map(a => Merge.BySourceClause(a.condition.map(bound),
+            updateOrDelete(a))))
         versionDf(tbl.merge(renamed, keys, clauses = Some(cl)))
     }
   }
 
-  /** Delta's full MERGE clause surface (beyond the three fast-path
-    * shapes above):
-    *   WHEN MATCHED [AND cond] THEN UPDATE SET (* | c = expr, …) | DELETE
-    *   WHEN NOT MATCHED [BY TARGET] [AND cond] THEN
-    *     INSERT (* | (cols) VALUES (exprs))
-    *   WHEN NOT MATCHED BY SOURCE [AND cond] THEN
-    *     UPDATE SET c = expr, … | DELETE
-    * Conditions/values are SQL referencing `tAlias.c` / `sAlias.c`
-    * (unqualified references fail analysis — loud, not ambiguous).
-    * Source key references are rewritten to the target key names the
-    * source frame was renamed to (`ON t.k = s.sk` makes `s.sk` mean the
-    * renamed column). */
-  private def parseMergeClauses(text: String, tAlias: String, sAlias: String,
-      keyPairs: Seq[(String, String)]): graft.ops.Merge.Clauses = {
-    import graft.ops.Merge._
-    def fixKeys(t0: String): String =
-      keyPairs.filter(p => p._1 != p._2).foldLeft(t0) { case (acc, (tk, sk)) =>
-        // literal-gated like Merge.bind: `s.src_id` inside a quoted
-        // string is data and must survive verbatim (mask recomputed per
-        // fold step — earlier steps may have changed offsets)
-        val mask = GraftSql.stringLiteralMask(acc)
-        ("(?i)\\b" + java.util.regex.Pattern.quote(sAlias) +
-          "\\s*\\.\\s*(`" + java.util.regex.Pattern.quote(sk) + "`|" +
-          java.util.regex.Pattern.quote(sk) + "\\b)").r
-          .replaceAllIn(acc, m =>
-            if (mask(m.start))
-              java.util.regex.Matcher.quoteReplacement(m.matched)
-            else java.util.regex.Matcher.quoteReplacement(s"$sAlias.`$tk`"))
-      }
-    def parseSetTexts(sets: String): Seq[(String, String)] =
-      GraftSql.splitTop(sets, ',').map { a =>
-        val i = GraftSql.topLevelIndexOf(a, '=')
-        require(i > 0, s"MERGE UPDATE SET: not an assignment: $a")
-        val lhsRaw = a.substring(0, i).trim
-        val lhs = stripTicks(
-          if (lhsRaw.toLowerCase.startsWith(tAlias.toLowerCase + "."))
-            lhsRaw.substring(tAlias.length + 1).trim
-          else lhsRaw)
-        lhs -> fixKeys(a.substring(i + 1).trim)
-      }
-    val MatchedHead = """(?is)\s*MATCHED(?:\s+AND\s+(.+?))?\s*""".r
-    val BySourceHead =
-      """(?is)\s*NOT\s+MATCHED\s+BY\s+SOURCE(?:\s+AND\s+(.+?))?\s*""".r
-    val NotMatchedHead =
-      """(?is)\s*NOT\s+MATCHED(?:\s+BY\s+TARGET)?(?:\s+AND\s+(.+?))?\s*""".r
-    val UpdateAllAct = """(?is)\s*UPDATE\s+SET\s+\*\s*""".r
-    val UpdateSetAct = """(?is)\s*UPDATE\s+SET\s+(.+?)\s*""".r
-    val DeleteAct = """(?is)\s*DELETE\s*""".r
-    val InsertAllAct = """(?is)\s*INSERT\s+\*\s*""".r
-    val InsertValsAct =
-      """(?is)\s*INSERT\s*\((.+?)\)\s*VALUES\s*\((.+)\)\s*""".r
-    def updateOrDelete(act: String, what: String): MergeAction = act match {
-      case UpdateAllAct()     => UpdateAll
-      case DeleteAct()        => DeleteRow
-      case UpdateSetAct(sets) => UpdateSet(parseSetTexts(sets))
-      case other => sys.error(s"$what expects UPDATE SET …|DELETE: $other")
+  /** The graft table a DML plan writes, with the name its expressions
+    * qualify that table's columns by (the alias, else the last name
+    * part); None when the target is not a graft table. */
+  private def target(plan: LogicalPlan): Option[(VersionedTable, String)] =
+    plan match {
+      case SubqueryAlias(alias, child) =>
+        target(child).map { case (t, _) => (t, alias.name) }
+      case r: UnresolvedRelation =>
+        owned(identOf(r.multipartIdentifier))
+          .map((_, r.multipartIdentifier.last))
+      case _ => None
     }
-    val idxs = GraftSql.topKeywordIndices(text, "WHEN")
-    require(idxs.nonEmpty && text.substring(0, idxs.head).trim.isEmpty,
-      s"MERGE clauses must be WHEN …: $text")
-    val bounds = idxs :+ text.length
-    val matched = scala.collection.mutable.ArrayBuffer.empty[MatchedClause]
-    val notMatched = scala.collection.mutable.ArrayBuffer.empty[NotMatchedClause]
-    val bySource = scala.collection.mutable.ArrayBuffer.empty[BySourceClause]
-    idxs.indices.foreach { i =>
-      val chunk = text.substring(idxs(i) + "WHEN".length, bounds(i + 1))
-      val thenAt = GraftSql.topKeywordIndices(chunk, "THEN")
-      require(thenAt.nonEmpty, s"MERGE clause lacks THEN: WHEN $chunk")
-      val head = chunk.substring(0, thenAt.head)
-      val act = chunk.substring(thenAt.head + "THEN".length)
-      head match {
-        case BySourceHead(cond) =>
-          bySource += BySourceClause(Option(cond).map(fixKeys),
-            updateOrDelete(act, "WHEN NOT MATCHED BY SOURCE"))
-        case MatchedHead(cond) =>
-          matched += MatchedClause(Option(cond).map(fixKeys),
-            updateOrDelete(act, "WHEN MATCHED"))
-        case NotMatchedHead(cond) =>
-          val action = act match {
-            case InsertAllAct() => InsertAll
-            case InsertValsAct(cols, vals) =>
-              val cs = GraftSql.splitTop(cols, ',').map(stripTicks)
-              val vs = GraftSql.splitTop(vals, ',').map(fixKeys)
-              InsertValues(cs, vs)
-            case other =>
-              sys.error(s"WHEN NOT MATCHED expects INSERT …: $other")
-          }
-          notMatched += NotMatchedClause(Option(cond).map(fixKeys), action)
-        case other => sys.error(s"unparseable MERGE clause: WHEN $other")
-      }
-    }
-    Clauses(tAlias, sAlias, matched.toSeq, notMatched.toSeq, bySource.toSeq)
+
+  /** A parsed multipart name in this funnel's identifier grammar: the
+    * path form ``graft.`/p` `` or the dotted `layer.table` name. */
+  private def identOf(parts: Seq[String]): String = parts match {
+    case Seq(g, path) if g.equalsIgnoreCase("graft") && path.contains('/') =>
+      s"graft.`$path`"
+    case _ => parts.mkString(".")
   }
 
-  /** MERGE source: a parenthesized subquery, a graft table, or any
-    * relation `spark.sql` can see (temp views included). */
-  private def sourceDf(src: String): DataFrame = {
-    val s = src.trim
-    if (s.startsWith("(")) {
-      require(s.endsWith(")") && balanced(s), s"MERGE USING subquery " +
-        s"mis-parsed (an ON inside it? alias it as a temp view): $s")
-      spark.sql(s.substring(1, s.length - 1))
-    } else s match {
-      case PathIdent(path) => VersionedTable(spark, path).read
-      case name =>
-        scala.util.Try(resolve(name).read).getOrElse(spark.table(name))
-    }
-  }
+  /** `e` with `alias.c` references to the statement's own table made
+    * plain `c`, the names the table's relation resolves. */
+  private def unqualify(e: Expression, alias: String): Expression =
+    Merge.requalify(e, alias)(Seq(_))
 
-  private def parseAssignments(sets: String): Map[String, Column] =
-    splitTop(sets, ',').map { a =>
-      val i = topLevelIndexOf(a, '=')
-      require(i > 0, s"UPDATE SET: not an assignment: $a")
-      stripTicks(a.substring(0, i).trim) -> expr(a.substring(i + 1).trim)
-    }.toMap
+  /** The column a SET or INSERT assignment writes. */
+  private def assignee(key: Expression, alias: String): String = key match {
+    case a: UnresolvedAttribute =>
+      (if (a.nameParts.length > 1 && a.nameParts.head.equalsIgnoreCase(alias))
+        a.nameParts.tail else a.nameParts).mkString(".")
+    case other => sys.error(s"not an assignable column: ${other.sql}")
+  }
 
   /** The ONE identifier grammar: `layer.table` / `layer_table` via the
     * catalog, or ``graft.`path` `` opening the path directly (Delta's
@@ -2993,6 +2986,17 @@ object GraftSql {
     * [[GraftSql.rewriteTimeTravel]]) — per-statement counters collide. */
   private[tables] val asofViewId = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Spark's SQL parser, except that CREATE TABLE keeps every
+    * TBLPROPERTIES key: Spark's own catalog reserves `owner`,
+    * `location`, `provider`, … while a graft table stores them as plain
+    * properties. */
+  private val Parser = new SparkSqlParser {
+    override val astBuilder: SparkSqlAstBuilder = new SparkSqlAstBuilder {
+      override def cleanTableProperties[V](ctx: ParserRuleContext,
+          properties: Map[String, V]): Map[String, V] = properties
+    }
+  }
+
   def apply(spark: SparkSession, catalog: Catalog): GraftSql =
     new GraftSql(spark, Some(catalog))
   def apply(spark: SparkSession): GraftSql = new GraftSql(spark, None)
@@ -3403,68 +3407,10 @@ object GraftSql {
     ("""(?is)\s*DESC(?:RIBE)?\s+DETAIL\s+""" + Ident + """\s*;?\s*""").r
   private val PathIdent = """graft\.`([^`]+)`""".r
 
-  // ----------------------------------------------------- DML statement forms
-  private val CreateSchemaStmt =
-    ("""(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+""" + Ident +
-      """\s*\((.+)\)\s*(?:USING\s+\w+)?\s*;?\s*""").r
-  private val CtasStmt =
-    ("""(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+""" + Ident +
-      """(?:\s+PARTITIONED\s+BY\s*\(([^)]*)\))?\s+AS\s+((?:SELECT|VALUES|WITH|TABLE|FROM|\()(?:.|\n)*?)\s*;?\s*""").r
   private val DropTableStmt =
     ("""(?is)\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?""" + Ident + """\s*;?\s*""").r
   private val UndropTableStmt =
     ("""(?is)\s*UNDROP\s+TABLE\s+""" + Ident + """\s*;?\s*""").r
-  private val DeleteStmt =
-    ("""(?is)\s*DELETE\s+FROM\s+""" + Ident +
-      """(?:\s+WHERE\s+(.+?))?\s*;?\s*""").r
-  private val UpdateStmt =
-    ("""(?is)\s*UPDATE\s+""" + Ident +
-      """\s+SET\s+(.+?)(?:\s+WHERE\s+(.+?))?\s*;?\s*""").r
-  private val InsertStmt =
-    ("""(?is)\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?""" + Ident +
-      """\s+((?:SELECT|VALUES|WITH|TABLE|FROM|\()(?:.|\n)*?)\s*;?\s*""").r
-  // named-column form: INSERT INTO t (a, b) VALUES/SELECT … — unlisted
-  // columns land NULL (generated ones compute, identity ones stamp).
-  // Must be tried BEFORE InsertStmt: the plain regex would swallow the
-  // column list as a parenthesized query and hand it to spark.sql.
-  private val InsertColsStmt =
-    ("""(?is)\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?""" + Ident +
-      """\s*\(\s*((?:`[^`]+`|\w+)(?:\s*,\s*(?:`[^`]+`|\w+))*)\s*\)\s*""" +
-      """((?:SELECT|VALUES|WITH|TABLE|FROM|\()(?:.|\n)*?)\s*;?\s*""").r
-  // replaceWhere: the predicate capture is lazy, fenced by the query's
-  // leading keyword — a quoted literal containing SELECT/VALUES cannot
-  // start the query group (it would not follow the \s+ boundary as a
-  // bare keyword), and a genuinely ambiguous statement fails loudly in
-  // expr()/spark.sql downstream, never silently
-  private val InsertReplaceStmt =
-    ("""(?is)\s*INSERT\s+INTO\s+(?:TABLE\s+)?""" + Ident +
-      """\s+REPLACE\s+WHERE\s+(.+?)\s+""" +
-      """((?:SELECT|VALUES|WITH|TABLE|FROM|\()(?:.|\n)*)\s*;?\s*""").r
-  // range-routing predicate shapes: the unquoted alternative matches
-  // ONLY numeric literals — a bare identifier (`WHERE a = b`, a column
-  // comparison) must fall through to the general expression path, never
-  // be silently treated as a string literal
-  private val EqPred =
-    """(?is)\s*(`[^`]+`|\w+)\s*=\s*(?:'([^']*)'|(-?\d+(?:\.\d+)?))\s*""".r
-  private val BetweenPred =
-    ("""(?is)\s*(`[^`]+`|\w+)\s+BETWEEN\s+(?:'([^']*)'|(-?\d+(?:\.\d+)?))""" +
-      """\s+AND\s+(?:'([^']*)'|(-?\d+(?:\.\d+)?))\s*""").r
-
-  /** The ONE parser for range-routable predicates (DELETE/UPDATE/REPLACE
-    * WHERE share it): `col = lit` → (col, lit, lit), `col BETWEEN a AND
-    * b` → (col, a, b), anything else → None (general expression path). */
-  private[tables] def parseRangePred(
-      cond: String): Option[(String, String, String)] = cond match {
-    case EqPred(c, q, b) =>
-      val v = if (q != null) q else b
-      Some((stripTicks(c), v, v))
-    case BetweenPred(c, q1, b1, q2, b2) =>
-      Some((stripTicks(c), if (q1 != null) q1 else b1,
-        if (q2 != null) q2 else b2))
-    case _ => None
-  }
-  private val TruncateStmt =
-    ("""(?is)\s*TRUNCATE\s+TABLE\s+""" + Ident + """\s*;?\s*""").r
   private val DescTableStmt =
     ("""(?is)\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?""" + Ident + """\s*;?\s*""").r
   private val CopyIntoStmt =
@@ -3491,24 +3437,6 @@ object GraftSql {
     ("""(?is)\s*SHOW\s+TAGS\s+""" + Ident + """\s*;?\s*""").r
   private val TimeTravelTimestamp =
     ("""(?i)""" + Ident + """\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'""").r
-  // TBLPROPERTIES surface. The schema-form regex relies on backtracking:
-  // the greedy column capture gives ground until the REQUIRED
-  // TBLPROPERTIES keyword matches, so the split lands at the last
-  // `) [USING x] TBLPROPERTIES (` boundary.
-  private val CreateSchemaPropsStmt =
-    ("""(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+""" + Ident +
-      """\s*\((.+)\)\s*(?:USING\s+\w+\s*)?TBLPROPERTIES\s*\((.+)\)\s*;?\s*""").r
-  // schema-form CREATE with a partition spec (Delta's
-  // `CREATE TABLE t (...) USING delta PARTITIONED BY (p)`), optionally
-  // followed by TBLPROPERTIES
-  private val CreateSchemaPartsStmt =
-    ("""(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+""" + Ident +
-      """\s*\((.+)\)\s*(?:USING\s+\w+\s*)?PARTITIONED\s+BY\s*""" +
-      """\(([^)]*)\)(?:\s*TBLPROPERTIES\s*\((.+)\))?\s*;?\s*""").r
-  private val CtasPropsStmt =
-    ("""(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+""" + Ident +
-      """(?:\s+PARTITIONED\s+BY\s*\(([^)]*)\))?\s+TBLPROPERTIES\s*\((.+?)\)""" +
-      """\s+AS\s+((?:SELECT|VALUES|WITH|TABLE|FROM|\()(?:.|\n)*?)\s*;?\s*""").r
   private val SetPropsStmt =
     ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
       """\s+SET\s+TBLPROPERTIES\s*\((.+)\)\s*;?\s*""").r
@@ -3569,7 +3497,7 @@ object GraftSql {
     * and rewriting it would nest backticks into malformed SQL). The
     * opening backtick itself stays false so rewriters whose match
     * begins OUTSIDE and legitimately spans `alias.`col`` still fire. */
-  private[graft] def stringLiteralMask(s: String): Array[Boolean] = {
+  private[tables] def stringLiteralMask(s: String): Array[Boolean] = {
     val mask = new Array[Boolean](s.length)
     var state = ' ' // ' ' outside, '\''/'"' in string, '`' in identifier
     var esc = false
@@ -3592,49 +3520,6 @@ object GraftSql {
       i += 1
     }
     mask
-  }
-
-  /** Remove the first TOP-LEVEL `NOT NULL` (outside quotes, backticks,
-    * and parentheses) from a column def; None when there is none. */
-  private[tables] def stripTopLevelNotNull(d: String): Option[String] = {
-    var depth = 0; var inStr = false; var inTick = false; var inDq = false
-    var esc = false
-    var i = 0
-    val U = d.toUpperCase(java.util.Locale.ROOT)
-    def wordAt(j: Int, w: String): Boolean =
-      U.startsWith(w, j) &&
-        (j == 0 || !Character.isLetterOrDigit(d.charAt(j - 1))) &&
-        (j + w.length >= d.length ||
-          !Character.isLetterOrDigit(d.charAt(j + w.length)))
-    while (i < d.length) {
-      val c = d.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '\'') inStr = false
-        i += 1 }
-      else if (inTick) { if (c == '`') inTick = false; i += 1 }
-      else if (inDq) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inDq = false
-        i += 1 }
-      else c match {
-        case '\'' => inStr = true; i += 1
-        case '`'  => inTick = true; i += 1
-        case '"'  => inDq = true; i += 1
-        case '('  => depth += 1; i += 1
-        case ')'  => depth -= 1; i += 1
-        case _ if depth == 0 && wordAt(i, "NOT") =>
-          var j = i + 3
-          while (j < d.length && Character.isWhitespace(d.charAt(j))) j += 1
-          if (wordAt(j, "NULL"))
-            return Some((d.substring(0, i) + d.substring(j + 4)).trim)
-          i += 1
-        case _ => i += 1
-      }
-    }
-    None
   }
 
   private def unquote(s: String): String = {
@@ -3722,19 +3607,7 @@ object GraftSql {
       """\s+IS\s+('(?:[^']|'')*'|NULL)\s*;?\s*""").r
   private val CommentColumnStmt =
     """(?is)\s*COMMENT\s+ON\s+COLUMN\s+([\w.]+)\s+IS\s+('(?:[^']|'')*'|NULL)\s*;?\s*""".r
-  private val MergeStmt =
-    ("""(?is)\s*MERGE\s+INTO\s+""" + Ident + """(?:\s+AS)?\s+(\w+)""" +
-      """\s+USING\s+(.+?)(?:\s+AS)?\s+(\w+)\s+ON\s+(.+?)\s+(WHEN\s+(?:.|\n)+?)\s*;?\s*""").r
-  private val UpsertClauses =
-    """(?is)\s*WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*""".r
-  private val InsertOnlyClauses =
-    """(?is)\s*WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*""".r
-  private val DeleteClauses =
-    """(?is)\s*WHEN\s+MATCHED\s+THEN\s+DELETE\s*""".r
-
-  // --------------------------------------------- tiny top-level SQL scanners
-  // (regexes can't honor quote/paren nesting; these three scanners are the
-  // entire "parser" the owned grammar needs beyond the statement regexes)
+  // ------------------------------------------------ small text helpers
 
   private def stripTicks(s: String): String =
     s.trim.stripPrefix("`").stripSuffix("`")
@@ -3811,109 +3684,5 @@ object GraftSql {
     }
     out += cur.toString
     out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Top-level indices of keyword `kw` (case-insensitive, word-bounded):
-    * quote/backtick-aware, paren-depth 0, and outside CASE…END — the one
-    * SQL construct where WHEN/THEN nest without parentheses, so a merge
-    * clause condition may itself contain a CASE expression. */
-  private[tables] def topKeywordIndices(s: String, kw: String): Seq[Int] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val U = s.toUpperCase(java.util.Locale.ROOT)
-    val K = kw.toUpperCase(java.util.Locale.ROOT)
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    def wordAt(j: Int, w: String): Boolean =
-      U.startsWith(w, j) && (j == 0 || !isWordChar(s.charAt(j - 1))) &&
-        (j + w.length >= s.length || !isWordChar(s.charAt(j + w.length)))
-    var depth = 0; var caseDepth = 0; var inStr = false; var inTick = false
-    var inDq = false; var esc = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '\'') inStr = false
-        i += 1 }
-      else if (inTick) { if (c == '`') inTick = false; i += 1 }
-      else if (inDq) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inDq = false
-        i += 1 }
-      else c match {
-        case '\'' => inStr = true; i += 1
-        case '`'  => inTick = true; i += 1
-        case '"'  => inDq = true; i += 1
-        case '('  => depth += 1; i += 1
-        case ')'  => depth -= 1; i += 1
-        case _ =>
-          if (wordAt(i, "CASE")) { caseDepth += 1; i += 4 }
-          else if (caseDepth > 0 && wordAt(i, "END")) { caseDepth -= 1; i += 3 }
-          else if (depth == 0 && caseDepth == 0 && wordAt(i, K)) {
-            out += i; i += K.length
-          } else i += 1
-      }
-    }
-    out.toSeq
-  }
-
-  /** Index of the first top-level occurrence of `target`, or -1. */
-  private def topLevelIndexOf(s: String, target: Char): Int = {
-    var depth = 0; var inStr = false; var inTick = false; var inDq = false
-    var esc = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '\'') inStr = false
-      }
-      else if (inTick) { if (c == '`') inTick = false }
-      else if (inDq) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inDq = false
-      }
-      else c match {
-        case '\'' => inStr = true
-        case '`'  => inTick = true
-        case '"'  => inDq = true
-        case '('  => depth += 1
-        case ')'  => depth -= 1
-        case x if x == target && depth == 0 => return i
-        case _    =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def balanced(s: String): Boolean = {
-    var depth = 0; var inStr = false; var inTick = false; var inDq = false
-    var esc = false
-    s.foreach { c =>
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '\'') inStr = false
-      }
-      else if (inTick) { if (c == '`') inTick = false }
-      else if (inDq) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inDq = false
-      }
-      else c match {
-        case '\'' => inStr = true
-        case '`'  => inTick = true
-        case '"'  => inDq = true
-        case '('  => depth += 1
-        case ')'  => depth -= 1; if (depth < 0) return false
-        case _    =>
-      }
-    }
-    depth == 0
   }
 }

@@ -862,22 +862,19 @@ class GraftSqlSpec extends SparkSpec {
       Set((1, "WHEN MATCHED THEN DELETE, (boom")))
   }
 
-  test("MERGE with ' ON ' inside a source literal fails loudly, never silently") {
+  test("MERGE with ' ON ' inside a source literal applies it as data") {
     val (cat, sql) = warehouse()
     val t = cat.table("silver", "advon")
     t.append(Seq((1, "old")).toDF("k", "v"))
-    // a ' word ON ' sequence inside the subquery literal defeats the
-    // statement regex's USING/ON split (the lazy USING group ends at the
-    // in-string ON); the funnel must refuse loudly — either the ON-clause
-    // parser or the subquery-balance check — rather than half-apply
-    val e = intercept[Exception](sql.sql(
+    // a ' word ON ' sequence inside the subquery literal is data to
+    // Spark's parser: the USING/ON split sits where the grammar puts it
+    sql.sql(
       """MERGE INTO silver.advon AS t
         USING (SELECT 1 AS k, 'please stop ON it' AS v) AS s
         ON t.k = s.k
-        WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"""))
-    assert(e.getMessage.contains("MERGE ON") ||
-      e.getMessage.contains("temp view"))
-    assert(t.read.as[(Int, String)].collect().toSet === Set((1, "old")))
+        WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
+    assert(t.read.as[(Int, String)].collect().toSet ===
+      Set((1, "please stop ON it")))
   }
 
   test("CTAS with PARTITIONED BY inside a string literal is data, not DDL") {
@@ -982,22 +979,24 @@ class GraftSqlSpec extends SparkSpec {
     assert(t.readRange("v", "a", "b").count() === 1)
   }
 
-  test("REPLACE WHERE with a hostile literal fails loudly, never silently") {
+  test("REPLACE WHERE with a hostile literal applies it as data") {
     val (cat, sql) = warehouse()
     val t = cat.table("silver", "hw")
     t.append(Seq((1, "x")).toDF("k", "v"))
-    // a predicate literal containing ' SELECT ' splits the statement at
-    // the wrong keyword — the mis-split must die in the SQL parser (an
-    // unbalanced quote), never commit a partial replace
+    // a predicate literal containing ' SELECT ' is data to Spark's
+    // parser: the predicate ends where the grammar ends it
     val v = t.latestVersion.get
-    assertThrows[Exception](sql.sql(
-      "INSERT INTO silver.hw REPLACE WHERE v = 'a SELECT b' " +
-        "SELECT 1 AS k, 'a SELECT b' AS v"))
-    assert(t.latestVersion.get === v)
+    sql.sql("INSERT INTO silver.hw REPLACE WHERE v = 'a SELECT b' " +
+      "SELECT 1 AS k, 'a SELECT b' AS v")
+    assert(t.latestVersion.get === v + 1)
+    assert(t.history.last.action === "replace_where")
+    assert(t.read.as[(Int, String)].collect().toSet ===
+      Set((1, "x"), (1, "a SELECT b")))
     // sane predicates with quoted spaces are fine
     sql.sql("INSERT INTO silver.hw REPLACE WHERE v = 'x' " +
       "VALUES (7, 'x')")
-    assert(t.read.as[(Int, String)].collect().toSet === Set((7, "x")))
+    assert(t.read.as[(Int, String)].collect().toSet ===
+      Set((7, "x"), (1, "a SELECT b")))
   }
 
   test("UPDATE / DELETE with range predicates rewrite only overlapping sets") {

@@ -1785,6 +1785,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("merge with conditional clauses: guarded update/delete/insert, CDF exact") {
     import graft.ops.Merge._
+    import org.apache.spark.sql.functions.expr
     val t = VersionedTable(spark, tmpDir("vt-clauses-"))
     t.enableChangeFeed()
     t.merge(Seq((1, "a", 10), (2, "b", 20), (3, "c", 30))
@@ -1794,12 +1795,13 @@ class VersionedTableSpec extends SparkSpec {
       .toDF("id", "sv", "samt")
     val cl = Clauses("t", "s",
       matched = Seq(
-        MatchedClause(Some("s.samt < 10"), DeleteRow),
-        MatchedClause(Some("s.samt >= 100"),
-          UpdateSet(Seq("v" -> "upper(s.sv)", "amt" -> "t.amt + s.samt")))),
+        MatchedClause(Some(expr("s.samt < 10")), DeleteRow),
+        MatchedClause(Some(expr("s.samt >= 100")),
+          UpdateSet(Seq("v" -> expr("upper(s.sv)"),
+            "amt" -> expr("t.amt + s.samt"))))),
       notMatched = Seq(
-        NotMatchedClause(Some("s.samt > 0"),
-          InsertValues(Seq("id", "v"), Seq("s.id", "s.sv")))))
+        NotMatchedClause(Some(expr("s.samt > 0")),
+          InsertValues(Seq("id", "v"), Seq(expr("s.id"), expr("s.sv"))))))
     t.merge(src, Seq("id"), clauses = Some(cl))                       // v1
     // id1: second clause fires (update v→A2, amt 10+100); id2: delete;
     // id3: no source row, untouched; id4: guarded insert (amt NULL);
@@ -1818,8 +1820,9 @@ class VersionedTableSpec extends SparkSpec {
     // shadows it
     val cl2 = Clauses("t", "s",
       matched = Seq(
-        MatchedClause(None, UpdateSet(Seq("v" -> "'first'"))),
-        MatchedClause(Some("s.samt > 0"), UpdateSet(Seq("v" -> "'second'")))),
+        MatchedClause(None, UpdateSet(Seq("v" -> expr("'first'")))),
+        MatchedClause(Some(expr("s.samt > 0")),
+          UpdateSet(Seq("v" -> expr("'second'"))))),
       notMatched = Nil)
     t.merge(src.filter($"id" === 1), Seq("id"), clauses = Some(cl2))  // v2
     assert(t.read.filter($"id" === 1).select("v").as[String].head() === "first")
@@ -1827,16 +1830,18 @@ class VersionedTableSpec extends SparkSpec {
 
   test("merge WHEN NOT MATCHED BY SOURCE updates/deletes unmatched target rows") {
     import graft.ops.Merge._
+    import org.apache.spark.sql.functions.expr
     val t = VersionedTable(spark, tmpDir("vt-bysrc-"))
     t.merge(Seq((1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "dd", 40))
       .toDF("id", "v", "amt"), Seq("id"))
     val src = Seq((1, "a9")).toDF("id", "sv")
     val cl = Clauses("t", "s",
-      matched = Seq(MatchedClause(None, UpdateSet(Seq("v" -> "s.sv")))),
+      matched = Seq(MatchedClause(None, UpdateSet(Seq("v" -> expr("s.sv"))))),
       notMatched = Nil,
       bySource = Seq(
-        BySourceClause(Some("t.amt >= 40"), DeleteRow),
-        BySourceClause(Some("t.amt >= 30"), UpdateSet(Seq("v" -> "'stale'")))))
+        BySourceClause(Some(expr("t.amt >= 40")), DeleteRow),
+        BySourceClause(Some(expr("t.amt >= 30")),
+          UpdateSet(Seq("v" -> expr("'stale'"))))))
     t.merge(src, Seq("id"), clauses = Some(cl))
     // id1 matched-updated; id2 unmatched, no by-source clause fires
     // (amt=20), untouched; id3 by-source update; id4 by-source delete
@@ -1844,7 +1849,7 @@ class VersionedTableSpec extends SparkSpec {
       Seq((1, "a9", 10), (2, "b", 20), (3, "stale", 30)))
     // by-source expressions must not reference the source alias
     val bad = Clauses("t", "s", Nil, Nil,
-      bySource = Seq(BySourceClause(Some("s.sv = 'x'"), DeleteRow)))
+      bySource = Seq(BySourceClause(Some(expr("s.sv = 'x'")), DeleteRow)))
     assertThrows[IllegalArgumentException](
       t.merge(src, Seq("id"), clauses = Some(bad)))
   }
