@@ -8,6 +8,11 @@ package graft.fpl
   */
 object SampleData {
 
+  /** Gameweek g's calendar day: 2025-08-10 plus g days, so a full
+    * 38-gameweek season runs into September with valid dates. */
+  private def gameweekDay(g: Int): String =
+    java.time.LocalDate.of(2025, 8, 10).plusDays(g).toString
+
   def bootstrapJson(nTeams: Int = 4, playersPerTeam: Int = 3,
                     nGameweeks: Int = 8, nextGw: Int = 2): String = {
     val teams = (1 to nTeams).map { t =>
@@ -31,7 +36,7 @@ object SampleData {
     }).mkString("[", ",", "]")
 
     val events = (1 to nGameweeks).map { g =>
-      s"""{"id":$g,"name":"Gameweek $g","deadline_time":"2025-08-${10 + g}T17:30:00Z",""" +
+      s"""{"id":$g,"name":"Gameweek $g","deadline_time":"${gameweekDay(g)}T17:30:00Z",""" +
         s""""finished":${g < nextGw - 1},"is_previous":${g == nextGw - 2},""" +
         s""""is_current":${g == nextGw - 1},"is_next":${g == nextGw},""" +
         s""""data_checked":${g < nextGw - 1},"highest_score":${60 + g},""" +
@@ -52,7 +57,7 @@ object SampleData {
       val h = (g + m) % nTeams + 1
       val a = (g + m + nTeams / 2) % nTeams + 1
       val id = (g - 1) * (nTeams / 2) + m + 1
-      s"""{"id":$id,"event":$g,"kickoff_time":"2025-08-${10 + g}T14:00:00Z",""" +
+      s"""{"id":$id,"event":$g,"kickoff_time":"${gameweekDay(g)}T14:00:00Z",""" +
         s""""team_h":$h,"team_a":$a,"team_h_difficulty":${(h + g) % 5 + 1},""" +
         s""""team_a_difficulty":${(a + g) % 5 + 1},"finished":false,"started":false,""" +
         s""""provisional_start_time":false,"minutes":0,"code":${1000000 + id}}"""

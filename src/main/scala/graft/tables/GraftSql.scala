@@ -2,27 +2,38 @@ package graft.tables
 
 import org.antlr.v4.runtime.ParserRuleContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
-  UnresolvedFunction, UnresolvedIdentifier, UnresolvedRelation,
-  UnresolvedTable}
+import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace,
+  RelationTimeTravel, UnresolvedAttribute, UnresolvedFunction,
+  UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable,
+  UnresolvedTableOrView, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo,
-  EvalMode, Expression, Literal}
+  EvalMode, Expression, ForeignKeyConstraint, Literal,
+  PrimaryKeyConstraint}
 import org.apache.spark.sql.catalyst.parser.ParseException
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment,
-  ColumnDefinition, CreateTable, CreateTableAsSelect, DeleteAction,
-  DeleteFromTable, InsertAction, InsertIntoStatement, InsertStarAction,
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint,
+  AddColumns, AddConstraint, AlterColumnSpec, AlterColumns,
+  AlterTableClusterBy, AnalyzeColumn, Assignment, ColumnDefinition,
+  CommentOnTable, CreateTable, CreateTableAsSelect, DeleteAction,
+  DeleteFromTable, DescribeRelation, DropColumns, DropConstraint,
+  DropTable, Filter, InsertAction, InsertIntoStatement, InsertStarAction,
   LogicalPlan, MergeIntoTable, MergeAction => ClauseAction,
-  OverwriteByExpression, ReplaceTable,
-  ReplaceTableAsSelect, SubqueryAlias, TableSpecBase, TruncateTable,
+  OverwriteByExpression, RenameColumn, RenameTable, ReplaceTable,
+  ReplaceTableAsSelect, SetTableProperties, ShowColumns, ShowCreateTable,
+  ShowPartitions, ShowTableProperties, ShowTables, SubqueryAlias,
+  TableSpecBase, TruncateTable, UnresolvedWith, UnsetTableProperties,
   UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.{SparkSqlAstBuilder, SparkSqlParser}
+import org.apache.spark.sql.execution.command.{CreateViewCommand,
+  ExplainCommand}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions.{col, expr, lit, when}
 import org.apache.spark.sql.graft.PlanShim
-import org.apache.spark.sql.types.{DataType, DateType, LongType,
-  NumericType, StringType, StructField, StructType, TimestampType}
+import scala.util.matching.Regex
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType,
+  DateType, LongType, MapType, NumericType, StringType,
+  StructField, StructType, TimestampType}
 import graft.ops.Merge
 
 /** The SQL maintenance surface (docs/backlog.md:103-106, the reference's
@@ -30,8 +41,8 @@ import graft.ops.Merge
   * `OPTIMIZE` / `VACUUM` statements alongside the existing
   * `DESCRIBE HISTORY` / `DESCRIBE DETAIL` relation flows, completing the
   * table lifecycle — DDL, DML, time travel, CDC, and now maintenance —
-  * in one SQL entry point. Anything that is not a graft maintenance
-  * statement delegates verbatim to `spark.sql`, so callers can use one
+  * in one SQL entry point. Anything that is not a graft statement runs
+  * through Spark (pinned reads substituted), so callers can use one
   * `GraftSql.sql(...)` funnel for their whole session (the same
   * parse-what-you-own / delegate-the-rest shape as Delta's SQL parser).
   *
@@ -64,7 +75,6 @@ import graft.ops.Merge
   *   ALTER TABLE <table> CREATE TAG <name> [AS OF VERSION n]  -- release pin
   *   ALTER TABLE <table> DROP TAG <name>    -- (tagged versions vacuum-exempt)
   *   SHOW TAGS <table>
-  *   SELECT ... FROM <table> VERSION AS OF '<tag>' ...
   *   CREATE [OR REPLACE] MATERIALIZED VIEW <table> AS
   *     SELECT g1, ..., sum|count|min|max(c) AS name, ... FROM <table>
   *     [WHERE <pred>] GROUP BY g1, ...        -- materialized + auto-routed
@@ -96,8 +106,14 @@ import graft.ops.Merge
   *   ANALYZE TABLE <table> COMPUTE STATISTICS FOR COLUMNS c1, c2, ...
   *   DESCRIBE HISTORY <table>
   *   DESCRIBE DETAIL <table>
-  *   SELECT ... FROM <table> VERSION AS OF n ...        -- inline rewrite
-  *   SELECT ... FROM <table> TIMESTAMP AS OF 'ts' ...   -- inline rewrite
+  *
+  * Pinned reads, anywhere a relation may stand (joins, subqueries,
+  * CTEs, DML and CTAS sources, temp views), governed like every read:
+  *
+  *   ... FROM <table> VERSION AS OF n | VERSION AS OF '<tag>'
+  *   ... FROM <table> TIMESTAMP AS OF 'yyyy-MM-dd[ HH:mm:ss]'
+  *   ... FROM <table>@v<n>                    -- Delta's shorthand
+  *   ... FROM table_changes('<table>', start [, end])  -- change feed
   *
   * DML (the reference smoke flow, 01_environment_smoke_test.py:74-93,
   * and the backlog's MERGE pattern, docs/backlog.md:49-51):
@@ -123,6 +139,8 @@ import graft.ops.Merge
   *   ALTER TABLE <table> ADD COLUMNS (c TYPE, ...)   -- metadata-only
   *   ALTER TABLE <table> ALTER COLUMN <c> SET DEFAULT <expr> | DROP DEFAULT
   *   ALTER TABLE <table> ALTER COLUMN <c> SET NOT NULL | DROP NOT NULL
+  *   ALTER TABLE <table> DROP COLUMN[S] c | (c1, c2, ...)
+  *   ALTER TABLE <table> RENAME COLUMN <c> TO <c2>
   *   ALTER TABLE <table> ALTER COLUMN <c> TYPE <t>   -- lossless widening
   *   ALTER TABLE <table> ADD CONSTRAINT <name> CHECK (<expr>)
   *   ALTER TABLE <t> ADD CONSTRAINT <n> PRIMARY KEY (cols) [NOT ENFORCED] [RELY]
@@ -130,18 +148,26 @@ import graft.ops.Merge
   *     REFERENCES <t2> [(cols)] [NOT ENFORCED] [RELY]   -- informational keys
   *   ALTER TABLE <table> DROP CONSTRAINT <name>
   *   ALTER TABLE <table> RENAME TO <table>   -- one directory move
-  *   SHOW COLUMNS IN <table>
+  *   ALTER TABLE <table> CLUSTER BY (c1, ...) | NONE
+  *   ALTER TABLE <table> SET TBLPROPERTIES (...) | UNSET TBLPROPERTIES
+  *     [IF EXISTS] (...)
+  *   ALTER TABLE <table> SET PARTITIONED BY (c1, ...)  -- layout evolution
+  *   SHOW COLUMNS IN <table> | SHOW TBLPROPERTIES <table>
+  *   SHOW PARTITIONS <table> | SHOW CREATE TABLE <table> | SHOW TABLES
   *   DROP TABLE [IF EXISTS] <table>          -- moves to the catalog trash
   *   UNDROP TABLE <table>                    -- restore the newest drop
   *
-  * DML and CREATE TABLE are parsed by Spark's own parser: the plan node
-  * (MergeIntoTable, UpdateTable, InsertIntoStatement, CreateTable, …)
-  * maps onto the [[VersionedTable]] operation, and sources and queries
-  * stay parsed plans turned into DataFrames. A DML identifier that is
-  * NOT a graft table (unknown layer, no catalog bound) delegates to
-  * vanilla `spark.sql`, so Spark catalog tables and temp views keep
-  * working through the same funnel. MERGE's source is a graft table, a
-  * temp view, or an aliased subquery of any shape.
+  * DML, CREATE TABLE, the standard ALTER TABLE / DROP TABLE / COMMENT
+  * ON TABLE / SHOW / DESCRIBE / ANALYZE forms and every read are parsed
+  * by Spark's own parser: the plan node (MergeIntoTable, AddColumns,
+  * AlterColumns, ShowColumns, DescribeRelation, …) maps onto the
+  * [[VersionedTable]] operation, and a pinned read of a graft table is
+  * substituted into the plan as that table's governed relation. A
+  * statement whose identifier is NOT a graft table (unknown layer, no
+  * catalog bound) delegates to vanilla `spark.sql`, so Spark catalog
+  * tables and temp views keep working through the same funnel. MERGE's
+  * source is a graft table, a temp view, or an aliased subquery of any
+  * shape. The graft-only statements above keep their own grammar.
   * DML results are the committed `(version, action)` — affected-row
   * counts would cost an extra full scan per statement at 100 TB; the
   * commit metadata lives in DESCRIBE HISTORY.
@@ -450,150 +476,11 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         import spark.implicits._
         Seq(pin).toDF("dropped_pin")
       }
-    case DropTableStmt(ifExists, ident) =>
-      dropOwned(ident, ifExists != null).getOrElse(spark.sql(stmt))
     case UndropTableStmt(ident) =>
       undropOwned(ident)
     case CopyIntoStmt(ident, dir, fmt) =>
       ownedRoot(ident).fold(spark.sql(stmt))(r =>
         copyInto(VersionedTable(spark, r), dir, fmt))
-    case AddColumnsStmt(ident, colDefs) =>
-      owned(ident).fold(spark.sql(stmt))(t => versionDf(t.addColumns(colDefs)))
-    case RenameColumnStmt(ident, from, to) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        val (f, tn) = (stripTicks(from), stripTicks(to))
-        // an MV's GROUP columns are its merge-bucket keys AND its own
-        // table columns — a rename cannot propagate (bucket keys refuse
-        // renames: hash(old)≠hash(new) would re-route cells), so refuse
-        // at the source like DROP does
-        val groupDeps = mvsSourcedFrom(t.root).filter { case (_, props) =>
-          props(GraftSql.MvGroupProp).split(",").contains(f) ||
-            mvWhereCols(props).contains(f)
-        }
-        require(groupDeps.isEmpty,
-          s"RENAME COLUMN: `$f` is a GROUP or WHERE column of " +
-            s"materialized view(s) ${groupDeps.map(_._1).mkString(", ")} — " +
-            "drop and recreate them to re-key")
-        // join MVs: group columns and this side's JOIN KEYS refuse (the
-        // MV's merge-bucket keys / the registered join condition cannot
-        // re-key); agg-only columns re-key below like the single-table
-        // path
-        val joinHard = joinMvsSourcedFrom(t.root).filter {
-          case (_, props, side) =>
-            val segs = graft.plans.JoinMv.parseKeySegments(
-              props(graft.plans.JoinMv.KeysProp))
-            props(graft.plans.JoinMv.GroupProp).split(",").contains(f) ||
-              (if (side < 0) segs.flatten.exists(_._1 == f)
-               else segs(side).exists(_._2 == f) ||
-                 joinMvDimFilterCols(props, side).contains(f))
-        }
-        require(joinHard.isEmpty,
-          s"RENAME COLUMN: `$f` is a GROUP, JOIN-KEY, or dim-FILTER " +
-            s"column of join materialized view(s) " +
-            s"${joinHard.map(_._1).mkString(", ")} — " +
-            "drop and recreate them to re-key")
-        // sketch rollups: group columns are the rollup's merge-bucket
-        // keys AND its own columns — refuse like MV groups; the
-        // distinct column lives only in the definition — re-key below
-        val sketchHard = sketchesSourcedFrom(t.root).filter {
-          case (_, props) =>
-            props(graft.ops.Sketches.GroupProp).split(",").contains(f)
-        }
-        require(sketchHard.isEmpty,
-          s"RENAME COLUMN: `$f` is a GROUP column of sketch rollup(s) " +
-            s"${sketchHard.map(_._1).mkString(", ")} — drop and " +
-            "recreate them to re-key")
-        // validated BEFORE the rename commits: a refusal below must not
-        // leave the table renamed with a stale, un-re-keyed definition
-        requireJoinMvRekeyUnambiguous(t.root, f)
-        // a row filter / column mask referencing the column would stop
-        // resolving (policy text cannot be re-keyed safely) — and a
-        // governance policy that silently stops applying is a leak
-        require(!governanceCols(t).contains(f),
-          s"RENAME COLUMN: `$f` is referenced by a row filter or " +
-            "column mask — drop the policy first")
-        val df = versionDf(t.renameColumn(f, tn))
-        // AGG source columns live only in the stored definition — re-key
-        // them so later REFRESHes resolve under the new name (the
-        // metadata sibling of VersionedTable.renameColumn re-keying
-        // DEFAULTs and CLUSTER BY). Routing entries keep the old logical
-        // names and simply stop matching until the next REFRESH re-arms
-        // (safe: old-name queries can no longer resolve at all).
-        rekeyDependentMvAggs(t.root, f, tn)
-        rekeyDependentJoinMvAggs(t.root, f, tn)
-        rekeyDependentSketchDistinct(t.root, f, tn)
-        df
-      }
-    case DropColumnStmt(ident, c) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        val name = stripTicks(c)
-        // a column a registered MV aggregates or groups by must not be
-        // dropped out from under it — every later REFRESH would fail
-        // (same refusal class as bucket keys / CHECK references)
-        val dependents = mvsSourcedFrom(t.root).filter { case (_, props) =>
-          mvReferencedCols(props).contains(name)
-        }
-        require(dependents.isEmpty,
-          s"DROP COLUMN: `$name` is referenced by materialized view(s) " +
-            s"${dependents.map(_._1).mkString(", ")} — drop them first")
-        val joinDeps = joinMvsSourcedFrom(t.root).filter {
-          case (_, props, side) =>
-            val segs = graft.plans.JoinMv.parseKeySegments(
-              props(graft.plans.JoinMv.KeysProp))
-            props(graft.plans.JoinMv.GroupProp).split(",")
-              .contains(name) ||
-              GraftSql.parseAggSpecs(props(graft.plans.JoinMv.AggsProp))
-                .exists(_._2 == name) ||
-              (if (side < 0) segs.flatten.exists(_._1 == name)
-               else segs(side).exists(_._2 == name) ||
-                 joinMvDimFilterCols(props, side).contains(name))
-        }
-        require(joinDeps.isEmpty,
-          s"DROP COLUMN: `$name` is referenced by join materialized " +
-            s"view(s) ${joinDeps.map(_._1).mkString(", ")} — drop them first")
-        val sketchDeps = sketchesSourcedFrom(t.root).filter {
-          case (_, props) =>
-            props(graft.ops.Sketches.GroupProp).split(",")
-              .contains(name) ||
-              props(graft.ops.Sketches.DistinctProp) == name
-        }
-        require(sketchDeps.isEmpty,
-          s"DROP COLUMN: `$name` is referenced by sketch rollup(s) " +
-            s"${sketchDeps.map(_._1).mkString(", ")} — drop them first")
-        require(!governanceCols(t).contains(name),
-          s"DROP COLUMN: `$name` is referenced by a row filter or " +
-            "column mask — drop the policy first")
-        versionDf(t.dropColumn(name))
-      }
-    case SetDefaultStmt(ident, c, dexpr) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        val name = stripTicks(c)
-        require(t.read.columns.contains(name),
-          s"SET DEFAULT: no column `$name` in ${t.root}")
-        t.setDefault(name, dexpr.trim)
-        import spark.implicits._
-        Seq((name, dexpr.trim)).toDF("column", "default_expr")
-      }
-    case DropDefaultStmt(ident, c) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        t.dropDefault(stripTicks(c))
-        import spark.implicits._
-        Seq(stripTicks(c)).toDF("dropped_default")
-      }
-    case RenameTableStmt(src, dst) =>
-      (ownedRoot(src), ownedRoot(dst)) match {
-        case (Some(s), Some(d)) => renameTable(src, s, dst, d)
-        case _                  => spark.sql(stmt)
-      }
-    case AlterColTypeStmt(ident, c, typeDdl) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        val name = stripTicks(c)
-        val dt = org.apache.spark.sql.types.StructType
-          .fromDDL(s"__x $typeDdl").fields(0).dataType
-        t.widenColumnType(name, dt)
-        import spark.implicits._
-        Seq((name, dt.simpleString)).toDF("column", "new_type")
-      }
     // Row filters and column masks (Databricks/UC read governance):
     // durable in table properties, enforced on every registered-view
     // read (Catalog.registerViews binds governedRead). Validated HERE —
@@ -637,103 +524,14 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         t.unsetProperties(Seq(GraftSql.ColumnMaskPrefix + stripTicks(c)))
         Seq(stripTicks(c)).toDF("dropped_mask")
       }
-    case SetNotNullStmt(ident, c) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        val name = stripTicks(c)
-        require(t.read.columns.contains(name),
-          s"SET NOT NULL: no column `$name` in ${t.root}")
-        // same constraint shape the CREATE TABLE `c TYPE NOT NULL` form
-        // records, so DESCRIBE shows one vocabulary and DROP NOT NULL
-        // finds it; addCheck scans current rows and refuses on NULLs
-        // (Delta's SET NOT NULL validation)
-        t.addCheck(s"${name}_not_null", s"$name IS NOT NULL")
-        import spark.implicits._
-        Seq((name, s"$name IS NOT NULL")).toDF("column", "constraint_expr")
-      }
-    case DropNotNullStmt(ident, c) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        t.dropCheck(s"${stripTicks(c)}_not_null")
-        import spark.implicits._
-        Seq(stripTicks(c)).toDF("dropped_not_null")
-      }
-    case ShowColumnsStmt(ident) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        import spark.implicits._
-        t.read.columns.toSeq.toDF("col_name")
-      }
     case SetPartitionedByStmt(ident, cols) =>
       owned(ident).fold(spark.sql(stmt)) { t =>
         val cs = splitTop(cols, ',').map(stripTicks).filter(_.nonEmpty)
         versionDf(t.evolvePartitionLayout(cs))
       }
-    case ClusterByStmt(ident, cols, none) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        import spark.implicits._
-        if (none != null) {
-          t.unsetProperties(Seq("graft.clusterBy"))
-          Seq("NONE").toDF("cluster_by")
-        } else {
-          // merge-bucketed tables refuse at DECLARATION time: their
-          // OPTIMIZE unit is the (partition, bucket) cell and z-ordering
-          // would break copy-on-write merge routing — the same line
-          // compactZOrder draws, moved to where the user can see it
-          require(t.bucketSpec.isEmpty,
-            s"CLUSTER BY: ${t.root} is merge-bucketed; its layout IS " +
-              "its clustering (OPTIMIZE compacts per cell)")
-          val cs = splitTop(cols, ',').map(stripTicks)
-          require(cs.nonEmpty, "CLUSTER BY needs at least one column")
-          val missing = cs.filterNot(t.read.columns.contains)
-          require(missing.isEmpty,
-            s"CLUSTER BY unknown column(s): ${missing.mkString(",")}")
-          t.setProperties(Map(VersionedTable.ClusterByProp ->
-            cs.mkString(",")))
-          Seq(cs.mkString(",")).toDF("cluster_by")
-        }
-      }
-    case AddPkStmt(ident, name, cols, rely) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        t.addPrimaryKey(name, splitTop(cols, ',').map(stripTicks), rely != null)
-        graft.plans.JoinElim.arm(t)
-        import spark.implicits._
-        Seq((name, "PRIMARY KEY", rely != null)).toDF(
-          "constraint", "kind", "rely")
-      }
-    case AddFkStmt(ident, name, cols, refIdent, refCols, rely) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        val ref = resolve(refIdent)
-        val rc = Option(refCols).map(splitTop(_, ',').map(stripTicks))
-          .getOrElse(ref.primaryKey.map(_._2).getOrElse(sys.error(
-            s"FOREIGN KEY: $refIdent declares no primary key — name " +
-              "the referenced columns explicitly")))
-        val missing = rc.filterNot(ref.read.columns.contains)
-        require(missing.isEmpty,
-          s"FOREIGN KEY: $refIdent lacks column(s) ${missing.mkString(",")}")
-        t.addForeignKey(name, splitTop(cols, ',').map(stripTicks),
-          ref.root, rc, rely != null)
-        graft.plans.JoinElim.arm(t)
-        import spark.implicits._
-        Seq((name, "FOREIGN KEY", rely != null)).toDF(
-          "constraint", "kind", "rely")
-      }
-    case AddConstraintStmt(ident, name, checkExpr) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        // multiline/aligned DDL is legal SQL, but the named-expr ledger
-        // stores exprs line-framed and SHOW CREATE surfaces them
-        // verbatim: whitespace outside string literals canonicalizes to
-        // single spaces (semantics-preserving — found by the grammar
-        // fuzzer, SqlFuzzSpec)
-        val ce = collapseExprWs(checkExpr)
-        t.addCheck(name, ce)
-        import spark.implicits._
-        Seq((name, ce)).toDF("constraint", "check_expr")
-      }
-    case CommentTableStmt(ident, text) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        import spark.implicits._
-        if (text.equalsIgnoreCase("NULL")) t.unsetProperties(Seq("comment"))
-        else t.setProperties(Map("comment" -> unquoteComment(text)))
-        Seq(ident).toDF("commented")
-      }
+    case AddFkNoColsStmt(ident, name, cols, refIdent, rely) =>
+      owned(ident).fold(spark.sql(stmt))(t => addForeignKey(t, name,
+        splitTop(cols, ',').map(stripTicks), refIdent, None, rely != null))
     case CommentColumnStmt(dotted, text) =>
       val cut = dotted.lastIndexOf('.')
       require(cut > 0, s"COMMENT ON COLUMN: need table.column, got $dotted")
@@ -747,71 +545,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         else t.setProperties(Map(key -> unquoteComment(text)))
         Seq(dotted).toDF("commented")
       }
-    case DropConstraintStmt(ident, name) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        // loud on unknown names (engine contract): a typo'd DROP that
-        // silently no-ops would leave the operator believing the
-        // constraint is gone while it still enforces / fires JoinElim
-        if (!t.dropKeyConstraint(name)) {
-          require(t.checks.exists(_._1 == name),
-            s"DROP CONSTRAINT: no constraint named $name on $ident " +
-              "(neither CHECK nor PRIMARY/FOREIGN KEY — DESCRIBE " +
-              "lists the live set)")
-          t.dropCheck(name)
-        }
-        graft.plans.JoinElim.arm(t) // a dropped RELY key must stop firing NOW
-        import spark.implicits._
-        Seq(name).toDF("dropped_constraint")
-      }
     case ConvertStmt(srcDir, target) => convert(srcDir, targetRoot(target))
-    // ANALYZE is the one owned statement that is ALSO valid vanilla
-    // Spark SQL — an identifier that isn't a graft table (unknown layer,
-    // no catalog bound, not found) delegates instead of erroring, so the
-    // funnel keeps its parse-what-you-own contract for catalog tables
-    // and temp views
-    case AnalyzeAllStmt(ident) =>
-      scala.util.Try(resolve(ident)).toOption.fold(spark.sql(stmt)) { t =>
-        // every atomic column — arrays/maps/structs/binary have no
-        // useful min/max order for skipping sidecars
-        import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType,
-          StructType => SType}
-        val cols = t.read.schema.fields
-          .filterNot(f => f.dataType.isInstanceOf[ArrayType] ||
-            f.dataType.isInstanceOf[MapType] ||
-            f.dataType.isInstanceOf[SType] || f.dataType == BinaryType)
-          .map(_.name)
-        analyze(t, cols.mkString(","))
-      }
-    case AnalyzeStmt(ident, cols) =>
-      scala.util.Try(resolve(ident)).toOption
-        .fold(spark.sql(stmt))(analyze(_, cols))
-    case SetPropsStmt(ident, props) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        t.setProperties(parseProps(props).toMap)
-        showProps(t)
-      }
-    case UnsetPropsStmt(ident, ifExists, keys) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
-        val ks = splitTop(keys, ',').map(k => unquote(k))
-        if (ifExists == null) {
-          val missing = ks.filterNot(t.properties.contains)
-          require(missing.isEmpty, "UNSET TBLPROPERTIES: unknown key(s) " +
-            s"${missing.mkString(", ")} (use IF EXISTS)")
-        }
-        t.unsetProperties(ks)
-        showProps(t)
-      }
-    case ShowPropsStmt(ident) =>
-      owned(ident).fold(spark.sql(stmt))(showProps)
-    case ShowPartitionsStmt(ident) =>
-      owned(ident).fold(spark.sql(stmt))(showPartitions)
-    case ShowCreateStmt(ident) =>
-      owned(ident).fold(spark.sql(stmt))(showCreate)
-    case ShowTablesStmt() =>
-      catalog.fold(spark.sql(stmt)) { c =>
-        import spark.implicits._
-        c.tables.toDF("namespace", "tableName")
-      }
     case ReorgStmt(ident) =>
       versionDf(resolve(ident).purgeDeleteVectors())
     case GenerateManifestStmt(ident) =>
@@ -822,48 +556,112 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         .toDF("n_manifest_files")
     case DescHistoryStmt(ident) => resolve(ident).historyDf
     case DescDetailStmt(ident)  => resolve(ident).detailDf
-    // plain DESCRIBE <table>: the Spark-shaped (col_name, data_type,
-    // comment) relation, with identity/generated contracts surfaced in
-    // the comment column. Non-graft identifiers delegate. Tried after
-    // HISTORY/DETAIL so those keywords never parse as table names.
-    case DescTableStmt(ident) =>
-      scala.util.Try(resolve(ident)).toOption
-        .fold(spark.sql(stmt))(describeTable)
     // EXPLAIN REWRITE <query>: the MV-routing decision relation —
     // which armed MV serves each aggregate and WHY, or why not
     // (rejected / stale-fell-back / shape-bail / no-candidates) —
-    // without executing the query. Time-travel pins resolve like any
+    // without executing the query. Pinned reads resolve like any
     // SELECT so `EXPLAIN REWRITE SELECT … FROM t@v3 …` works too.
     case ExplainRewriteStmt(inner) =>
-      val (tt, ttViews) = rewriteTimeTravel(inner)
-      try {
-        import spark.implicits._
-        graft.plans.MvRewrite.explainRewrite(spark.sql(tt))
-          .toDF("aggregate", "mv", "decision", "reason")
-      } finally ttViews.foreach(spark.catalog.dropTempView)
-    // DML and CREATE TABLE parse with Spark's own parser. A statement
-    // it rejects is malformed and refuses with its error, raised as a
-    // RuntimeException like every other refusal of this funnel — except
-    // the `t@v3` shorthand, the one graft syntax that reaches this arm,
-    // which parses once the time-travel rewrite has replaced it.
+      import spark.implicits._
+      val (text, plan) = parse(inner)
+      graft.plans.MvRewrite.explainRewrite(query(text, pinReads(plan)))
+        .toDF("aggregate", "mv", "decision", "reason")
+    // Everything else parses once with Spark's own parser. The plan
+    // nodes graft owns run on the [[VersionedTable]]; reads and every
+    // statement that is not ours run through Spark, with pinned reads
+    // of graft tables already substituted.
     case other =>
-      val plan =
-        try Some(parse(other))
-        catch { case e: ParseException =>
-          if (AtVersionProbe.findFirstIn(other).isEmpty)
-            throw new IllegalArgumentException(e.getMessage, e)
-          None
-        }
-      plan.flatMap(ownedStatement).getOrElse(query(other))
+      val (text, plan) = parse(other)
+      val pinned = pinReads(plan)
+      ownedStatement(pinned.getOrElse(plan)).getOrElse(query(text, pinned))
   }
 
-  private def parse(stmt: String): LogicalPlan =
-    SQLConf.withExistingConf(spark.sessionState.conf)(Parser.parsePlan(stmt))
+  /** `stmt` with Delta's `t@v3` shorthand spelled `t VERSION AS OF 3`
+    * (outside literals only: '@v<digits>' is plausible data — emails,
+    * handles), and its plan. A statement Spark's parser rejects is
+    * malformed and refuses with its error, raised as a RuntimeException
+    * like every other refusal of this funnel. */
+  private def parse(stmt: String): (String, LogicalPlan) = {
+    val inLiteral = stringLiteralMask(stmt)
+    val text = AtVersion.replaceAllIn(stmt, m =>
+      if (inLiteral(m.start)) Regex.quoteReplacement(m.matched)
+      else s" VERSION AS OF ${m.group(1)}")
+    try (text, SQLConf.withExistingConf(spark.sessionState.conf)(
+      Parser.parsePlan(text)))
+    catch { case e: ParseException =>
+      throw new IllegalArgumentException(e.getMessage, e) }
+  }
+
+  /** Reads and every statement that is not ours: the substituted plan
+    * when [[pinReads]] pinned something, else `spark.sql` as written. */
+  private def query(text: String, pinned: Option[LogicalPlan]): DataFrame =
+    pinned.fold(spark.sql(text))(PlanShim.ofRows(spark, _))
+
+  /** `plan` with every pinned read of a graft table replaced by the
+    * table's governed relation at that point ([[GraftSql.governed]]):
+    * `VERSION AS OF n` reads version n, `VERSION AS OF '<tag>'` the
+    * tag, `TIMESTAMP AS OF '<ts>'` the newest version at or before it,
+    * and Delta's `table_changes('t', start [, end])` the change feed of
+    * versions [start, end] (end defaults to the head). Subqueries, CTE
+    * definitions and EXPLAIN are walked too; other relations stay for
+    * Spark to resolve. None when nothing was pinned. A temp view over a
+    * pinned read stores the analyzed plan, so the pin outlives the
+    * statement without a helper view. */
+  private def pinReads(plan: LogicalPlan): Option[LogicalPlan] = {
+    var pinned = false
+    def governedAt(t: VersionedTable, frame: DataFrame): LogicalPlan = {
+      pinned = true
+      GraftSql.governed(t, frame).queryExecution.analyzed
+    }
+    def pin(p: LogicalPlan): LogicalPlan = p.transformUpWithSubqueries {
+      case tt @ RelationTimeTravel(r: UnresolvedRelation, ts, version) =>
+        owned(identOf(r.multipartIdentifier)).fold[LogicalPlan](tt) { t =>
+          governedAt(t, (version, ts) match {
+            case (Some(v), _) if v.matches("\\d+") => t.readVersion(v.toLong)
+            case (Some(tag), _) => t.readTag(tag)
+            case (_, Some(Literal(s, _: StringType))) =>
+              t.asOf(parseTsUtc(s.toString))
+            case (_, other) => sys.error("TIMESTAMP AS OF on a graft " +
+              s"table takes a 'yyyy-MM-dd[ HH:mm:ss]' literal, got " +
+              other.map(_.sql).getOrElse(""))
+          })
+        }
+      case f: UnresolvedTableValuedFunction
+          if f.name.map(_.toLowerCase) == Seq("table_changes") =>
+        f.functionArgs match {
+          case Literal(ident, _: StringType) +: bounds =>
+            owned(ident.toString).fold[LogicalPlan](f) { t =>
+              val vs = bounds.map {
+                case Literal(n: Int, _)  => n.toLong
+                case Literal(n: Long, _) => n
+                case b => sys.error(s"table_changes: versions are integer " +
+                  s"literals, got ${b.sql}")
+              }
+              require(vs.length == 1 || vs.length == 2,
+                "table_changes takes ('<table>', start [, end])")
+              // readChangeFeed's lower bound is exclusive; table_changes'
+              // start is inclusive
+              governedAt(t, t.readChangeFeed(vs.head - 1, vs.lift(1)))
+            }
+          case _ => f
+        }
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (n, q, d) => (n, pin(q).asInstanceOf[SubqueryAlias], d) })
+      case e: ExplainCommand => e.copy(logicalPlan = pin(e.logicalPlan))
+    }
+    val out = pin(plan)
+    if (!pinned) None
+    else Some(out match {
+      case v: CreateViewCommand => v.copy(originalText = None)
+      case o => o
+    })
+  }
 
   /** The plan nodes graft runs itself, each onto its [[VersionedTable]]
     * operation; None when the plan is anything else or its table is
     * not a graft table, so the statement delegates. */
-  private def ownedStatement(plan: LogicalPlan): Option[DataFrame] =
+  private def ownedStatement(plan: LogicalPlan): Option[DataFrame] = {
+    import spark.implicits._
     plan match {
       case m: MergeIntoTable =>
         target(m.targetTable).map { case (t, alias) => mergeInto(t, alias, m) }
@@ -879,8 +677,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
           versionDf(routeReplace(t, unqualify(o.deleteExpr, alias),
             alignPositional(t, PlanShim.ofRows(spark, o.query))))
         }
-      case TruncateTable(r: UnresolvedTable) =>
-        owned(identOf(r.multipartIdentifier)).map(truncate)
+      case TruncateTable(Owned(t)) => Some(truncate(t))
       case c: CreateTable => createTable(c.name, c.tableSpec, c.partitioning,
         orReplace = false, c.ignoreIfExists, columns = c.columns)
       case r: ReplaceTable => createTable(r.name, r.tableSpec, r.partitioning,
@@ -889,114 +686,294 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         c.partitioning, orReplace = false, c.ignoreIfExists, Some(c.query))
       case r: ReplaceTableAsSelect => createTable(r.name, r.tableSpec,
         r.partitioning, orReplace = true, query = Some(r.query))
+      case AddColumns(Owned(t), cols) =>
+        Some(versionDf(t.addColumns(StructType(cols.map { c =>
+          require(c.path.isEmpty && c.position.isEmpty && c.default.isEmpty,
+            s"ADD COLUMNS: `${c.colName}` — nested paths, FIRST/AFTER and " +
+              "DEFAULT are not supported (SET DEFAULT after adding)")
+          val f = StructField(c.colName,
+            CharVarcharUtils.replaceCharVarcharWithString(c.dataType),
+            c.nullable)
+          c.comment.fold(f)(f.withComment)
+        }).toDDL)))
+      case RenameColumn(Owned(t), from, to) =>
+        Some(renameColumn(t, from.name.mkString("."), to))
+      case DropColumns(Owned(t), cols, false) =>
+        Some(dropColumns(t, cols.map(_.name.mkString("."))))
+      case AlterColumns(Owned(t), Seq(spec)) => alterColumn(t, spec)
+      case RenameTable(r: UnresolvedTableOrView, to, false) =>
+        val (src, dst) = (identOf(r.multipartIdentifier), identOf(to))
+        for (s <- ownedRoot(src); d <- ownedRoot(dst))
+          yield renameTable(src, s, dst, d)
+      case DropTable(UnresolvedIdentifier(parts, _), ifExists, _) =>
+        dropOwned(identOf(parts), ifExists)
+      case AddCheckConstraint(Filter(_, Owned(t)), c) =>
+        // multiline/aligned DDL is legal SQL, but the named-expr ledger
+        // stores exprs line-framed and SHOW CREATE surfaces them
+        // verbatim: whitespace outside string literals canonicalizes to
+        // single spaces (semantics-preserving — found by the grammar
+        // fuzzer, SqlFuzzSpec)
+        val ce = collapseExprWs(c.condition)
+        t.addCheck(c.userProvidedName, ce)
+        Some(Seq((c.userProvidedName, ce)).toDF("constraint", "check_expr"))
+      case AddConstraint(Owned(t), pk: PrimaryKeyConstraint) =>
+        val rely = pk.userProvidedCharacteristic.rely.contains(true)
+        t.addPrimaryKey(pk.userProvidedName, pk.columns, rely)
+        graft.plans.JoinElim.arm(t)
+        Some(Seq((pk.userProvidedName, "PRIMARY KEY", rely)).toDF(
+          "constraint", "kind", "rely"))
+      case AddConstraint(Owned(t), fk: ForeignKeyConstraint) =>
+        Some(addForeignKey(t, fk.userProvidedName, fk.childColumns,
+          identOf(fk.parentTableId), Some(fk.parentColumns),
+          fk.userProvidedCharacteristic.rely.contains(true)))
+      case DropConstraint(Owned(t), name, _, _) =>
+        // loud on unknown names (engine contract): a typo'd DROP that
+        // silently no-ops would leave the operator believing the
+        // constraint is gone while it still enforces / fires JoinElim
+        if (!t.dropKeyConstraint(name)) {
+          require(t.checks.exists(_._1 == name),
+            s"DROP CONSTRAINT: no constraint named $name on ${t.root} " +
+              "(neither CHECK nor PRIMARY/FOREIGN KEY — DESCRIBE " +
+              "lists the live set)")
+          t.dropCheck(name)
+        }
+        graft.plans.JoinElim.arm(t) // a dropped RELY key must stop firing NOW
+        Some(Seq(name).toDF("dropped_constraint"))
+      case AlterTableClusterBy(Owned(t), spec) =>
+        Some(clusterBy(t, spec.map(_.columnNames.map(_.fieldNames.mkString(".")))))
+      case SetTableProperties(Owned(t), props) =>
+        t.setProperties(props)
+        Some(showProps(t))
+      case UnsetTableProperties(Owned(t), keys, ifExists) =>
+        val missing = keys.filterNot(t.properties.contains)
+        require(ifExists || missing.isEmpty, "UNSET TBLPROPERTIES: unknown " +
+          s"key(s) ${missing.mkString(", ")} (use IF EXISTS)")
+        t.unsetProperties(keys)
+        Some(showProps(t))
+      case CommentOnTable(Owned(t), text) =>
+        if (text == null) t.unsetProperties(Seq("comment")) // IS NULL
+        else t.setProperties(Map("comment" -> text))
+        Some(Seq(t.root).toDF("commented"))
+      case ShowColumns(Owned(t), None, _) =>
+        Some(t.read.columns.toSeq.toDF("col_name"))
+      case ShowTableProperties(Owned(t), None, _) => Some(showProps(t))
+      case ShowCreateTable(Owned(t), false, _) => Some(showCreate(t))
+      case ShowPartitions(Owned(t), None, _) => Some(showPartitions(t))
+      case ShowTables(CurrentNamespace, None, _) =>
+        catalog.map(_.tables.toDF("namespace", "tableName"))
+      // the Spark-shaped (col_name, data_type, comment) relation, with
+      // identity/generated contracts surfaced in the comment column
+      case DescribeRelation(Owned(t), part, false, _) if part.isEmpty =>
+        Some(describeTable(t))
+      case AnalyzeColumn(Owned(t), cols, _) =>
+        // ALL COLUMNS: every atomic column — arrays/maps/structs/binary
+        // have no useful min/max order for skipping sidecars
+        Some(analyze(t, cols.getOrElse(t.read.schema.fields.toSeq
+          .filterNot(f => f.dataType.isInstanceOf[ArrayType] ||
+            f.dataType.isInstanceOf[MapType] ||
+            f.dataType.isInstanceOf[StructType] || f.dataType == BinaryType)
+          .map(_.name))))
       case _ => None
     }
-
-  /** Reads and every statement that is not ours: inline time travel and
-    * `table_changes` become temp views, then `spark.sql` runs it. */
-  private def query(stmt: String): DataFrame = {
-    val (tt, ttViews) = rewriteTimeTravel(stmt)
-    val (rewritten, tcViews) = rewriteTableChanges(tt)
-    val views = ttViews ++ tcViews
-    // analysis inlines a temp view's plan into the DataFrame, so the
-    // views can drop as soon as spark.sql returns — nothing
-    // accumulates in the session and no later statement can observe
-    // (or race against) a stale pin. EXCEPT view-creating statements:
-    // since Spark 3.1 a SQL-created view stores the PARSED plan and
-    // re-resolves on every reference, so `CREATE TEMP VIEW x AS
-    // SELECT … VERSION AS OF n` must keep its asof pins registered or
-    // x fails with "table not found" on first use — those leak for
-    // the session, the price of deferred resolution
-    val createsView = """(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?""" +
-      """(GLOBAL\s+)?(TEMP(ORARY)?\s+)?VIEW\b.*"""
-    try spark.sql(rewritten)
-    finally if (!stmt.matches(createsView))
-      views.foreach(spark.catalog.dropTempView)
   }
 
-  /** Delta's `table_changes('t', start [, end])` table-valued function:
-    * each call is materialized as the change-feed relation of versions
-    * [start, end] (end defaults to the head) under a session temp view
-    * and the statement rewritten to read it — the SQL face of
-    * [[VersionedTable.readChangeFeed]], same per-row `_change_type` /
-    * `_commit_version` columns. Non-graft names are left verbatim. */
-  private def rewriteTableChanges(stmt: String): (String, Seq[String]) = {
-    if (!TableChangesProbe.pattern.matcher(stmt).find()) return (stmt, Nil)
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    // a table_changes(...) that STARTS inside a string literal is data
-    // (the call's own quoted ident doesn't trip this: its match starts
-    // at the function name, outside any literal)
-    val mask = GraftSql.stringLiteralMask(stmt)
-    val out = TableChangesCall.replaceAllIn(stmt, m => {
-      if (mask(m.start))
-        java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
-      val ident = m.group(1)
-      owned(ident) match {
-        case Some(t) =>
-          val start = m.group(2).toLong
-          val end = Option(m.group(3)).map(_.toLong)
-          val view = s"__graft_tc_${GraftSql.asofViewId.incrementAndGet()}_" +
-            math.abs(ident.hashCode)
-          // readChangeFeed's lower bound is exclusive; table_changes'
-          // start is inclusive
-          t.readChangeFeed(start - 1, end).createOrReplaceTempView(view)
-          views += view
-          view
-        case None => java.util.regex.Matcher.quoteReplacement(m.matched)
-      }
-      }
-    })
-    (out, views.toSeq)
+  /** The existing graft table a parsed DDL, SHOW or DESCRIBE statement
+    * names; no match for any other relation, so the statement
+    * delegates. */
+  private object Owned {
+    def unapply(p: LogicalPlan): Option[VersionedTable] = p match {
+      case r: UnresolvedTable       => owned(identOf(r.multipartIdentifier))
+      case r: UnresolvedTableOrView => owned(identOf(r.multipartIdentifier))
+      case r: UnresolvedRelation    => owned(identOf(r.multipartIdentifier))
+      case _ => None
+    }
   }
 
-  /** Inline time travel inside arbitrary SELECTs (Delta's
-    * `FROM t VERSION AS OF n` / `TIMESTAMP AS OF 'ts'`): each graft
-    * table reference followed by an AS OF clause is materialized as the
-    * pinned-version relation under a session temp view and the
-    * statement rewritten to read it — so old-vs-new comparisons join
-    * freely in one statement. Non-graft identifiers are left verbatim
-    * (Spark raises its own error). View registration is metadata-only;
-    * no data is read until the rewritten statement executes. */
-  private def rewriteTimeTravel(stmt: String): (String, Seq[String]) = {
-    if (!TimeTravelProbe.pattern.matcher(stmt).find() &&
-      !AtVersionProbe.pattern.matcher(stmt).find()) return (stmt, Nil)
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    def bind(ident: String, df: Option[DataFrame], matched: String): String =
-      df match {
-        case Some(d) =>
-          // session-unique id: two statements pinning the same table at
-          // different versions must never collide on a view name, even
-          // when issued concurrently on one session
-          val view = s"__graft_asof_${GraftSql.asofViewId.incrementAndGet()}_" +
-            math.abs(ident.hashCode)
-          d.createOrReplaceTempView(view)
-          views += view
-          view
-        case None => java.util.regex.Matcher.quoteReplacement(matched)
+  /** ALTER COLUMN: TYPE (lossless widening), SET/DROP NOT NULL, SET/DROP
+    * DEFAULT — one change per statement; None delegates the rest. */
+  private def alterColumn(t: VersionedTable,
+                          spec: AlterColumnSpec): Option[DataFrame] = {
+    import spark.implicits._
+    val name = spec.column.name.mkString(".")
+    def requireColumn(what: String): Unit =
+      require(t.read.columns.contains(name),
+        s"$what: no column `$name` in ${t.root}")
+    spec match {
+      case AlterColumnSpec(_, Some(dt), None, None, None, None, false) =>
+        t.widenColumnType(name, dt)
+        Some(Seq((name, dt.simpleString)).toDF("column", "new_type"))
+      case AlterColumnSpec(_, None, Some(false), None, None, None, false) =>
+        requireColumn("SET NOT NULL")
+        // same constraint shape the CREATE TABLE `c TYPE NOT NULL` form
+        // records, so DESCRIBE shows one vocabulary and DROP NOT NULL
+        // finds it; addCheck scans current rows and refuses on NULLs
+        // (Delta's SET NOT NULL validation)
+        t.addCheck(s"${name}_not_null", s"$name IS NOT NULL")
+        Some(Seq((name, s"$name IS NOT NULL")).toDF("column", "constraint_expr"))
+      case AlterColumnSpec(_, None, Some(true), None, None, None, false) =>
+        t.dropCheck(s"${name}_not_null")
+        Some(Seq(name).toDF("dropped_not_null"))
+      case AlterColumnSpec(_, None, None, None, None, Some(d), false) =>
+        requireColumn("SET DEFAULT")
+        t.setDefault(name, d.originalSQL)
+        Some(Seq((name, d.originalSQL)).toDF("column", "default_expr"))
+      case AlterColumnSpec(_, None, None, None, None, None, true) =>
+        t.dropDefault(name)
+        Some(Seq(name).toDF("dropped_default"))
+      case _ => None
+    }
+  }
+
+  /** RENAME COLUMN, refused while the column is load-bearing in a
+    * dependent definition or a governance policy; AGG source columns of
+    * dependent MVs and sketch rollups re-key to the new name. */
+  private def renameColumn(t: VersionedTable, f: String,
+                           tn: String): DataFrame = {
+    // an MV's GROUP columns are its merge-bucket keys AND its own
+    // table columns — a rename cannot propagate (bucket keys refuse
+    // renames: hash(old)≠hash(new) would re-route cells), so refuse
+    // at the source like DROP does
+    val groupDeps = mvsSourcedFrom(t.root).filter { case (_, props) =>
+      props(GraftSql.MvGroupProp).split(",").contains(f) ||
+        mvWhereCols(props).contains(f)
+    }
+    require(groupDeps.isEmpty,
+      s"RENAME COLUMN: `$f` is a GROUP or WHERE column of " +
+        s"materialized view(s) ${groupDeps.map(_._1).mkString(", ")} — " +
+        "drop and recreate them to re-key")
+    // join MVs: group columns and this side's JOIN KEYS refuse (the
+    // MV's merge-bucket keys / the registered join condition cannot
+    // re-key); agg-only columns re-key below like the single-table
+    // path
+    val joinHard = joinMvsSourcedFrom(t.root).filter {
+      case (_, props, side) => keysJoinMv(props, side, f)
+    }
+    require(joinHard.isEmpty,
+      s"RENAME COLUMN: `$f` is a GROUP, JOIN-KEY, or dim-FILTER " +
+        s"column of join materialized view(s) " +
+        s"${joinHard.map(_._1).mkString(", ")} — " +
+        "drop and recreate them to re-key")
+    // sketch rollups: group columns are the rollup's merge-bucket
+    // keys AND its own columns — refuse like MV groups; the
+    // distinct column lives only in the definition — re-key below
+    val sketchHard = sketchesSourcedFrom(t.root).filter {
+      case (_, props) =>
+        props(graft.ops.Sketches.GroupProp).split(",").contains(f)
+    }
+    require(sketchHard.isEmpty,
+      s"RENAME COLUMN: `$f` is a GROUP column of sketch rollup(s) " +
+        s"${sketchHard.map(_._1).mkString(", ")} — drop and " +
+        "recreate them to re-key")
+    // validated BEFORE the rename commits: a refusal below must not
+    // leave the table renamed with a stale, un-re-keyed definition
+    requireJoinMvRekeyUnambiguous(t.root, f)
+    // a row filter / column mask referencing the column would stop
+    // resolving (policy text cannot be re-keyed safely) — and a
+    // governance policy that silently stops applying is a leak
+    require(!governanceCols(t).contains(f),
+      s"RENAME COLUMN: `$f` is referenced by a row filter or " +
+        "column mask — drop the policy first")
+    val df = versionDf(t.renameColumn(f, tn))
+    // AGG source columns live only in the stored definition — re-key
+    // them so later REFRESHes resolve under the new name (the
+    // metadata sibling of VersionedTable.renameColumn re-keying
+    // DEFAULTs and CLUSTER BY). Routing entries keep the old logical
+    // names and simply stop matching until the next REFRESH re-arms
+    // (safe: old-name queries can no longer resolve at all).
+    rekeyDependentMvAggs(t.root, f, tn)
+    rekeyDependentJoinMvAggs(t.root, f, tn)
+    rekeyDependentSketchDistinct(t.root, f, tn)
+    df
+  }
+
+  /** DROP COLUMN[S]: every column is checked — present, not the last
+    * one, referenced by no MV, join MV, sketch rollup, governance policy
+    * or table-level key/CHECK/generated column — before the first
+    * column drops, so a refusal leaves the table untouched. A column a
+    * registered MV aggregates or groups by must not be dropped out from
+    * under it: every later REFRESH would fail. */
+  private def dropColumns(t: VersionedTable, names: Seq[String]): DataFrame = {
+    val cur = t.read.columns
+    require(names.distinct.length < cur.length,
+      s"DROP COLUMNS: cannot drop every column at ${t.root}")
+    val mvs = mvsSourcedFrom(t.root)
+    val joinMvs = joinMvsSourcedFrom(t.root)
+    val sketches = sketchesSourcedFrom(t.root)
+    val governed = governanceCols(t)
+    names.foreach { name =>
+      require(cur.contains(name), s"DROP COLUMN: no column `$name` at ${t.root}")
+      val dependents = mvs.filter { case (_, props) =>
+        mvReferencedCols(props).contains(name)
       }
-    val pass1 = TimeTravelVersion.replaceAllIn(stmt, m =>
-      bind(m.group(1),
-        owned(m.group(1)).map(_.readVersion(m.group(2).toLong)), m.matched))
-    // VERSION AS OF '<tag>' — named snapshot pins (quoted, so it can
-    // never collide with the numeric form)
-    val pass1t = TimeTravelTag.replaceAllIn(pass1, m =>
-      bind(m.group(1),
-        owned(m.group(1)).map(_.readTag(m.group(2))), m.matched))
-    val pass2 = TimeTravelTimestamp.replaceAllIn(pass1t, m =>
-      bind(m.group(1),
-        owned(m.group(1)).map(_.asOf(parseTsUtc(m.group(2)))), m.matched))
-    // `t@v3` shorthand (Delta's @ syntax): rewritten ONLY outside string
-    // literals — '@v<digits>' is plausible in real data (emails,
-    // handles), so a literal containing a table-name-shaped prefix must
-    // stay verbatim; outside literals, only a RESOLVABLE table name
-    // directly before @vN pins
-    val pass3 = GraftSql.mapOutsideLiterals(pass2)(seg =>
-      AtVersion.replaceAllIn(seg, m =>
-        bind(m.group(1),
-          owned(m.group(1)).map(_.readVersion(m.group(2).toLong)),
-          m.matched)))
-    (pass3, views.toSeq)
+      require(dependents.isEmpty,
+        s"DROP COLUMN: `$name` is referenced by materialized view(s) " +
+          s"${dependents.map(_._1).mkString(", ")} — drop them first")
+      val joinDeps = joinMvs.filter { case (_, props, side) =>
+        keysJoinMv(props, side, name) ||
+          GraftSql.parseAggSpecs(props(graft.plans.JoinMv.AggsProp))
+            .exists(_._2 == name)
+      }
+      require(joinDeps.isEmpty,
+        s"DROP COLUMN: `$name` is referenced by join materialized " +
+          s"view(s) ${joinDeps.map(_._1).mkString(", ")} — drop them first")
+      val sketchDeps = sketches.filter { case (_, props) =>
+        props(graft.ops.Sketches.GroupProp).split(",").contains(name) ||
+          props(graft.ops.Sketches.DistinctProp) == name
+      }
+      require(sketchDeps.isEmpty,
+        s"DROP COLUMN: `$name` is referenced by sketch rollup(s) " +
+          s"${sketchDeps.map(_._1).mkString(", ")} — drop them first")
+      require(!governed.contains(name),
+        s"DROP COLUMN: `$name` is referenced by a row filter or " +
+          "column mask — drop the policy first")
+      t.requireUnencumbered(name, "DROP COLUMN")
+    }
+    versionDf(names.map(t.dropColumn).last)
+  }
+
+  /** ALTER TABLE … CLUSTER BY (cols) | NONE (None): the declared columns
+    * every bare OPTIMIZE z-orders by. */
+  private def clusterBy(t: VersionedTable,
+                        cols: Option[Seq[String]]): DataFrame = {
+    import spark.implicits._
+    cols match {
+      case None =>
+        t.unsetProperties(Seq(VersionedTable.ClusterByProp))
+        Seq("NONE").toDF("cluster_by")
+      case Some(cs) =>
+        // merge-bucketed tables refuse at DECLARATION time: their
+        // OPTIMIZE unit is the (partition, bucket) cell and z-ordering
+        // would break copy-on-write merge routing — the same line
+        // compactZOrder draws, moved to where the user can see it
+        require(t.bucketSpec.isEmpty,
+          s"CLUSTER BY: ${t.root} is merge-bucketed; its layout IS " +
+            "its clustering (OPTIMIZE compacts per cell)")
+        require(cs.nonEmpty, "CLUSTER BY needs at least one column")
+        val missing = cs.filterNot(t.read.columns.contains)
+        require(missing.isEmpty,
+          s"CLUSTER BY unknown column(s): ${missing.mkString(",")}")
+        t.setProperties(Map(VersionedTable.ClusterByProp -> cs.mkString(",")))
+        Seq(cs.mkString(",")).toDF("cluster_by")
+    }
+  }
+
+  /** ADD CONSTRAINT … FOREIGN KEY (cols) REFERENCES ref [(refCols)]
+    * [RELY]: informational; without refCols the key references ref's
+    * primary key. */
+  private def addForeignKey(t: VersionedTable, name: String, cols: Seq[String],
+                            refIdent: String, refCols: Option[Seq[String]],
+                            rely: Boolean): DataFrame = {
+    import spark.implicits._
+    val ref = resolve(refIdent)
+    val rc = refCols.getOrElse(ref.primaryKey.map(_._2).getOrElse(sys.error(
+      s"FOREIGN KEY: $refIdent declares no primary key — name " +
+        "the referenced columns explicitly")))
+    val missing = rc.filterNot(ref.read.columns.contains)
+    require(missing.isEmpty,
+      s"FOREIGN KEY: $refIdent lacks column(s) ${missing.mkString(",")}")
+    t.addForeignKey(name, cols, ref.root, rc, rely)
+    graft.plans.JoinElim.arm(t)
+    Seq((name, "FOREIGN KEY", rely)).toDF("constraint", "kind", "rely")
   }
 
   private def convert(srcDir: String, target: String): DataFrame = {
@@ -1036,11 +1013,9 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     }.toDF("col_name", "data_type", "comment")
   }
 
-  private def analyze(tbl: VersionedTable, cols: String): DataFrame = {
+  private def analyze(tbl: VersionedTable, cols: Seq[String]): DataFrame = {
     import spark.implicits._
-    val names = cols.split(",").map(_.trim.stripPrefix("`").stripSuffix("`"))
-      .filter(_.nonEmpty).toSeq
-    Seq(tbl.computeStats(names).toLong).toDF("n_file_sets_analyzed")
+    Seq(tbl.computeStats(cols).toLong).toDF("n_file_sets_analyzed")
   }
 
   private def clone(src: VersionedTable, target: String): DataFrame = {
@@ -1308,6 +1283,18 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       }
     }
 
+  /** Whether column `c` of join-MV side `side` (-1 = fact) keys the MV:
+    * a GROUP column, or this side's JOIN key or dim-FILTER column. */
+  private def keysJoinMv(props: Map[String, String], side: Int,
+                         c: String): Boolean = {
+    val segs = graft.plans.JoinMv.parseKeySegments(
+      props(graft.plans.JoinMv.KeysProp))
+    props(graft.plans.JoinMv.GroupProp).split(",").contains(c) ||
+      (if (side < 0) segs.flatten.exists(_._1 == c)
+       else segs(side).exists(_._2 == c) ||
+         joinMvDimFilterCols(props, side).contains(c))
+  }
+
   /** Column names a join MV's dim-side FILTER references (empty when
     * the side is the fact, has no filter, or the stored text fails to
     * parse — the guard then falls back to the loud analysis error at
@@ -1319,11 +1306,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       .map(_.split(";", -1).toSeq).filter(fs => side < fs.length)
       .map(_(side)).filter(_.nonEmpty)
       .map(f => java.net.URLDecoder.decode(f, "UTF-8"))
-      .flatMap(f => scala.util.Try(
-        spark.sessionState.sqlParser.parseExpression(f).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            a.nameParts.last
-        }.toSet).toOption)
+      .flatMap(f => scala.util.Try(referencedCols(f)).toOption)
       .getOrElse(Set.empty)
 
   /** Sketch rollups (library-created but catalog-resident) whose
@@ -1364,12 +1347,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * policy that silently stops applying is a leak). */
   private def governanceCols(t: VersionedTable): Set[String] = {
     val props = t.properties
-    def refs(s: String): Set[String] =
-      spark.sessionState.sqlParser
-        .parseExpression(GraftSql.substPrincipal(s, Some("x"))).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            a.nameParts.last
-        }.toSet
+    def refs(s: String) = referencedCols(GraftSql.substPrincipal(s, Some("x")))
     val masked = props.collect {
       case (k, v) if k.startsWith(GraftSql.ColumnMaskPrefix) =>
         Set(k.stripPrefix(GraftSql.ColumnMaskPrefix)) ++ refs(v)
@@ -1382,12 +1360,13 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * cannot be re-keyed safely, and an unresolvable predicate would
     * brick every later REFRESH). */
   private def mvWhereCols(props: Map[String, String]): Set[String] =
-    props.get(GraftSql.MvWhereProp).map { p =>
-      spark.sessionState.sqlParser.parseExpression(p).collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          a.nameParts.last
-      }.toSet
-    }.getOrElse(Set.empty)
+    props.get(GraftSql.MvWhereProp).map(referencedCols).getOrElse(Set.empty)
+
+  /** Column names a stored predicate or expression text references. */
+  private def referencedCols(sqlText: String): Set[String] =
+    spark.sessionState.sqlParser.parseExpression(sqlText).collect {
+      case a: UnresolvedAttribute => a.nameParts.last
+    }.toSet
 
   /** RENAME COLUMN follow-through: rewrite the `fn:col:out` agg specs of
     * every dependent MV definition from `from` to `to`. Output column
@@ -1551,12 +1530,6 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     Seq((entry.action, before, entry.version))
       .toDF("operation", "version_before", "version_after")
   }
-
-  /** The session clock is pinned UTC (every entry point sets
-    * `spark.sql.session.timeZone=UTC`), so RESTORE's timestamp literal
-    * parses in UTC too — `Timestamp.valueOf` would silently shift by the
-    * JVM default zone. */
-  private def parseTsUtc(ts: String): Long = GraftSql.parseTsUtc(ts)
 
   /** `VACUUM … DRY RUN DETAIL`: the FULL blast radius with per-path
     * status — `reclaimable` (the default VACUUM would delete it) or
@@ -2048,38 +2021,31 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * table is `rm -r`, not a statement's job). */
   private def dropOwned(ident: String, ifExists: Boolean): Option[DataFrame] = {
     import spark.implicits._
-    ident match {
-      case PathIdent(_) => None
-      case other => catalog.flatMap { cat =>
-        other.split("[._]", 2) match {
-          case Array(layer, name) if cat.Layers.contains(layer.toLowerCase) =>
-            val t = cat.table(layer.toLowerCase, name)
-            if (!t.exists && !ifExists) sys.error(s"table not found: $other")
-            // an armed materialized view must un-arm before its files go
-            graft.plans.MvRewrite.deregisterRoot(t.root)
-            // … and release its retention pins on the sources, or the
-            // dropped consumer would hold vacuum back forever (UNDROP
-            // note: pins are NOT restored — the next REFRESH re-advances
-            // them, degrading to a full recompute if retention ran in
-            // between)
-            if (t.exists) {
-              graft.plans.JoinMv.dropPins(spark, t)
-              val props = t.properties
-              Seq(GraftSql.MvSourceProp, graft.ops.Sketches.SourceProp,
-                  graft.ops.Sketches.FreqSourceProp,
-                  graft.ops.Sketches.QuantSourceProp)
-                .flatMap(props.get).distinct.foreach { srcRoot =>
-                  try VersionedTable(spark, srcRoot)
-                    .dropPin(graft.plans.JoinMv.pinName(t))
-                  catch { case scala.util.control.NonFatal(_) => () }
-                }
-            }
-            cat.dropTable(layer.toLowerCase, name)
-            Some(Seq(other).toDF("dropped"))
-          case _ => None
-        }
+    catalog.flatMap(cat => splitLayerName(cat, ident).map { case (layer, name) =>
+      val t = cat.table(layer, name)
+      if (!t.exists && !ifExists) sys.error(s"table not found: $ident")
+      // an armed materialized view must un-arm before its files go
+      graft.plans.MvRewrite.deregisterRoot(t.root)
+      // … and release its retention pins on the sources, or the
+      // dropped consumer would hold vacuum back forever (UNDROP
+      // note: pins are NOT restored — the next REFRESH re-advances
+      // them, degrading to a full recompute if retention ran in
+      // between)
+      if (t.exists) {
+        graft.plans.JoinMv.dropPins(spark, t)
+        val props = t.properties
+        Seq(GraftSql.MvSourceProp, graft.ops.Sketches.SourceProp,
+            graft.ops.Sketches.FreqSourceProp,
+            graft.ops.Sketches.QuantSourceProp)
+          .flatMap(props.get).distinct.foreach { srcRoot =>
+            try VersionedTable(spark, srcRoot)
+              .dropPin(graft.plans.JoinMv.pinName(t))
+            catch { case scala.util.control.NonFatal(_) => () }
+          }
       }
-    }
+      cat.dropTable(layer, name)
+      Seq(ident).toDF("dropped")
+    })
   }
 
   /** UNDROP TABLE <layer.table> — restore the newest trash entry
@@ -2090,12 +2056,10 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     import spark.implicits._
     val cat = catalog.getOrElse(
       sys.error("UNDROP TABLE needs a catalog-bound GraftSql"))
-    ident.split("[._]", 2) match {
-      case Array(layer, name) if cat.Layers.contains(layer.toLowerCase) =>
-        cat.undropTable(layer.toLowerCase, name)
-        Seq(ident).toDF("undropped")
-      case _ => sys.error(s"UNDROP TABLE: not a catalog table: $ident")
-    }
+    val (layer, name) = splitLayerName(cat, ident).getOrElse(
+      sys.error(s"UNDROP TABLE: not a catalog table: $ident"))
+    cat.undropTable(layer, name)
+    Seq(ident).toDF("undropped")
   }
 
   /** INSERT INTO appends (bucket-split on merge-bucketed tables so later
@@ -2401,9 +2365,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
           other.sql)
     }
     val srcDf = srcPlan match {
-      case r: UnresolvedRelation =>
-        owned(identOf(r.multipartIdentifier))
-          .fold(PlanShim.ofRows(spark, r))(_.read)
+      case Owned(t) => t.read
       case p => PlanShim.ofRows(spark, p)
     }
     val renamed = keyPairs.foldLeft(srcDf) { case (d, (tk, sk)) =>
@@ -2729,11 +2691,19 @@ object GraftSql {
     * Catalyst folds it to the session's `spark.graft.principal` per
     * query execution, so flipping the principal conf changes what the
     * very next query sees — no re-registration. */
-  private[graft] def governedRead(tbl: VersionedTable): DataFrame = {
+  private[graft] def governedRead(tbl: VersionedTable): DataFrame =
+    governed(tbl, tbl.read)
+
+  /** [[governedRead]]'s presentation and policy over any frame of `tbl`
+    * — a pinned version, a tag, a change-feed slice — under the table's
+    * CURRENT row filter and masks. A policy that does not resolve
+    * against the frame (a column an old version lacks) refuses the
+    * read: the rows are never returned unfiltered or unmasked. */
+  private[graft] def governed(tbl: VersionedTable, frame: DataFrame): DataFrame = {
     // ONE properties read serves presentation and policy — this runs
     // per table per registerViews, and _props.json is a file read
     val props = tbl.properties
-    val base = presentMvRead(tbl, props)
+    val base = presentMvRead(frame, props)
     graft.functions.CurrentPrincipal.register(base.sparkSession)
     val filtered = props.get(RowFilterProp)
       .fold(base)(p => base.filter(expr(p)))
@@ -2741,6 +2711,9 @@ object GraftSql {
       case (k, v) if k.startsWith(ColumnMaskPrefix) =>
         k.stripPrefix(ColumnMaskPrefix) -> v
     }
+    val unmaskable = masks.keySet -- base.columns
+    require(unmaskable.isEmpty, s"governed read of ${tbl.root}: masked " +
+      s"column(s) ${unmaskable.mkString(", ")} absent from this version")
     if (masks.isEmpty) filtered
     else filtered.select(base.schema.fields.toSeq.map { f =>
       masks.get(f.name).fold(col(f.name))(m =>
@@ -2754,12 +2727,8 @@ object GraftSql {
     * `SELECT approx_users FROM gold_mv` reads a number, while REFRESH
     * keeps merging the underlying registers. Non-MV tables (or
     * sketch-free MVs) pass through untouched. */
-  private[graft] def presentMvRead(tbl: VersionedTable): DataFrame =
-    presentMvRead(tbl, tbl.properties)
-
-  private[graft] def presentMvRead(tbl: VersionedTable,
+  private[graft] def presentMvRead(df: DataFrame,
                                    props: Map[String, String]): DataFrame = {
-    val df = tbl.read
     val specs = (props.get(MvAggsProp).toSeq ++
       props.get(graft.plans.JoinMv.AggsProp).toSeq).flatMap(parseAggSpecs)
     val hllOuts = specs.collect { case ("hll", _, o) => o }.toSet
@@ -2972,7 +2941,11 @@ object GraftSql {
 
   /** UTC timestamp literal → epoch millis (`yyyy-MM-dd[ HH:mm:ss]`,
     * `T` separator accepted) — shared by SQL AS OF forms and the
-    * streaming source's `startingTimestamp` option. */
+    * streaming source's `startingTimestamp` option. The session clock
+    * is pinned UTC (every entry point sets
+    * `spark.sql.session.timeZone=UTC`), so the literal parses in UTC
+    * too — `Timestamp.valueOf` would silently shift by the JVM default
+    * zone. */
   private[graft] def parseTsUtc(ts: String): Long = {
     val t = ts.trim
     val ldt =
@@ -2981,10 +2954,6 @@ object GraftSql {
       else java.time.LocalDate.parse(t).atStartOfDay // date-only literal
     ldt.atZone(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
   }
-
-  /** Session-wide counter behind AS OF temp-view names (see
-    * [[GraftSql.rewriteTimeTravel]]) — per-statement counters collide. */
-  private[tables] val asofViewId = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Spark's SQL parser, except that CREATE TABLE keeps every
     * TBLPROPERTIES key: Spark's own catalog reserves `owner`,
@@ -3368,12 +3337,6 @@ object GraftSql {
   private val ConvertStmt =
     ("""(?is)\s*CONVERT\s+TO\s+GRAFT\s+parquet\.`([^`]+)`\s+AS\s+""" +
       Ident + """\s*;?\s*""").r
-  private val AnalyzeStmt =
-    ("""(?is)\s*ANALYZE\s+TABLE\s+""" + Ident +
-      """\s+COMPUTE\s+STATISTICS\s+FOR\s+COLUMNS\s+([\w`,\s]+?)\s*;?\s*""").r
-  private val AnalyzeAllStmt =
-    ("""(?is)\s*ANALYZE\s+TABLE\s+""" + Ident +
-      """\s+COMPUTE\s+STATISTICS\s+FOR\s+ALL\s+COLUMNS\s*;?\s*""").r
   private val VacuumStmt =
     ("""(?is)\s*VACUUM\s+""" + Ident +
       """(?:\s+RETAIN\s+(\d+)\s+VERSIONS?)?(\s+IGNORE\s+PINS)?""" +
@@ -3407,25 +3370,12 @@ object GraftSql {
     ("""(?is)\s*DESC(?:RIBE)?\s+DETAIL\s+""" + Ident + """\s*;?\s*""").r
   private val PathIdent = """graft\.`([^`]+)`""".r
 
-  private val DropTableStmt =
-    ("""(?is)\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?""" + Ident + """\s*;?\s*""").r
   private val UndropTableStmt =
     ("""(?is)\s*UNDROP\s+TABLE\s+""" + Ident + """\s*;?\s*""").r
-  private val DescTableStmt =
-    ("""(?is)\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?""" + Ident + """\s*;?\s*""").r
   private val CopyIntoStmt =
     ("""(?is)\s*COPY\s+INTO\s+""" + Ident +
       """\s+FROM\s+'([^']+)'\s+FILEFORMAT\s*=\s*(\w+)\s*;?\s*""").r
-  private val TimeTravelProbe = """(?is)\bAS\s+OF\b""".r
-  private val AtVersionProbe = """(?i)@v\d+""".r
-  private val AtVersion = ("""(?i)""" + Ident + """@v(\d+)""").r
-  private val TableChangesProbe = """(?i)\btable_changes\s*\(""".r
-  private val TableChangesCall =
-    """(?is)\btable_changes\s*\(\s*'([^']+)'\s*,\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)""".r
-  private val TimeTravelVersion =
-    ("""(?i)""" + Ident + """\s+VERSION\s+AS\s+OF\s+(\d+)""").r
-  private val TimeTravelTag =
-    ("""(?i)""" + Ident + """\s+VERSION\s+AS\s+OF\s+'([^']+)'""").r
+  private val AtVersion = """(?i)@v(\d+)""".r
   private val CreateTagStmt =
     ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
       """\s+CREATE\s+TAG\s+(`[^`]+`|[\w.\-]+)""" +
@@ -3435,59 +3385,12 @@ object GraftSql {
       """\s+DROP\s+TAG\s+(`[^`]+`|[\w.\-]+)\s*;?\s*""").r
   private val ShowTagsStmt =
     ("""(?is)\s*SHOW\s+TAGS\s+""" + Ident + """\s*;?\s*""").r
-  private val TimeTravelTimestamp =
-    ("""(?i)""" + Ident + """\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'""").r
-  private val SetPropsStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+SET\s+TBLPROPERTIES\s*\((.+)\)\s*;?\s*""").r
-  private val UnsetPropsStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+UNSET\s+TBLPROPERTIES\s+(IF\s+EXISTS\s+)?\(([^)]*)\)\s*;?\s*""").r
-  private val ShowPropsStmt =
-    ("""(?is)\s*SHOW\s+TBLPROPERTIES\s+""" + Ident + """\s*;?\s*""").r
-  private val ShowPartitionsStmt =
-    ("""(?is)\s*SHOW\s+PARTITIONS\s+""" + Ident + """\s*;?\s*""").r
-  private val ShowCreateStmt =
-    ("""(?is)\s*SHOW\s+CREATE\s+TABLE\s+""" + Ident + """\s*;?\s*""").r
-  private val ShowTablesStmt = """(?is)\s*SHOW\s+TABLES\s*;?\s*""".r
   private val ReorgStmt =
     ("""(?is)\s*REORG\s+TABLE\s+""" + Ident +
       """\s+APPLY\s*\(\s*PURGE\s*\)\s*;?\s*""").r
   private val GenerateManifestStmt =
     ("""(?is)\s*GENERATE\s+symlink_format_manifest\s+FOR\s+TABLE\s+""" +
       Ident + """\s*;?\s*""").r
-
-  /** `'k' = 'v', "k2" = v2, …` → pairs. Values may contain `=`; keys may
-    * not (split at the first top-level `=`). */
-  private def parseProps(s: String): Seq[(String, String)] =
-    splitTop(s, ',').map(_.trim).filter(_.nonEmpty).map { e =>
-      val i = e.indexOf('=')
-      require(i > 0, s"TBLPROPERTIES: expected 'key' = 'value', got: $e")
-      (unquote(e.substring(0, i)), unquote(e.substring(i + 1)))
-    }
-
-  /** Apply `f` to the segments of `s` OUTSIDE single-/double-quoted and
-    * backticked spans (the spans pass through verbatim). Rewriters that
-    * pattern-match raw SQL text use this to keep literals as data. */
-  private[tables] def mapOutsideLiterals(s: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val seg = new StringBuilder
-    var state = ' ' // ' ' = outside, else the active quote char
-    var esc = false
-    def flush(): Unit = { out ++= f(seg.toString); seg.clear() }
-    s.foreach { c =>
-      if (state != ' ') {
-        out += c
-        if (esc) esc = false
-        else if (c == '\\' && state != '`') esc = true
-        else if (c == state) state = ' '
-      } else if (c == '\'' || c == '`' || c == '"') {
-        flush(); state = c; out += c
-      } else seg += c
-    }
-    flush()
-    out.toString
-  }
 
   /** true at every index where a textual rewrite must NOT begin: inside
     * a `'…'` or `"…"` STRING literal (quotes included, `\`-escapes
@@ -3522,35 +3425,6 @@ object GraftSql {
     mask
   }
 
-  private def unquote(s: String): String = {
-    val t = s.trim
-    if (t.length >= 2 &&
-      ((t.head == '\'' && t.last == '\'') ||
-        (t.head == '"' && t.last == '"'))) t.substring(1, t.length - 1)
-    else t
-  }
-
-  private val AddColumnsStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+ADD\s+COLUMNS?\s*\((.+)\)\s*;?\s*""").r
-  private val RenameColumnStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+RENAME\s+COLUMN\s+(`[^`]+`|\w+)\s+TO\s+(`[^`]+`|\w+)\s*;?\s*""").r
-  private val DropColumnStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+DROP\s+COLUMNS?\s+(`[^`]+`|\w+)\s*;?\s*""").r
-  private val SetDefaultStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+ALTER\s+COLUMN\s+(`[^`]+`|\w+)\s+SET\s+DEFAULT\s+(.+?)\s*;?\s*""").r
-  private val DropDefaultStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+ALTER\s+COLUMN\s+(`[^`]+`|\w+)\s+DROP\s+DEFAULT\s*;?\s*""").r
-  private val RenameTableStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+RENAME\s+TO\s+""" + Ident + """\s*;?\s*""").r
-  private val AlterColTypeStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+ALTER\s+COLUMN\s+(`[^`]+`|\w+)\s+TYPE\s+([\w]+)\s*;?\s*""").r
   private val SetRowFilterStmt =
     ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
       """\s+SET\s+ROW\s+FILTER\s*\((.+)\)\s*;?\s*""").r
@@ -3563,48 +3437,23 @@ object GraftSql {
   private val DropMaskStmt =
     ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
       """\s+ALTER\s+COLUMN\s+(`[^`]+`|\w+)\s+DROP\s+MASK\s*;?\s*""").r
-  private val SetNotNullStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+ALTER\s+COLUMN\s+(`[^`]+`|\w+)\s+SET\s+NOT\s+NULL\s*;?\s*""").r
-  private val DropNotNullStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+ALTER\s+COLUMN\s+(`[^`]+`|\w+)\s+DROP\s+NOT\s+NULL\s*;?\s*""").r
-  private val ShowColumnsStmt =
-    ("""(?is)\s*SHOW\s+COLUMNS\s+(?:IN|FROM)\s+""" + Ident +
-      """\s*;?\s*""").r
   // Iceberg-style partition evolution: metadata-only re-declaration of
   // the hive layout; () evolves to flat
   private val SetPartitionedByStmt =
     ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
       """\s+SET\s+PARTITIONED\s+BY\s*\(([^)]*)\)\s*;?\s*""").r
-  // liquid-clustering-style declaration: cluster columns persist as the
-  // `graft.clusterBy` property; every bare OPTIMIZE z-orders by them
-  private val ClusterByStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+CLUSTER\s+BY\s+(?:\(([^)]*)\)|(NONE))\s*;?\s*""").r
-  private val AddConstraintStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+ADD\s+CONSTRAINT\s+(\w+)\s+CHECK\s*\((.+)\)\s*;?\s*""").r
-  // informational keys (Databricks PK/FK grammar, NOT ENFORCED implied;
-  // RELY marks the assertion trusted for join elimination)
-  private val AddPkStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+ADD\s+CONSTRAINT\s+(\w+)\s+PRIMARY\s+KEY\s*\(([^)]+)\)""" +
-      """(?:\s+NOT\s+ENFORCED)?(\s+RELY)?\s*;?\s*""").r
-  private val AddFkStmt =
+  // a FOREIGN KEY whose REFERENCES names no columns (it references the
+  // parent's primary key): Spark 4.1's parser fails on that form with a
+  // NullPointerException, so it keeps a hand arm; every other key and
+  // CHECK constraint is a parsed plan node
+  private val AddFkNoColsStmt =
     ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
       """\s+ADD\s+CONSTRAINT\s+(\w+)\s+FOREIGN\s+KEY\s*\(([^)]+)\)""" +
       """\s+REFERENCES\s+""" + Ident +
-      """\s*(?:\(([^)]+)\))?(?:\s+NOT\s+ENFORCED)?(\s+RELY)?\s*;?\s*""").r
-  private val DropConstraintStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+DROP\s+CONSTRAINT\s+(\w+)\s*;?\s*""").r
-  // COMMENT ON: single-quoted text ('' = escaped quote) or NULL to unset.
-  // The COLUMN form captures the whole dotted name; the last segment is
-  // the column (the greedy Ident would swallow it otherwise).
-  private val CommentTableStmt =
-    ("""(?is)\s*COMMENT\s+ON\s+TABLE\s+""" + Ident +
-      """\s+IS\s+('(?:[^']|'')*'|NULL)\s*;?\s*""").r
+      """(?:\s+NOT\s+ENFORCED)?(\s+RELY)?\s*;?\s*""").r
+  // COMMENT ON COLUMN (Spark's parser has no such statement):
+  // single-quoted text ('' = escaped quote) or NULL to unset. The whole
+  // dotted name is captured; its last segment is the column.
   private val CommentColumnStmt =
     """(?is)\s*COMMENT\s+ON\s+COLUMN\s+([\w.]+)\s+IS\s+('(?:[^']|'')*'|NULL)\s*;?\s*""".r
   // ------------------------------------------------ small text helpers

@@ -1634,7 +1634,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * load-bearing elsewhere in the table's metadata. (CDF tables are
     * fine: the change feed applies the mapping to every arm, so reads
     * stay consistent across the DDL — see [[readChangeFeed]].) */
-  private def requireUnencumbered(c: String, what: String): Unit = {
+  private[tables] def requireUnencumbered(c: String, what: String): Unit = {
     bucketSpec.foreach { sp =>
       require(!sp.keys.contains(c) && !sp.partitionKeys.contains(c),
         s"$what: `$c` is a bucket/partition key at $root")

@@ -102,6 +102,20 @@ class FplPipelineSpec extends SparkSpec {
     assert(p.table("gold", "fact_transfer_recommendation").read.count() === 2)
   }
 
+  test("a 38-gameweek season parses through silver with valid dates") {
+    val gws = Silver.gameweeks(Silver.parseBootstrap(
+      env(SampleData.bootstrapJson(nGameweeks = 38), "test://bootstrap")))
+    assert(gws.count() === 38)
+    assert(gws.filter($"deadline_time_ts".isNull).count() === 0)
+    assert(gws.select(date_format(max($"deadline_time_ts"), "yyyy-MM-dd"))
+      .as[String].head() === "2025-09-17")
+    val fx = Silver.fixtures(Silver.parseFixtures(
+      env(SampleData.fixturesJson(nGameweeks = 38), "test://fixtures")))
+    assert(fx.filter($"gameweek_id".isNotNull).count() === 38 * 2)
+    assert(fx.filter($"gameweek_id".isNotNull && $"kickoff_ts".isNull)
+      .count() === 0)
+  }
+
   test("fixtures builder dedups and drops unscheduled fixtures downstream") {
     val fx = Silver.fixtures(Silver.parseFixtures(
       env(SampleData.fixturesJson(), "test://fixtures")))

@@ -1929,4 +1929,106 @@ class GraftSqlSpec extends SparkSpec {
       .as[(Option[String], Long)].head()
     assert(noop === ((None, 0L)))
   }
+
+  /** Runs named rows, collecting every failing row's name and message. */
+  private def rowFailures(rows: Seq[(String, () => Unit)]): Seq[String] =
+    rows.flatMap { case (name, run) =>
+      scala.util.Try(run()).failed.toOption.map(e => s"$name: ${e.getMessage}")
+    }
+
+  test("pinned reads are plan substitutions: literals stay data; DML, " +
+       "CTAS, CTE and EXPLAIN REWRITE sources read through the pin") {
+    val (cat, sql) = warehouse()
+    val src = cat.table("silver", "pin_src")
+    src.enableChangeFeed()
+    src.append(Seq((1, "a"), (2, "b")).toDF("k", "v")) // v0
+    src.delete(col("k") === 2)                        // v1
+    sql.sql("CREATE TABLE silver.pin_dst (k INT, v STRING)")
+    sql.sql("CREATE TABLE silver.pin_feed (k INT, v STRING, ct STRING)")
+    def rows(name: String): Set[(Int, String)] =
+      cat.table("silver", name).read.select("k", "v")
+        .as[(Int, String)].collect().toSet
+    val v0 = Set((1, "a"), (2, "b"))
+    val failed = rowFailures(Seq(
+      "a literal spelling a pin is data" -> (() => assert(sql.sql(
+        "SELECT 'silver.pin_src VERSION AS OF 0' AS x").as[String].head()
+        === "silver.pin_src VERSION AS OF 0")),
+      "INSERT ... SELECT from VERSION AS OF" -> (() => {
+        sql.sql("INSERT INTO silver.pin_dst " +
+          "SELECT * FROM silver.pin_src VERSION AS OF 0")
+        assert(rows("pin_dst") === v0)
+      }),
+      "MERGE USING a pinned subquery" -> (() => {
+        sql.sql("MERGE INTO silver.pin_dst AS t USING (SELECT k, " +
+          "upper(v) AS v FROM silver.pin_src VERSION AS OF 0) s " +
+          "ON t.k = s.k WHEN MATCHED THEN UPDATE SET *")
+        assert(rows("pin_dst") === Set((1, "A"), (2, "B")))
+      }),
+      "CTAS from VERSION AS OF" -> (() => {
+        sql.sql("CREATE TABLE silver.pin_ctas AS " +
+          "SELECT * FROM silver.pin_src VERSION AS OF 0")
+        assert(rows("pin_ctas") === v0)
+      }),
+      "INSERT ... SELECT from table_changes" -> (() => {
+        sql.sql("INSERT INTO silver.pin_feed SELECT k, v, _change_type " +
+          "FROM table_changes('silver.pin_src', 0)")
+        assert(cat.table("silver", "pin_feed").read
+          .as[(Int, String, String)].collect().toSet ===
+          Set((1, "a", "insert"), (2, "b", "insert"), (2, "b", "delete")))
+      }),
+      "a CTE over VERSION AS OF reads the pinned rows" -> (() => {
+        val cte = "WITH old AS (SELECT * FROM silver.pin_src VERSION AS " +
+          "OF 0) SELECT * FROM old"
+        assert(sql.sql(cte).as[(Int, String)].collect().toSet === v0)
+        sql.sql(s"CREATE TABLE silver.pin_cte AS $cte")
+        assert(rows("pin_cte") === v0)
+      }),
+      "EXPLAIN REWRITE over a pinned read names no helper view" -> (() => {
+        val out = sql.sql("EXPLAIN REWRITE SELECT k, count(*) AS n FROM " +
+          "silver.pin_src VERSION AS OF 0 GROUP BY k").collect()
+        assert(out.nonEmpty)
+        assert(!out.mkString.contains("__graft_asof_"), out.mkString)
+      })))
+    assert(failed.isEmpty, failed.mkString("\n"))
+    assert(!spark.catalog.listTables().collect()
+      .exists(_.name.startsWith("__graft_")))
+  }
+
+  test("standard DDL, SHOW and DESCRIBE forms reach graft tables through " +
+       "Spark's parser") {
+    val (cat, sql) = warehouse()
+    sql.sql("CREATE TABLE silver.ddl (k INT, v STRING, w INT, d INT)")
+    sql.sql("INSERT INTO silver.ddl VALUES (1, 'a', 5, 7)")
+    val t = cat.table("silver", "ddl")
+    val failed = rowFailures(Seq(
+      "TYPE DECIMAL(12,2) refuses as graft's own widening check" -> (() => {
+        val e = intercept[IllegalArgumentException](sql.sql(
+          "ALTER TABLE silver.ddl ALTER COLUMN d TYPE DECIMAL(12,2)"))
+        assert(e.getMessage.contains("not a supported lossless widening"),
+          e.getMessage)
+      }),
+      "DROP COLUMNS checks every column before the first commit" -> (() => {
+        sql.sql("ALTER TABLE silver.ddl ADD CONSTRAINT w_pos CHECK (w > 0)")
+        val versions = t.history.length
+        val e = intercept[IllegalArgumentException](
+          sql.sql("ALTER TABLE silver.ddl DROP COLUMNS (v, w)"))
+        assert(e.getMessage.contains("referenced by `w_pos`"), e.getMessage)
+        assert(t.history.length === versions)
+        assert(t.read.columns.toSeq === Seq("k", "v", "w", "d"))
+        sql.sql("ALTER TABLE silver.ddl DROP CONSTRAINT w_pos")
+        sql.sql("ALTER TABLE silver.ddl DROP COLUMNS (v, w)")
+        assert(t.read.columns.toSeq === Seq("k", "d"))
+      }),
+      "backticked SHOW COLUMNS resolves the graft table" -> (() =>
+        assert(sql.sql("SHOW COLUMNS IN `silver`.`ddl`").as[String]
+          .collect().toSet === t.read.columns.toSet)),
+      "backticked DESCRIBE TABLE resolves the graft table" -> (() =>
+        assert(sql.sql("DESCRIBE TABLE `silver`.`ddl`").select("col_name")
+          .as[String].collect().toSet === t.read.columns.toSet)),
+      "COMMENT ON TABLE unescapes a backslash-quoted literal" -> (() => {
+        sql.sql("COMMENT ON TABLE silver.ddl IS 'it\\'s'")
+        assert(t.properties.get("comment") === Some("it's"))
+      })))
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
 }

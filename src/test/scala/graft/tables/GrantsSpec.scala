@@ -340,4 +340,34 @@ class GrantsSpec extends SparkSpec {
       assert(cat.table("silver", "gt").properties("comment") === "governed")
     } finally spark.conf.unset(GraftSql.PrincipalConf)
   }
+
+  test("pinned reads are governed: VERSION AS OF, @vN, TIMESTAMP AS OF " +
+       "and table_changes apply the current row filter and masks") {
+    val (_, cat) = freshCat("pinned-gov-")
+    val gsql = GraftSql(spark, cat)
+    gsql.sql("CREATE TABLE silver.pii (uid BIGINT, email STRING, " +
+      "region INT) TBLPROPERTIES ('graft.enableChangeFeed' = 'true')") // v0
+    gsql.sql("INSERT INTO silver.pii VALUES (1, 'a@x.io', 0), " +
+      "(2, 'b@y.io', 1)")                                              // v1
+    gsql.sql("ALTER TABLE silver.pii SET ROW FILTER (region = 0)")
+    gsql.sql("ALTER TABLE silver.pii ALTER COLUMN email SET MASK ('***')")
+    try {
+      spark.conf.set(GraftSql.PrincipalConf, "analyst")
+      Seq("silver.pii VERSION AS OF 1", "silver.pii@v1",
+          "silver.pii TIMESTAMP AS OF '2099-01-01'",
+          "table_changes('silver.pii', 1)").foreach { rel =>
+        assert(gsql.sql(s"SELECT uid, email FROM $rel")
+          .as[(Long, String)].collect().toSeq === Seq((1L, "***")), rel)
+      }
+      // a policy that cannot resolve against the old version's schema
+      // refuses the read rather than returning it unfiltered
+      gsql.sql("ALTER TABLE silver.pii ADD COLUMNS (tier INT)")          // v2
+      gsql.sql("ALTER TABLE silver.pii SET ROW FILTER " +
+        "(region = 0 AND tier IS NULL)")
+      assert(gsql.sql("SELECT uid FROM silver.pii VERSION AS OF 2")
+        .as[Long].collect().toSeq === Seq(1L))
+      intercept[org.apache.spark.sql.AnalysisException](
+        gsql.sql("SELECT uid FROM silver.pii VERSION AS OF 1").collect())
+    } finally spark.conf.unset(GraftSql.PrincipalConf)
+  }
 }
