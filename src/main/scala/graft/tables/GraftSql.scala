@@ -3,25 +3,28 @@ package graft.tables
 import org.antlr.v4.runtime.ParserRuleContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace,
-  RelationTimeTravel, UnresolvedAttribute, UnresolvedFunction,
-  UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable,
-  UnresolvedTableOrView, UnresolvedTableValuedFunction}
-import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo,
+  RelationTimeTravel, SchemaCompensation, SchemaUnsupported, UnresolvedAlias,
+  UnresolvedAttribute, UnresolvedFunction, UnresolvedIdentifier,
+  UnresolvedRelation, UnresolvedStar, UnresolvedTable, UnresolvedTableOrView,
+  UnresolvedTableValuedFunction, ViewSchemaMode}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Cast, EqualTo,
   EvalMode, Expression, ForeignKeyConstraint, Literal,
   PrimaryKeyConstraint}
 import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.{Inner, UsingJoin}
 import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint,
-  AddColumns, AddConstraint, AlterColumnSpec, AlterColumns,
+  AddColumns, AddConstraint, Aggregate, AlterColumnSpec, AlterColumns,
   AlterTableClusterBy, AnalyzeColumn, Assignment, ColumnDefinition,
-  CommentOnTable, CreateTable, CreateTableAsSelect, DeleteAction,
-  DeleteFromTable, DescribeRelation, DropColumns, DropConstraint,
-  DropTable, Filter, InsertAction, InsertIntoStatement, InsertStarAction,
-  LogicalPlan, MergeIntoTable, MergeAction => ClauseAction,
-  OverwriteByExpression, RenameColumn, RenameTable, ReplaceTable,
-  ReplaceTableAsSelect, SetTableProperties, ShowColumns, ShowCreateTable,
-  ShowPartitions, ShowTableProperties, ShowTables, SubqueryAlias,
-  TableSpecBase, TruncateTable, UnresolvedWith, UnsetTableProperties,
-  UpdateAction, UpdateStarAction, UpdateTable}
+  CommentOnTable, CreateMaterializedViewAsSelect, CreateTable,
+  CreateTableAsSelect, CreateView, DeleteAction, DeleteFromTable,
+  DescribeRelation, DropColumns, DropConstraint, DropTable, DropView, Filter,
+  InsertAction, InsertIntoStatement, InsertStarAction, Join, LogicalPlan,
+  MergeIntoTable, MergeAction => ClauseAction, OverwriteByExpression,
+  RenameColumn, RenameTable, ReplaceTable, ReplaceTableAsSelect,
+  SetTableProperties, ShowColumns, ShowCreateTable, ShowPartitions,
+  ShowTableProperties, ShowTables, SubqueryAlias, TableSpec, TableSpecBase,
+  TruncateTable, UnresolvedWith, UnsetTableProperties, UpdateAction,
+  UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.{SparkSqlAstBuilder, SparkSqlParser}
@@ -32,7 +35,7 @@ import org.apache.spark.sql.functions.{col, expr, lit, when}
 import org.apache.spark.sql.graft.PlanShim
 import scala.util.matching.Regex
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType,
-  DateType, LongType, MapType, NumericType, StringType,
+  DateType, IntegerType, LongType, MapType, NumericType, StringType,
   StructField, StructType, TimestampType}
 import graft.ops.Merge
 
@@ -75,12 +78,12 @@ import graft.ops.Merge
   *   ALTER TABLE <table> CREATE TAG <name> [AS OF VERSION n]  -- release pin
   *   ALTER TABLE <table> DROP TAG <name>    -- (tagged versions vacuum-exempt)
   *   SHOW TAGS <table>
-  *   CREATE [OR REPLACE] MATERIALIZED VIEW <table> AS
+  *   CREATE [OR REPLACE] MATERIALIZED VIEW [IF NOT EXISTS] <table> AS
   *     SELECT g1, ..., sum|count|min|max(c) AS name, ... FROM <table>
   *     [WHERE <pred>] GROUP BY g1, ...        -- materialized + auto-routed
   *     -- (filtered MVs maintain incrementally too but are queried by
   *     --  name, never auto-routed)
-  *   CREATE [OR REPLACE] MATERIALIZED VIEW <table> AS
+  *   CREATE [OR REPLACE] MATERIALIZED VIEW [IF NOT EXISTS] <table> AS
   *     SELECT g1, ..., fn(c) AS name, ... FROM <fact> JOIN <dim>
   *     USING (k, ...) | ON <fact>.k = <dim>.k [AND ...]
   *     [WHERE <dim>.pred [AND ...]] GROUP BY g1, ...
@@ -89,8 +92,9 @@ import graft.ops.Merge
   *     -- filtered definitions are queried by name, never auto-routed)
   *   REFRESH MATERIALIZED VIEW <table>        -- incremental when possible
   *   SHOW MATERIALIZED VIEWS                  -- defs + coverage + freshness
-  *   CREATE [OR REPLACE] VIEW <name> AS <query>  -- durable (_views ledger,
-  *     re-registered on catalog open; TEMP views stay Spark-native)
+  *   CREATE [OR REPLACE] VIEW [IF NOT EXISTS] <name> AS <query>  -- durable
+  *     (_views ledger, re-registered on catalog open; TEMP views stay
+  *     Spark-native)
   *   DROP VIEW [IF EXISTS] <name>             -- ledger names; others delegate
   *   SHOW VIEWS                               -- the durable-view ledger
   *   ALTER TABLE <t> SET ROW FILTER (<pred>)   -- read governance: rows
@@ -146,7 +150,7 @@ import graft.ops.Merge
   *   ALTER TABLE <t> ADD CONSTRAINT <n> PRIMARY KEY (cols) [NOT ENFORCED] [RELY]
   *   ALTER TABLE <t> ADD CONSTRAINT <n> FOREIGN KEY (cols)
   *     REFERENCES <t2> [(cols)] [NOT ENFORCED] [RELY]   -- informational keys
-  *   ALTER TABLE <table> DROP CONSTRAINT <name>
+  *   ALTER TABLE <table> DROP CONSTRAINT [IF EXISTS] <name>
   *   ALTER TABLE <table> RENAME TO <table>   -- one directory move
   *   ALTER TABLE <table> CLUSTER BY (c1, ...) | NONE
   *   ALTER TABLE <table> SET TBLPROPERTIES (...) | UNSET TBLPROPERTIES
@@ -157,11 +161,12 @@ import graft.ops.Merge
   *   DROP TABLE [IF EXISTS] <table>          -- moves to the catalog trash
   *   UNDROP TABLE <table>                    -- restore the newest drop
   *
-  * DML, CREATE TABLE, the standard ALTER TABLE / DROP TABLE / COMMENT
-  * ON TABLE / SHOW / DESCRIBE / ANALYZE forms and every read are parsed
-  * by Spark's own parser: the plan node (MergeIntoTable, AddColumns,
-  * AlterColumns, ShowColumns, DescribeRelation, …) maps onto the
-  * [[VersionedTable]] operation, and a pinned read of a graft table is
+  * DML, CREATE TABLE, CREATE MATERIALIZED VIEW, durable CREATE/DROP
+  * VIEW, the standard ALTER TABLE / DROP TABLE / COMMENT ON TABLE /
+  * SHOW / DESCRIBE / ANALYZE forms and every read are parsed by Spark's
+  * own parser: the plan node (MergeIntoTable, AddColumns, AlterColumns,
+  * CreateMaterializedViewAsSelect, CreateView, …) maps onto the graft
+  * operation or definition, and a pinned read of a graft table is
   * substituted into the plan as that table's governed relation. A
   * statement whose identifier is NOT a graft table (unknown layer, no
   * catalog bound) delegates to vanilla `spark.sql`, so Spark catalog
@@ -196,40 +201,9 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * result (the notebook-cell contract). Empty statements and
     * `--`-to-end-of-line comments are dropped. */
   def sqlScript(script: String): DataFrame = {
-    val stmts = GraftSql.splitTop(stripLineComments(script), ';')
+    val stmts = splitTop(script, ';')
     require(stmts.nonEmpty, "sqlScript: no statements")
     stmts.map(sql).last
-  }
-
-  /** Remove `-- …` line comments OUTSIDE string literals (single or
-    * double quoted) and backticks. */
-  private def stripLineComments(s: String): String = {
-    val out = new StringBuilder
-    var inStr = false; var inTick = false; var inDq = false; var esc = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { out += c
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '\'') inStr = false
-        i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (inDq) { out += c
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inDq = false
-        i += 1 }
-      else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-') {
-        while (i < s.length && s.charAt(i) != '\n') i += 1
-      } else {
-        if (c == '\'') inStr = true
-        else if (c == '`') inTick = true
-        else if (c == '"') inDq = true
-        out += c; i += 1
-      }
-    }
-    out.toString
   }
 
   /** One funnel: graft maintenance statements execute against the
@@ -268,28 +242,6 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       restore(resolve(ident), t => t.restore(t.tags.getOrElse(tag,
         sys.error(s"RESTORE TO TAG: no tag `$tag` on $ident"))))
     case CloneStmt(target, source) => clone(resolve(source), targetRoot(target))
-    case GraftSql.CreateMvProbe() =>
-      GraftSql.parseCreateMvJoin(stmt) match {
-        case Some((orReplace, mvIdent, selectList, factIdent, joins,
-            where, groupBy)) =>
-          createJoinMaterializedView(mvIdent, orReplace, selectList,
-            factIdent,
-            joins.map { case (dimIdent, usingCols, onCond) =>
-              (dimIdent, GraftSql.parseJoinKeys(usingCols, onCond,
-                factIdent, dimIdent))
-            },
-            where, groupBy)
-        case None =>
-          val (orReplace, mvIdent, selectList, srcIdent, where, groupBy) =
-            GraftSql.parseCreateMv(stmt).getOrElse(sys.error(
-              "CREATE MATERIALIZED VIEW: unrecognized shape — expected " +
-                "SELECT g1,…, sum|count|min|max|approx_count_distinct(c) " +
-                "AS name,… FROM <table> [WHERE <pred>] GROUP BY g1,… — " +
-                "or the join form FROM <fact> JOIN <dim> USING (k,…) | " +
-                "ON f.k = d.k GROUP BY g1,…"))
-          createMaterializedView(mvIdent, orReplace, selectList,
-            srcIdent, where, groupBy)
-      }
     case RefreshMvStmt(ident) =>
       // join-shaped definitions carry graft.mv.join.* properties and
       // maintain through [[graft.plans.JoinMv]]; everything else is the
@@ -302,28 +254,6 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
           tbl.get.properties(graft.plans.JoinMv.FactVersionProp).toLong))
           .toDF("mv", "mode", "source_version")
       } else refreshMaterializedView(ident)
-    case CreateViewStmt(orReplace, name, query) if catalog.isDefined =>
-      import spark.implicits._
-      val cat = catalog.get
-      require(orReplace != null || !cat.views.exists(_._1 == name),
-        s"view $name already exists; use CREATE OR REPLACE VIEW")
-      cat.createView(name, query)
-      Seq((name, "create_view")).toDF("view", "op")
-    case CreateViewQualifiedStmt(_, name, _) if catalog.isDefined =>
-      // refuse loudly rather than silently delegating a durable-looking
-      // CREATE VIEW to spark.sql, where it would land as a
-      // session-catalog view that vanishes on the next open
-      sys.error(s"CREATE VIEW: durable views are single-level names " +
-        s"(got `$name`) — drop the qualifier, or use CREATE TEMP VIEW " +
-        "for a session-only view")
-    // a name NOT in the durable ledger falls through to spark.sql
-    // below — ordinary temp/session views keep their pre-existing
-    // DROP VIEW behavior
-    case DropViewStmt(_, name)
-        if catalog.exists(_.views.exists(_._1 == name)) =>
-      import spark.implicits._
-      catalog.get.dropView(name)
-      Seq((name, "drop_view")).toDF("view", "op")
     case ShowViewsStmt() if catalog.isDefined =>
       import spark.implicits._
       catalog.get.views.toDF("view", "definition")
@@ -566,14 +496,19 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       val (text, plan) = parse(inner)
       graft.plans.MvRewrite.explainRewrite(query(text, pinReads(plan)))
         .toDF("aggregate", "mv", "decision", "reason")
-    // Everything else parses once with Spark's own parser. The plan
-    // nodes graft owns run on the [[VersionedTable]]; reads and every
-    // statement that is not ours run through Spark, with pinned reads
-    // of graft tables already substituted.
+    // Everything else parses once with Spark's own parser (which has no
+    // CREATE OR REPLACE MATERIALIZED VIEW, so that head is read here).
+    // The plan nodes graft owns run as graft operations or definitions;
+    // everything else runs through Spark, pinned reads substituted.
     case other =>
-      val (text, plan) = parse(other)
+      val (orReplaceMv, stmt1) = other match {
+        case OrReplaceMvHead(create, rest) => (true, create + rest)
+        case _ => (false, other)
+      }
+      val (text, plan) = parse(stmt1)
       val pinned = pinReads(plan)
-      ownedStatement(pinned.getOrElse(plan)).getOrElse(query(text, pinned))
+      ownedStatement(pinned.getOrElse(plan), orReplaceMv)
+        .getOrElse(query(text, pinned))
   }
 
   /** `stmt` with Delta's `t@v3` shorthand spelled `t VERSION AS OF 3`
@@ -658,11 +593,42 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
   }
 
   /** The plan nodes graft runs itself, each onto its [[VersionedTable]]
-    * operation; None when the plan is anything else or its table is
-    * not a graft table, so the statement delegates. */
-  private def ownedStatement(plan: LogicalPlan): Option[DataFrame] = {
+    * operation or graft definition; None when the plan is anything else
+    * or its table is not a graft table, so the statement delegates. */
+  private def ownedStatement(plan: LogicalPlan,
+                             orReplaceMv: Boolean): Option[DataFrame] = {
     import spark.implicits._
     plan match {
+      case c: CreateMaterializedViewAsSelect =>
+        Some(materializedView(c, orReplaceMv))
+      // a durable view is a name and a query text; richer forms refuse,
+      // as spark.sql would land them session-only (TEMP views parse as
+      // CreateViewCommand and stay Spark-native)
+      case CreateView(UnresolvedIdentifier(parts, _), cols, comment,
+          collation, props, text, _, ifNotExists, replace, binding)
+          if catalog.isDefined =>
+        val (cat, name) = (catalog.get, parts.mkString("."))
+        require(parts.length == 1, "CREATE VIEW: durable views are " +
+          s"single-level names (got `$name`) — drop the qualifier, or use " +
+          "CREATE TEMP VIEW for a session-only view")
+        require(cols.isEmpty && comment.isEmpty && collation.isEmpty &&
+          props.isEmpty && Set[ViewSchemaMode](SchemaCompensation,
+            SchemaUnsupported)(binding),
+          s"CREATE VIEW: a durable view keeps only its name and query " +
+            s"(got `$name`) — a column list, COMMENT, TBLPROPERTIES, " +
+            "DEFAULT COLLATION or WITH SCHEMA needs CREATE TEMP VIEW")
+        val exists = cat.views.exists(_._1 == name)
+        require(replace || ifNotExists || !exists,
+          s"view $name already exists; use CREATE OR REPLACE VIEW")
+        if (!(ifNotExists && exists)) cat.createView(name, text.get)
+        Some(Seq((name, if (ifNotExists && exists) "exists" else "create_view"))
+          .toDF("view", "op"))
+      // a name NOT in the durable ledger delegates: ordinary temp and
+      // session views keep Spark's DROP VIEW behavior
+      case DropView(UnresolvedIdentifier(Seq(name), _), _)
+          if catalog.exists(_.views.exists(_._1 == name)) =>
+        catalog.get.dropView(name)
+        Some(Seq((name, "drop_view")).toDF("view", "op"))
       case m: MergeIntoTable =>
         target(m.targetTable).map { case (t, alias) => mergeInto(t, alias, m) }
       case u: UpdateTable =>
@@ -726,16 +692,17 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         Some(addForeignKey(t, fk.userProvidedName, fk.childColumns,
           identOf(fk.parentTableId), Some(fk.parentColumns),
           fk.userProvidedCharacteristic.rely.contains(true)))
-      case DropConstraint(Owned(t), name, _, _) =>
-        // loud on unknown names (engine contract): a typo'd DROP that
+      case DropConstraint(Owned(t), name, ifExists, _) =>
+        // loud on unknown names unless IF EXISTS: a typo'd DROP that
         // silently no-ops would leave the operator believing the
         // constraint is gone while it still enforces / fires JoinElim
         if (!t.dropKeyConstraint(name)) {
-          require(t.checks.exists(_._1 == name),
+          val isCheck = t.checks.exists(_._1 == name)
+          require(isCheck || ifExists,
             s"DROP CONSTRAINT: no constraint named $name on ${t.root} " +
               "(neither CHECK nor PRIMARY/FOREIGN KEY — DESCRIBE " +
               "lists the live set)")
-          t.dropCheck(name)
+          if (isCheck) t.dropCheck(name)
         }
         graft.plans.JoinElim.arm(t) // a dropped RELY key must stop firing NOW
         Some(Seq(name).toDF("dropped_constraint"))
@@ -1029,37 +996,92 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
 
   // --------------------------------------------------- materialized views
 
-  /** CREATE [OR REPLACE] MATERIALIZED VIEW mv AS
-    *   SELECT g1, ..., sum(c) AS s, count(*) AS n, ... FROM src GROUP BY g1, ...
-    *
-    * Materializes the aggregate as a versioned table, records the
-    * definition + covered source version in table properties (durable —
-    * REFRESH re-reads it in any later process), and arms
-    * [[graft.plans.MvRewrite]] so matching aggregates over the covered
-    * snapshot route to the MV transparently. `avg` is deliberately not
-    * materializable: write `sum(c) AS s_c, count(c) AS n_c` and the
-    * rewrite rule derives `avg(c)` from the pair — an incrementally
-    * maintained average column would be wrong under merge combining. */
-  private def createMaterializedView(mvIdent: String, orReplace: Boolean,
-                                     selectList: String, srcIdent: String,
-                                     whereRaw: Option[String],
-                                     groupBy: String): DataFrame = {
+  /** CREATE [OR REPLACE] MATERIALIZED VIEW [IF NOT EXISTS] from its
+    * parsed plan: an Aggregate over one graft relation, optionally
+    * filtered, or over a left-deep chain of inner equi-joins — closed to
+    * what the rewrite rule serves and the refreshers maintain. Aliased
+    * sources, other joins, HAVING, ORDER BY and table clauses refuse. */
+  private def materializedView(c: CreateMaterializedViewAsSelect,
+                               orReplace: Boolean): DataFrame = {
     import spark.implicits._
-    // multiline/aligned DDL is legal SQL, but the WHERE predicate
-    // persists verbatim in the MV's properties (line-framed ledger, and
-    // every maintenance slice re-parses it): canonicalize whitespace
-    // outside string literals, same as CHECK constraints (found by the
-    // grammar fuzzer)
-    val where = whereRaw.map(GraftSql.collapseExprWs)
+    def shape: Nothing = sys.error(
+      "CREATE MATERIALIZED VIEW: unrecognized shape — expected " +
+        "SELECT g1,…, sum|count|min|max|approx_count_distinct(c) " +
+        "AS name,… FROM <table> [WHERE <pred>] GROUP BY g1,… — " +
+        "or the join form FROM <fact> JOIN <dim> USING (k,…) | " +
+        "ON f.k = d.k GROUP BY g1,…")
+    val (mvIdent, groups, items, body) = (c.name, c.query, c.tableSpec) match {
+      case (UnresolvedIdentifier(parts, _), Aggregate(g, i, child, None),
+          TableSpec(props, None, opts, None, None, None, None, false, cons))
+          if props.isEmpty && opts.isEmpty && cons.isEmpty &&
+            c.columns.isEmpty && c.partitioning.isEmpty =>
+        (identOf(parts), g, i, child)
+      case _ => shape
+    }
+    val (cond, from) = body match {
+      case Filter(cond, child) => (Some(cond), child)
+      case other => (None, other)
+    }
+    def rel(p: LogicalPlan): String = p match {
+      case UnresolvedRelation(parts, opts, false) if opts.isEmpty =>
+        identOf(parts)
+      case _ => shape
+    }
+    // the fact, and each dim with its (fact, dim) key pairs
+    def chain(p: LogicalPlan): (String, Seq[(String, Seq[(String, String)])]) =
+      p match {
+        case Join(left, right, jt, on, _) =>
+          val ((fact, dims), dim) = (chain(left), rel(right))
+          (fact, dims :+ ((dim, (jt, on) match {
+            case (UsingJoin(Inner, cols), None) => cols.map(k => (k, k))
+            case (Inner, Some(on)) => joinKeys(on, fact, dim)
+            case _ => shape
+          })))
+        case other => (rel(other), Nil)
+      }
+    val (fact, dims) = chain(from)
+    val (groupCols, aggs) = mvSelect(groups, items)
+    val mv = VersionedTable(spark, targetRoot(mvIdent))
+    require(!(orReplace && c.ifNotExists), "CREATE MATERIALIZED VIEW: " +
+      "OR REPLACE and IF NOT EXISTS exclude each other")
+    if (c.ifNotExists && mv.exists)
+      Seq((mvIdent, "exists", mv.properties.get(GraftSql.MvVersionProp)
+        .orElse(mv.properties.get(graft.plans.JoinMv.FactVersionProp))
+        .fold(-1L)(_.toLong))).toDF("mv", "mode", "source_version")
+    else {
+      // the WHERE persists in the MV's properties (line-framed ledger,
+      // re-parsed by every maintenance slice): its whitespace and
+      // comments canonicalize, same as CHECK constraints
+      val where = cond.map(e => collapseExprWs(sourceText(e)))
+      val srcV =
+        if (dims.isEmpty) createMaterializedView(mvIdent, mv, orReplace,
+          groupCols, aggs, fact, where)
+        else createJoinMaterializedView(mvIdent, mv, orReplace, groupCols,
+          aggs, fact, dims, where)
+      Seq((mvIdent, "create", srcV)).toDF("mv", "mode", "source_version")
+    }
+  }
+
+  /** The single-source form of [[materializedView]]: materializes the
+    * aggregate as a versioned table, records the definition + covered
+    * source version (returned) in table properties (durable — REFRESH
+    * re-reads it in any later process), and arms [[graft.plans.MvRewrite]]
+    * so matching aggregates over the covered snapshot route to the MV
+    * transparently. `avg` is deliberately not materializable: write
+    * `sum(c) AS s_c, count(c) AS n_c` and the rewrite rule derives
+    * `avg(c)` from the pair — an incrementally maintained average column
+    * would be wrong under merge combining. */
+  private def createMaterializedView(mvIdent: String, mv: VersionedTable,
+      orReplace: Boolean, groupCols: Seq[String],
+      aggs: Seq[(String, String, String)],
+      srcIdent: String, where: Option[String]): Long = {
     GraftSql.registerMvFunctions(spark)
     val src = resolve(srcIdent)
-    val (groupCols, aggs) = GraftSql.parseMvSelect(selectList, groupBy)
     val srcCols = src.read.columns.toSet
     val missing = (groupCols ++ aggs.map(_._2).filterNot(_ == "*"))
       .filterNot(srcCols)
     require(missing.isEmpty,
       s"materialized view: source $srcIdent lacks columns ${missing.mkString(",")}")
-    val mv = VersionedTable(spark, targetRoot(mvIdent))
     require(orReplace || !mv.exists,
       s"materialized view target exists: $mvIdent (use CREATE OR REPLACE)")
     // resolution runs now (bad columns fail the CREATE loudly); a
@@ -1094,14 +1116,11 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     // now-filtered materialization (silent wrong results)
     if (where.isEmpty) armMvRewrite(src, mv, groupCols, aggs, srcV)
     else graft.plans.MvRewrite.deregisterRoot(mv.root)
-    Seq((mvIdent, "create", srcV)).toDF("mv", "mode", "source_version")
+    srcV
   }
 
-  /** CREATE [OR REPLACE] MATERIALIZED VIEW mv AS
-    *   SELECT g…, fn(c) AS out… FROM fact JOIN dim₁ USING (k,…)|ON …
-    *   [JOIN dim₂ …] [WHERE <dim-side preds>] GROUP BY g…
-    *
-    * The join form: materialization, durable definition and routing via
+  /** The join form of [[materializedView]]; returns the covered fact
+    * version. Materialization, durable definition and routing via
     * [[graft.plans.JoinMv]] (fact-CDF incremental maintenance under the
     * fixed-dims identity; star schemas welcome — every dim is pinned).
     * Cross-side column ambiguity is refused up front. WHERE conjuncts
@@ -1110,16 +1129,15 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * [[graft.plans.JoinMv.DimSide]]'s row filter, so dim batches keep
     * absorbing as signed deltas; fact-side predicates are refused (the
     * single-table form owns source filters). */
-  private def createJoinMaterializedView(mvIdent: String, orReplace: Boolean,
-      selectList: String, factIdent: String,
-      dims: Seq[(String, Seq[(String, String)])],
-      where: Option[String], groupBy: String): DataFrame = {
-    import spark.implicits._
+  private def createJoinMaterializedView(mvIdent: String,
+      mv: VersionedTable, orReplace: Boolean, groupCols: Seq[String],
+      aggs: Seq[(String, String, String)],
+      factIdent: String, dims: Seq[(String, Seq[(String, String)])],
+      where: Option[String]): Long = {
     val fact = resolve(factIdent)
     val dimTables = dims.map { case (id, keys) => (id, resolve(id), keys) }
     val dimFilters = GraftSql.attributeJoinMvWhere(where, factIdent,
       dims.map(_._1))
-    val (groupCols, aggs) = GraftSql.parseMvSelect(selectList, groupBy)
     val fCols = fact.read.columns.toSet
     val sideCols: Seq[(String, Set[String])] =
       (factIdent, fCols) +: dimTables.map { case (id, t, _) =>
@@ -1141,7 +1159,6 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         s"materialized view: column `$n` exists on multiple join " +
           "sides — ambiguous (only same-named key pairs may repeat)")
     }
-    val mv = VersionedTable(spark, targetRoot(mvIdent))
     require(orReplace || !mv.exists,
       s"materialized view target exists: $mvIdent (use CREATE OR REPLACE)")
     // filter columns must exist on their dim (fail at CREATE, not at
@@ -1162,9 +1179,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       groupCols,
       aggs.map { case (f, c, o) => graft.plans.MvRewrite.AggSpec(f, c, o) },
       mv)
-    Seq((mvIdent, "create",
-      mv.properties(graft.plans.JoinMv.FactVersionProp).toLong))
-      .toDF("mv", "mode", "source_version")
+    mv.properties(graft.plans.JoinMv.FactVersionProp).toLong
   }
 
   /** REFRESH MATERIALIZED VIEW mv — cheapest maintenance the source's
@@ -1827,8 +1842,9 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     case (Some(cat), Some(principal)) =>
       val ledger = cat.grants // ONE ledger read per governed statement
       if (ledger.isEmpty) return
-      // head anchors must see the real first keyword, not a `--` comment
-      val stmt = stripLineComments(stmt0)
+      // head anchors must see the real first keyword, and the literal
+      // mask must not read an apostrophe inside a comment as a quote
+      val stmt = stripComments(stmt0)
       stmt match {
         case GraftSql.ShowGrantsHead() => // open to all principals
         case GraftSql.GrantAdminHead(verb) =>
@@ -2349,10 +2365,6 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       case r: UnresolvedRelation => (r, r.multipartIdentifier.last)
       case _ => sys.error("MERGE USING: a subquery source needs an alias")
     }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other     => Seq(other)
-    }
     def eqIc(a: String, b: String) = a.equalsIgnoreCase(b)
     val keyPairs = conjuncts(m.mergeCondition).map {
       case eq @ EqualTo(UnresolvedAttribute(Seq(a1, c1)),
@@ -2365,7 +2377,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
           other.sql)
     }
     val srcDf = srcPlan match {
-      case Owned(t) => t.read
+      case Owned(t) => GraftSql.governedRead(t)
       case p => PlanShim.ofRows(spark, p)
     }
     val renamed = keyPairs.foldLeft(srcDf) { case (d, (tk, sk)) =>
@@ -2517,55 +2529,68 @@ object GraftSql {
     * equivalent. */
   val MvWhereProp = "graft.mv.where"
 
-  /** Parse the closed MV select grammar → (groupCols, (fn, col, out)*).
-    * Every group column must appear bare in the select list; every other
-    * item must be `fn(col) AS name` with fn ∈ sum|count|min|max (`*`
-    * only under count); output names must be unique and distinct from
-    * group columns. */
-  private[tables] def parseMvSelect(selectList: String,
-      groupBy: String): (Seq[String], Seq[(String, String, String)]) = {
-    val groupCols = splitTop(groupBy, ',').map(stripTicks)
-    require(groupCols.forall(_.matches("""[A-Za-z_][A-Za-z0-9_]*""")),
-      s"materialized view: GROUP BY must list plain columns, got $groupBy")
-    val items = splitTop(selectList, ',')
-    val (bare, aggs) = items.foldLeft(
-      (Vector.empty[String], Vector.empty[(String, String, String)])) {
-      case ((bs, as), MvAggItem(fn, c, out)) =>
-        val cc = if (c == "*") "*" else stripTicks(c)
-        // approx_count_distinct materializes as a MERGEABLE HLL sketch
-        // ("hll" in the stored spec): refresh unions partial sketches
-        // instead of rescanning history — the one distinct-count shape
-        // an incremental MV can maintain
-        val f = if (fn.equalsIgnoreCase("approx_count_distinct")) "hll"
-          else fn.toLowerCase
-        require(cc != "*" || f == "count",
-          s"materialized view: $f(*) is not a materializable aggregate")
-        (bs, as :+ ((f, cc, stripTicks(out))))
-      // percentile_approx(c, q) materializes as a MERGEABLE log2-octave
-      // histogram ("quant<q>" in the stored spec): bucket counts form a
-      // group under addition, so refresh absorbs appends AND retractions
-      // as signed bucket merges — the quantile shape an incremental MV
-      // can maintain exactly (the estimate equals a rebuild's)
-      case ((bs, as), MvQuantItem(c, qt, out)) =>
-        require(qt.toDouble > 0 && qt.toDouble <= 1,
-          s"materialized view: percentile_approx quantile must be in " +
-            s"(0,1], got $qt")
-        (bs, as :+ ((s"quant$qt", stripTicks(c), stripTicks(out))))
-      // approx_top_k(c, k) materializes as CMS + candidate-set state
-      // ("topk<k>"): append slices absorb as counter sums + candidate
-      // unions; counters cannot retract, so deletes refresh through the
-      // per-touched-group recompute, never a silent under-count
-      case ((bs, as), MvTopkItem(c, k, out)) =>
-        require(k.toInt > 0,
-          s"materialized view: approx_top_k k must be positive, got $k")
-        (bs, as :+ ((s"topk${k.toInt}", stripTicks(c), stripTicks(out))))
-      case ((bs, as), MvColItem(c)) => (bs :+ stripTicks(c), as)
-      case (_, item) => sys.error(
-        "materialized view: select items must be a group column or " +
-          s"sum|count|min|max|approx_count_distinct(col)|" +
-          s"percentile_approx(col, q)|approx_top_k(col, k) AS name — got " +
-          s"`${item.trim}` (avg is derived by the rewrite rule from " +
-          "sum+count)")
+  /** The closed MV select grammar, read off the parsed Aggregate →
+    * (groupCols, (fn, col, out)*): bare group columns, and `fn(col) AS
+    * name` items with fn ∈ sum|count|min|max|approx_count_distinct (`*`
+    * only under count, which the parser spells `count(1)`),
+    * percentile_approx(col, q) or approx_top_k(col, k). */
+  private[tables] def mvSelect(groups: Seq[Expression],
+      items: Seq[Expression]): (Seq[String], Seq[(String, String, String)]) = {
+    val groupCols = groups.map {
+      case UnresolvedAttribute(Seq(c)) if c.matches("[A-Za-z_]\\w*") => c
+      case _ => sys.error("materialized view: GROUP BY must list plain " +
+        s"columns, got ${groups.map(sourceText).mkString(", ")}")
+    }
+    def bad(item: Expression): Nothing = sys.error(
+      "materialized view: select items must be a group column or " +
+        s"sum|count|min|max|approx_count_distinct(col)|" +
+        s"percentile_approx(col, q)|approx_top_k(col, k) AS name — got " +
+        s"`${sourceText(item match { case UnresolvedAlias(c, _) => c
+                                     case o => o })}` " +
+        "(avg is derived by the rewrite rule from sum+count)")
+    // a numeric argument keeps its statement text: the stored spec
+    // replays exactly the quantile or k the DDL named
+    def num(arg: Expression, shape: String, item: Expression): String =
+      Some(arg).collect { case l: Literal => sourceText(l) }
+        .filter(_.matches(shape)).getOrElse(bad(item))
+    val (bare, aggs) = items.partitionMap {
+      case UnresolvedAttribute(Seq(c)) => Left(c)
+      case item @ Alias(f: UnresolvedFunction, out)
+          if f.nameParts.length == 1 && !f.isDistinct && f.filter.isEmpty &&
+            !f.ignoreNulls && f.orderingWithinGroup.isEmpty =>
+        Right((f.nameParts.head.toLowerCase, f.arguments) match {
+          // approx_count_distinct materializes as a mergeable HLL sketch
+          // ("hll"): refresh unions partial sketches, never rescans
+          case (fn @ ("sum" | "count" | "min" | "max" |
+              "approx_count_distinct"), Seq(arg)) =>
+            val g = if (fn == "approx_count_distinct") "hll" else fn
+            val c = arg match {
+              case UnresolvedAttribute(Seq(c)) => c
+              case _: UnresolvedStar | Literal(1, IntegerType) => "*"
+              case _ => bad(item)
+            }
+            require(c != "*" || g == "count",
+              s"materialized view: $g(*) is not a materializable aggregate")
+            (g, c, out)
+          // a signed-mergeable log2-octave histogram ("quant<q>"): refresh
+          // absorbs appends AND retractions as bucket merges, exactly
+          case ("percentile_approx" | "approx_percentile",
+              Seq(UnresolvedAttribute(Seq(c)), q)) =>
+            val qt = num(q, """[0-9]*\.?[0-9]+""", item)
+            require(qt.toDouble > 0 && qt.toDouble <= 1,
+              s"materialized view: percentile_approx quantile must be in " +
+                s"(0,1], got $qt")
+            (s"quant$qt", c, out)
+          // CMS + candidate-set state ("topk<k>"): counters cannot
+          // retract, so deletes refresh through the touched-group recompute
+          case ("approx_top_k", Seq(UnresolvedAttribute(Seq(c)), k)) =>
+            val kt = num(k, """\d+""", item)
+            require(kt.toInt > 0,
+              s"materialized view: approx_top_k k must be positive, got $kt")
+            (s"topk${kt.toInt}", c, out)
+          case _ => bad(item)
+        })
+      case item => bad(item)
     }
     require(bare.toSet == groupCols.toSet,
       s"materialized view: select list's bare columns ${bare.mkString(",")} " +
@@ -2993,214 +3018,53 @@ object GraftSql {
   private val CloneStmt =
     ("""(?is)\s*CREATE\s+TABLE\s+""" + Ident +
       """\s+SHALLOW\s+CLONE\s+""" + Ident + """\s*;?\s*""").r
-  // materialized views: a deliberately closed grammar (single source
-  // table, plain GROUP BY, sum/count/min/max select list) — exactly the
-  // surface the MvRewrite rule can serve and the incremental refresher
-  // can maintain; anything richer is refused loudly at CREATE time, not
-  // silently mis-maintained later
-  private val CreateMvProbe =
-    """(?is)\s*CREATE\s+(?:OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\b.*""".r
-  private val CreateMvRe =
-    ("""(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+""" +
-      Ident + """\s+AS\s+SELECT\s+(.+?)\s+FROM\s+""" + Ident +
-      """(?:\s+WHERE\s+(.+?))?\s+GROUP\s+BY\s+([\w`,\s]+?)\s*;?\s*""").r
-  /** CREATE MV split with literal masking: the keyword scan runs over a
-    * copy whose string-literal CONTENTS are blanked (delimiters kept, so
-    * backticked path identifiers still match), then every group slices
-    * the ORIGINAL text by offset — keyword-shaped data inside a WHERE
-    * literal (`WHERE src = 'a GROUP BY b'`) cannot shift the split. */
-  private[tables] def parseCreateMv(stmt: String)
-      : Option[(Boolean, String, String, String, Option[String], String)] = {
-    val mask = stringLiteralMask(stmt)
-    val chars = stmt.toCharArray
-    var i = 0
-    while (i < chars.length) {
-      val c = chars(i)
-      if (mask(i) && c != '\'' && c != '"' && c != '`') chars(i) = 'x'
-      i += 1
-    }
-    val m = CreateMvRe.pattern.matcher(new String(chars))
-    if (!m.matches()) return None
-    def g(idx: Int): Option[String] =
-      if (m.group(idx) == null) None
-      else Some(stmt.substring(m.start(idx), m.end(idx)))
-    Some((m.group(1) != null, g(2).get, g(3).get, g(4).get,
-      g(5).map(_.trim), g(6).get))
-  }
   private val RefreshMvStmt =
     ("""(?is)\s*REFRESH\s+MATERIALIZED\s+VIEW\s+""" + Ident +
       """\s*;?\s*""").r
-  // the JOIN form of CREATE MV — INNER equi-joins of a fact with one
-  // or MORE dims, each with USING (same-named keys) or
-  // ON f.k = d.k [AND …] (qualifiers are the joined tables' names);
-  // maintained by [[graft.plans.JoinMv]] (star schema: dims pinned)
-  private val IdentNc = """(?:graft\.`[^`]+`|[\w.]+)"""
-  private val CreateMvJoinRe =
-    ("""(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+""" +
-      Ident + """\s+AS\s+SELECT\s+(.+?)\s+FROM\s+""" + Ident +
-      """((?:\s+JOIN\s+""" + IdentNc +
-      """\s+(?:USING\s*\([\w`,\s]+?\)|ON\s+.+?))+)""" +
-      """(?:\s+WHERE\s+(.+?))?""" +
-      """\s+GROUP\s+BY\s+([\w`,\s]+?)\s*;?\s*""").r
-  private val JoinSegRe =
-    ("""(?is)\s*(""" + IdentNc +
-      """)\s+(?:USING\s*\(([\w`,\s]+?)\)|ON\s+(.+?))\s*""").r
+  // Spark's parser has no CREATE OR REPLACE MATERIALIZED VIEW: the
+  // funnel reads that head and parses the rest as CREATE MATERIALIZED VIEW
+  private val OrReplaceMvHead =
+    """(?is)(\s*CREATE\s+)OR\s+REPLACE\s+(MATERIALIZED\s+VIEW\b.*)""".r
 
-  /** Join-form CREATE MV split, literal-masked like [[parseCreateMv]].
-    * Returns (orReplace, mv, selectList, fact, joins, where?, groupBy)
-    * where each join is (dimIdent, usingCols?, onCond?); None when the
-    * statement has no JOIN (the single-table parser owns it). */
-  private[tables] def parseCreateMvJoin(stmt: String)
-      : Option[(Boolean, String, String, String,
-        Seq[(String, Option[String], Option[String])], Option[String],
-        String)] = {
-    val mask = stringLiteralMask(stmt)
-    val chars = stmt.toCharArray
-    var i = 0
-    while (i < chars.length) {
-      val c = chars(i)
-      if (mask(i) && c != '\'' && c != '"' && c != '`') chars(i) = 'x'
-      i += 1
-    }
-    val m = CreateMvJoinRe.pattern.matcher(new String(chars))
-    if (!m.matches()) return None
-    def g(idx: Int): Option[String] =
-      if (m.group(idx) == null) None
-      else Some(stmt.substring(m.start(idx), m.end(idx)))
-    // the joins blob re-splits on the JOIN keyword (safe: the grammar's
-    // ON conjuncts are qual.k = qual.k only — no literals to confuse)
-    val joins = g(5).get.split("(?i)\\s+JOIN\\s+").toSeq
-      .map(_.trim).filter(_.nonEmpty).map {
-        case JoinSegRe(dim, using, on) =>
-          (dim, Option(using), Option(on).map(_.trim))
-        case seg => sys.error(
-          s"materialized view join: unparseable JOIN clause `$seg`")
-      }
-    Some((m.group(1) != null, g(2).get, g(3).get, g(4).get, joins,
-      g(6), g(7).get))
-  }
-
-  /** Bounds (start, end) of the top-level AND separators of a masked
-    * predicate — what `(?i)\s+AND\s+` found before, minus two classes
-    * of false splits: an AND inside parentheses (so `NOT (d.a AND d.b)`
-    * stays ONE conjunct instead of re-assembling as the semantically
-    * different `(NOT (d.a)) AND (d.b)`), and the AND that pairs a
-    * BETWEEN's bounds (SQL's grammar binds it tighter than
-    * conjunction — `c BETWEEN x AND y` is one predicate). One pending
-    * BETWEEN is tracked per paren depth and cleared on close-paren;
-    * runs on the literal-masked text, so parens/keywords inside string
-    * constants never count. */
-  private[tables] def topLevelAndBounds(ms: String): List[(Int, Int)] = {
-    val out = scala.collection.mutable.ListBuffer.empty[(Int, Int)]
-    val pendingBetween = scala.collection.mutable.Map.empty[Int, Int]
-      .withDefaultValue(0)
-    var depth = 0
-    var i = 0
-    def isWord(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < ms.length) {
-      val c = ms.charAt(i)
-      if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') {
-        pendingBetween(depth) = 0
-        depth = math.max(0, depth - 1); i += 1
-      } else if (isWord(c)) {
-        val s = i
-        while (i < ms.length && isWord(ms.charAt(i))) i += 1
-        ms.substring(s, i).toUpperCase match {
-          case "BETWEEN" => pendingBetween(depth) += 1
-          case "AND" =>
-            if (pendingBetween(depth) > 0) pendingBetween(depth) -= 1
-            else if (depth == 0) {
-              // widen over flanking whitespace, and split only when
-              // whitespace-delimited on both sides — exactly the old
-              // regex's \s+AND\s+ contract
-              var a = s
-              while (a > 0 && ms.charAt(a - 1).isWhitespace) a -= 1
-              var b = i
-              while (b < ms.length && ms.charAt(b).isWhitespace) b += 1
-              if (a < s && b > i) { out += ((a, b)); () }
-            }
-          case _ => ()
-        }
-      } else i += 1
-    }
-    out.toList
-  }
-
-  /** Attribute a join-MV WHERE clause to dim sides. Each top-level
-    * AND-ed conjunct must reference qualified columns of exactly ONE
-    * dim (`d.is_current`, `d.tier = 'gold'`); the qualifiers are
-    * stripped so the predicate applies to that dim relation alone
-    * ([[graft.plans.JoinMv.DimSide.filter]]), which is what keeps dim
-    * batches absorbing as signed deltas (σ distributes over ΔD).
-    * Fact-side or cross-side conjuncts are refused — a fact filter
-    * does NOT commute with the fact-CDF maintenance path as stored.
-    * Splitting and reference-scanning run on a literal-masked copy so
-    * `AND` or `a.b` inside a string constant never confuses the
-    * grammar. Returns one optional filter per dim, positionally. */
+  /** Attribute a join-MV WHERE clause to dim sides. Each AND-ed conjunct
+    * must reference qualified columns of exactly ONE dim (`d.is_current`,
+    * `d.tier = 'gold'`); the qualifiers are cut so the predicate applies
+    * to that dim relation alone ([[graft.plans.JoinMv.DimSide.filter]]),
+    * which keeps dim batches absorbing as signed deltas (σ distributes
+    * over ΔD). Fact-side conjuncts are refused: a fact filter does NOT
+    * commute with the fact-CDF maintenance path as stored. A
+    * parenthesized operand stays one conjunct, as written. Returns one
+    * optional filter per dim, positionally. */
   private[tables] def attributeJoinMvWhere(where: Option[String],
       factIdent: String, dimIdents: Seq[String]): Seq[Option[String]] = {
     val acc = Array.fill[List[String]](dimIdents.length)(Nil)
     where.map(_.trim).filter(_.nonEmpty).foreach { w =>
-      val mask = stringLiteralMask(w)
-      val maskedChars = w.toCharArray
-      var i = 0
-      while (i < maskedChars.length) {
-        val c = maskedChars(i)
-        if (mask(i) && c != '\'' && c != '"' && c != '`') maskedChars(i) = 'x'
-        i += 1
+      val root = Parser.parseExpression(w)
+      // [s, t) widened over the parentheses that wrap exactly it
+      def written(s: Int, t: Int): (Int, Int) = {
+        val i = w.lastIndexWhere(!_.isWhitespace, s - 1)
+        val j = w.indexWhere(!_.isWhitespace, t)
+        if (i >= 0 && j >= 0 && w(i) == '(' && w(j) == ')') written(i, j + 1)
+        else (s, t)
       }
-      val ms = new String(maskedChars)
-      val bounds = topLevelAndBounds(ms)
-      val starts = 0 :: bounds.map(_._2)
-      val ends = bounds.map(_._1) ::: List(w.length)
-      // '.' only — the layer.name convention. '_' is NOT a layer
-      // separator here: blindly aliasing `my_dim` as `dim` would let a
-      // conjunct mis-attribute to the wrong dim (or raise spurious
-      // ambiguity) whenever idents share an underscore suffix. An
-      // underscore-spelled catalog ident stays addressable by its exact
-      // full name.
-      def formsOf(id: String): Set[String] = {
-        val idn = stripTicks(id).toLowerCase
-        Set(idn, idn.split("\\.", 2).last)
+      // the parser folds an AND chain into And nodes sharing the chain's
+      // span; a parenthesized operand (or a wrapped whole) keeps its own
+      val chain = Some(span(root)).filter(sp => written(sp._1, sp._2) == sp)
+      def split(e: Expression): Seq[Expression] = e match {
+        case a: And if chain.contains(span(a)) => split(a.left) ++ split(a.right)
+        case o => Seq(o)
       }
-      val factForms = formsOf(factIdent)
-      // qualifiers are IDENTIFIER-shaped (leading letter/underscore, or
-      // backticked): a decimal literal's `0.5` must never read as
-      // qualifier `0` column `5`. The column side keeps its backticks
-      // (`is current` stays quoted in the stored filter).
-      val QualRef =
-        """(`[^`]+`|[A-Za-z_][\w.]*)\.(`[^`]+`|[A-Za-z_]\w*)""".r
-      starts.zip(ends).foreach { case (s, e) =>
-        val conj = w.substring(s, e).trim
-        val lead = s + w.substring(s, e).indexOf(conj)
-        val conjMasked = ms.substring(lead, lead + conj.length)
-        // refs FOUND on the masked text (literal-safe), but every piece
-        // of text kept or validated reads from the ORIGINAL at the same
-        // offsets — masked 'x' runs must never leak into the definition
-        val refs = QualRef.findAllMatchIn(conjMasked)
-          .filterNot(m => mask(lead + m.start)).toList
-        def orig(m: scala.util.matching.Regex.Match, g: Int): String =
-          conj.substring(m.start(g), m.end(g))
+      split(root).foreach { c =>
+        val (s, t) = (written _).tupled(span(c))
+        val conj = w.substring(s, t)
+        val refs = c.collect {
+          case a: UnresolvedAttribute if a.nameParts.length > 1 => a
+        }
         require(refs.nonEmpty, "materialized view join WHERE: conjunct " +
           s"`$conj` has no qualified column reference — qualify " +
           "columns with the joined table names")
-        val sides = refs.map { m =>
-          val q = stripTicks(orig(m, 1)).toLowerCase
-          if (factForms(q)) -1
-          else {
-            val hits = dimIdents.zipWithIndex
-              .filter { case (d, _) => formsOf(d)(q) }.map(_._2)
-            require(hits.nonEmpty, "materialized view join WHERE: " +
-              s"unknown qualifier `${orig(m, 1)}` in `$conj` — qualify " +
-              "with a joined table's name")
-            require(hits.length == 1, "materialized view join WHERE: " +
-              s"qualifier `${orig(m, 1)}` in `$conj` matches more than " +
-              s"one dim (${hits.map(dimIdents).mkString(", ")}) — use " +
-              "the full table name")
-            hits.head
-          }
-        }
+        val sides = refs.map(a =>
+          joinSide(a.nameParts.init, factIdent, dimIdents, Some(conj)))
         require(!sides.contains(-1),
           s"materialized view join WHERE: `$conj` references the FACT " +
             "side — only dim-side predicates are supported in the join " +
@@ -3208,8 +3072,14 @@ object GraftSql {
         require(sides.distinct.length == 1,
           s"materialized view join WHERE: `$conj` references multiple " +
             "dims — each conjunct must touch exactly one dim")
+        // cut each qualifier at the attribute's offsets; a backticked
+        // column keeps its quoting (`is current` stays quoted)
         val sb = new StringBuilder(conj)
-        refs.reverse.foreach(m => { sb.replace(m.start, m.end, orig(m, 2)); () })
+        refs.sortBy(a => -span(a)._1).foreach { a =>
+          val ((as, at), col) = (span(a), a.nameParts.last)
+          sb.replace(as - s, at - s, if (w(at - 1) != '`') col
+            else s"`${col.replace("`", "``")}`")
+        }
         acc(sides.head) ::= sb.toString
       }
     }
@@ -3218,53 +3088,71 @@ object GraftSql {
       else Some(l.reverse.map(c => s"($c)").mkString(" AND ")))
   }
 
-  /** Key pairs of the join form: USING lists same-named pairs; ON takes
-    * AND-ed `qual.col = qual.col` equalities where each qualifier is a
-    * joined table's name (full ident or its name part). */
-  private[tables] def parseJoinKeys(usingCols: Option[String],
-      onCond: Option[String], factIdent: String,
-      dimIdent: String): Seq[(String, String)] = usingCols match {
-    case Some(cs) =>
-      cs.split(",").toSeq.map(c => stripTicks(c.trim)).filter(_.nonEmpty)
-        .map(c => (c, c))
-    case None =>
-      val JoinEq =
-        """(?is)\s*`?([\w.]+)`?\.`?(\w+)`?\s*=\s*`?([\w.]+)`?\.`?(\w+)`?\s*""".r
-      // '.' only, same reasoning as attributeJoinMvWhere's formsOf: an
-      // underscore is part of the name, never a qualifier separator
-      def forms(id: String): Set[String] = {
-        val idn = stripTicks(id).toLowerCase
-        Set(idn, idn.split("\\.", 2).last)
-      }
-      def side(q: String): Char = {
-        val qn = stripTicks(q).toLowerCase
-        if (forms(factIdent)(qn)) 'f'
-        else if (forms(dimIdent)(qn)) 'd'
-        else sys.error("materialized view join: unknown qualifier " +
-          s"`$q` — qualify key columns with the joined table names")
-      }
-      onCond.get.split("(?i)\\s+AND\\s+").toSeq.map {
-        case JoinEq(q1, c1, q2, c2) => (side(q1), side(q2)) match {
-          case ('f', 'd') => (c1, c2)
-          case ('d', 'f') => (c2, c1)
+  /** Key pairs (fact column, dim column) of a join-form ON condition:
+    * AND-ed `qual.col = qual.col` equalities. */
+  private[tables] def joinKeys(on: Expression, factIdent: String,
+                               dimIdent: String): Seq[(String, String)] =
+    conjuncts(on).map {
+      case EqualTo(UnresolvedAttribute(q1 :+ c1), UnresolvedAttribute(q2 :+ c2))
+          if q1.nonEmpty && q2.nonEmpty =>
+        (joinSide(q1, factIdent, Seq(dimIdent), None),
+          joinSide(q2, factIdent, Seq(dimIdent), None)) match {
+          case (-1, 0) => (c1, c2)
+          case (0, -1) => (c2, c1)
           case _ => sys.error("materialized view join: each ON " +
             "conjunct must equate a fact column with a dim column")
         }
-        case other => sys.error("materialized view join: unsupported " +
-          s"ON conjunct `${other.trim}` (only qual.k = qual.k equalities)")
-      }
+      case other => sys.error("materialized view join: unsupported " +
+        s"ON conjunct `${sourceText(other)}` (only qual.k = qual.k " +
+        "equalities)")
+    }
+
+  /** The join side a column qualifier names: -1 for the fact, else the
+    * dim's index. A qualifier is a joined table's full ident or its part
+    * after the first '.', never split at '_' (`dim` must not alias
+    * `my_dim`, or a conjunct could mis-attribute). `conj` is the WHERE
+    * conjunct it sits in, None for an ON key. */
+  private def joinSide(qualifier: Seq[String], factIdent: String,
+                       dimIdents: Seq[String], conj: Option[String]): Int = {
+    val (q, sides) = (qualifier.mkString("."), factIdent +: dimIdents)
+    val hits = sides.indices.filter { i =>
+      val id = stripTicks(sides(i)).toLowerCase
+      Set(id, id.split("\\.", 2).last)(q.toLowerCase)
+    }
+    val (head, in) = conj.fold(("materialized view join:", ""))(c =>
+      ("materialized view join WHERE:", s" in `$c`"))
+    require(hits.nonEmpty, s"$head unknown qualifier `$q`$in — qualify " +
+      conj.fold("key columns with the joined table names")(_ =>
+        "with a joined table's name"))
+    require(hits.head == 0 || hits.length == 1, s"$head qualifier `$q`$in " +
+      s"matches more than one dim (${hits.map(sides).mkString(", ")}) — " +
+      "use the full table name")
+    hits.head - 1
   }
-  // durable (non-TEMP) views: CREATE VIEW persists the definition in
-  // the warehouse ledger so a NEW session's catalog re-registers it —
-  // the reference's persistent UC view (vw_player_fixture_horizon,
-  // 00_create_uc_objects.py:312-324). TEMP/GLOBAL TEMP views do not
-  // match (keyword between CREATE and VIEW) and stay Spark-native.
-  private val CreateViewStmt =
-    """(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(\w+)\s+AS\s+(.+?)\s*;?\s*""".r
-  private val CreateViewQualifiedStmt =
-    """(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+([\w.`]+)\s+AS\s+(.+?)\s*;?\s*""".r
-  private val DropViewStmt =
-    """(?is)\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?(\w+)\s*;?\s*""".r
+
+  /** `e` split at its AND nodes. */
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other     => Seq(other)
+  }
+
+  /** [start, end) of a parsed expression's statement text, over its
+    * whole subtree (a BETWEEN node's own origin starts at its keyword). */
+  private def span(e: Expression): (Int, Int) = {
+    val offsets = e.collect {
+      case n if n.origin.startIndex.isDefined && n.origin.stopIndex.isDefined =>
+        (n.origin.startIndex.get, n.origin.stopIndex.get + 1)
+    }
+    (offsets.map(_._1).min, offsets.map(_._2).max)
+  }
+
+  /** The statement text a parsed expression came from. */
+  private[tables] def sourceText(e: Expression): String = {
+    val (s, t) = span(e)
+    e.collectFirst { case n if n.origin.sqlText.isDefined =>
+      n.origin.sqlText.get.substring(s, t) }.get
+  }
+
   private val ShowViewsStmt = """(?is)\s*SHOW\s+VIEWS\s*;?\s*""".r
   private val ShowMvsStmt =
     """(?is)\s*SHOW\s+MATERIALIZED\s+VIEWS\s*;?\s*""".r
@@ -3322,18 +3210,6 @@ object GraftSql {
   private[tables] def untickWordNames(s: String): String =
     TickedIdent.replaceAllIn(s,
       m => java.util.regex.Matcher.quoteReplacement(m.group(1)))
-  private val MvAggItem =
-    """(?is)\s*(sum|count|min|max|approx_count_distinct)\s*\(\s*(\*|`[^`]+`|\w+)\s*\)\s+AS\s+(`[^`]+`|\w+)\s*""".r
-  // two-arg approximate-percentile form; q must be a plain numeric
-  // literal — its TEXT is kept verbatim in the stored spec (`quant<q>`)
-  // so the readout replays exactly the quantile the DDL named
-  private val MvQuantItem =
-    """(?is)\s*(?:percentile_approx|approx_percentile)\s*\(\s*(`[^`]+`|\w+)\s*,\s*([0-9]*\.?[0-9]+)\s*\)\s+AS\s+(`[^`]+`|\w+)\s*""".r
-  // approx_top_k(col, k): k a positive int literal, kept in the spec
-  // (`topk<k>`) — presentation slices the stored candidate state to k
-  private val MvTopkItem =
-    """(?is)\s*approx_top_k\s*\(\s*(`[^`]+`|\w+)\s*,\s*(\d+)\s*\)\s+AS\s+(`[^`]+`|\w+)\s*""".r
-  private val MvColItem = """(?is)\s*(`[^`]+`|\w+)\s*""".r
   private val ConvertStmt =
     ("""(?is)\s*CONVERT\s+TO\s+GRAFT\s+parquet\.`([^`]+)`\s+AS\s+""" +
       Ident + """\s*;?\s*""").r
@@ -3461,27 +3337,59 @@ object GraftSql {
   private def stripTicks(s: String): String =
     s.trim.stripPrefix("`").stripSuffix("`")
 
-  /** Whitespace runs OUTSIDE string literals collapse to one space:
-    * multiline/aligned DDL is legal SQL, but named-expr ledgers (CHECK
-    * constraints) store their exprs line-framed and surface them
-    * verbatim (SHOW CREATE TABLE), so the stored spelling is
-    * canonicalized — same semantics whatever the statement's layout.
-    * Quoted content passes through untouched (literals are data). */
-  private[tables] def collapseExprWs(e: String): String = {
-    val sb = new StringBuilder
-    var inQ = false
+  /** One pass over SQL text by its lexical regions: `'…'` and `"…"`
+    * literals (backslash escapes honoured) and backticked names pass
+    * through whole; a `--` comment drops up to its newline; a `/* … */`
+    * comment (nested ones close in pairs, as Spark's lexer reads them) is
+    * kept when `keepBlock` (hints ride in them), else read as one space;
+    * every other character goes through `code`. */
+  private def scanSql(s: String, keepBlock: Boolean)(
+      code: (StringBuilder, Char) => Unit): String = {
+    val out = new StringBuilder
     var i = 0
-    while (i < e.length) {
-      val c = e.charAt(i)
-      if (inQ) { sb += c; if (c == '\'') inQ = false; i += 1 }
-      else if (c == '\'') { inQ = true; sb += c; i += 1 }
-      else if (c.isWhitespace) {
-        while (i < e.length && e.charAt(i).isWhitespace) i += 1
-        sb += ' '
-      } else { sb += c; i += 1 }
+    def copyTo(j: Int): Unit = { out ++= s.substring(i, j); i = j }
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\'' || c == '"' || c == '`') {
+        var j = i + 1
+        while (j < s.length && s.charAt(j) != c) {
+          if (c != '`' && s.charAt(j) == '\\') j += 1
+          j += 1
+        }
+        copyTo(math.min(j + 1, s.length))
+      } else if (s.startsWith("--", i)) {
+        val nl = s.indexOf('\n', i)
+        i = if (nl < 0) s.length else nl
+      } else if (s.startsWith("/*", i)) {
+        var j = i + 2
+        var depth = 1
+        while (j < s.length && depth > 0) {
+          if (s.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (s.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        j = math.min(j, s.length)
+        if (keepBlock) copyTo(j) else { code(out, ' '); i = j }
+      } else { code(out, c); i += 1 }
     }
-    sb.result().trim
+    out.toString
   }
+
+  /** `s` with each comment outside literals and backticked names read
+    * as nothing (`--`) or one space (`/* … */`); all else is kept. */
+  private[tables] def stripComments(s: String): String =
+    scanSql(s, keepBlock = false)(_ += _)
+
+  /** Whitespace runs and comments OUTSIDE string literals collapse to one
+    * space: named-expr ledgers (CHECK constraints, MV predicates) store
+    * their exprs line-framed and surface them verbatim, so multiline DDL
+    * canonicalizes — and a `--` comment must go, not swallow the rest of
+    * the line. Quoted content passes through untouched. */
+  private[tables] def collapseExprWs(e: String): String =
+    scanSql(e, keepBlock = false) { (out, c) =>
+      if (!c.isWhitespace) out += c
+      else if (out.nonEmpty && out.last != ' ') out += ' '
+    }.trim
 
   /** Source files under `dir`, recursively, skipping hidden/metadata
     * names — the same convention as Spark's file index. */
@@ -3503,35 +3411,18 @@ object GraftSql {
     out.toSeq.sorted
   }
 
-  /** Split on `sep` at nesting depth 0, respecting '...' and `...`. */
+  /** Split on `sep` at nesting depth 0, outside literals, backticked
+    * names and comments ([[scanSql]]). */
   private[tables] def splitTop(s: String, sep: Char): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    // double quotes tracked too: with Spark's default settings "…" is a
-    // string literal, and a separator inside one is data
-    var depth = 0; var inStr = false; var inTick = false; var inDq = false
-    var esc = false
-    s.foreach { c =>
-      if (inStr) { cur += c
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '\'') inStr = false }
-      else if (inTick) { cur += c; if (c == '`') inTick = false }
-      else if (inDq) { cur += c
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inDq = false }
-      else c match {
-        case '\''               => inStr = true; cur += c
-        case '`'                => inTick = true; cur += c
-        case '"'                => inDq = true; cur += c
-        case '('                => depth += 1; cur += c
-        case ')'                => depth -= 1; cur += c
-        case x if x == sep && depth == 0 => out += cur.toString; cur.clear()
-        case x                  => cur += x
+    var depth = 0
+    val last = scanSql(s, keepBlock = true) { (cur, c) =>
+      if (c == sep && depth == 0) { out += cur.toString; cur.clear() }
+      else {
+        if (c == '(') depth += 1 else if (c == ')') depth -= 1
+        cur += c; ()
       }
     }
-    out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
+    (out :+ last).toSeq.map(_.trim).filter(_.nonEmpty)
   }
 }

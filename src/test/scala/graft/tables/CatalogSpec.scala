@@ -99,6 +99,30 @@ class CatalogSpec extends SparkSpec {
     assert(!spark.catalog.tableExists("vw_team_totals"))
   }
 
+  test("SQL funnel: CREATE VIEW IF NOT EXISTS is durable; column-list " +
+       "and COMMENT forms refuse instead of landing session-only") {
+    val root = tmpDir("cat-vwparsed-")
+    val cat = new Catalog(spark, root)
+    cat.bootstrap()
+    cat.table("silver", "m").overwrite(Seq((1, "x")).toDF("k", "v"))
+    cat.registerViews()
+    val gsql = GraftSql(spark, cat)
+    val stored = Seq(("vw_ine", "SELECT k FROM silver_m"))
+    gsql.sql("CREATE VIEW IF NOT EXISTS vw_ine AS SELECT k FROM silver_m")
+    assert(new Catalog(spark, root).views === stored)
+    // over an existing view IF NOT EXISTS keeps the stored definition
+    gsql.sql("CREATE VIEW IF NOT EXISTS vw_ine AS SELECT v FROM silver_m")
+    assert(new Catalog(spark, root).views === stored)
+    Seq("vw_cols" -> "CREATE VIEW vw_cols (one) AS SELECT 1",
+        "vw_com" -> "CREATE VIEW vw_com COMMENT 'c' AS SELECT 1 AS one")
+      .foreach { case (name, stmt) =>
+        val e = intercept[IllegalArgumentException](gsql.sql(stmt))
+        assert(e.getMessage.contains("keeps only its name and query"), name)
+        assert(!spark.catalog.tableExists(name), s"$name landed session-only")
+      }
+    assert(new Catalog(spark, root).views.map(_._1) === Seq("vw_ine"))
+  }
+
   test("SQL funnel: CREATE VIEW persists durably, DROP VIEW removes; " +
        "TEMP views stay session-only") {
     val root = tmpDir("cat-vwsql-")

@@ -627,6 +627,40 @@ class GraftSqlSpec extends SparkSpec {
     assert(cat.table("silver", "chk").read.count() === 2)
   }
 
+  test("a stored CHECK keeps every conjunct of commented DDL and every " +
+       "space of an escaped literal; DROP CONSTRAINT IF EXISTS") {
+    val (cat, sql) = warehouse()
+    sql.sql("CREATE TABLE silver.cc (k INT, v INT, s STRING)")
+    val t = cat.table("silver", "cc")
+    val failed = rowFailures(Seq(
+      "a `--` comment does not swallow the next conjunct" -> (() => {
+        sql.sql("ALTER TABLE silver.cc ADD CONSTRAINT v_range " +
+          "CHECK (v > 0 -- positive\n  AND v < 10)")
+        intercept[Throwable](
+          sql.sql("INSERT INTO silver.cc VALUES (2, 500, 'a')"))
+        assert(t.read.count() === 0L)
+        assert(t.checks.toMap.get("v_range") === Some("v > 0 AND v < 10"))
+      }),
+      "an escaped quote keeps the literal's inner spaces" -> (() => {
+        sql.sql("ALTER TABLE silver.cc ADD CONSTRAINT s_ok " +
+          "CHECK (s <> 'it\\'s  x')")
+        intercept[Throwable](sql.sql(
+          "INSERT INTO silver.cc VALUES (1, 1, 'it\\'s  x')"))
+        assert(t.read.count() === 0L)
+      }),
+      "DROP CONSTRAINT IF EXISTS of an unknown name takes no commit" -> (() => {
+        val (versions, checks) = (t.history.length, t.checks)
+        sql.sql("ALTER TABLE silver.cc DROP CONSTRAINT IF EXISTS nope")
+        assert(t.history.length === versions && t.checks === checks)
+      }),
+      "a bare DROP CONSTRAINT of an unknown name still refuses" -> (() => {
+        val e = intercept[IllegalArgumentException](
+          sql.sql("ALTER TABLE silver.cc DROP CONSTRAINT nope"))
+        assert(e.getMessage.contains("no constraint named nope"))
+      })))
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
   test("SELECT ... VERSION AS OF rewrites inline (old vs new in one stmt)") {
     val (cat, sql) = warehouse()
     val t = cat.table("silver", "tt")

@@ -370,4 +370,60 @@ class GrantsSpec extends SparkSpec {
         gsql.sql("SELECT uid FROM silver.pii VERSION AS OF 1").collect())
     } finally spark.conf.unset(GraftSql.PrincipalConf)
   }
+
+  test("MERGE USING a graft table reads the source governed: the row " +
+       "filter and masks apply to what lands in the target") {
+    val (_, cat) = freshCat("merge-gov-")
+    val gsql = GraftSql(spark, cat)
+    gsql.sql("CREATE TABLE silver.pii (uid BIGINT, email STRING, region INT)")
+    gsql.sql("INSERT INTO silver.pii VALUES (1, 'a@x.io', 0), " +
+      "(2, 'b@y.io', 1)")
+    gsql.sql("ALTER TABLE silver.pii SET ROW FILTER (region = 0)")
+    gsql.sql("ALTER TABLE silver.pii ALTER COLUMN email SET MASK ('***')")
+    gsql.sql("CREATE TABLE silver.mine (uid BIGINT, email STRING, region INT)")
+    try {
+      spark.conf.set(GraftSql.PrincipalConf, "analyst")
+      gsql.sql("MERGE INTO silver.mine AS t USING silver.pii AS s " +
+        "ON t.uid = s.uid WHEN NOT MATCHED THEN INSERT *")
+      assert(cat.table("silver", "mine").read.as[(Long, String, Int)]
+        .collect().toSeq === Seq((1L, "***", 0)))
+    } finally spark.conf.unset(GraftSql.PrincipalConf)
+  }
+
+  test("a comment cannot hide a statement from the grant check: block " +
+       "comments, leading, nested or holding an apostrophe, read as " +
+       "whitespace") {
+    val (root, cat) = freshCat("grants-cmt-")
+    val gsql = GraftSql(spark, cat)
+    gsql.sql("CREATE TABLE silver.secret (g INT, v BIGINT)")
+    gsql.sql("INSERT INTO silver.secret VALUES (1, 10), (2, 20)")
+    gsql.sql("CREATE TABLE gold.pub (g INT, v BIGINT)")
+    gsql.sql("INSERT INTO gold.pub VALUES (1, 5)")
+    gsql.sql("GRANT USE CATALOG ON CATALOG wh TO `analyst`")
+    gsql.sql("GRANT USE SCHEMA ON SCHEMA gold TO `analyst`")
+    gsql.sql("GRANT SELECT ON TABLE gold.pub TO `analyst`")
+    try {
+      spark.conf.set(GraftSql.PrincipalConf, "analyst")
+      Seq(
+        "CREATE MATERIALIZED VIEW gold.x1 AS SELECT g, /* it's */ sum(v) " +
+          "AS s FROM silver.secret GROUP BY g",
+        "/* c */ CREATE MATERIALIZED VIEW gold.x2 AS SELECT g, sum(v) " +
+          "AS s FROM silver.secret GROUP BY g",
+        "/* c */ DELETE FROM silver.secret WHERE g = 1",
+        "/* a /* it's */ b */ DELETE FROM silver.secret WHERE g = 1"
+      ).foreach { stmt =>
+        val denied = intercept[RuntimeException](gsql.sql(stmt))
+        assert(denied.getMessage.contains("PERMISSION_DENIED"), stmt)
+      }
+      assert(Seq("x1", "x2").forall(!cat.table("gold", _).exists))
+      assert(cat.table("silver", "secret").read.count() === 2L)
+      // the same comments over a granted source still run
+      gsql.sql("CREATE MATERIALIZED VIEW gold.ok AS SELECT g, /* it's */ " +
+        "sum(v) AS s FROM gold.pub GROUP BY g")
+      assert(cat.table("gold", "ok").read.count() === 1L)
+    } finally {
+      spark.conf.unset(GraftSql.PrincipalConf)
+      graft.plans.MvRewrite.deregisterRoot(s"$root/gold/ok")
+    }
+  }
 }

@@ -1284,6 +1284,68 @@ class MvSqlSpec extends SparkSpec {
     } finally MvRewrite.deregisterRoot(mv.root)
   }
 
+  test("CREATE MATERIALIZED VIEW reads the parsed plan: comments in the " +
+       "select list and WHERE, IF NOT EXISTS, refused shapes") {
+    val (cat, sql) = warehouse()
+    cat.table("silver", "cm").append(
+      Seq(("a", 1L), ("a", 2L), ("z", 3L), ("b", -1L)).toDF("g", "v"))
+    cat.table("silver", "cmd").append(Seq(("a", "x")).toDF("g", "c"))
+    cat.registerViews()
+    def rows(df: DataFrame) = df.select("g", "s").as[(String, Long)]
+      .collect().toSeq.sortBy(_._1)
+    val all = Seq(("a", 3L), ("b", -1L), ("z", 3L))
+    def creates(name: String, select: String, expected: Seq[(String, Long)]) =
+      name -> (() => {
+        sql.sql(s"CREATE MATERIALIZED VIEW gold.$name AS $select")
+        val mv = cat.table("gold", name)
+        try assert(rows(mv.read) === expected)
+        finally MvRewrite.deregister(mv)
+      })
+    def refuses(name: String, stmt: String) = name -> (() => {
+      val e = intercept[RuntimeException](sql.sql(stmt))
+      assert(e.getMessage.contains("unrecognized shape"), e.getMessage)
+      assert(!cat.table("gold", "cm_no").exists)
+    })
+    // a `--` comment ends at its newline: the conjunct after it must stay
+    val commentedWhere = "SELECT g, sum(v) AS s FROM silver.cm\n" +
+      "WHERE v > 0 -- positive only\n  AND g <> 'z'\nGROUP BY g"
+    val failures = Seq(
+      "a commented WHERE keeps the conjunct after the comment" -> (() => {
+        sql.sql(s"CREATE MATERIALIZED VIEW gold.cm_where AS $commentedWhere")
+        assert(rows(cat.table("gold", "cm_where").read) === rows(
+          spark.sql(commentedWhere.replace("silver.cm", "silver_cm"))))
+        assert(rows(cat.table("gold", "cm_where").read) === Seq(("a", 3L)))
+      }),
+      creates("cm_line", "SELECT g, -- the group\n sum(v) AS s " +
+        "FROM silver.cm GROUP BY g", all),
+      creates("cm_block", "SELECT g, /* total */ sum(v) AS s " +
+        "FROM silver.cm GROUP BY g", all),
+      "IF NOT EXISTS over an existing MV takes no commit" -> (() => {
+        val mv = cat.table("gold", "cm_line")
+        val head = mv.latestVersion
+        val r = sql.sql("CREATE MATERIALIZED VIEW IF NOT EXISTS gold.cm_line " +
+          "AS SELECT g, min(v) AS s FROM silver.cm GROUP BY g")
+          .as[(String, String, Long)].head()
+        assert(r._2 === "exists")
+        assert(mv.latestVersion === head)
+        assert(rows(mv.read) === all)
+      }),
+      refuses("aliased source", "CREATE MATERIALIZED VIEW gold.cm_no AS " +
+        "SELECT g, sum(v) AS s FROM silver.cm c GROUP BY g"),
+      refuses("LEFT JOIN", "CREATE MATERIALIZED VIEW gold.cm_no AS " +
+        "SELECT g, sum(v) AS s FROM silver.cm LEFT JOIN silver.cmd " +
+        "USING (g) GROUP BY g"),
+      refuses("HAVING", "CREATE MATERIALIZED VIEW gold.cm_no AS " +
+        "SELECT g, sum(v) AS s FROM silver.cm GROUP BY g HAVING sum(v) > 0"),
+      refuses("TBLPROPERTIES", "CREATE MATERIALIZED VIEW gold.cm_no " +
+        "TBLPROPERTIES ('k' = 'v') AS SELECT g, sum(v) AS s " +
+        "FROM silver.cm GROUP BY g")
+    ).flatMap { case (name, run) =>
+      scala.util.Try(run()).failed.toOption.map(e => s"$name: ${e.getMessage}")
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
   test("join-form WHERE conjunct split: parenthesized AND stays ONE " +
        "conjunct, BETWEEN's AND never splits, '_' is not a qualifier " +
        "separator") {
