@@ -901,8 +901,7 @@ object SparkEntry {
       gsql.sql("CREATE TABLE silver.nation_fork SHALLOW CLONE bronze.nation")
       val nRanged = cat.table("bronze", "nation")
         .readRange("n_nationkey", "5", "9").count()
-      cat.registerViews()
-      s.sql(s"""SELECT
+      gsql.sql(s"""SELECT
         CAST(${conv.getLong(2)} AS BIGINT) AS n_file_sets,
         CAST($analyzed AS BIGINT) AS n_analyzed,
         CAST($nRanged AS BIGINT) AS n_ranged,
@@ -1339,8 +1338,7 @@ object SparkEntry {
         gsql.sql("VACUUM silver.pn RETAIN 1 VERSIONS").head().getLong(0)
       gsql.sql("ALTER TABLE silver.pn DROP PIN 'mv:/gold/rollup'")
       val pinsAfter = gsql.sql("SHOW PINS silver.pn").count()
-      cat.registerViews()
-      s.sql(s"""SELECT
+      gsql.sql(s"""SELECT
         (SELECT CAST(count(*) AS BIGINT) FROM silver_pn) AS n_rows,
         (SELECT CAST(sum(n_nationkey) AS BIGINT) FROM silver_pn) AS sum_key,
         CAST($nPins AS BIGINT) AS n_pins,
@@ -1423,8 +1421,7 @@ object SparkEntry {
         .head()
       val lastAction = tbl.history.last.action
       val pinsLeft = gsql.sql("SHOW PINS silver.pe").count()
-      cat.registerViews()
-      s.sql(s"""SELECT
+      gsql.sql(s"""SELECT
         (SELECT CAST(count(*) AS BIGINT) FROM silver_pe) AS n_rows,
         (SELECT CAST(sum(n_nationkey) AS BIGINT) FROM silver_pe) AS sum_key,
         $refused AS refused_without_age,
@@ -3866,8 +3863,7 @@ object SparkEntry {
       src.append(li.filter(col("okey") % 2 =!= 0))
       val mode = gsql.sql("REFRESH MATERIALIZED VIEW gold.mv_flag_users")
         .select("mode").as[String].head()
-      cat.registerViews()
-      val presented = s.sql(
+      val presented = gsql.sql(
         "SELECT flag, n_rows, approx_ok FROM gold_mv_flag_users")
       val exact = src.read.groupBy("flag")
         .agg(countDistinct("okey").as("exact_distinct"))
@@ -4153,8 +4149,7 @@ object SparkEntry {
       src.delete(col("okey") % 7 === 0)
       val mode2 = gsql.sql("REFRESH MATERIALIZED VIEW gold.mv_flag_items")
         .select("mode").as[String].head()
-      cat.registerViews()
-      s.sql("SELECT flag, n_rows, top_items FROM gold_mv_flag_items")
+      gsql.sql("SELECT flag, n_rows, top_items FROM gold_mv_flag_items")
         .select(col("flag"), col("n_rows"),
           posexplode(col("top_items")).as(Seq("pos", "ti")))
         .select(col("flag"), col("n_rows"),
@@ -4199,8 +4194,7 @@ object SparkEntry {
       val histStored = cat.table("gold", "mv_flag_price")
         .read.schema("p50").dataType
         .isInstanceOf[org.apache.spark.sql.types.MapType]
-      cat.registerViews()
-      val presented = s.sql(
+      val presented = gsql.sql(
         "SELECT flag, n_rows, p50, p99 FROM gold_mv_flag_price")
       // exact rank statistic, same definition the readout targets
       val w = org.apache.spark.sql.expressions.Window
@@ -4456,8 +4450,7 @@ object SparkEntry {
       val nReclaimed =
         gsql.sql("VACUUM silver.nation RETAIN 1 VERSIONS").head().getLong(0)
       val nVersions = gsql.sql("DESCRIBE HISTORY silver.nation").count()
-      cat.registerViews()
-      s.sql(s"""SELECT
+      gsql.sql(s"""SELECT
         (SELECT CAST(count(*) AS BIGINT) FROM silver_nation) AS n_rows,
         (SELECT CAST(sum(n_nationkey) AS BIGINT) FROM silver_nation) AS sum_key,
         CAST(${opt.getLong(4)} AS BIGINT) AS file_sets_after,
@@ -4485,7 +4478,6 @@ object SparkEntry {
       val gsql = graft.tables.GraftSql(s, cat)
       gsql.sql("CREATE MATERIALIZED VIEW gold.mv_nat AS SELECT rk, " +
         "sum(k) AS sum_k, count(*) AS cnt FROM silver.nat GROUP BY rk")
-      cat.registerViews()
       def dec(q: String): (String, Boolean, String) = {
         val r = gsql.sql("EXPLAIN REWRITE " + q)
           .select("decision", "mv", "reason").head()
@@ -4504,7 +4496,6 @@ object SparkEntry {
         "SELECT rk + 1 AS r2, sum(k) AS s FROM silver_nat GROUP BY rk + 1")
       step("5_no_decision", "SELECT * FROM silver_nat")
       src.append(Seq((99L, 999L, "zz")).toDF("rk", "k", "name"))
-      cat.registerViews()
       step("6_stale_fell_back",
         "SELECT rk, sum(k) AS s FROM silver_nat GROUP BY rk")
       gsql.sql("REFRESH MATERIALIZED VIEW gold.mv_nat")
@@ -4539,7 +4530,6 @@ object SparkEntry {
         "PARTITIONED BY (day)")
       gsql.sql("INSERT INTO silver.xev (ts, v) VALUES " +
         "('2026-01-01T10:00', 1), ('2026-01-02T09:00', 3)")
-      cat.registerViews()
       val rows = scala.collection.mutable.ArrayBuffer
         .empty[(String, String, String, Boolean, String)]
       def step(name: String, q: String): Unit = {

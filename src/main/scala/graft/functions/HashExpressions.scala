@@ -142,7 +142,7 @@ case class SimHash64(child: Expression)
 /** array<double> vector × literal hyperplanes → sign-bit LSH bucket id.
   * Same math as the higher-order formulation (per-plane zip_with dot,
   * accumulated left-to-right in doubles, bit set when dot >= 0 — see
-  * Similarity.lshBucketHof) in one loop per row: numPlanes interpreted
+  * SimilarityHof.lshBucketHof in test sources) in one loop per row: numPlanes interpreted
   * HOF dots collapse into a single scalar pass over the vector. */
 case class LshBucketId(child: Expression, planes: Array[Array[Double]])
     extends UnaryExpression {

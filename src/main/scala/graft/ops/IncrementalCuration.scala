@@ -340,16 +340,6 @@ object IncrementalCuration {
   /** Consume every unconsumed commit of the `docs` source into the
     * workspace. Returns the applied version range, or None when caught
     * up. O(changed docs) per call. */
-  private def tlog[A](label: String)(f: => A): A = {
-    if (!sys.env.contains("GRAFT_CUR_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[cur] $label%-22s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   def sync(src: VersionedTable, root: String, cfg: Config = Config(),
            idCol: String = "doc_id", textCol: String = "text"): Option[(Long, Long)] = {
     val spark = src.spark
@@ -375,15 +365,15 @@ object IncrementalCuration {
       // x defaultParallelism tasks of pure scheduling overhead for
       // kilobytes of data (measured: a material slice of q_curation's
       // wall time at local[32]).
-      val ctCounts = tlog("ctCounts")(changes
+      val ctCounts = changes
         .select(col("_change_type").as("__ct"))
         .groupBy("__ct").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val sliceRows = ctCounts.values.sum
       val sliceParts = math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
         sliceRows / 2000L + 1L)).toInt
-      val classified = tlog("ckpt classified")(changes.select(
+      val classified = changes.select(
           col(idCol).cast("long").as("doc_id"),
           col(textCol).as("text"),
           col("_change_type").as("__ct"),
@@ -399,7 +389,7 @@ object IncrementalCuration {
         // docs) and the slice replays idempotently from the txn markers
         // if an executor dies mid-batch, so the durability trade is
         // safe here.
-        .localCheckpoint())
+        .localCheckpoint()
       // an insert-only batch — the bootstrap, and every plain append —
       // has no pre-states and exactly one row per key, so both per-key
       // windows (each a full shuffle of the TEXT payload) are provably
@@ -408,14 +398,14 @@ object IncrementalCuration {
       // phase 1 input: every key that had a pre-state (update pre-image
       // or delete payload) leaves kept/hashes/bands; an updated key
       // re-enters through admission below with its new text
-      val pre = tlog("ckpt pre")(
+      val pre =
         (if (insertOnly) classified.limit(0)
          else Keyed.firstPerKey(
            classified.filter(col("__ct")
              .isin("update_preimage", "delete")),
            Seq("doc_id"), "__cv"))
         .select(col("doc_id"), col("text"))
-        .localCheckpoint())
+        .localCheckpoint()
       try {
         // ------------------------------------------------ phase 1: purge
         // nonemptiness of `pre` follows from the counts (firstPerKey of a
@@ -473,16 +463,16 @@ object IncrementalCuration {
             col("q4i") >= cfg.minQuality4)
           .withColumn("content_hash", sha2(col("text"), 256))
         // within-batch exact (min-id winner per content class)
-        val batchExact = tlog("ckpt batchExact")(Keyed.firstPerKey(scored,
+        val batchExact = Keyed.firstPerKey(scored,
             Seq("content_hash"), "doc_id")
-          .localCheckpoint())
+          .localCheckpoint()
         try {
         // a purge-only slice (deletes, or nothing passing the filter)
         // has no admission work — and must not pay three empty merge
         // job chains to find that out (plain `if`, not a return: a
         // non-local return would unwind past the consumer's position
         // commit and replay the slice forever)
-        if (!tlog("batchExact.isEmpty")(batchExact.isEmpty)) {
+        if (!batchExact.isEmpty) {
           // against-state exact: probe `hashes` behind a Bloom of the
           // batch's hash set; exclude self-matches (replay stability)
           // AND the leaving owners (their rows tombstone in this same
@@ -509,7 +499,7 @@ object IncrementalCuration {
               shinglesOf(col("text"), cfg).as("shingles"))
             .withColumn("sig", call_function("graft_minhash_hashes",
               col("shingles"), lit(cfg.numHashes)))
-          val sigd = tlog("ckpt sigd")(sigd0.localCheckpoint())
+          val sigd = sigd0.localCheckpoint()
           try {
           // within-batch near-dup: the batch alone through the standard
           // banded pipeline; losers are the larger ids of each pair
@@ -517,9 +507,9 @@ object IncrementalCuration {
               cfg.numHashes, cfg.bands, cfg.jaccardThreshold,
               cfg.maxBucketSize)
             .select(col("doc_id_b").as("doc_id")).distinct()
-          val afterLocal = tlog("ckpt afterLocal")(exactSurvivors
+          val afterLocal = exactSurvivors
             .join(localLosers, Seq("doc_id"), "left_anti")
-            .localCheckpoint())
+            .localCheckpoint()
           try {
             val r = cfg.numHashes / cfg.bands
             val newBands0 = sigd
@@ -534,7 +524,7 @@ object IncrementalCuration {
             // pure extra materialization
             val newBands =
               if (!bands.exists) newBands0
-              else tlog("ckpt newBands")(newBands0.localCheckpoint())
+              else newBands0.localCheckpoint()
             try {
             // against-state near-dup: batch bands probe the `bands`
             // table behind a Bloom; exact Jaccard verify reads ONLY the
@@ -580,9 +570,9 @@ object IncrementalCuration {
             // (afterLocal is already checkpointed)
             val survivors =
               if (!bands.exists) afterLocal
-              else tlog("ckpt survivors")(afterLocal
+              else afterLocal
                 .join(stateLosers, Seq("doc_id"), "left_anti")
-                .localCheckpoint())
+                .localCheckpoint()
             try {
               // ------------- phase 3: state merges (tombstones ride in)
               // ONE bucket-COW commit per table: the slice's purge
@@ -603,9 +593,9 @@ object IncrementalCuration {
                       allowMissingColumns = true))
                 val tbl = if (label == "kept") kept
                   else if (label == "hashes") hashes else bands
-                val pc = tlog(s"prepare $label")(
+                val pc =
                   tbl.mergePrepared(batch, keys, numBuckets = cfg.numBuckets,
-                    txn = Some((appId + ":" + label.head, hi))))
+                    txn = Some((appId + ":" + label.head, hi)))
                 crashPoint(s"prepare:$label")
                 (tbl, pc)
               }
@@ -644,21 +634,21 @@ object IncrementalCuration {
           // tombstone-only merges, one commit per table, concurrent for
           // the same reason as the main branch
           commitSlice(root, inParallel(Seq(
-            () => (hashes, tlog("purge hashes.prepare")(hashes.mergePrepared(
+            () => (hashes, hashes.mergePrepared(
               purgeOwners.get.withColumn(Merge.DeleteCol, lit(true)),
               Seq("content_hash"), numBuckets = cfg.numBuckets,
-              txn = Some((appId + ":h", hi))))),
-            () => (bands, tlog("purge bands.prepare")(bands.mergePrepared(
+              txn = Some((appId + ":h", hi)))),
+            () => (bands, bands.mergePrepared(
               bandsOf(pre, "text", cfg)
                 .withColumn(Merge.DeleteCol, lit(true)),
               Seq("band_idx", "band_hash", "doc_id"),
               numBuckets = cfg.numBuckets,
-              txn = Some((appId + ":b", hi))))),
-            () => (kept, tlog("purge kept.prepare")(kept.mergePrepared(
+              txn = Some((appId + ":b", hi)))),
+            () => (kept, kept.mergePrepared(
               pre.select(col("doc_id"))
                 .withColumn(Merge.DeleteCol, lit(true)),
               Seq("doc_id"), numBuckets = cfg.numBuckets,
-              txn = Some((appId + ":k", hi))))))))
+              txn = Some((appId + ":k", hi)))))))
         }
         } finally releaseCkpt(batchExact)
         } finally purgeOwners.foreach(releaseCkpt)

@@ -73,20 +73,13 @@ object Similarity {
     *
     * Uses the custom `graft_lsh_bucket` expression — one scalar pass per
     * row instead of numPlanes interpreted higher-order dots (the same ~20×
-    * constant the MinHash expressions buy; HashExpressionsSpec-style pin
-    * vs [[lshBucketHof]] lives in SimilaritySpec). Callers must have
-    * GraftFunctions registered (every public entry point here does). */
+    * constant the MinHash expressions buy; SimilaritySpec pins it against
+    * the higher-order twin `SimilarityHof.lshBucketHof` in test sources).
+    * Callers must have GraftFunctions registered (every public entry
+    * point here does). */
   def lshBucket(vec: Column, planes: Seq[Seq[Float]]): Column =
     call_function("graft_lsh_bucket", vec.cast("array<double>"),
       typedlit(planes.map(_.map(_.toDouble))))
-
-  /** The built-in higher-order formulation of [[lshBucket]] (kept as the
-    * semantic reference the custom expression is pinned against). */
-  private[graft] def lshBucketHof(vec: Column, planes: Seq[Seq[Float]]): Column =
-    (0 until planes.size).map { i =>
-      when(dot(vec.cast("array<double>"), vecLit(planes(i))) >= 0,
-        shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
 
   /** LSH-bucketed ANN top-k: prune to buckets within `probeHamming` bits
     * of the query's bucket (multiprobe), then exact cosine re-rank.
@@ -162,26 +155,14 @@ object Similarity {
   }
 
   /** Nearest coarse centroid of `vec` by squared L2, lowest-index
-    * tiebreak — the codegen'd kernel the HOF reference below is pinned
-    * against. Callers must have GraftFunctions registered (every
-    * serving entry point does). */
+    * tiebreak — the codegen'd kernel the higher-order reference
+    * `SimilarityHof.nearestCellHof` (test sources) is pinned against.
+    * Callers must have GraftFunctions registered (every serving entry
+    * point does). */
   private[ops] def nearestCellExpr(vec: Column,
                                    centroids: Array[Array[Double]]): Column =
     call_function("graft_nearest_cell", vec.cast("array<double>"),
       typedlit(centroids.map(_.toSeq).toSeq))
-
-  /** The built-in higher-order formulation of the `graft_nearest_cell`
-    * assignment (the semantic reference the custom expression is pinned
-    * against in SimilaritySpec — same distance, same lowest-index
-    * tiebreak via array_position-of-min). */
-  private[ops] def nearestCellHof(vec: Column,
-                                  centroids: Array[Array[Double]]): Column = {
-    val centLit = typedlit(centroids.map(_.toSeq).toSeq)
-    val dists = transform(centLit, c =>
-      aggregate(zip_with(vec, c, (x, y) => (x - y) * (x - y)),
-        lit(0.0d), (acc, v) => acc + v))
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-  }
 
   /** IVF ANN top-k: scan only the `nProbe` nearest cells, exact re-rank.
     * With `nProbe = nCells` this is exact brute force. */
@@ -279,29 +260,13 @@ object Similarity {
     * previous per-subspace transform+aggregate+zip_with HOF stack paid
     * m × k interpreted distance folds with a zip_with allocation per
     * centroid per row; SimilaritySpec pins the kernel against that
-    * formulation, kept below as [[pqCodesHof]]). Map-only; exposed for
-    * serving tables that store codes instead of raw vectors
-    * ([[IvfPqServing]]). */
+    * formulation, kept in test sources as `SimilarityHof.pqCodesHof`).
+    * Map-only; exposed for serving tables that store codes instead of
+    * raw vectors ([[IvfPqServing]]). */
   def pqCodesExpr(vec: Column, cb: PqCodebook): Column =
     call_function("graft_pq_codes", vec.cast("array<double>"),
       typedlit(cb.centroids.map(_.map(_.map(_.toDouble).toSeq).toSeq).toSeq),
       lit(cb.subDim))
-
-  /** The built-in higher-order formulation of [[pqCodesExpr]] (the
-    * semantic reference the kernel is pinned against in
-    * SimilaritySpec). */
-  private[ops] def pqCodesHof(vec: Column, cb: PqCodebook): Column = {
-    val vecD = vec.cast("array<double>")
-    array((0 until cb.m).map { j =>
-      val centLit = array(cb.centroids(j).map(c =>
-        array(c.map(x => lit(x.toDouble)): _*)): _*)
-      val subVec = slice(vecD, j * cb.subDim + 1, cb.subDim)
-      val dists = transform(centLit, c =>
-        aggregate(zip_with(subVec, c, (x, y) => (x - y) * (x - y)),
-          lit(0.0d), (acc, v) => acc + v))
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }: _*)
-  }
 
   /** Residual of `vec` against its nearest coarse centroid — FAISS
     * IVFADC's encoding input: `vec − centroids[cell]`, computed map-side

@@ -9,22 +9,23 @@ import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace,
   UnresolvedTableValuedFunction, ViewSchemaMode}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Cast, EqualTo,
   EvalMode, Expression, ForeignKeyConstraint, Literal,
-  PrimaryKeyConstraint}
+  PrimaryKeyConstraint, SubqueryExpression}
 import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.catalyst.plans.{Inner, UsingJoin}
 import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint,
   AddColumns, AddConstraint, Aggregate, AlterColumnSpec, AlterColumns,
-  AlterTableClusterBy, AnalyzeColumn, Assignment, ColumnDefinition,
-  CommentOnTable, CreateMaterializedViewAsSelect, CreateTable,
-  CreateTableAsSelect, CreateView, DeleteAction, DeleteFromTable,
+  AlterTableClusterBy, AnalyzeColumn, Assignment, CacheTable,
+  CacheTableAsSelect, ColumnDefinition, CommentOnTable,
+  CreateMaterializedViewAsSelect, CreateTable, CreateTableAsSelect,
+  CreateView, DeleteAction, DeleteFromTable, DescribeColumn,
   DescribeRelation, DropColumns, DropConstraint, DropTable, DropView, Filter,
   InsertAction, InsertIntoStatement, InsertStarAction, Join, LogicalPlan,
-  MergeIntoTable, MergeAction => ClauseAction, OverwriteByExpression,
-  RenameColumn, RenameTable, ReplaceTable, ReplaceTableAsSelect,
-  SetTableProperties, ShowColumns, ShowCreateTable, ShowPartitions,
-  ShowTableProperties, ShowTables, SubqueryAlias, TableSpec, TableSpecBase,
-  TruncateTable, UnresolvedWith, UnsetTableProperties, UpdateAction,
-  UpdateStarAction, UpdateTable}
+  MergeIntoTable, MergeAction => ClauseAction, OneRowRelation,
+  OverwriteByExpression, RenameColumn, RenameTable, ReplaceTable,
+  ReplaceTableAsSelect, SetTableProperties, ShowColumns, ShowCreateTable,
+  ShowPartitions, ShowTablePartition, ShowTableProperties, ShowTables,
+  SubqueryAlias, TableSpec, TableSpecBase, TruncateTable, UnresolvedWith,
+  UnsetTableProperties, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.{SparkSqlAstBuilder, SparkSqlParser}
@@ -45,7 +46,7 @@ import graft.ops.Merge
   * `DESCRIBE HISTORY` / `DESCRIBE DETAIL` relation flows, completing the
   * table lifecycle — DDL, DML, time travel, CDC, and now maintenance —
   * in one SQL entry point. Anything that is not a graft statement runs
-  * through Spark (pinned reads substituted), so callers can use one
+  * through Spark (graft reads bound), so callers can use one
   * `GraftSql.sql(...)` funnel for their whole session (the same
   * parse-what-you-own / delegate-the-rest shape as Delta's SQL parser).
   *
@@ -111,9 +112,14 @@ import graft.ops.Merge
   *   DESCRIBE HISTORY <table>
   *   DESCRIBE DETAIL <table>
   *
-  * Pinned reads, anywhere a relation may stand (joins, subqueries,
-  * CTEs, DML and CTAS sources, temp views), governed like every read:
+  * Reads of a graft table, anywhere a relation may stand (joins,
+  * subqueries, CTEs, DML and CTAS sources, temp views, CACHE TABLE),
+  * bind its live head, governed like every read; pinned reads bind a
+  * version:
   *
+  *   ... FROM <table>                         -- the head, one snapshot
+  *                                               per statement
+  *   ... FROM <layer>_<table>_history         -- its version log
   *   ... FROM <table> VERSION AS OF n | VERSION AS OF '<tag>'
   *   ... FROM <table> TIMESTAMP AS OF 'yyyy-MM-dd[ HH:mm:ss]'
   *   ... FROM <table>@v<n>                    -- Delta's shorthand
@@ -166,8 +172,9 @@ import graft.ops.Merge
   * SHOW / DESCRIBE / ANALYZE forms and every read are parsed by Spark's
   * own parser: the plan node (MergeIntoTable, AddColumns, AlterColumns,
   * CreateMaterializedViewAsSelect, CreateView, …) maps onto the graft
-  * operation or definition, and a pinned read of a graft table is
-  * substituted into the plan as that table's governed relation. A
+  * operation or definition, and every read of a graft table is bound
+  * into the plan as that table's governed relation ([[bindReads]]), so
+  * a read after a write through this funnel sees the write. A
   * statement whose identifier is NOT a graft table (unknown layer, no
   * catalog bound) delegates to vanilla `spark.sql`, so Spark catalog
   * tables and temp views keep working through the same funnel. MERGE's
@@ -206,43 +213,44 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     stmts.map(sql).last
   }
 
-  /** One funnel: graft maintenance statements execute against the
-    * resolved [[VersionedTable]]; everything else is `spark.sql`. */
-  def sql(stmt: String): DataFrame = {
-    checkGrants(stmt)
-    dispatch(stmt)
-  }
-
-  private def dispatch(stmt: String): DataFrame = stmt match {
+  /** One funnel: graft maintenance statements match their own grammar on
+    * the comment-free text and execute against the resolved
+    * [[VersionedTable]]; everything else parses with Spark's parser from
+    * the text as written (`/*+ … */` hints survive). Each is charged
+    * [[checkGrants]] before it runs. */
+  def sql(stmt: String): DataFrame = stripComments(stmt) match {
     case OptimizeWhereStmt(ident, preds) =>
-      optimizePartition(resolve(ident), preds)
-    case OptimizeStmt(ident, zcols) => optimize(resolve(ident), Option(zcols))
+      optimizePartition(writable(ident), preds)
+    case OptimizeStmt(ident, zcols) => optimize(writable(ident), Option(zcols))
     case VacuumDetailStmt(ident, retain) =>
-      vacuumDryRunDetail(resolve(ident),
+      vacuumDryRunDetail(writable(ident),
         Option(retain).map(_.toInt).getOrElse(1))
     case VacuumExpireStmt(ident, retain, n, unit) =>
-      vacuumExpirePins(resolve(ident),
+      vacuumExpirePins(writable(ident),
         Option(retain).map(_.toInt).getOrElse(1), n.toLong, unit)
     case VacuumExpireBareStmt(_, _, _) =>
       sys.error("VACUUM … FORCE EXPIRE PINS requires OLDER THAN <n> " +
         "MINUTES|HOURS|DAYS — expiring a pin is destructive for its " +
         "consumer, so the statement must state an explicit age bound")
     case VacuumStmt(ident, retain, ignorePins, dry) =>
-      vacuum(resolve(ident), Option(retain).map(_.toInt).getOrElse(1),
+      vacuum(writable(ident), Option(retain).map(_.toInt).getOrElse(1),
         dryRun = dry != null, respectPins = ignorePins == null)
     case FsckStmt(ident, dry) =>
       import spark.implicits._
-      val (missing, entry) = resolve(ident).fsckRepair(dryRun = dry != null)
+      val (missing, entry) = writable(ident).fsckRepair(dryRun = dry != null)
       missing.map(f => (f, entry.isDefined))
         .toDF("file", "removed_from_snapshot")
-    case RestoreVersionStmt(ident, v) => restore(resolve(ident), _.restore(v.toLong))
+    case RestoreVersionStmt(ident, v) => restore(writable(ident), _.restore(v.toLong))
     case RestoreTimestampStmt(ident, ts) =>
-      restore(resolve(ident), _.restoreAsOf(parseTsUtc(ts)))
+      restore(writable(ident), _.restoreAsOf(parseTsUtc(ts)))
     case RestoreTagStmt(ident, tag) =>
-      restore(resolve(ident), t => t.restore(t.tags.getOrElse(tag,
+      restore(writable(ident), t => t.restore(t.tags.getOrElse(tag,
         sys.error(s"RESTORE TO TAG: no tag `$tag` on $ident"))))
-    case CloneStmt(target, source) => clone(resolve(source), targetRoot(target))
+    case CloneStmt(target, source) =>
+      checkGrants(Seq(Charge("MODIFY", target), Charge("SELECT", source)))
+      clone(resolve(source), targetRoot(target))
     case RefreshMvStmt(ident) =>
+      charge("MODIFY", ident)
       // join-shaped definitions carry graft.mv.join.* properties and
       // maintain through [[graft.plans.JoinMv]]; everything else is the
       // single-table path
@@ -303,10 +311,12 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         })
       }.toDF("mv", "group_cols", "aggs", "covered_version", "fresh", "where")
     // governance (resources/uc/grants.sql): GRANT/REVOKE maintain the
-    // warehouse's durable grants ledger; SHOW GRANTS reads it. The
-    // ledger drives [[checkGrants]] enforcement once any grant exists
-    // and the session names a principal.
+    // warehouse's durable grants ledger, owner-only once enforcement is
+    // live; SHOW GRANTS reads it, open to every principal. The ledger
+    // drives [[checkGrants]] enforcement once any grant exists and the
+    // session names a principal.
     case GrantStmt(privs, otype, oname, principal) if catalog.isDefined =>
+      ownerOnly("GRANT")
       import spark.implicits._
       val t = otype.toUpperCase; val n = normalizeGrantObj(t, oname)
       val ps = splitPrivs(privs)
@@ -314,6 +324,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       ps.map(p => ("grant", p, t, n, stripTicks(principal)))
         .toDF("op", "privilege", "object_type", "object", "principal")
     case RevokeStmt(privs, otype, oname, principal) if catalog.isDefined =>
+      ownerOnly("REVOKE")
       import spark.implicits._
       val t = otype.toUpperCase; val n = normalizeGrantObj(t, oname)
       val ps = splitPrivs(privs)
@@ -327,6 +338,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     // script-splitting fuzzer planting a `;`-bearing backticked
     // principal)
     case GraftSql.GrantAdminHead(op) if catalog.isDefined =>
+      ownerOnly(op)
       sys.error(s"${op.toUpperCase(java.util.Locale.ROOT)}: unrecognized " +
         "form — expected `GRANT|REVOKE p1[, p2] ON TABLE|SCHEMA|CATALOG " +
         "<object> TO|FROM principal`, where the principal is a " +
@@ -346,14 +358,14 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     case ShowGrantsStmt() if catalog.isDefined =>
       grantsDf(catalog.get.grants)
     case CreateTagStmt(ident, tag, v) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
+      onTable(stmt, "MODIFY", ident) { t =>
         val name = stripTicks(tag)
         t.createTag(name, Option(v).map(_.toLong))
         import spark.implicits._
         Seq((name, t.tags(name))).toDF("tag", "version")
       }
     case DropTagStmt(ident, tag) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
+      onTable(stmt, "MODIFY", ident) { t =>
         val tg = stripTicks(tag)
         // loud on unknown tags: a typo'd DROP TAG silently no-opping
         // would leave the operator believing a vacuum-exempt version
@@ -365,12 +377,12 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         Seq(tg).toDF("dropped_tag")
       }
     case ShowTagsStmt(ident) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
+      onTable(stmt, "SELECT", ident) { t =>
         import spark.implicits._
         t.tags.toSeq.sortBy(_._1).toDF("tag", "version")
       }
     case ShowPinsStmt(ident) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
+      onTable(stmt, "SELECT", ident) { t =>
         import spark.implicits._
         t.pinsDetail.toSeq.sortBy(_._1)
           .map { case (n, (v, ts)) =>
@@ -401,23 +413,29 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
           "age_sec", "pinned_at")
         .orderBy("table", "pin")
     case DropPinStmt(ident, pin) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
+      onTable(stmt, "MODIFY", ident) { t =>
         t.dropPin(pin)
         import spark.implicits._
         Seq(pin).toDF("dropped_pin")
       }
+    // the in-trash target skips the existence filter: an ungoverned
+    // UNDROP would let any principal resurrect a governed table's data
     case UndropTableStmt(ident) =>
+      checkGrants(Seq(Charge("MODIFY", ident, existing = false)))
       undropOwned(ident)
     case CopyIntoStmt(ident, dir, fmt) =>
+      charge("MODIFY", ident)
       ownedRoot(ident).fold(spark.sql(stmt))(r =>
         copyInto(VersionedTable(spark, r), dir, fmt))
     // Row filters and column masks (Databricks/UC read governance):
-    // durable in table properties, enforced on every registered-view
-    // read (Catalog.registerViews binds governedRead). Validated HERE —
+    // durable in table properties, enforced on every governed read
+    // (bound GraftSql reads, Catalog.registerViews). Validated HERE —
     // a predicate/mask that cannot resolve must fail the DDL, not every
     // later SELECT. current_principal() resolves to the live-bound
-    // expression, so validation is principal-independent by nature.
+    // expression, so validation is principal-independent by nature. A
+    // subquery in a policy reads its tables, so they are charged too.
     case SetRowFilterStmt(ident, pred) =>
+      checkGrants(Charge("MODIFY", ident) +: policyReads(pred))
       owned(ident).fold(spark.sql(stmt)) { t =>
         import spark.implicits._
         graft.functions.CurrentPrincipal.register(spark)
@@ -427,12 +445,13 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         Seq((ident, p)).toDF("table", "row_filter")
       }
     case DropRowFilterStmt(ident) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
+      onTable(stmt, "MODIFY", ident) { t =>
         import spark.implicits._
         t.unsetProperties(Seq(GraftSql.RowFilterProp))
         Seq(ident).toDF("dropped_row_filter")
       }
     case SetMaskStmt(ident, c, m) =>
+      checkGrants(Charge("MODIFY", ident) +: policyReads(m))
       owned(ident).fold(spark.sql(stmt)) { t =>
         import spark.implicits._
         val name = stripTicks(c)
@@ -449,24 +468,25 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         Seq((name, mexpr)).toDF("column", "mask_expr")
       }
     case DropMaskStmt(ident, c) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
+      onTable(stmt, "MODIFY", ident) { t =>
         import spark.implicits._
         t.unsetProperties(Seq(GraftSql.ColumnMaskPrefix + stripTicks(c)))
         Seq(stripTicks(c)).toDF("dropped_mask")
       }
     case SetPartitionedByStmt(ident, cols) =>
-      owned(ident).fold(spark.sql(stmt)) { t =>
+      onTable(stmt, "MODIFY", ident) { t =>
         val cs = splitTop(cols, ',').map(stripTicks).filter(_.nonEmpty)
         versionDf(t.evolvePartitionLayout(cs))
       }
     case AddFkNoColsStmt(ident, name, cols, refIdent, rely) =>
+      checkGrants(Seq(Charge("MODIFY", ident), Charge("SELECT", refIdent)))
       owned(ident).fold(spark.sql(stmt))(t => addForeignKey(t, name,
         splitTop(cols, ',').map(stripTicks), refIdent, None, rely != null))
     case CommentColumnStmt(dotted, text) =>
       val cut = dotted.lastIndexOf('.')
       require(cut > 0, s"COMMENT ON COLUMN: need table.column, got $dotted")
       val (ident, c) = (dotted.substring(0, cut), dotted.substring(cut + 1))
-      owned(ident).fold(spark.sql(stmt)) { t =>
+      onTable(stmt, "MODIFY", ident) { t =>
         import spark.implicits._
         require(t.read.columns.contains(c),
           s"COMMENT ON COLUMN: no column `$c` at ${t.root}")
@@ -475,40 +495,67 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         else t.setProperties(Map(key -> unquoteComment(text)))
         Seq(dotted).toDF("commented")
       }
-    case ConvertStmt(srcDir, target) => convert(srcDir, targetRoot(target))
+    case ConvertStmt(srcDir, target) =>
+      charge("MODIFY", target)
+      convert(srcDir, targetRoot(target))
     case ReorgStmt(ident) =>
-      versionDf(resolve(ident).purgeDeleteVectors())
+      versionDf(writable(ident).purgeDeleteVectors())
     case GenerateManifestStmt(ident) =>
       // resolve, not delegate: vanilla Spark has no GENERATE statement,
       // so an unknown identifier must fail with OUR message
       import spark.implicits._
-      Seq(resolve(ident).generateSymlinkManifest())
+      Seq(writable(ident).generateSymlinkManifest())
         .toDF("n_manifest_files")
-    case DescHistoryStmt(ident) => resolve(ident).historyDf
-    case DescDetailStmt(ident)  => resolve(ident).detailDf
+    case DescHistoryStmt(ident) => readable(ident).historyDf
+    case DescDetailStmt(ident)  => readable(ident).detailDf
     // EXPLAIN REWRITE <query>: the MV-routing decision relation —
     // which armed MV serves each aggregate and WHY, or why not
     // (rejected / stale-fell-back / shape-bail / no-candidates) —
-    // without executing the query. Pinned reads resolve like any
-    // SELECT so `EXPLAIN REWRITE SELECT … FROM t@v3 …` works too.
+    // without executing the query. Graft reads bind like any SELECT
+    // so `EXPLAIN REWRITE SELECT … FROM t@v3 …` works too.
     case ExplainRewriteStmt(inner) =>
       import spark.implicits._
       val (text, plan) = parse(inner)
-      graft.plans.MvRewrite.explainRewrite(query(text, pinReads(plan)))
+      val (bound, reads) = bindReads(plan)
+      checkGrants(reads.map(Charge("SELECT", _)))
+      graft.plans.MvRewrite.explainRewrite(query(text, bound))
         .toDF("aggregate", "mv", "decision", "reason")
     // Everything else parses once with Spark's own parser (which has no
     // CREATE OR REPLACE MATERIALIZED VIEW, so that head is read here).
     // The plan nodes graft owns run as graft operations or definitions;
-    // everything else runs through Spark, pinned reads substituted.
-    case other =>
-      val (orReplaceMv, stmt1) = other match {
+    // everything else runs through Spark, graft reads bound.
+    case bare =>
+      val (orReplaceMv, written) = bare match {
         case OrReplaceMvHead(create, rest) => (true, create + rest)
-        case _ => (false, other)
+        case _ => (false, stmt)
       }
-      val (text, plan) = parse(stmt1)
-      val pinned = pinReads(plan)
-      ownedStatement(pinned.getOrElse(plan), orReplaceMv)
-        .getOrElse(query(text, pinned))
+      val (text, plan) = parse(written)
+      val (bound, reads) = bindReads(plan)
+      checkGrants(targetCharges(plan) ++ reads.map(Charge("SELECT", _)))
+      ownedStatement(bound.getOrElse(plan), orReplaceMv)
+        .getOrElse(query(text, bound))
+  }
+
+  /** [[checkGrants]] for `action` on each of `idents`. */
+  private def charge(action: String, idents: String*): Unit =
+    checkGrants(idents.map(Charge(action, _)))
+
+  /** The existing table `ident` names, once the session may modify it. */
+  private def writable(ident: String): VersionedTable = {
+    charge("MODIFY", ident); resolve(ident)
+  }
+
+  /** The existing table `ident` names, once the session may read it. */
+  private def readable(ident: String): VersionedTable = {
+    charge("SELECT", ident); resolve(ident)
+  }
+
+  /** A graft-only statement on an existing graft table: charged, then
+    * `body`; a name that is not a graft table delegates to Spark. */
+  private def onTable(stmt: String, action: String, ident: String)(
+      body: VersionedTable => DataFrame): DataFrame = {
+    charge(action, ident)
+    owned(ident).fold(spark.sql(stmt))(body)
   }
 
   /** `stmt` with Delta's `t@v3` shorthand spelled `t VERSION AS OF 3`
@@ -527,40 +574,70 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       throw new IllegalArgumentException(e.getMessage, e) }
   }
 
-  /** Reads and every statement that is not ours: the substituted plan
-    * when [[pinReads]] pinned something, else `spark.sql` as written. */
-  private def query(text: String, pinned: Option[LogicalPlan]): DataFrame =
-    pinned.fold(spark.sql(text))(PlanShim.ofRows(spark, _))
-
-  /** `plan` with every pinned read of a graft table replaced by the
-    * table's governed relation at that point ([[GraftSql.governed]]):
-    * `VERSION AS OF n` reads version n, `VERSION AS OF '<tag>'` the
-    * tag, `TIMESTAMP AS OF '<ts>'` the newest version at or before it,
-    * and Delta's `table_changes('t', start [, end])` the change feed of
-    * versions [start, end] (end defaults to the head). Subqueries, CTE
-    * definitions and EXPLAIN are walked too; other relations stay for
-    * Spark to resolve. None when nothing was pinned. A temp view over a
-    * pinned read stores the analyzed plan, so the pin outlives the
-    * statement without a helper view. */
-  private def pinReads(plan: LogicalPlan): Option[LogicalPlan] = {
-    var pinned = false
-    def governedAt(t: VersionedTable, frame: DataFrame): LogicalPlan = {
-      pinned = true
-      GraftSql.governed(t, frame).queryExecution.analyzed
+  /** Reads and every statement that is not ours: the bound plan when
+    * [[bindReads]] bound something, else `spark.sql` as written. A temp
+    * view or cached query over bound reads keeps their plan, not its SQL
+    * text, which would resolve the names again outside this statement. */
+  private def query(text: String, bound: Option[LogicalPlan]): DataFrame =
+    bound match {
+      case None => spark.sql(text)
+      case Some(v: CreateViewCommand) =>
+        PlanShim.ofRows(spark, v.copy(originalText = None))
+      case Some(c: CacheTableAsSelect) =>
+        PlanShim.ofRows(spark, c.plan).createTempView(c.tempViewName)
+        PlanShim.ofRows(spark, CacheTable(UnresolvedRelation(
+          Seq(c.tempViewName)), Seq(c.tempViewName), c.isLazy, c.options))
+      case Some(p) => PlanShim.ofRows(spark, p)
     }
-    def pin(p: LogicalPlan): LogicalPlan = p.transformUpWithSubqueries {
-      case tt @ RelationTimeTravel(r: UnresolvedRelation, ts, version) =>
-        owned(identOf(r.multipartIdentifier)).fold[LogicalPlan](tt) { t =>
-          governedAt(t, (version, ts) match {
-            case (Some(v), _) if v.matches("\\d+") => t.readVersion(v.toLong)
-            case (Some(tag), _) => t.readTag(tag)
-            case (_, Some(Literal(s, _: StringType))) =>
-              t.asOf(parseTsUtc(s.toString))
-            case (_, other) => sys.error("TIMESTAMP AS OF on a graft " +
-              s"table takes a 'yyyy-MM-dd[ HH:mm:ss]' literal, got " +
-              other.map(_.sql).getOrElse(""))
+
+  /** The one resolver of a statement's reads: `plan` with every graft
+    * read bound to the table's governed relation ([[GraftSql.governed]])
+    * under its written name (None when nothing was bound), and the graft
+    * tables read, which [[checkGrants]] charges SELECT. A table's head
+    * is read once per statement, so a self-join sees one version; a
+    * pinned read binds its version, tag, timestamp or `table_changes`
+    * range, and `<table>_history` the version log. The walk covers
+    * subqueries, CTEs, EXPLAIN, CACHE TABLE and command children; write
+    * targets, CTE names in scope and other relations stay for Spark. A
+    * definition body (CREATE [MATERIALIZED] VIEW) keeps its unresolved
+    * query and text: its reads are charged, not bound. */
+  private def bindReads(plan: LogicalPlan): (Option[LogicalPlan], Seq[String]) = {
+    val reads = scala.collection.mutable.LinkedHashSet.empty[String]
+    val heads = scala.collection.mutable.Map.empty[String, LogicalPlan]
+    def read(ident: String, frame: => DataFrame): LogicalPlan = {
+      reads += ident
+      frame.queryExecution.analyzed
+    }
+    // `ctes`: the CTE names visible at `p`, lexically — a CTE body sees
+    // the names defined before it (and its own under WITH RECURSIVE),
+    // the WITH's query sees them all
+    def bind(p: LogicalPlan, ctes: Set[String]): LogicalPlan = p match {
+      case c: CreateMaterializedViewAsSelect => bind(c.query, ctes); c
+      case v: CreateView => bind(v.query, ctes); v
+      case c: AddCheckConstraint => c // its one relation is its target
+      case e: ExplainCommand => e.copy(logicalPlan = bind(e.logicalPlan, ctes))
+      case w: UnresolvedWith =>
+        val names = w.cteRelations.map(_._1.toLowerCase)
+        val own = if (w.allowRecursion) 1 else 0
+        w.copy(child = bind(w.child, ctes ++ names), cteRelations =
+          w.cteRelations.zipWithIndex.map { case ((n, q, d), i) =>
+            val body = bind(q, ctes ++ names.take(i + own))
+            (n, body.asInstanceOf[SubqueryAlias], d)
           })
-        }
+      case tt @ RelationTimeTravel(r: UnresolvedRelation, ts, version) =>
+        val ident = identOf(r.multipartIdentifier)
+        owned(ident).fold[LogicalPlan](tt)(t => SubqueryAlias(
+          r.multipartIdentifier, read(ident, GraftSql.governed(t,
+            (version, ts) match {
+              case (Some(v), _) if v.matches("\\d+") =>
+                t.readVersion(v.toLong)
+              case (Some(tag), _) => t.readTag(tag)
+              case (_, Some(Literal(s, _: StringType))) =>
+                t.asOf(parseTsUtc(s.toString))
+              case (_, other) => sys.error("TIMESTAMP AS OF on a graft " +
+                "table takes a 'yyyy-MM-dd[ HH:mm:ss]' literal, got " +
+                other.map(_.sql).getOrElse(""))
+            }))))
       case f: UnresolvedTableValuedFunction
           if f.name.map(_.toLowerCase) == Seq("table_changes") =>
         f.functionArgs match {
@@ -569,28 +646,69 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
               val vs = bounds.map {
                 case Literal(n: Int, _)  => n.toLong
                 case Literal(n: Long, _) => n
-                case b => sys.error(s"table_changes: versions are integer " +
-                  s"literals, got ${b.sql}")
+                case b => sys.error(s"table_changes: versions are " +
+                  s"integer literals, got ${b.sql}")
               }
               require(vs.length == 1 || vs.length == 2,
                 "table_changes takes ('<table>', start [, end])")
-              // readChangeFeed's lower bound is exclusive; table_changes'
-              // start is inclusive
-              governedAt(t, t.readChangeFeed(vs.head - 1, vs.lift(1)))
+              // readChangeFeed's lower bound is exclusive;
+              // table_changes' start is inclusive
+              read(ident.toString, GraftSql.governed(t,
+                t.readChangeFeed(vs.head - 1, vs.lift(1))))
             }
-          case _ => f
+          case _ => bindChildren(f, ctes)
         }
-      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
-        case (n, q, d) => (n, pin(q).asInstanceOf[SubqueryAlias], d) })
-      case e: ExplainCommand => e.copy(logicalPlan = pin(e.logicalPlan))
+      case r: UnresolvedRelation
+          if !r.options.containsKey(WriteTarget) &&
+            !(r.multipartIdentifier.length == 1 &&
+              ctes(r.multipartIdentifier.head.toLowerCase)) =>
+        val ident = identOf(r.multipartIdentifier)
+        val history = ident.stripSuffix("_history")
+        owned(ident).map(t => heads.getOrElseUpdate(t.root,
+            read(ident, GraftSql.governed(t, t.read))))
+          .orElse(Option.when(history != ident)(history).flatMap(owned)
+            .map(t => read(history, t.historyDf)))
+          .fold[LogicalPlan](r)(SubqueryAlias(r.multipartIdentifier, _))
+      case _ => bindChildren(p, ctes)
     }
-    val out = pin(plan)
-    if (!pinned) None
-    else Some(out match {
-      case v: CreateViewCommand => v.copy(originalText = None)
-      case o => o
-    })
+    def bindChildren(p: LogicalPlan, ctes: Set[String]): LogicalPlan =
+      p.mapChildren(bind(_, ctes)).transformExpressions {
+        case s: SubqueryExpression => s.withNewPlan(bind(s.plan, ctes))
+      }
+    val out = bind(plan, Set.empty)
+    (Option.when(reads.nonEmpty)(out), reads.toSeq)
   }
+
+  /** A parsed statement's charge for its own table (the first table
+    * node: a DML target, a DDL table or a created name): SELECT for
+    * DESCRIBE and SHOW, else MODIFY; plus SELECT on a FOREIGN KEY's
+    * parent. */
+  private def targetCharges(plan: LogicalPlan): Seq[Charge] = {
+    val action = plan match {
+      case _: DescribeRelation | _: DescribeColumn | _: ShowColumns |
+           _: ShowCreateTable | _: ShowPartitions | _: ShowTablePartition |
+           _: ShowTableProperties => "SELECT"
+      case _ => "MODIFY"
+    }
+    plan.collectFirst {
+      case i: InsertIntoStatement => i.table
+      case o: OverwriteByExpression => o.table
+      case AddCheckConstraint(Filter(_, r), _) => r
+      case r: UnresolvedRelation if r.options.containsKey(WriteTarget) => r
+      case r @ (_: UnresolvedTable | _: UnresolvedTableOrView |
+                _: UnresolvedIdentifier) => r
+    }.collect { case Named(parts) => Charge(action, identOf(parts)) }.toSeq ++
+      (plan match {
+        case AddConstraint(_, fk: ForeignKeyConstraint) =>
+          Seq(Charge("SELECT", identOf(fk.parentTableId)))
+        case _ => Nil
+      })
+  }
+
+  /** SELECT on the graft tables a policy expression's subqueries read. */
+  private def policyReads(sqlExpr: String): Seq[Charge] =
+    bindReads(Filter(Parser.parseExpression(sqlExpr), OneRowRelation()))
+      ._2.map(Charge("SELECT", _))
 
   /** The plan nodes graft runs itself, each onto its [[VersionedTable]]
     * operation or graft definition; None when the plan is anything else
@@ -744,16 +862,23 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     }
   }
 
+  /** The name parts of a parsed table node. */
+  private object Named {
+    def unapply(p: LogicalPlan): Option[Seq[String]] = p match {
+      case r: UnresolvedTable       => Some(r.multipartIdentifier)
+      case r: UnresolvedTableOrView => Some(r.multipartIdentifier)
+      case r: UnresolvedRelation    => Some(r.multipartIdentifier)
+      case UnresolvedIdentifier(parts, _) => Some(parts)
+      case _ => None
+    }
+  }
+
   /** The existing graft table a parsed DDL, SHOW or DESCRIBE statement
     * names; no match for any other relation, so the statement
     * delegates. */
   private object Owned {
-    def unapply(p: LogicalPlan): Option[VersionedTable] = p match {
-      case r: UnresolvedTable       => owned(identOf(r.multipartIdentifier))
-      case r: UnresolvedTableOrView => owned(identOf(r.multipartIdentifier))
-      case r: UnresolvedRelation    => owned(identOf(r.multipartIdentifier))
-      case _ => None
-    }
+    def unapply(p: LogicalPlan): Option[VersionedTable] =
+      Named.unapply(p).flatMap(parts => owned(identOf(parts)))
   }
 
   /** ALTER COLUMN: TYPE (lossless widening), SET/DROP NOT NULL, SET/DROP
@@ -1818,123 +1943,56 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
   /** Funnel-level UC-style enforcement (resources/uc/grants.sql): active
     * only when the session sets `spark.graft.principal` AND the bound
     * warehouse's grants ledger is non-empty — an unset principal is the
-    * owner, and an empty ledger is the reference's "minimal solo
-    * default" (grants.sql:14-17 ships every section commented out).
-    * Classification is by statement head: mutating heads require MODIFY
-    * on the statement's first catalog `layer.table` identifier (its
-    * target) and SELECT on the rest (its sources — the INSERT…SELECT /
-    * MERGE…USING shape); reading heads require SELECT on every one.
+    * owner (no ledger read), and an empty ledger is the reference's
+    * "minimal solo default" (grants.sql:14-17 ships every section
+    * commented out).
+    * The charges come from the statement's own resolution, not its
+    * text: SELECT on every read [[bindReads]] finds, MODIFY (SELECT for
+    * DESCRIBE/SHOW) on a parsed statement's own table
+    * ([[targetCharges]]), and for a graft-only statement the
+    * identifiers its grammar captures, with its fixed action, plus
+    * SELECT on what its ROW FILTER, MASK or EXPLAIN REWRITE SQL reads.
     * Each requirement is conjunctive with USE CATALOG + USE SCHEMA per
-    * [[Catalog.authorized]]. GRANT/REVOKE are owner-only; SHOW GRANTS
-    * is open (a principal may inspect the ledger it is subject to).
-    * Scope: the statements this funnel owns — ad-hoc `spark.sql` over
+    * [[Catalog.authorized]]. GRANT/REVOKE are owner-only ([[ownerOnly]]);
+    * SHOW GRANTS is open (a principal may inspect the ledger it is
+    * subject to).
+    * Scope: the statements this funnel runs — ad-hoc `spark.sql` over
     * registered temp views is session-level and not re-checked, the
-    * boundary Spark itself draws absent a cluster authz service.
-    * Backtick-quoted catalog names (``SELECT * FROM `silver_orders` ``)
-    * resolve identically to bare ones and ARE charged; only the
-    * path-addressed ``graft.`/path` `` form stays outside the catalog
+    * boundary Spark itself draws absent a cluster authz service. Every
+    * spelling the resolver accepts is charged, backticked or not; only
+    * the path-addressed ``graft.`/path` `` form stays outside the catalog
     * namespace the ledger governs.
     * Creation of NEW objects is ungoverned (the model has no CREATE
     * privilege, mirroring the reference template's grant set) — only
     * EXISTING tables are protected. */
-  private def checkGrants(stmt0: String): Unit = (catalog,
-      spark.conf.getOption(GraftSql.PrincipalConf)) match {
-    case (Some(cat), Some(principal)) =>
-      val ledger = cat.grants // ONE ledger read per governed statement
-      if (ledger.isEmpty) return
-      // head anchors must see the real first keyword, and the literal
-      // mask must not read an apostrophe inside a comment as a quote
-      val stmt = stripComments(stmt0)
-      stmt match {
-        case GraftSql.ShowGrantsHead() => // open to all principals
-        case GraftSql.GrantAdminHead(verb) =>
-          sys.error(s"PERMISSION_DENIED: $verb is owner-only " +
-            s"(session principal `$principal` — unset ${GraftSql.PrincipalConf} " +
-            "to administer grants)")
-        case GraftSql.UndropHead() =>
-          // charge MODIFY on the named object WITHOUT the existence
-          // filter: the target is in the trash by definition, and an
-          // ungoverned UNDROP would let any principal resurrect (and
-          // then read) a governed table's dropped data
-          val scanStmt = GraftSql.untickWordNames(stmt)
-          val mask = GraftSql.stringLiteralMask(scanStmt)
-          GraftSql.IdentToken.findAllMatchIn(scanStmt)
-            .filter(m => !mask(m.start))
-            .flatMap(m => m.matched.split("[._]", 2) match {
-              case Array(l, t) if cat.Layers.contains(l.toLowerCase) =>
-                Some((l.toLowerCase, t))
-              case _ => None
-            })
-            .toSeq.distinct.foreach { case (l, t) =>
-              if (!cat.authorized(principal, "MODIFY", l, t, ledger))
-                sys.error(s"PERMISSION_DENIED: principal `$principal` " +
-                  s"lacks MODIFY on $l.$t")
-            }
-        case _ =>
-          // CREATE VIEW / CREATE MV read their sources; the view object
-          // itself is a NEW object (creation is ungoverned) — without
-          // this, the first named source would be charged MODIFY, and a
-          // MODIFY-only principal could launder reads through a view
-          val head = {
-            // anchor the head PAST leading parens: `(SELECT …) UNION …`
-            // and `((SELECT …))` read tables exactly like their bare
-            // forms and must classify, not slip every head regex
-            val anchored = stmt.dropWhile(c => c.isWhitespace || c == '(')
-            if (GraftSql.CreateViewHead.pattern.matcher(anchored).matches())
-              "SELECT"
-            else if (GraftSql.ModifyHead.pattern.matcher(anchored).matches())
-              "MODIFY"
-            else if (GraftSql.ReadHead.pattern.matcher(anchored).matches())
-              "SELECT"
-            else return
-          }
-          // the scan accepts what the RESOLVER accepts: dotted or
-          // underscore layer separators, any layer case (targetRoot
-          // lowercases); literal-masked so data naming a table is not a
-          // reference. Position decides the action BEFORE existence
-          // filtering: in `CREATE MV gold.mv AS … FROM silver.src` the
-          // not-yet-existing target still occupies the target slot, so
-          // the source is charged SELECT, not MODIFY.
-          // Spark resolves backtick-quoted word-shaped names identically
-          // to bare ones (`silver_orders`, `Silver`.`gov`): strip those
-          // ticks FIRST so the one scan below sees every spelling. Path
-          // bodies (``graft.`/p` ``) aren't word-shaped, keep their
-          // ticks, and stay masked; a word-shaped body after `graft.`
-          // untickes into a graft.x token whose maximal munch fails the
-          // layer split (graft is not a layer) — still out of scope.
-          val scanStmt = GraftSql.untickWordNames(stmt)
-          val mask = GraftSql.stringLiteralMask(scanStmt)
-          val named = GraftSql.IdentToken.findAllMatchIn(scanStmt)
-            .filter(m => !mask(m.start))
-            // split each WHOLE token exactly as the resolver does
-            // (splitLayerName: first [._], layer lowercased) — an
-            // independent regex split would disagree on names like
-            // gold_dim_player (resolver: gold/dim_player; a greedy
-            // last-separator split: gold_dim/player → unchecked)
-            .flatMap(m => m.matched.split("[._]", 2) match {
-              case Array(l, t) if cat.Layers.contains(l.toLowerCase) =>
-                Some((l.toLowerCase, t))
-              case _ => None
-            })
-            .toSeq.distinct
-          named.zipWithIndex.foreach { case ((l, t), i) =>
-            val action = if (head == "MODIFY" && i > 0) "SELECT" else head
-            // COMMENT ON COLUMN names `layer.table.column` — when the
-            // first-split "table" (`cm.k`) does not exist, retry the
-            // leading segment so the real table is still charged
-            val target =
-              if (cat.table(l, t).exists) Some(t)
-              else t.split("[._]").headOption
-                .filter(h => h != t && cat.table(l, h).exists)
-            target.foreach { t2 =>
-              if (!cat.authorized(principal, action, l, t2, ledger))
-                sys.error(s"PERMISSION_DENIED: principal `$principal` " +
-                  s"lacks $action on $l.$t2")
-            }
+  private def checkGrants(charges: => Seq[Charge]): Unit =
+    enforced.foreach { case (cat, principal, ledger) =>
+      charges.distinct.foreach { case Charge(action, ident, existing) =>
+        splitLayerName(cat, ident)
+          .filter { case (l, t) => !existing || cat.table(l, t).exists }
+          .foreach { case (l, t) =>
+            if (!cat.authorized(principal, action, l, t, ledger))
+              sys.error(s"PERMISSION_DENIED: principal `$principal` " +
+                s"lacks $action on $l.$t")
           }
       }
-    case _ => // owner session or no catalog: everything is authorized
-  }
+    }
+
+  /** Refuses `verb` unless the session is the owner ([[checkGrants]]). */
+  private def ownerOnly(verb: String): Unit =
+    enforced.foreach { case (_, principal, _) =>
+      sys.error(s"PERMISSION_DENIED: $verb is owner-only " +
+        s"(session principal `$principal` — unset " +
+        s"${GraftSql.PrincipalConf} to administer grants)")
+    }
+
+  /** The catalog, principal and grants ledger when enforcement is live:
+    * a principal is set and the ledger is non-empty. An owner session
+    * or a funnel without a catalog reads no ledger. */
+  private def enforced = for {
+    cat <- catalog; principal <- spark.conf.getOption(GraftSql.PrincipalConf)
+    ledger = cat.grants if ledger.nonEmpty // ONE read per governed statement
+  } yield (cat, principal, ledger)
 
   /** Normalize a grant object name: the reference qualifies with the
     * catalog (`football.bronze`, `football.gold.dim_player`) — one
@@ -2018,13 +2076,14 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     Seq((srcIdent, dstIdent)).toDF("renamed_from", "renamed_to")
   }
 
-  /** `layer.name` / `layer_name` split against the bound catalog's
+  /** `layer.name` / `layer_name` (backticks around word-shaped parts
+    * dropped, as Spark reads them) split against the bound catalog's
     * layers; None for explicit-path idents and foreign names. */
   private def splitLayerName(cat: Catalog,
                              ident: String): Option[(String, String)] =
     ident match {
       case PathIdent(_) => None
-      case other => other.split("[._]", 2) match {
+      case other => other.replace("`", "").split("[._]", 2) match {
         case Array(l, n) if cat.Layers.contains(l.toLowerCase) =>
           Some((l.toLowerCase, n))
         case _ => None
@@ -2376,11 +2435,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
         sys.error("MERGE ON supports conjunctions of t.k = s.k, got: " +
           other.sql)
     }
-    val srcDf = srcPlan match {
-      case Owned(t) => GraftSql.governedRead(t)
-      case p => PlanShim.ofRows(spark, p)
-    }
-    val renamed = keyPairs.foldLeft(srcDf) { case (d, (tk, sk)) =>
+    val renamed = keyPairs.foldLeft(PlanShim.ofRows(spark, srcPlan)) { case (d, (tk, sk)) =>
       if (tk == sk) d else d.withColumnRenamed(sk, tk)
     }
     val keys = keyPairs.map(_._1)
@@ -2485,11 +2540,10 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     case other =>
       val cat = catalog.getOrElse(sys.error(
         s"no catalog bound: use graft.`<path>` to address $other"))
-      other.split("[._]", 2) match {
-        case Array(layer, name) if cat.Layers.contains(layer.toLowerCase) =>
-          cat.table(layer.toLowerCase, name).root
-        case _ => sys.error(s"cannot resolve table identifier: $other " +
-          s"(expected <layer>.<table>, <layer>_<table>, or graft.`<path>`)")
+      splitLayerName(cat, other).fold(sys.error(
+        s"cannot resolve table identifier: $other (expected " +
+          "<layer>.<table>, <layer>_<table>, or graft.`<path>`)")) {
+        case (layer, name) => cat.table(layer, name).root
       }
   }
 
@@ -2507,6 +2561,14 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
 }
 
 object GraftSql {
+  // Spark's parser marks a DML statement's target relation with this
+  private val WriteTarget = UnresolvedRelation.REQUIRED_WRITE_PRIVILEGES
+
+  /** `action` on the graft table `ident` names, limited to a table that
+    * exists (creating one is ungoverned) unless `existing` is false. */
+  private final case class Charge(action: String, ident: String,
+                                  existing: Boolean = true)
+
   val SmallFileBytesConf = "spark.graft.optimize.smallFileBytes"
   val DefaultSmallFileBytes: Long = 128L * 1024 * 1024
 
@@ -2706,7 +2768,8 @@ object GraftSql {
     * ([[presentMvRead]]), then the row filter (on UNMASKED values —
     * the filter is policy, it must see the truth), then column masks
     * (cast back to the column's type, so the governed schema equals
-    * the physical one). This is what [[Catalog.registerViews]] binds —
+    * the physical one). This is what [[Catalog.registerViews]] and a
+    * bound GraftSql read ([[GraftSql.bindReads]]) bind —
     * SQL readers see policy-trimmed rows and masked values; the
     * physical table is reached only by owner-level library code, the
     * same trust line the grants ledger draws.
@@ -2726,7 +2789,8 @@ object GraftSql {
     * read: the rows are never returned unfiltered or unmasked. */
   private[graft] def governed(tbl: VersionedTable, frame: DataFrame): DataFrame = {
     // ONE properties read serves presentation and policy — this runs
-    // per table per registerViews, and _props.json is a file read
+    // per table per registerViews and per bound read, and _props.json
+    // is a file read
     val props = tbl.properties
     val base = presentMvRead(frame, props)
     graft.functions.CurrentPrincipal.register(base.sparkSession)
@@ -2995,8 +3059,10 @@ object GraftSql {
     new GraftSql(spark, Some(catalog))
   def apply(spark: SparkSession): GraftSql = new GraftSql(spark, None)
 
-  // Identifier: a backticked explicit path, or a dotted/underscored name.
-  private val Ident = """(graft\.`[^`]+`|[\w.]+)"""
+  // Identifier: a backticked explicit path, or a dotted/underscored name
+  // whose word-shaped parts may be backticked (Spark reads `silver_t`
+  // and silver_t alike)
+  private val Ident = """(graft\.`[^`]+`|(?:`\w+`|\w+)(?:\.(?:`\w+`|\w+))*)"""
   private val OptimizeWhereStmt =
     ("""(?is)\s*OPTIMIZE\s+""" + Ident +
       """\s+WHERE\s+(.+?)\s*;?\s*""").r
@@ -3172,44 +3238,8 @@ object GraftSql {
   private val ShowGrantsToStmt =
     """(?is)\s*SHOW\s+GRANTS\s+TO\s+`?([\w@.-]+)`?\s*;?\s*""".r
   private val ShowGrantsStmt = """(?is)\s*SHOW\s+GRANTS\s*;?\s*""".r
-  // enforcement heads ([[GraftSql.checkGrants]])
-  private[tables] val GrantAdminHead = """(?is)^\s*(GRANT|REVOKE)\b.*""".r
-  private[tables] val ShowGrantsHead = """(?is)^\s*SHOW\s+GRANTS\b.*""".r
-  private[tables] val ModifyHead =
-    ("""(?is)^\s*(?:OPTIMIZE|VACUUM|RESTORE|INSERT|UPDATE|DELETE|MERGE|COPY""" +
-      """|ALTER|DROP|CREATE|REORG|TRUNCATE|REFRESH|CONVERT|ANALYZE|FSCK""" +
-      """|COMMENT)\b.*""").r
-  // UNDROP's target does not EXIST yet (it is in the trash), so the
-  // generic scan's existence filter would skip it — dedicated head
-  private[tables] val UndropHead = """(?is)^\s*UNDROP\b.*""".r
-  private[tables] val ReadHead =
-    ("""(?is)^\s*(?:SELECT|WITH|DESCRIBE|DESC|SHOW|VALUES|TABLE""" +
-      """|FROM)\b.*""").r
-  // plain (non-materialized) views only: their target is an undotted NEW
-  // object, so the first named table is a SOURCE and must be charged
-  // SELECT. CREATE MATERIALIZED VIEW keeps the MODIFY head — its dotted
-  // target occupies the target slot (MODIFY if it already exists), and
-  // position charges its sources SELECT.
-  private[tables] val CreateViewHead =
-    ("""(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?""" +
-      """(?:TEMP(?:ORARY)?\s+)?VIEW\b.*""").r
-  // one MAXIMAL word-and-dot token per candidate identifier — the token
-  // is then split by the same `split("[._]", 2)` the resolver uses, so
-  // enforcement and execution can never disagree on where a name splits
-  private[tables] val IdentToken = """\b[A-Za-z]\w*(?:\.\w+)*\b""".r
-  // a backtick-quoted WORD-SHAPED name — Spark resolves it exactly like
-  // the bare token, so grant enforcement must see it too (path bodies
-  // contain '/' and never match)
-  private[tables] val TickedIdent = """`([A-Za-z]\w*(?:[._]\w+)*)`""".r
-
-  /** Strip backticks around word-shaped quoted names so the grant scan
-    * sees `` `silver_orders` ``, `` `Silver`.`gov` ``, ``silver.`gov` ``
-    * exactly as their bare spellings. Non-word bodies (paths) keep
-    * their ticks; ticks inside string literals may drop but the
-    * content stays quote-masked either way. */
-  private[tables] def untickWordNames(s: String): String =
-    TickedIdent.replaceAllIn(s,
-      m => java.util.regex.Matcher.quoteReplacement(m.group(1)))
+  // refusal probe for GRANT/REVOKE forms the strict arms above miss
+  private val GrantAdminHead = """(?is)^\s*(GRANT|REVOKE)\b.*""".r
   private val ConvertStmt =
     ("""(?is)\s*CONVERT\s+TO\s+GRAFT\s+parquet\.`([^`]+)`\s+AS\s+""" +
       Ident + """\s*;?\s*""").r

@@ -3442,20 +3442,6 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * rewrite, then copy-on-write forever after). Updates are deduplicated
     * per key first (latest by `preferUpdateBy` wins) so the join is 1:1.
     */
-  /** Env-gated merge phase timer (`GRAFT_MERGE_TIMING=1`): stderr lines
-    * per phase — the dev feedback loop for the small-batch fixed costs
-    * the streaming sinks pay per trigger. */
-  private def mlog[A](label: String)(f: => A): A = {
-    if (!sys.env.contains("GRAFT_MERGE_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[merge] $label%-18s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-  }
-
   def merge(updates: DataFrame, keys: Seq[String],
             preferUpdateBy: Option[String] = None,
             numBuckets: Int = DefaultMergeBuckets,
@@ -3574,7 +3560,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     // probe: the staged parquet IS the materialization the persist
     // provided (the dedup lineage runs exactly once), and the staged DIR
     // NAMES are the touched-cell set — the probe needs no extra pass.
-    val (staging, stageId, tag) = mlog("stage")(stageCellSplit(deduped, spec))
+    val (staging, stageId, tag) = stageCellSplit(deduped, spec)
     val touched: Set[String] = listDir(staging)
       .map(_.getFileName.toString)
       .filter(_.startsWith(s"$BucketCol="))
@@ -3653,8 +3639,8 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
         // a staged row may be repaired or dropped before landing (a
         // net-zero group inserted+deleted within one delta must not
         // land as a phantom through a rename).
-        val adopted = mlog("adopt+stats")(withStats(adoptSplitDirs(staging, stageId, tag, CellName,
-          Some(deduped.schema))))
+        val adopted = withStats(adoptSplitDirs(staging, stageId, tag, CellName,
+          Some(deduped.schema)))
         // the change set IS the adopted file-sets (all inserts): record
         // the sentinel and let readChangeFeed synthesize them — writing
         // an explicit change set here would materialize a second full
@@ -3770,10 +3756,10 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
                else Nil)
             writeChangeSet(frames)
           }
-          mlog("commit")(mergeCommit(cellRebase = true, autoCompact = false,
+          mergeCommit(cellRebase = true, autoCompact = false,
             consumed = touchedSets,
-            produced = mlog("join+write+stats")(withStats(writeBucketedFileSets(merged, spec))),
-            basedOn = rv, txn = txn, dvs = prevDvs, cdf = cdf))
+            produced = withStats(writeBucketedFileSets(merged, spec)),
+            basedOn = rv, txn = txn, dvs = prevDvs, cdf = cdf)
         } finally if (changeFeedEnabled) { lineage.unpersist(); () }
         }
       }

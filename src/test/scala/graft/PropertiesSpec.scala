@@ -59,7 +59,7 @@ class PropertiesSpec extends SparkSpec {
 
   test("property: codegen'd hash kernels == HOF formulations on random corpora") {
     import org.apache.spark.sql.functions._
-    import graft.ops.{Dedup, Similarity, TextAnalysis}
+    import graft.ops.{Dedup, Similarity, SimilarityHof, TextAnalysis}
     graft.functions.GraftFunctions.register(spark)
     val word: Gen[String] = Gen.choose(1, 6)
       .flatMap(n => Gen.listOfN(n, Gen.alphaLowerChar).map(_.mkString))
@@ -95,7 +95,7 @@ class PropertiesSpec extends SparkSpec {
         .toDF("vec_id", "embedding")
       val lshMismatch = vecs.select(
           Similarity.lshBucket($"embedding", planes).as("fast"),
-          Similarity.lshBucketHof($"embedding", planes).as("slow"))
+          SimilarityHof.lshBucketHof($"embedding", planes).as("slow"))
         .filter(not($"fast" <=> $"slow")).count()
       assert(lshMismatch === 0)
     }

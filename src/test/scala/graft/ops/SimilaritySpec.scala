@@ -220,7 +220,7 @@ class SimilaritySpec extends SparkSpec {
     val mismatches = df.select(
         call_function("graft_nearest_cell",
           col("embedding").cast("array<double>"), centLit).as("fast"),
-        Similarity.nearestCellHof(
+        SimilarityHof.nearestCellHof(
           col("embedding").cast("array<double>"), cents).as("hof"))
       .filter(col("fast") =!= col("hof")).count()
     assert(mismatches === 0)
@@ -236,7 +236,7 @@ class SimilaritySpec extends SparkSpec {
     val cb = Similarity.pqTrain(good, m = 4, k = 8)
     val mismatches = good.select(
         Similarity.pqCodesExpr(col("embedding"), cb).as("fast"),
-        Similarity.pqCodesHof(col("embedding"), cb).as("hof"))
+        SimilarityHof.pqCodesHof(col("embedding"), cb).as("hof"))
       .filter(not(col("fast") <=> col("hof"))).count()
     assert(mismatches === 0)
     // degenerate rows: a short vector (subspaces past its end null out)
@@ -248,7 +248,7 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val wm = weird.select(
         Similarity.pqCodesExpr(col("embedding"), cb).as("fast"),
-        Similarity.pqCodesHof(col("embedding"), cb).as("hof"))
+        SimilarityHof.pqCodesHof(col("embedding"), cb).as("hof"))
       .filter(not(col("fast") <=> col("hof"))).count()
     assert(wm === 0)
   }
@@ -401,7 +401,7 @@ class SimilaritySpec extends SparkSpec {
     val planes = Similarity.hyperplanes(10, 24, 42L)
     val mismatches = df.select(
         Similarity.lshBucket(col("embedding"), planes).as("fast"),
-        Similarity.lshBucketHof(col("embedding"), planes).as("hof"))
+        SimilarityHof.lshBucketHof(col("embedding"), planes).as("hof"))
       .filter(col("fast") =!= col("hof")).count()
     assert(mismatches === 0)
     // degenerate inputs too: null vector, null element, dim mismatch all
@@ -413,7 +413,7 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val dm = degen.select(
         Similarity.lshBucket(col("embedding"), planes).as("fast"),
-        Similarity.lshBucketHof(col("embedding"), planes).as("hof"))
+        SimilarityHof.lshBucketHof(col("embedding"), planes).as("hof"))
       .collect()
     dm.foreach { r =>
       assert(!r.isNullAt(0) && r.getLong(0) === 0L, s"fast: $r")
