@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.plans.Maintained
+import graft.plans.{Maintained, RollupDef}
 import graft.tables.VersionedTable
 
 /** Mergeable distinct-count sketch rollups — the incremental answer to
@@ -46,8 +46,6 @@ object Sketches {
     * read as permanently fresh against a source that never reaches
     * that version. */
   val EpochProp = "graft.sketch.epoch"
-  private val Family =
-    Maintained.Family(VersionProp, EpochProp, "graft-sketch:", 0L)
 
   /** One-shot rollup: per group, exact row count + HLL sketch of
     * `distinctCol`. */
@@ -63,19 +61,12 @@ object Sketches {
     rollup.withColumn("approx_distinct",
       call_function("hll_sketch_estimate", col("distinct_sketch")))
 
-  /** `mv`'s recorded source, or a loud "not a <what>" error. */
-  private def sourceOf(spark: SparkSession, mv: VersionedTable,
-                       props: Map[String, String], prop: String,
-                       what: String): VersionedTable =
-    VersionedTable(spark, props.getOrElse(prop,
-      sys.error(s"${mv.root} is not a $what (no $prop)")))
-
   /** Materialize the rollup of `src` into `mv` at the current snapshot
     * and persist the definition for [[refresh]]. */
   def create(src: VersionedTable, mv: VersionedTable,
              groupCols: Seq[String], distinctCol: String,
              lgK: Int = 12): Unit = {
-    Maintained.create(Family, src, mv, "sketch rollup", Map(
+    Maintained.create(RollupDef.Hll.family, src, mv, Map(
       SourceProp -> src.root, GroupProp -> groupCols.mkString(","),
       DistinctProp -> distinctCol, LgkProp -> lgK.toString))(
       rollup(_, groupCols, distinctCol, lgK))
@@ -89,11 +80,9 @@ object Sketches {
     * (`"groups"`) when the change feed is on, and rebuild (`"full"`)
     * otherwise; nothing new is `"noop"`. */
   def refresh(spark: SparkSession, mv: VersionedTable): String = {
-    val props = mv.properties
-    val groupCols = props(GroupProp).split(",").toSeq
-    Maintained.refresh(Maintained.Rollup(Family, props, mv,
-      sourceOf(spark, mv, props, SourceProp, "sketch rollup"), groupCols,
-      rollup(_, groupCols, props(DistinctProp), props(LgkProp).toInt),
+    val d = RollupDef.expect[RollupDef.Hll](mv, "sketch rollup")
+    Maintained.refresh(Maintained.Rollup(d, mv,
+      rollup(_, d.groupCols, d.distinct, d.lgK),
       Map("n_rows" -> ((t: Column, u: Column) => t + u),
         // register-wise max: the union sketch is EXACTLY the sketch a
         // full rebuild would produce
@@ -111,8 +100,6 @@ object Sketches {
   val FreqParamsProp = "graft.cms.params" // "eps,confidence,seed,topM"
   val FreqVersionProp = "graft.cms.sourceVersion"
   val FreqEpochProp = "graft.cms.epoch"
-  private val FreqFamily =
-    Maintained.Family(FreqVersionProp, FreqEpochProp, "graft-cms:", 0L)
 
   /** How many candidate items a rollup may carry per group before the
     * refresh prunes them back to the estimate-ranked top `topM`. */
@@ -184,7 +171,7 @@ object Sketches {
                  groupCols: Seq[String], itemCol: String,
                  eps: Double = 0.0005, confidence: Double = 0.99,
                  seed: Int = 42, topM: Int = 20): Unit = {
-    Maintained.create(FreqFamily, src, mv, "frequency rollup", Map(
+    Maintained.create(RollupDef.Cms.family, src, mv, Map(
       FreqSourceProp -> src.root, FreqGroupProp -> groupCols.mkString(","),
       FreqItemProp -> itemCol,
       FreqParamsProp -> s"$eps,$confidence,$seed,$topM"))(
@@ -202,14 +189,10 @@ object Sketches {
     * O(groups × topM) forever. */
   def refreshFreq(spark: SparkSession, mv: VersionedTable): String = {
     graft.functions.SketchFunctions.register(spark)
-    val props = mv.properties
-    val groupCols = props(FreqGroupProp).split(",").toSeq
-    val Array(eps, conf, seed, topM) = props(FreqParamsProp).split(",")
-    Maintained.refresh(Maintained.Rollup(FreqFamily, props, mv,
-      sourceOf(spark, mv, props, FreqSourceProp, "frequency rollup"),
-      groupCols,
-      freqRollup(_, groupCols, props(FreqItemProp), eps.toDouble,
-        conf.toDouble, seed.toInt, topM.toInt),
+    val d = RollupDef.expect[RollupDef.Cms](mv, "frequency rollup")
+    Maintained.refresh(Maintained.Rollup(d, mv,
+      freqRollup(_, d.groupCols, d.item, d.eps, d.confidence, d.seed,
+        d.topM),
       Map("n_rows" -> ((t: Column, u: Column) => t + u),
         // counter-wise sum — merged counters EXACTLY equal a rebuild's
         // (CMS is a monoid under cell addition)
@@ -219,7 +202,7 @@ object Sketches {
         // join yields candidates for every emitted group)
         "top_candidates" -> ((t: Column, u: Column) =>
           array_distinct(concat(t, u)))),
-      afterAppend = pruneCandidates(mv, groupCols, topM.toInt, _, _)))._1
+      afterAppend = pruneCandidates(mv, d.groupCols, d.topM, _, _)))._1
   }
 
   // ---------------------------------------------------------------------
@@ -232,8 +215,6 @@ object Sketches {
   val QuantParamsProp = "graft.quant.params" // "scale,subBuckets"
   val QuantVersionProp = "graft.quant.sourceVersion"
   val QuantEpochProp = "graft.quant.epoch"
-  private val QuantFamily =
-    Maintained.Family(QuantVersionProp, QuantEpochProp, "graft-quant:", 0L)
 
   /** Attach the histogram bucket key of `valueCol` as `__qk`.
     *
@@ -388,7 +369,7 @@ object Sketches {
   def createQuant(src: VersionedTable, mv: VersionedTable,
                   groupCols: Seq[String], valueCol: String,
                   scale: Long = 100L, sub: Int = 16): Unit = {
-    Maintained.create(QuantFamily, src, mv, "quantile rollup", Map(
+    Maintained.create(RollupDef.Quant.family, src, mv, Map(
       QuantSourceProp -> src.root, QuantGroupProp -> groupCols.mkString(","),
       QuantValueProp -> valueCol, QuantParamsProp -> s"$scale,$sub"))(
       quantRollup(_, groupCols, valueCol, scale, sub))
@@ -405,18 +386,13 @@ object Sketches {
     * slice (overwrite/restore mid-range, NULL group keys) rebuilds
     * (`"full"`). */
   def refreshQuant(spark: SparkSession, mv: VersionedTable): String = {
-    val props = mv.properties
-    val groupCols = props(QuantGroupProp).split(",").toSeq
-    val valueCol = props(QuantValueProp)
-    val Array(scale, sub) = props(QuantParamsProp).split(",")
+    val d = RollupDef.expect[RollupDef.Quant](mv, "quantile rollup")
     def agg(sgn: Column)(df: DataFrame): DataFrame =
-      quantAgg(df, groupCols, valueCol, scale.toLong, sub.toInt, sgn)
+      quantAgg(df, d.groupCols, d.value, d.scale, d.sub, sgn)
     val sgn = when(col("_change_type")
         .isin("insert", "update_postimage"), 1L)
       .when(col("_change_type").isin("delete", "update_preimage"), -1L)
-    Maintained.refresh(Maintained.Rollup(QuantFamily, props, mv,
-      sourceOf(spark, mv, props, QuantSourceProp, "quantile rollup"),
-      groupCols, agg(lit(1L)),
+    Maintained.refresh(Maintained.Rollup(d, mv, agg(lit(1L)),
       Map("n_rows" -> ((t: Column, u: Column) => t + u),
         "n_vals" -> ((t: Column, u: Column) => t + u),
         // bucket-wise signed addition, zero-count buckets dropped: the

@@ -53,11 +53,12 @@ import graft.tables.{GraftSql, VersionedTable}
   * definitions never arm transparent routing (a query over the
   * UNFILTERED join must not be served from the filtered rollup).
   *
-  * State is durable in the MV table's properties (`graft.mv.join.*`;
-  * multi-dim definitions `;`-join roots/versions and `|`-join per-dim
-  * key lists — the single-dim format is the degenerate case, so
-  * pre-existing definitions parse unchanged), so [[refresh]] works in
-  * a fresh process and re-arms routing, the same restart discipline as
+  * The definition is durable in the MV table's properties
+  * (`graft.mv.join.*`; multi-dim definitions `;`-join roots/versions and
+  * `|`-join per-dim key lists — the single-dim format is the degenerate
+  * case, so pre-existing definitions parse unchanged). This object
+  * writes it and [[RollupDef.Join]] reads it, so [[refresh]] works in a
+  * fresh process and re-arms routing, the same restart discipline as
   * the SQL MV surface. Exactly-once across crash/retry: the
   * maintenance merge carries a txn marker keyed on the covered fact
   * version, and refresh resumes from max(property, txn ledger) — a
@@ -81,7 +82,8 @@ object JoinMv {
   /** Bumped on every [[create]] — namespaces the txn ledger so markers
     * from a replaced definition era are never consulted. */
   val EpochProp = "graft.mv.join.epoch"
-  private val TxnApp = "graft-mvjoin:"
+  private val Family = Maintained.Family(FactVersionProp, EpochProp,
+    "graft-mvjoin:", 0L, "join MV")
 
   /** Row bound for explicitly broadcasting a dim's CDF change slice in
     * the per-side maintenance join. The slice is O(churned dim rows)
@@ -140,66 +142,37 @@ object JoinMv {
 
   /** Materialize the join rollup into `mv` at the sources' CURRENT
     * versions, persist the definition, and (single-dim, exact aggs)
-    * arm transparent routing. */
+    * arm transparent routing. Returns the covered fact version. */
   def create(fact: VersionedTable, dim: VersionedTable,
              keys: Seq[(String, String)], groupCols: Seq[String],
-             aggs: Seq[MvRewrite.AggSpec], mv: VersionedTable): Unit =
+             aggs: Seq[MvRewrite.AggSpec], mv: VersionedTable): Long =
     create(fact, Seq(DimSide(dim, keys)), groupCols, aggs, mv)
 
   /** Star-schema form: one fact, any number of pinned dims. */
   def create(fact: VersionedTable, dims: Seq[DimSide],
              groupCols: Seq[String], aggs: Seq[MvRewrite.AggSpec],
-             mv: VersionedTable): Unit = {
+             mv: VersionedTable): Long = {
     require(dims.nonEmpty, "join MV: at least one dim side")
-    val factV = fact.latestVersion.getOrElse(
-      sys.error(s"join MV: empty fact table at ${fact.root}"))
-    val dimVs = dims.map(d => d.table.latestVersion.getOrElse(
-      sys.error(s"join MV: empty dim table at ${d.table.root}")))
     val specs = aggs.map(a => (a.fn, a.col, a.mvCol))
-    // a REPLACE with a different group set must not inherit the old
-    // definition's merge bucketing; and a replaced definition of ANY
-    // other rollup family (single-table MV, sketch/CMS/quantile) must
-    // go, or REFRESH would see two definitions
-    Maintained.clearReplacedDefinition(mv)
-    mv.overwrite(rollup(fact, dims, groupCols, specs, factV, dimVs))
-    val epoch = mv.properties.get(EpochProp)
-      .flatMap(e => scala.util.Try(e.toLong).toOption).getOrElse(-1L) + 1
-    mv.setProperties(Map(
+    val factV = Maintained.createFrom(Family,
+        fact +: dims.map(_.table), mv, vs => Map(
       FactProp -> fact.root,
       DimProp -> dims.map(_.table.root).mkString(";"),
       KeysProp -> formatKeys(dims.map(_.keys)),
       GroupProp -> groupCols.mkString(","),
-      AggsProp -> specs.map { case (f, c, o) => s"$f:$c:$o" }.mkString(";"),
-      FactVersionProp -> factV.toString,
-      DimVersionProp -> dimVs.mkString(";"),
+      AggsProp -> GraftSql.formatAggSpecs(specs),
+      DimVersionProp -> vs.tail.mkString(";"),
       DimFilterProp -> dims.map(_.filter.map(f =>
         java.net.URLEncoder.encode(f, "UTF-8")).getOrElse(""))
-        .mkString(";"),
-      EpochProp -> epoch.toString))
-    // retention floors on every SOURCE: vacuum on a fact/dim must not
-    // reclaim the versions this MV's telescoped refresh still reads
-    fact.setPin(pinName(mv), factV)
-    dims.zip(dimVs).foreach { case (d, v) => d.table.setPin(pinName(mv), v) }
-    armRouting(fact, dims, mv, groupCols, aggs, factV, dimVs)
+        .mkString(";")))(vs =>
+      rollup(fact, dims, groupCols, specs, vs.head, vs.tail)).head
+    arm(fact.spark, mv)
+    factV
   }
 
   /** The consumer-pin name this MV registers on its sources — the MV
     * root IS the name, so SHOW PINS identifies the consumer directly. */
   private[graft] def pinName(mv: VersionedTable): String = s"mv:${mv.root}"
-
-  /** Drop this MV's retention pins from its recorded sources (DROP
-    * MATERIALIZED VIEW teardown). Best-effort and idempotent: a
-    * half-dropped definition or an already-gone source must not fail
-    * the DROP. */
-  private[graft] def dropPins(spark: SparkSession, mv: VersionedTable): Unit = {
-    val props = mv.properties
-    (props.get(FactProp).toSeq ++
-      props.get(DimProp).toSeq.flatMap(_.split(";"))).distinct
-      .foreach { root =>
-        try VersionedTable(spark, root).dropPin(pinName(mv))
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-  }
 
   /** Routing registration — exact-agg definitions of any dim count
     * ([[MvRewrite.registerJoinChain]] matches the whole star/snowflake
@@ -208,31 +181,20 @@ object JoinMv {
     * different numbers), so sketch-bearing definitions drop any stale
     * registration instead (a REPLACE must not leave the old entry
     * serving). */
-  private def armRouting(fact: VersionedTable, dims: Seq[DimSide],
-      mv: VersionedTable, groupCols: Seq[String],
-      aggs: Seq[MvRewrite.AggSpec], factV: Long,
-      dimVs: Seq[Long]): Unit =
+  private[graft] def arm(mv: VersionedTable, d: RollupDef.Join): Unit =
     // filtered dims narrow the joined row-set: a query over the
     // UNFILTERED join must never transparently read the filtered MV
-    if (aggs.exists(a => GraftSql.approxAgg(a.fn)) ||
-        dims.exists(_.filter.nonEmpty)) MvRewrite.deregisterRoot(mv.root)
-    else MvRewrite.registerJoinChain(fact, Some(factV),
-      dims.zip(dimVs).map { case (d, v) =>
-        MvRewrite.JoinDim(d.table, d.keys, Some(v))
-      }, mv, groupCols, aggs)
+    if (d.aggs.exists(a => GraftSql.approxAgg(a._1)) ||
+        d.dims.exists(_.filter.nonEmpty)) MvRewrite.deregisterRoot(mv.root)
+    else MvRewrite.registerJoinChain(d.fact, Some(d.factV),
+      d.dims.zip(d.dimVs).map { case (side, v) =>
+        MvRewrite.JoinDim(side.table, side.keys, Some(v))
+      }, mv, d.groupCols,
+      d.aggs.map { case (f, c, o) => MvRewrite.AggSpec(f, c, o) })
 
   /** Re-arm routing from the durable definition (post-restart). */
-  def arm(spark: SparkSession, mv: VersionedTable): Unit = {
-    val d = definition(spark, mv)
-    armRouting(d.fact, d.dims, mv, d.groupCols,
-      d.aggs.map { case (f, c, o) => MvRewrite.AggSpec(f, c, o) },
-      d.factV, d.dimVs)
-  }
-
-  private final case class Def(fact: VersionedTable, dims: Seq[DimSide],
-                               groupCols: Seq[String],
-                               aggs: Seq[(String, String, String)],
-                               factV: Long, dimVs: Seq[Long], epoch: String)
+  def arm(spark: SparkSession, mv: VersionedTable): Unit =
+    arm(mv, RollupDef.expect[RollupDef.Join](mv, "join MV"))
 
   /** The [[KeysProp]] serialization of per-dim key lists — ONE formatter
     * shared by the batch definition and the streaming sink's recorded
@@ -246,34 +208,6 @@ object JoinMv {
     keys.split("\\|").toSeq.map(_.split(",").toSeq.map { kv =>
       val Array(l, r) = kv.split("=", 2); (l, r)
     })
-
-  private def definition(spark: SparkSession, mv: VersionedTable): Def = {
-    val p = mv.properties
-    def need(k: String): String = p.getOrElse(k,
-      sys.error(s"${mv.root} is not a join MV (missing $k)"))
-    val roots = need(DimProp).split(";").toSeq
-    val keySegs = parseKeySegments(need(KeysProp))
-    require(roots.length == keySegs.length,
-      s"${mv.root}: ${roots.length} dims but ${keySegs.length} key lists")
-    // -1 limit: a trailing "" (last dim unfiltered) must not collapse
-    val filters = p.get(DimFilterProp)
-      .map(_.split(";", -1).toSeq.map(f =>
-        if (f.isEmpty) None
-        else Some(java.net.URLDecoder.decode(f, "UTF-8"))))
-      .getOrElse(Seq.fill(roots.length)(None))
-    require(filters.length == roots.length,
-      s"${mv.root}: ${roots.length} dims but ${filters.length} filters")
-    Def(
-      VersionedTable(spark, need(FactProp)),
-      roots.zip(keySegs).zip(filters).map { case ((r, ks), flt) =>
-        DimSide(VersionedTable(spark, r), ks, flt)
-      },
-      need(GroupProp).split(",").toSeq,
-      GraftSql.parseAggSpecs(need(AggsProp)),
-      need(FactVersionProp).toLong,
-      need(DimVersionProp).split(";").toSeq.map(_.toLong),
-      p.getOrElse(EpochProp, "0"))
-  }
 
   /** Catch the MV up with its sources and re-arm routing. Returns the
     * maintenance mode used:
@@ -299,9 +233,14 @@ object JoinMv {
     *     dim move, CDF unavailable (overwrite/restore/vacuumed), or a
     *     NULL group key in a delta — re-materialize every side at head.
     */
-  def refresh(spark: SparkSession, mv: VersionedTable): String = {
-    val d = definition(spark, mv)
-    val txnApp = TxnApp + d.epoch + ":" + mv.root
+  def refresh(spark: SparkSession, mv: VersionedTable): String =
+    maintain(mv, RollupDef.expect[RollupDef.Join](mv, "join MV"))._1
+
+  /** [[refresh]] from an already-read definition; returns the mode and
+    * the fact version now covered. */
+  private[graft] def maintain(mv: VersionedTable,
+                              d: RollupDef.Join): (String, Long) = {
+    val txnApp = Family.txnPrefix + d.epoch + ":" + mv.root
     // one txn app PER SIDE: each side's merges are markered with the
     // covered version of THAT side, so a crash anywhere in the slice
     // sequence resumes with every already-absorbed side's pin advanced
@@ -343,7 +282,7 @@ object JoinMv {
     val dimMoved = d.dims.zip(dimPins).zip(dimHeads).map {
       case ((dim, dv), head) => moved(dim.table.history, dv, head)
     }
-    def finish(mode: String, fv: Long, dvs: Seq[Long]): String = {
+    def finish(mode: String, fv: Long, dvs: Seq[Long]): (String, Long) = {
       if (fv > d.factV || dvs != d.dimVs)
         mv.setProperties(Map(FactVersionProp -> fv.toString,
           DimVersionProp -> dvs.mkString(";")))
@@ -355,12 +294,10 @@ object JoinMv {
       d.fact.setPin(pinName(mv), fv)
       d.dims.zip(dvs).foreach { case (dim, v) =>
         dim.table.setPin(pinName(mv), v) }
-      armRouting(d.fact, d.dims, mv, d.groupCols,
-        d.aggs.map { case (f, c, o) => MvRewrite.AggSpec(f, c, o) },
-        fv, dvs)
-      mode
+      arm(mv, d.copy(factV = fv, dimVs = dvs))
+      (mode, fv)
     }
-    def recompute(): String = {
+    def recompute(): (String, Long) = {
       mv.overwrite(rollup(d.fact, d.dims, d.groupCols, d.aggs,
         factHead, dimHeads))
       finish("full", factHead, dimHeads)
@@ -494,7 +431,7 @@ object JoinMv {
           dim.keys) }
       try {
         val feed = d.fact.readChangeFeed(factPin, Some(factHead))
-        GraftSql.registerMvFunctions(spark)
+        GraftSql.registerMvFunctions(mv.spark)
         Maintained.mergeTouchedGroups(mv,
           joinAll(feed, pinnedDims)
             .select(d.groupCols.map(col): _*).distinct(),

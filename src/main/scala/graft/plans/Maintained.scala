@@ -29,7 +29,8 @@ import graft.tables.{CdfNotExpressible, VersionedTable}
   * turns out to carry zero rows (a DML commit that matched nothing, an
   * append a filtered MV's WHERE excludes) keeps its rung's mode and
   * takes no MV commit. Every merge is txn-markered with the covered
-  * version, so a crash replay is a ledger no-op; the join-MV refresher keeps its own
+  * version, so a crash replay is a ledger no-op. What a rollup covers
+  * comes from its [[RollupDef]]; the join-MV refresher keeps its own
   * multi-side ladder but shares [[mergeTouchedGroups]] and the absorb
   * step. */
 object Maintained {
@@ -37,9 +38,9 @@ object Maintained {
   /** History actions that change NO data an incremental maintainer can
     * observe: compaction/z-order/REORG rewrite identical rows;
     * rename/drop-column commits are metadata-only (zero rows — the DDL
-    * guards refuse touching maintained columns and re-key agg/distinct
-    * specs on rename); partition-layout evolution re-tags future
-    * writes. A slice of only these is a covered-version bump, and any
+    * guards refuse touching maintained columns and re-key the input
+    * columns a definition names on rename); partition-layout evolution
+    * re-tags future writes. A slice of only these is a covered-version bump, and any
     * of them interleaved with data commits must NOT demote the
     * incremental path. ONE definition — this driver and the join-MV
     * refresher both consult it, and they must agree. */
@@ -50,25 +51,25 @@ object Maintained {
 
   /** A rollup family's on-disk names: covered-version and epoch
     * property keys, txn-app prefix, and the epoch a first CREATE gets
-    * (SQL MVs number from 1, the sketch families from 0). */
+    * (SQL MVs number from 1, the sketch families from 0); `label` is
+    * what errors call it. */
   final case class Family(versionProp: String, epochProp: String,
-                          txnPrefix: String, firstEpoch: Long)
+                          txnPrefix: String, firstEpoch: Long, label: String)
 
   /** Retractable state: a change-feed slice's SIGNED partial, and the
     * repair that rides inside its merge (emptied groups drop, …). */
   final case class Retract(partial: DataFrame => DataFrame,
                            repair: Merge.PostCombine)
 
-  /** One single-source rollup definition, as its refresh reads it.
+  /** One single-source rollup, as its refresh runs it: `defn` is the
+    * stored definition (source, groups, covered version, epoch);
     * `partial` aggregates a slice into MV-shaped rows (a full recompute
     * is the partial over the pinned snapshot); `combine` folds a
     * partial row into the stored one, per non-key column; `slice`
     * narrows every source read (a filtered MV's WHERE); `afterAppend`
     * runs after a non-empty append absorb with the (txn app, version)
     * of its merge. */
-  final case class Rollup(family: Family, props: Map[String, String],
-                          mv: VersionedTable, src: VersionedTable,
-                          groupCols: Seq[String],
+  final case class Rollup(defn: RollupDef.Single, mv: VersionedTable,
                           partial: DataFrame => DataFrame,
                           combine: Map[String, (Column, Column) => Column],
                           retract: Option[Retract] = None,
@@ -76,36 +77,17 @@ object Maintained {
                           afterAppend: (String, Long) => Unit =
                             (_, _) => ())
 
-  /** Every maintained-rollup definition property across ALL families —
-    * exact MVs, join MVs, HLL/CMS/quantile rollups. A table carries AT
-    * MOST ONE live definition: each creator sweeps every OTHER family's
-    * props (and its own, harmlessly re-set just after) so a REPLACE can
-    * never leave two refreshers claiming the same table — otherwise
-    * REFRESH MATERIALIZED VIEW dispatches on the stale definition
-    * against the overwritten data. Epoch props deliberately survive:
-    * they namespace each family's txn-marker ledger across re-creates,
-    * and resetting one would let a later same-family re-create resume
-    * from a dead era's markers. */
-  private def definitionProps: Seq[String] = {
-    import graft.ops.Sketches._
-    import graft.tables.GraftSql._
-    Seq(MvSourceProp, MvGroupProp, MvAggsProp, MvVersionProp, MvWhereProp,
-      JoinMv.FactProp, JoinMv.DimProp, JoinMv.KeysProp, JoinMv.GroupProp,
-      JoinMv.AggsProp, JoinMv.FactVersionProp, JoinMv.DimVersionProp,
-      JoinMv.DimFilterProp,
-      SourceProp, GroupProp, DistinctProp, LgkProp, VersionProp,
-      FreqSourceProp, FreqGroupProp, FreqItemProp, FreqParamsProp,
-      FreqVersionProp,
-      QuantSourceProp, QuantGroupProp, QuantValueProp, QuantParamsProp,
-      QuantVersionProp)
-  }
-
   /** Pre-REPLACE sweep shared by all rollup creators: drop the old
     * definition's merge bucketing (the overwrite would try to bucket by
     * a column the new rollup lacks) and every family's definition
-    * props. Deliberately fail-loud on a half-finished REPLACE: the
-    * sweep runs BEFORE the new materialization, so a creator that
-    * throws mid-way leaves the table with its old DATA but no
+    * props ([[RollupDef.keys]]), so a REPLACE never leaves two
+    * definitions on one table: REFRESH would dispatch on the stale one
+    * against the overwritten data. Epoch props survive on purpose: they
+    * namespace each family's txn-marker ledger across re-creates, and
+    * resetting one would let a later same-family re-create resume from
+    * a dead era's markers. Deliberately fail-loud on a half-finished
+    * REPLACE: the sweep runs BEFORE the new materialization, so a
+    * creator that throws mid-way leaves the table with its old DATA but no
     * definition — REFRESH then errors ("not a … rollup") until the
     * CREATE OR REPLACE is re-run, which recovers cleanly (the sweep is
     * idempotent). The alternative orderings are both worse: sweeping
@@ -117,44 +99,49 @@ object Maintained {
   private[graft] def clearReplacedDefinition(mv: VersionedTable): Unit =
     if (mv.exists) {
       mv.clearBucketSpec()
-      mv.unsetProperties(definitionProps)
+      mv.unsetProperties(RollupDef.keys)
     }
 
   /** The shared CREATE bookkeeping: sweep any replaced definition,
-    * materialize `partial` over the source PINNED at its current
-    * version (a concurrent commit between the version read and the
+    * materialize `rows` over the sources PINNED at their current
+    * versions (a concurrent commit between the version read and the
     * scan must stay uncovered, or the next refresh absorbs it twice),
-    * record `props` with the covered version and the next epoch (a
-    * REPLACE starts a fresh txn-ledger namespace, so markers from a
-    * replaced era can never masquerade as this era's slices), and pin
-    * the source (retention must not reclaim the covered version or the
-    * added/change sets above it). Returns the covered version. */
-  def create(family: Family, src: VersionedTable, mv: VersionedTable,
-             what: String, props: Map[String, String])
-            (partial: DataFrame => DataFrame): Long = {
-    val v = src.latestVersion.getOrElse(
-      sys.error(s"$what: empty table at ${src.root}"))
+    * record `props` with the first source's covered version and the
+    * next epoch (a REPLACE starts a fresh txn-ledger namespace, so
+    * markers from a replaced era can never masquerade as this era's
+    * slices), and pin every source (retention must not reclaim a
+    * covered version or the added/change sets above it). Returns the
+    * covered versions. */
+  def createFrom(family: Family, srcs: Seq[VersionedTable],
+                 mv: VersionedTable, props: Seq[Long] => Map[String, String])
+                (rows: Seq[Long] => DataFrame): Seq[Long] = {
+    val vs = srcs.map(s => s.latestVersion.getOrElse(
+      sys.error(s"${family.label}: empty table at ${s.root}")))
     val epoch = mv.properties.get(family.epochProp)
       .flatMap(e => scala.util.Try(e.toLong).toOption)
       .fold(family.firstEpoch)(_ + 1)
     clearReplacedDefinition(mv)
-    mv.overwrite(partial(src.readVersion(v)))
-    mv.setProperties(props ++ Map(family.versionProp -> v.toString,
+    mv.overwrite(rows(vs))
+    mv.setProperties(props(vs) ++ Map(family.versionProp -> vs.head.toString,
       family.epochProp -> epoch.toString))
-    src.setPin(JoinMv.pinName(mv), v)
-    v
+    srcs.zip(vs).foreach { case (s, v) => s.setPin(JoinMv.pinName(mv), v) }
+    vs
   }
 
-  /** The txn-app id a rollup's maintenance merges carry: the family
-    * prefix, the CREATE epoch, the MV root. */
-  private def txnApp(r: Rollup): String =
-    r.family.txnPrefix + r.props.getOrElse(r.family.epochProp, "0") +
-      ":" + r.mv.root
+  /** [[createFrom]] for a single-source rollup: `partial` over `src`. */
+  def create(family: Family, src: VersionedTable, mv: VersionedTable,
+             props: Map[String, String])
+            (partial: DataFrame => DataFrame): Long =
+    createFrom(family, Seq(src), mv, _ => props)(vs =>
+      partial(src.readVersion(vs.head))).head
 
   /** Catch `r` up with its source; returns (mode, covered version). */
   def refresh(r: Rollup): (String, Long) = {
-    val app = txnApp(r)
-    val vProp = r.props(r.family.versionProp).toLong
+    val (src, groupCols) = (r.defn.src, r.defn.groupCols)
+    // the txn app every maintenance merge carries: family prefix,
+    // CREATE epoch, MV root
+    val app = r.defn.family.txnPrefix + r.defn.epoch + ":" + r.mv.root
+    val vProp = r.defn.version
     // exactly-once across crash+retry: the txn ledger is the record of
     // the last slice actually ABSORBED. A crash between a merge commit
     // and the covered-version bump leaves the ledger ahead of the
@@ -174,11 +161,11 @@ object Maintained {
     // over must agree even while concurrent writers advance the head.
     // Every rung reads the PINNED range (v0, head] — never the live
     // head — so concurrent commits stay uncovered until the next refresh
-    val hist = r.src.history
+    val hist = src.history
     val head = hist.lastOption.map(_.version).getOrElse(v0)
     val later = hist.filter(e => e.version > v0 && e.version <= head)
     def full(): String = {
-      r.mv.overwrite(r.partial(r.slice(r.src.readVersion(head))))
+      r.mv.overwrite(r.partial(r.slice(src.readVersion(head))))
       "full"
     }
     // only the curated refusals (a feed-inexpressible slice: overwrite/
@@ -195,24 +182,24 @@ object Maintained {
       // reclaimed-original case into the fallback
       else if (later.forall(e => e.action == "append" ||
           AbsorblessActions(e.action)) &&
-          r.src.addedSetsLive(v0, head)) orFull {
-        if (absorb(r.mv, r.partial(r.slice(r.src.readAddedBetween(v0, head))),
-            r.groupCols, r.combine, txn) > 0L)
+          src.addedSetsLive(v0, head)) orFull {
+        if (absorb(r.mv, r.partial(r.slice(src.readAddedBetween(v0, head))),
+            groupCols, r.combine, txn) > 0L)
           r.afterAppend(app, head)
         "incremental"
       }
-      else if (!r.src.changeFeedEnabled) full()
+      else if (!src.changeFeedEnabled) full()
       else orFull {
-        val feed = r.slice(r.src.readChangeFeed(v0, Some(head)))
+        val feed = r.slice(src.readChangeFeed(v0, Some(head)))
         r.retract match {
           case Some(x) =>
-            absorb(r.mv, x.partial(feed), r.groupCols, r.combine, txn,
+            absorb(r.mv, x.partial(feed), groupCols, r.combine, txn,
               Some(x.repair))
             "cdf"
           case None =>
             mergeTouchedGroups(r.mv,
-              feed.select(r.groupCols.map(col): _*).distinct(),
-              r.slice(r.src.readVersion(head)), r.groupCols, r.partial,
+              feed.select(groupCols.map(col): _*).distinct(),
+              r.slice(src.readVersion(head)), groupCols, r.partial,
               r.combine.keys.toSeq, app, head)
             "groups"
         }
@@ -222,9 +209,9 @@ object Maintained {
     // stale property. The retention floor advances with it (a crash
     // before this just retains more until the next refresh).
     if (head > vProp)
-      r.mv.setProperties(Map(r.family.versionProp -> head.toString))
+      r.mv.setProperties(Map(r.defn.family.versionProp -> head.toString))
     if (hist.exists(_.version == head))
-      r.src.setPin(JoinMv.pinName(r.mv), head)
+      src.setPin(JoinMv.pinName(r.mv), head)
     (out, head)
   }
 

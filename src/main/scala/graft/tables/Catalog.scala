@@ -110,15 +110,18 @@ final class Catalog(spark: SparkSession, root: String) {
           java.nio.charset.StandardCharsets.UTF_8)
       }
 
-  /** CREATE OR REPLACE VIEW: persist the definition and register it for
-    * this session (registration analyzes the query eagerly, so the
+  /** CREATE OR REPLACE VIEW: register the definition for this session,
+    * then persist it. Registration analyzes the query eagerly, so the
     * views/tables THIS definition references must already be
-    * registered; cross-session replay order is handled by
-    * [[registerDurableViews]]'s fixed-point pass). A replaced name
-    * keeps its original ledger position. */
+    * registered (cross-session replay order is handled by
+    * [[registerDurableViews]]'s fixed-point pass); a definition that
+    * fails to register never reaches the ledger, where it would break
+    * every later [[registerViews]]. A replaced name keeps its original
+    * ledger position. */
   def createView(name: String, sqlText: String): Unit = {
     require(name.matches("""[A-Za-z_][A-Za-z0-9_]*"""),
       s"CREATE VIEW: bad view name `$name`")
+    spark.sql(s"CREATE OR REPLACE TEMP VIEW $name AS $sqlText")
     // the ledger rewrite is a read-modify-write of the whole file:
     // serialize it like the grants ledger's, or two concurrent sessions
     // silently drop each other's definitions via last-writer-wins
@@ -130,8 +133,6 @@ final class Catalog(spark: SparkSession, root: String) {
         else cur :+ (name -> sqlText)
       writeViews(next)
     }
-    spark.sql(s"CREATE OR REPLACE TEMP VIEW $name AS $sqlText")
-    ()
   }
 
   /** DROP VIEW: remove from the ledger and the session. */

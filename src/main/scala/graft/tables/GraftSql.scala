@@ -39,6 +39,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType,
   DateType, IntegerType, LongType, MapType, NumericType, StringType,
   StructField, StructType, TimestampType}
 import graft.ops.Merge
+import graft.plans.RollupDef
 
 /** The SQL maintenance surface (docs/backlog.md:103-106, the reference's
   * empty notebooks/05_ops/61_optimize_and_maintenance.sql): parsed
@@ -251,64 +252,25 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       clone(resolve(source), targetRoot(target))
     case RefreshMvStmt(ident) =>
       charge("MODIFY", ident)
-      // join-shaped definitions carry graft.mv.join.* properties and
-      // maintain through [[graft.plans.JoinMv]]; everything else is the
-      // single-table path
-      val tbl = owned(ident)
-      if (tbl.exists(_.properties.contains(graft.plans.JoinMv.FactProp))) {
-        import spark.implicits._
-        val mode = graft.plans.JoinMv.refresh(spark, tbl.get)
-        Seq((ident, mode,
-          tbl.get.properties(graft.plans.JoinMv.FactVersionProp).toLong))
-          .toDF("mv", "mode", "source_version")
-      } else refreshMaterializedView(ident)
+      refreshMaterializedView(ident)
     case ShowViewsStmt() if catalog.isDefined =>
       import spark.implicits._
       catalog.get.views.toDF("view", "definition")
     case ShowMvsStmt() if catalog.isDefined =>
       import spark.implicits._
-      // one ledger read per MV decides freshness: covered == the
-      // source's current head means REFRESH would be a noop and routing
-      // is (re-)armable
-      catalog.get.tables.flatMap { case (l, t) =>
-        val props = catalog.get.table(l, t).properties
-        props.get(GraftSql.MvSourceProp).map { srcRoot =>
-          val covered = props(GraftSql.MvVersionProp).toLong
-          val src = VersionedTable(spark, srcRoot)
-          (s"$l.$t",
-            props(GraftSql.MvGroupProp),
-            props(GraftSql.MvAggsProp),
-            covered,
-            src.exists && src.latestVersion.contains(covered),
-            props.getOrElse(GraftSql.MvWhereProp, ""))
-        }.orElse(props.get(graft.plans.JoinMv.FactProp).map { factRoot =>
-          // join-shaped definition: fresh only when EVERY covered
-          // snapshot is still its source's head
-          val fact = VersionedTable(spark, factRoot)
-          val dimTs = props(graft.plans.JoinMv.DimProp).split(";").toSeq
-            .map(VersionedTable(spark, _))
-          val fV = props(graft.plans.JoinMv.FactVersionProp).toLong
-          val dVs = props(graft.plans.JoinMv.DimVersionProp)
-            .split(";").toSeq.map(_.toLong)
-          (s"$l.$t",
-            props(graft.plans.JoinMv.GroupProp),
-            props(graft.plans.JoinMv.AggsProp),
-            fV,
-            fact.exists && fact.latestVersion.contains(fV) &&
-              dimTs.zip(dVs).forall { case (d, v) =>
-                d.exists && d.latestVersion.contains(v)
-              },
-            s"join:${props(graft.plans.JoinMv.KeysProp)}" +
-              props.get(graft.plans.JoinMv.DimFilterProp)
-                .filter(_.exists(_ != ';'))
-                // decode for display: the operator audits the predicate
-                // TEXT, not its URL-encoded storage form
-                .map(f => " where:" + f.split(";", -1)
-                  .map(seg => if (seg.isEmpty) ""
-                    else java.net.URLDecoder.decode(seg, "UTF-8"))
-                  .mkString(";"))
-                .getOrElse(""))
-        })
+      // fresh: covered == every source's head, so REFRESH would be a
+      // noop and routing is (re-)armable
+      definitions.collect {
+        case (id, _, d: RollupDef.SqlMv) =>
+          (id, d.groupCols.mkString(","), formatAggSpecs(d.aggs), d.version,
+            d.fresh, d.where.getOrElse(""))
+        case (id, _, d: RollupDef.Join) =>
+          (id, d.groupCols.mkString(","), formatAggSpecs(d.aggs), d.factV,
+            d.fresh, "join:" + graft.plans.JoinMv.formatKeys(d.dims.map(_.keys)) +
+              // the operator audits the predicate TEXT, not its
+              // URL-encoded storage form
+              (if (d.dims.forall(_.filter.isEmpty)) ""
+               else " where:" + d.dims.map(_.filter.getOrElse("")).mkString(";")))
       }.toDF("mv", "group_cols", "aggs", "covered_version", "fresh", "where")
     // governance (resources/uc/grants.sql): GRANT/REVOKE maintain the
     // warehouse's durable grants ledger, owner-only once enforcement is
@@ -916,49 +878,28 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     }
   }
 
-  /** RENAME COLUMN, refused while the column is load-bearing in a
-    * dependent definition or a governance policy; AGG source columns of
-    * dependent MVs and sketch rollups re-key to the new name. */
+  /** RENAME COLUMN, refused while the column keys a dependent rollup
+    * or is referenced by a governance policy; input columns named only
+    * in a dependent definition re-key to the new name. */
   private def renameColumn(t: VersionedTable, f: String,
                            tn: String): DataFrame = {
-    // an MV's GROUP columns are its merge-bucket keys AND its own
-    // table columns — a rename cannot propagate (bucket keys refuse
-    // renames: hash(old)≠hash(new) would re-route cells), so refuse
-    // at the source like DROP does
-    val groupDeps = mvsSourcedFrom(t.root).filter { case (_, props) =>
-      props(GraftSql.MvGroupProp).split(",").contains(f) ||
-        mvWhereCols(props).contains(f)
+    val deps = dependents(t.root)
+    refuse(deps.filter(_.keyed(f)), (d, ids) =>
+      s"RENAME COLUMN: `$f` is a ${d.keyRole} column of ${d.label}(s) " +
+        s"$ids — drop and recreate them to re-key")
+    // a join MV's agg names its column, not its side: once ANOTHER side
+    // carries the column too (a later ADD COLUMN), the agg's side is
+    // ambiguous and a blind re-key could silently re-point it. Checked
+    // before the rename commits, so a refusal never strands a renamed
+    // table with a stale definition
+    val rekeyed = deps.filter(_.defn.inputs(f))
+    rekeyed.foreach { d =>
+      require(!d.otherSides.exists(o =>
+          scala.util.Try(o.read.columns.contains(f)).getOrElse(false)),
+        s"RENAME COLUMN: `$f` is an agg column of ${d.defn.label} " +
+          s"${d.ident} and ANOTHER join side now carries it too — the " +
+          "agg's source side is ambiguous; drop and recreate the MV")
     }
-    require(groupDeps.isEmpty,
-      s"RENAME COLUMN: `$f` is a GROUP or WHERE column of " +
-        s"materialized view(s) ${groupDeps.map(_._1).mkString(", ")} — " +
-        "drop and recreate them to re-key")
-    // join MVs: group columns and this side's JOIN KEYS refuse (the
-    // MV's merge-bucket keys / the registered join condition cannot
-    // re-key); agg-only columns re-key below like the single-table
-    // path
-    val joinHard = joinMvsSourcedFrom(t.root).filter {
-      case (_, props, side) => keysJoinMv(props, side, f)
-    }
-    require(joinHard.isEmpty,
-      s"RENAME COLUMN: `$f` is a GROUP, JOIN-KEY, or dim-FILTER " +
-        s"column of join materialized view(s) " +
-        s"${joinHard.map(_._1).mkString(", ")} — " +
-        "drop and recreate them to re-key")
-    // sketch rollups: group columns are the rollup's merge-bucket
-    // keys AND its own columns — refuse like MV groups; the
-    // distinct column lives only in the definition — re-key below
-    val sketchHard = sketchesSourcedFrom(t.root).filter {
-      case (_, props) =>
-        props(graft.ops.Sketches.GroupProp).split(",").contains(f)
-    }
-    require(sketchHard.isEmpty,
-      s"RENAME COLUMN: `$f` is a GROUP column of sketch rollup(s) " +
-        s"${sketchHard.map(_._1).mkString(", ")} — drop and " +
-        "recreate them to re-key")
-    // validated BEFORE the rename commits: a refusal below must not
-    // leave the table renamed with a stale, un-re-keyed definition
-    requireJoinMvRekeyUnambiguous(t.root, f)
     // a row filter / column mask referencing the column would stop
     // resolving (policy text cannot be re-keyed safely) — and a
     // governance policy that silently stops applying is a leak
@@ -966,55 +907,31 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       s"RENAME COLUMN: `$f` is referenced by a row filter or " +
         "column mask — drop the policy first")
     val df = versionDf(t.renameColumn(f, tn))
-    // AGG source columns live only in the stored definition — re-key
-    // them so later REFRESHes resolve under the new name (the
-    // metadata sibling of VersionedTable.renameColumn re-keying
-    // DEFAULTs and CLUSTER BY). Routing entries keep the old logical
-    // names and simply stop matching until the next REFRESH re-arms
-    // (safe: old-name queries can no longer resolve at all).
-    rekeyDependentMvAggs(t.root, f, tn)
-    rekeyDependentJoinMvAggs(t.root, f, tn)
-    rekeyDependentSketchDistinct(t.root, f, tn)
+    // the metadata sibling of VersionedTable.renameColumn re-keying
+    // DEFAULTs and CLUSTER BY. Routing entries keep the old logical
+    // names and stop matching until the next REFRESH re-arms (safe:
+    // old-name queries can no longer resolve at all).
+    rekeyed.foreach(d => d.mv.setProperties(d.defn.rekey(f, tn)))
     df
   }
 
   /** DROP COLUMN[S]: every column is checked — present, not the last
-    * one, referenced by no MV, join MV, sketch rollup, governance policy
-    * or table-level key/CHECK/generated column — before the first
-    * column drops, so a refusal leaves the table untouched. A column a
-    * registered MV aggregates or groups by must not be dropped out from
-    * under it: every later REFRESH would fail. */
+    * one, referenced by no dependent rollup, governance policy or
+    * table-level key/CHECK/generated column — before the first column
+    * drops, so a refusal leaves the table untouched. A column a rollup
+    * reads must not be dropped out from under it: every later REFRESH
+    * would fail. */
   private def dropColumns(t: VersionedTable, names: Seq[String]): DataFrame = {
     val cur = t.read.columns
     require(names.distinct.length < cur.length,
       s"DROP COLUMNS: cannot drop every column at ${t.root}")
-    val mvs = mvsSourcedFrom(t.root)
-    val joinMvs = joinMvsSourcedFrom(t.root)
-    val sketches = sketchesSourcedFrom(t.root)
+    val deps = dependents(t.root)
     val governed = governanceCols(t)
     names.foreach { name =>
       require(cur.contains(name), s"DROP COLUMN: no column `$name` at ${t.root}")
-      val dependents = mvs.filter { case (_, props) =>
-        mvReferencedCols(props).contains(name)
-      }
-      require(dependents.isEmpty,
-        s"DROP COLUMN: `$name` is referenced by materialized view(s) " +
-          s"${dependents.map(_._1).mkString(", ")} — drop them first")
-      val joinDeps = joinMvs.filter { case (_, props, side) =>
-        keysJoinMv(props, side, name) ||
-          GraftSql.parseAggSpecs(props(graft.plans.JoinMv.AggsProp))
-            .exists(_._2 == name)
-      }
-      require(joinDeps.isEmpty,
-        s"DROP COLUMN: `$name` is referenced by join materialized " +
-          s"view(s) ${joinDeps.map(_._1).mkString(", ")} — drop them first")
-      val sketchDeps = sketches.filter { case (_, props) =>
-        props(graft.ops.Sketches.GroupProp).split(",").contains(name) ||
-          props(graft.ops.Sketches.DistinctProp) == name
-      }
-      require(sketchDeps.isEmpty,
-        s"DROP COLUMN: `$name` is referenced by sketch rollup(s) " +
-          s"${sketchDeps.map(_._1).mkString(", ")} — drop them first")
+      refuse(deps.filter(d => d.keyed(name) || d.defn.inputs(name)),
+        (d, ids) => s"DROP COLUMN: `$name` is referenced by ${d.label}(s) " +
+          s"$ids — drop them first")
       require(!governed.contains(name),
         s"DROP COLUMN: `$name` is referenced by a row filter or " +
           "column mask — drop the policy first")
@@ -1022,6 +939,30 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     }
     versionDf(names.map(t.dropColumn).last)
   }
+
+  /** `(layer.table, table, definition)` of every maintained rollup in the
+    * warehouse: one properties read per catalog table. A damaged
+    * definition is skipped, not allowed to block DDL on other tables. */
+  private def definitions: Seq[(String, VersionedTable, RollupDef)] =
+    catalog.toSeq.flatMap(cat => cat.tables.flatMap { case (l, t) =>
+      val mv = cat.table(l, t)
+      RollupDef.tryRead(spark, mv.properties).map((s"$l.$t", mv, _))
+    })
+
+  /** The rollups `srcRoot` feeds — the DDL guards' one catalog walk. */
+  private def dependents(srcRoot: String): Seq[Dependent] =
+    definitions.flatMap { case (id, mv, d) =>
+      Some(d.sidesOf(srcRoot)).filter(_.nonEmpty).map(Dependent(id, mv, d, _))
+    }
+
+  /** Refuse when `hits` is non-empty; the message names the first hit's
+    * family and every hit of that family. */
+  private def refuse(hits: Seq[Dependent],
+                     msg: (RollupDef, String) => String): Unit =
+    require(hits.isEmpty, {
+      val d = hits.head.defn
+      msg(d, hits.filter(_.defn.label == d.label).map(_.ident).mkString(", "))
+    })
 
   /** ALTER TABLE … CLUSTER BY (cols) | NONE (None): the declared columns
     * every bare OPTIMIZE z-orders by. */
@@ -1170,9 +1111,10 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     require(!(orReplace && c.ifNotExists), "CREATE MATERIALIZED VIEW: " +
       "OR REPLACE and IF NOT EXISTS exclude each other")
     if (c.ifNotExists && mv.exists)
-      Seq((mvIdent, "exists", mv.properties.get(GraftSql.MvVersionProp)
-        .orElse(mv.properties.get(graft.plans.JoinMv.FactVersionProp))
-        .fold(-1L)(_.toLong))).toDF("mv", "mode", "source_version")
+      Seq((mvIdent, "exists", RollupDef.read(spark, mv.properties).collect {
+        case d: RollupDef.SqlMv => d.version
+        case d: RollupDef.Join => d.factV
+      }.getOrElse(-1L))).toDF("mv", "mode", "source_version")
     else {
       // the WHERE persists in the MV's properties (line-framed ledger,
       // re-parsed by every maintenance slice): its whitespace and
@@ -1223,24 +1165,15 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     // the shared CREATE bookkeeping also sweeps a replaced JOIN /
     // sketch / CMS / quantile definition (REFRESH must never see two)
     // and the old merge bucketing (a REPLACE with a different GROUP BY)
-    val srcV = graft.plans.Maintained.create(GraftSql.MvFamily, src, mv,
-      "materialized view", Map(
+    val srcV = graft.plans.Maintained.create(RollupDef.SqlMv.family, src, mv,
+      Map(
         GraftSql.MvSourceProp -> src.root,
         GraftSql.MvGroupProp -> groupCols.mkString(","),
-        GraftSql.MvAggsProp ->
-          aggs.map { case (f, c, o) => s"$f:$c:$o" }.mkString(";")) ++
+        GraftSql.MvAggsProp -> formatAggSpecs(aggs)) ++
         where.map(GraftSql.MvWhereProp -> _))(
       df => GraftSql.mvAggregate(groupCols, aggs)(
         where.fold(df)(p => df.filter(expr(p)))))
-    // filtered definitions never arm transparent routing: the rewrite
-    // rule serves only shapes it can prove equivalent, and a query
-    // without the predicate must keep scanning the source. A REPLACE
-    // that turns an armed unfiltered MV into a filtered one must also
-    // DROP the old registration — the source snapshot is unchanged, so
-    // the stale entry would keep serving full-table aggregates from the
-    // now-filtered materialization (silent wrong results)
-    if (where.isEmpty) armMvRewrite(src, mv, groupCols, aggs, srcV)
-    else graft.plans.MvRewrite.deregisterRoot(mv.root)
+    armMvRewrite(mv, RollupDef.expect[RollupDef.SqlMv](mv, "materialized view"))
     srcV
   }
 
@@ -1304,12 +1237,14 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       groupCols,
       aggs.map { case (f, c, o) => graft.plans.MvRewrite.AggSpec(f, c, o) },
       mv)
-    mv.properties(graft.plans.JoinMv.FactVersionProp).toLong
   }
 
-  /** REFRESH MATERIALIZED VIEW mv — cheapest maintenance the source's
-    * history shape allows, O(changed data) whenever expressible, through
-    * the shared rollup driver ([[graft.plans.Maintained.refresh]]):
+  /** REFRESH MATERIALIZED VIEW mv, dispatched on its stored definition:
+    * a join MV catches up through [[graft.plans.JoinMv]]'s multi-side
+    * ladder; a single-source MV takes the cheapest maintenance the
+    * source's history shape allows, O(changed data) whenever
+    * expressible, through the shared rollup driver
+    * ([[graft.plans.Maintained.refresh]]):
     *
     *   - append-only tail → delta aggregate over the added rows +
     *     combining bucket-COW merge ("incremental");
@@ -1334,151 +1269,24 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * definition is not). */
   private def refreshMaterializedView(mvIdent: String): DataFrame = {
     import spark.implicits._
-    GraftSql.registerMvFunctions(spark)
     val mv = resolve(mvIdent)
-    val props = mv.properties
-    val src = VersionedTable(spark, props.getOrElse(GraftSql.MvSourceProp,
-      sys.error(s"$mvIdent is not a materialized view (no " +
-        s"${GraftSql.MvSourceProp} property)")))
-    val groupCols = props(GraftSql.MvGroupProp).split(",").toSeq
-    val aggs = GraftSql.parseAggSpecs(props(GraftSql.MvAggsProp))
-    val where = props.get(GraftSql.MvWhereProp)
-    val (mode, srcV) = graft.plans.Maintained.refresh(
-      graft.plans.Maintained.Rollup(GraftSql.MvFamily, props, mv, src,
-        groupCols, GraftSql.mvAggregate(groupCols, aggs),
-        GraftSql.mvCombines(aggs),
-        retract = GraftSql.mvRetract(groupCols, aggs),
-        slice = df => where.fold(df)(p => df.filter(expr(p)))))
-    if (where.isEmpty) armMvRewrite(src, mv, groupCols, aggs, srcV)
-    else graft.plans.MvRewrite.deregisterRoot(mv.root) // defensive: never serve a filtered MV
+    val (mode, srcV) = RollupDef.read(spark, mv.properties) match {
+      case Some(d: RollupDef.Join) => graft.plans.JoinMv.maintain(mv, d)
+      case Some(d: RollupDef.SqlMv) =>
+        GraftSql.registerMvFunctions(spark)
+        val out = graft.plans.Maintained.refresh(
+          graft.plans.Maintained.Rollup(d, mv,
+            GraftSql.mvAggregate(d.groupCols, d.aggs),
+            GraftSql.mvCombines(d.aggs),
+            retract = GraftSql.mvRetract(d.groupCols, d.aggs),
+            slice = df => d.where.fold(df)(p => df.filter(expr(p)))))
+        armMvRewrite(mv, d.copy(version = out._2))
+        out
+      case _ => sys.error(s"$mvIdent is not a materialized view (no " +
+        s"${GraftSql.MvSourceProp} property)")
+    }
     Seq((mvIdent, mode, srcV)).toDF("mv", "mode", "source_version")
   }
-
-  /** `(layer.table, properties)` of every warehouse MV whose source is
-    * `srcRoot` — the dependency walk DDL guards and re-keying use.
-    * Metadata-priced (one properties read per catalog table). */
-  private def mvsSourcedFrom(srcRoot: String): Seq[(String, Map[String, String])] =
-    catalog.toSeq.flatMap(_.tables.flatMap { case (l, t) =>
-      val props = catalog.get.table(l, t).properties
-      if (props.get(GraftSql.MvSourceProp).contains(srcRoot))
-        Some((s"$l.$t", props))
-      else None
-    })
-
-  /** Join MVs whose fact or one of whose dims is `srcRoot`; the Int
-    * flags which side (-1 = fact, else the dim's index) — key-column
-    * guards are side-specific. */
-  private def joinMvsSourcedFrom(srcRoot: String)
-      : Seq[(String, Map[String, String], Int)] =
-    catalog.toSeq.flatMap(_.tables.flatMap { case (l, t) =>
-      val props = catalog.get.table(l, t).properties
-      if (props.get(graft.plans.JoinMv.FactProp).contains(srcRoot))
-        Some((s"$l.$t", props, -1))
-      else props.get(graft.plans.JoinMv.DimProp)
-        .map(_.split(";").indexOf(srcRoot)).filter(_ >= 0)
-        .map(i => (s"$l.$t", props, i))
-    })
-
-  /** RENAME COLUMN follow-through for JOIN definitions: agg source
-    * columns re-key like [[rekeyDependentMvAggs]]. A name match proved
-    * the dependency at CREATE time (ambiguity was refused), but a
-    * later ADD COLUMN on the OTHER side can recreate the collision —
-    * then the agg may actually read the other side's column and a
-    * blind re-key would silently re-point it. Refuse that rename: the
-    * join output is already ambiguous for the agg, so there is no
-    * correct re-key, only a loud one. */
-  private def rekeyDependentJoinMvAggs(srcRoot: String, from: String,
-                                       to: String): Unit =
-    joinMvsSourcedFrom(srcRoot).foreach { case (identMv, props, _) =>
-      val aggs = GraftSql.parseAggSpecs(props(graft.plans.JoinMv.AggsProp))
-      if (aggs.exists(_._2 == from)) {
-        resolve(identMv).setProperties(Map(graft.plans.JoinMv.AggsProp ->
-          aggs.map { case (f, c, o) =>
-            s"$f:${if (c == from) to else c}:$o"
-          }.mkString(";")))
-        ()
-      }
-    }
-
-  /** Pre-commit validation for the above: refuses while the table is
-    * still un-renamed, so a refusal never strands a renamed table with
-    * a stale definition. */
-  private def requireJoinMvRekeyUnambiguous(srcRoot: String,
-                                            from: String): Unit =
-    joinMvsSourcedFrom(srcRoot).foreach { case (identMv, props, side) =>
-      val aggs = GraftSql.parseAggSpecs(props(graft.plans.JoinMv.AggsProp))
-      if (aggs.exists(_._2 == from)) {
-        val allRoots = props(graft.plans.JoinMv.FactProp) +:
-          props(graft.plans.JoinMv.DimProp).split(";").toSeq
-        val sideIdx = side + 1 // -1 fact → 0; dim i → i+1
-        val otherHas = allRoots.zipWithIndex.exists {
-          case (r, i) => i != sideIdx && scala.util.Try(
-            VersionedTable(spark, r).read.columns.contains(from))
-            .getOrElse(false)
-        }
-        require(!otherHas,
-          s"RENAME COLUMN: `$from` is an agg column of join MV " +
-            s"$identMv and ANOTHER join side now carries it too — the " +
-            "agg's source side is ambiguous; drop and recreate the MV")
-      }
-    }
-
-  /** Whether column `c` of join-MV side `side` (-1 = fact) keys the MV:
-    * a GROUP column, or this side's JOIN key or dim-FILTER column. */
-  private def keysJoinMv(props: Map[String, String], side: Int,
-                         c: String): Boolean = {
-    val segs = graft.plans.JoinMv.parseKeySegments(
-      props(graft.plans.JoinMv.KeysProp))
-    props(graft.plans.JoinMv.GroupProp).split(",").contains(c) ||
-      (if (side < 0) segs.flatten.exists(_._1 == c)
-       else segs(side).exists(_._2 == c) ||
-         joinMvDimFilterCols(props, side).contains(c))
-  }
-
-  /** Column names a join MV's dim-side FILTER references (empty when
-    * the side is the fact, has no filter, or the stored text fails to
-    * parse — the guard then falls back to the loud analysis error at
-    * the next refresh rather than blocking unrelated DDL). */
-  private def joinMvDimFilterCols(props: Map[String, String],
-                                  side: Int): Set[String] =
-    if (side < 0) Set.empty
-    else props.get(graft.plans.JoinMv.DimFilterProp)
-      .map(_.split(";", -1).toSeq).filter(fs => side < fs.length)
-      .map(_(side)).filter(_.nonEmpty)
-      .map(f => java.net.URLDecoder.decode(f, "UTF-8"))
-      .flatMap(f => scala.util.Try(referencedCols(f)).toOption)
-      .getOrElse(Set.empty)
-
-  /** Sketch rollups (library-created but catalog-resident) whose
-    * source is `srcRoot` — the dependency walk for DDL guards. */
-  private def sketchesSourcedFrom(srcRoot: String)
-      : Seq[(String, Map[String, String])] =
-    catalog.toSeq.flatMap(_.tables.flatMap { case (l, t) =>
-      val props = catalog.get.table(l, t).properties
-      if (props.get(graft.ops.Sketches.SourceProp).contains(srcRoot))
-        Some((s"$l.$t", props))
-      else None
-    })
-
-  /** RENAME COLUMN follow-through for sketch rollups: the distinct
-    * column lives only in the stored definition — re-key it so later
-    * refreshes resolve under the new name. */
-  private def rekeyDependentSketchDistinct(srcRoot: String, from: String,
-                                           to: String): Unit =
-    sketchesSourcedFrom(srcRoot).foreach { case (identMv, props) =>
-      if (props(graft.ops.Sketches.DistinctProp) == from) {
-        resolve(identMv).setProperties(
-          Map(graft.ops.Sketches.DistinctProp -> to))
-        ()
-      }
-    }
-
-  /** Source columns an MV definition references (group + agg inputs). */
-  private def mvReferencedCols(props: Map[String, String]): Set[String] =
-    props(GraftSql.MvGroupProp).split(",").toSet ++
-      GraftSql.parseAggSpecs(props(GraftSql.MvAggsProp))
-        .map(_._2).filterNot(_ == "*").toSet ++
-      mvWhereCols(props)
 
   /** Columns the table's OWN governance policies reference: masked
     * column names, plus every attribute the row-filter predicate and
@@ -1487,43 +1295,14 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * policy that silently stops applying is a leak). */
   private def governanceCols(t: VersionedTable): Set[String] = {
     val props = t.properties
-    def refs(s: String) = referencedCols(GraftSql.substPrincipal(s, Some("x")))
+    def refs(s: String) =
+      referencedCols(spark, GraftSql.substPrincipal(s, Some("x")))
     val masked = props.collect {
       case (k, v) if k.startsWith(GraftSql.ColumnMaskPrefix) =>
         Set(k.stripPrefix(GraftSql.ColumnMaskPrefix)) ++ refs(v)
     }.flatten.toSet
     masked ++ props.get(GraftSql.RowFilterProp).map(refs).getOrElse(Set.empty)
   }
-
-  /** Columns a filtered MV's stored predicate references — they must be
-    * protected from RENAME/DROP like group columns (the predicate text
-    * cannot be re-keyed safely, and an unresolvable predicate would
-    * brick every later REFRESH). */
-  private def mvWhereCols(props: Map[String, String]): Set[String] =
-    props.get(GraftSql.MvWhereProp).map(referencedCols).getOrElse(Set.empty)
-
-  /** Column names a stored predicate or expression text references. */
-  private def referencedCols(sqlText: String): Set[String] =
-    spark.sessionState.sqlParser.parseExpression(sqlText).collect {
-      case a: UnresolvedAttribute => a.nameParts.last
-    }.toSet
-
-  /** RENAME COLUMN follow-through: rewrite the `fn:col:out` agg specs of
-    * every dependent MV definition from `from` to `to`. Output column
-    * names and group columns are untouched (group renames are refused
-    * upstream). */
-  private def rekeyDependentMvAggs(srcRoot: String, from: String,
-                                   to: String): Unit =
-    mvsSourcedFrom(srcRoot).foreach { case (identMv, props) =>
-      val aggs = GraftSql.parseAggSpecs(props(GraftSql.MvAggsProp))
-      if (aggs.exists(_._2 == from)) {
-        resolve(identMv).setProperties(Map(GraftSql.MvAggsProp ->
-          aggs.map { case (f, c, o) =>
-            s"$f:${if (c == from) to else c}:$o"
-          }.mkString(";")))
-        ()
-      }
-    }
 
   /** Re-arm routing for every materialized view registered in the
     * warehouse whose covered version still equals its source's head —
@@ -1535,53 +1314,30 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * only MV-propertied tables build a snapshot. Returns the armed
     * `layer.table` identifiers. */
   def armMaterializedViews(): Seq[String] = {
-    val cat = catalog.getOrElse(
-      sys.error("armMaterializedViews needs a catalog-backed GraftSql"))
-    cat.tables.flatMap { case (l, t) =>
-      val mv = cat.table(l, t)
-      val props = mv.properties
-      props.get(GraftSql.MvSourceProp).flatMap { srcRoot =>
-        val src = VersionedTable(spark, srcRoot)
-        val covered = props(GraftSql.MvVersionProp).toLong
-        val aggSpecs = GraftSql.parseAggSpecs(props(GraftSql.MvAggsProp))
-        if (src.exists && src.latestVersion.contains(covered) &&
-            !props.contains(GraftSql.MvWhereProp) &&
-            !aggSpecs.exists(a => GraftSql.approxAgg(a._1))) {
-          armMvRewrite(src, mv,
-            props(GraftSql.MvGroupProp).split(",").toSeq, aggSpecs, covered)
-          Some(s"$l.$t")
-        } else None
-      }.orElse(props.get(graft.plans.JoinMv.FactProp).flatMap { factRoot =>
-        val fact = VersionedTable(spark, factRoot)
-        val dimTs = props(graft.plans.JoinMv.DimProp).split(";").toSeq
-          .map(VersionedTable(spark, _))
-        val fV = props(graft.plans.JoinMv.FactVersionProp).toLong
-        val dVs = props(graft.plans.JoinMv.DimVersionProp)
-          .split(";").toSeq.map(_.toLong)
-        // only the single-dim shape can arm (the rewrite rule matches
-        // two-table joins); multi-dim definitions refresh-only
-        if (dimTs.length == 1 && fact.exists &&
-            fact.latestVersion.contains(fV) &&
-            dimTs.zip(dVs).forall { case (d, v) =>
-              d.exists && d.latestVersion.contains(v)
-            } &&
-            graft.plans.MvRewrite.isRegistrable(fact, Some(fV)) &&
-            graft.plans.MvRewrite.isRegistrable(dimTs.head, Some(dVs.head))) {
-          graft.plans.JoinMv.arm(spark, mv)
-          Some(s"$l.$t")
-        } else None
-      })
+    require(catalog.isDefined,
+      "armMaterializedViews needs a catalog-backed GraftSql")
+    definitions.collect {
+      case (id, mv, d: RollupDef.SqlMv) if d.where.isEmpty &&
+          !d.aggs.exists(a => GraftSql.approxAgg(a._1)) && d.fresh =>
+        armMvRewrite(mv, d)
+        id
+      // only the single-dim shape can arm (the rewrite rule matches
+      // two-table joins); multi-dim definitions refresh-only
+      case (id, mv, d: RollupDef.Join) if d.dims.length == 1 && d.fresh &&
+          graft.plans.MvRewrite.isRegistrable(d.fact, Some(d.factV)) &&
+          graft.plans.MvRewrite.isRegistrable(d.dims.head.table,
+            Some(d.dimVs.head)) =>
+        graft.plans.JoinMv.arm(mv, d)
+        id
     }
   }
 
-  /** Best-effort: registration covers plain, multi-arm (post-DDL) and
-    * DV-bearing snapshots; only a read that decomposes to no
-    * recognizable graft scan shape at all skips quietly. The MV itself
-    * stays correct and maintained either way. */
-  private def armMvRewrite(src: VersionedTable, mv: VersionedTable,
-                           groupCols: Seq[String],
-                           aggs: Seq[(String, String, String)],
-                           srcV: Long): Unit =
+  /** Arm routing for MV `mv` at its covered version. Best-effort:
+    * registration covers plain, multi-arm (post-DDL) and DV-bearing
+    * snapshots; only a read that decomposes to no recognizable graft
+    * scan shape at all skips quietly. The MV itself stays correct and
+    * maintained either way. */
+  private def armMvRewrite(mv: VersionedTable, d: RollupDef.SqlMv): Unit =
     // explicit pre-check, no blanket catch: an unrecognizable snapshot
     // skips quietly (the conservative matcher could never serve it
     // anyway), while a genuinely broken registration — MV missing
@@ -1589,17 +1345,19 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     // Registration pins the COVERED version, never the live head (a
     // concurrent commit between the pin and this call must stay
     // un-served).
-    if (aggs.exists(a => GraftSql.approxAgg(a._1)))
-      // sketch estimates must NEVER transparently replace a query's own
-      // aggregate (Spark's approx_count_distinct is a different
-      // estimator — results would silently change); and a REPLACE that
-      // turned an armed exact MV into a sketch-bearing one must drop
-      // the stale registration, not leave it serving
+    if (d.where.nonEmpty || d.aggs.exists(a => GraftSql.approxAgg(a._1)))
+      // a filtered definition never serves: the rewrite rule serves only
+      // shapes it can prove equivalent, and a query without the
+      // predicate must keep scanning the source. Nor does a sketch
+      // estimate (Spark's approx_count_distinct is a different
+      // estimator — results would silently change). A REPLACE that
+      // turned an armed exact MV into either must drop the stale
+      // registration, not leave it serving
       graft.plans.MvRewrite.deregisterRoot(mv.root)
-    else if (graft.plans.MvRewrite.isRegistrable(src, Some(srcV)))
-      graft.plans.MvRewrite.register(src, mv, groupCols,
-        aggs.map { case (f, c, o) => graft.plans.MvRewrite.AggSpec(f, c, o) },
-        atVersion = Some(srcV))
+    else if (graft.plans.MvRewrite.isRegistrable(d.src, Some(d.version)))
+      graft.plans.MvRewrite.register(d.src, mv, d.groupCols,
+        d.aggs.map { case (f, c, o) => graft.plans.MvRewrite.AggSpec(f, c, o) },
+        atVersion = Some(d.version))
 
   private def optimize(tbl: VersionedTable, zcols: Option[String]): DataFrame = {
     import spark.implicits._
@@ -2105,19 +1863,13 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       // dropped consumer would hold vacuum back forever (UNDROP
       // note: pins are NOT restored — the next REFRESH re-advances
       // them, degrading to a full recompute if retention ran in
-      // between)
-      if (t.exists) {
-        graft.plans.JoinMv.dropPins(spark, t)
-        val props = t.properties
-        Seq(GraftSql.MvSourceProp, graft.ops.Sketches.SourceProp,
-            graft.ops.Sketches.FreqSourceProp,
-            graft.ops.Sketches.QuantSourceProp)
-          .flatMap(props.get).distinct.foreach { srcRoot =>
-            try VersionedTable(spark, srcRoot)
-              .dropPin(graft.plans.JoinMv.pinName(t))
+      // between). Best-effort: a gone source must not fail the DROP
+      if (t.exists)
+        RollupDef.tryRead(spark, t.properties).toSeq
+          .flatMap(_.sources.distinctBy(_.root)).foreach { src =>
+            try src.dropPin(graft.plans.JoinMv.pinName(t))
             catch { case scala.util.control.NonFatal(_) => () }
           }
-      }
       cat.dropTable(layer, name)
       Seq(ident).toDF("dropped")
     })
@@ -2818,8 +2570,7 @@ object GraftSql {
     * sketch-free MVs) pass through untouched. */
   private[graft] def presentMvRead(df: DataFrame,
                                    props: Map[String, String]): DataFrame = {
-    val specs = (props.get(MvAggsProp).toSeq ++
-      props.get(graft.plans.JoinMv.AggsProp).toSeq).flatMap(parseAggSpecs)
+    val specs = RollupDef.tryRead(df.sparkSession, props).toSeq.flatMap(_.aggs)
     val hllOuts = specs.collect { case ("hll", _, o) => o }.toSet
     // quant columns present as the DOUBLE readout of their stored
     // histogram: a per-row cumulative walk over the ≤2k-entry map
@@ -2864,11 +2615,6 @@ object GraftSql {
 
   /** Txn-app-id prefix for MV maintenance merges (replay idempotence). */
   private[graft] val MvTxnApp = "graft-mv:"
-
-  /** The single-table MV family's on-disk names for the shared rollup
-    * driver (epochs number from 1). */
-  private[graft] val MvFamily = graft.plans.Maintained.Family(
-    MvVersionProp, MvEpochProp, MvTxnApp, 1L)
 
   /** The exact-MV partial aggregate: `aggs` over `df` by `groupCols`.
     * Callers must have registerMvFunctions'd. */
@@ -2973,6 +2719,25 @@ object GraftSql {
   private[graft] def sweepCdfPhantoms(mv: VersionedTable,
       aggs: Seq[(String, String, String)]): Unit =
     mvRetract(Nil, aggs).foreach(x => graft.plans.Maintained.sweep(mv, x.repair))
+
+  /** A rollup `ident` (table `mv`) reads from the table on `sides`. */
+  private final case class Dependent(ident: String, mv: VersionedTable,
+                                     defn: RollupDef, sides: Seq[Int]) {
+    def keyed(c: String): Boolean = sides.exists(defn.keyed(_)(c))
+    def otherSides: Seq[VersionedTable] =
+      defn.sources.indices.filterNot(sides.contains).map(defn.sources)
+  }
+
+  /** The `fn:col:out;…` agg-spec string [[parseAggSpecs]] reads. */
+  private[graft] def formatAggSpecs(aggs: Seq[(String, String, String)]): String =
+    aggs.map { case (f, c, o) => s"$f:$c:$o" }.mkString(";")
+
+  /** Column names a stored predicate or expression text references. */
+  private[graft] def referencedCols(spark: SparkSession,
+                                    sqlText: String): Set[String] =
+    spark.sessionState.sqlParser.parseExpression(sqlText).collect {
+      case a: UnresolvedAttribute => a.nameParts.last
+    }.toSet
 
   /** Parse the `fn:col:out;…` agg-spec string (the [[MvAggsProp]]
     * format, also the sink's `aggregate` option). */

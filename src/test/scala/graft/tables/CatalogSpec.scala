@@ -162,6 +162,25 @@ class CatalogSpec extends SparkSpec {
     ()
   }
 
+  test("a durable CREATE VIEW that fails to register writes no ledger " +
+       "entry, so later registerViews() still succeed") {
+    val root = tmpDir("cat-vwfail-")
+    val cat = new Catalog(spark, root)
+    cat.bootstrap()
+    cat.table("silver", "s").overwrite(Seq((1, "x")).toDF("k", "v"))
+    cat.registerViews()
+    val gsql = GraftSql(spark, cat)
+    gsql.sql("CREATE VIEW v_ok AS SELECT k FROM silver_s")
+    val before = cat.views
+    intercept[org.apache.spark.sql.AnalysisException](
+      gsql.sql("CREATE VIEW v_dot AS SELECT * FROM silver.s"))
+    assert(cat.views === before)
+    assert(!spark.catalog.tableExists("v_dot"))
+    val registered = cat.registerViews()
+    assert(registered.contains("v_ok") && !registered.contains("v_dot"))
+    spark.catalog.dropTempView("v_ok")
+  }
+
   test("OR REPLACE can create forward ledger references; the fixed-point " +
        "registration pass still resolves them in a fresh session") {
     val root = tmpDir("cat-vwfwd-")

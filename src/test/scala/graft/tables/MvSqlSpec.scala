@@ -475,7 +475,39 @@ class MvSqlSpec extends SparkSpec {
       sql.sql("REFRESH MATERIALIZED VIEW gold.mv_smv")
       assert(sql.sql("SHOW MATERIALIZED VIEWS")
         .as[(String, String, String, Long, Boolean, String)].head()._5)
-    } finally MvRewrite.deregister(mv)
+      // join MVs list their keys and decoded dim filter; once their dim
+      // moves they read stale and stay out of armMaterializedViews. A
+      // sketch rollup is not a materialized view and is not listed
+      val fact = cat.table("silver", "jshf")
+      val dim = cat.table("silver", "jshd")
+      fact.append(Seq((1, 10L), (2, 5L)).toDF("team", "pts"))
+      dim.append(Seq((1, "red", true), (2, "blue", true))
+        .toDF("team", "color", "cur"))
+      sql.sql("CREATE MATERIALIZED VIEW gold.mv_jsh AS SELECT color, " +
+        "sum(pts) AS s, count(*) AS c FROM silver.jshf JOIN silver.jshd " +
+        "USING (team) WHERE jshd.cur = true AND jshd.color <> 'x;y' " +
+        "GROUP BY color")
+      sql.sql("CREATE MATERIALIZED VIEW gold.mv_jsh_all AS SELECT color, " +
+        "sum(pts) AS s FROM silver.jshf JOIN silver.jshd USING (team) " +
+        "GROUP BY color")
+      graft.ops.Sketches.create(src, cat.table("gold", "sk_smv"), Seq("k"), "v")
+      assert(sql.armMaterializedViews().contains("gold.mv_jsh_all"))
+      dim.append(Seq((3, "teal", true)).toDF("team", "color", "cur"))
+      val rows = sql.sql("SHOW MATERIALIZED VIEWS")
+        .as[(String, String, String, Long, Boolean, String)].collect()
+        .sortBy(_._1).toSeq
+      assert(rows === Seq(
+        ("gold.mv_jsh", "color", "sum:pts:s;count:*:c", 0L, false,
+          "join:team=team where:(cur = true) AND (color <> 'x;y')"),
+        ("gold.mv_jsh_all", "color", "sum:pts:s", 0L, false,
+          "join:team=team"),
+        ("gold.mv_smv", "k", "sum:v:s;count:*:c", 1L, true, "")))
+      assert(!sql.armMaterializedViews().exists(_.startsWith("gold.mv_jsh")))
+    } finally {
+      MvRewrite.deregister(mv)
+      Seq("mv_jsh", "mv_jsh_all").foreach(n =>
+        MvRewrite.deregister(cat.table("gold", n)))
+    }
   }
 
   test("armMaterializedViews re-arms fresh MVs after a process restart " +
@@ -506,6 +538,25 @@ class MvSqlSpec extends SparkSpec {
       assert(!scansMv(q), "a stale MV must never re-arm")
       assert(q.as[(String, Long)].head()._2 === 11L)
     } finally { MvRewrite.deregister(mvF); MvRewrite.deregister(mvS) }
+  }
+
+  test("a definition damaged through TBLPROPERTIES breaks neither reads, " +
+       "other tables' DDL, SHOW MATERIALIZED VIEWS nor DROP TABLE") {
+    val (cat, sql) = warehouse()
+    val src = cat.table("silver", "dmg")
+    src.append(Seq(("a", 1L)).toDF("k", "v"))
+    sql.sql("CREATE MATERIALIZED VIEW gold.mv_dmg AS SELECT k, " +
+      "sum(v) AS s FROM silver.dmg GROUP BY k")
+    sql.sql("ALTER TABLE gold.mv_dmg UNSET TBLPROPERTIES ('graft.mv.group')")
+    assert(sql.sql("SELECT s FROM gold.mv_dmg").as[Long].collect().toSeq ===
+      Seq(1L))
+    cat.registerViews()
+    // nor column DDL on other tables, nor the catalog listing
+    cat.table("silver", "other").append(Seq((1, 2)).toDF("a", "b"))
+    sql.sql("ALTER TABLE silver.other RENAME COLUMN b TO c")
+    assert(sql.sql("SHOW MATERIALIZED VIEWS").count() === 0L)
+    sql.sql("DROP TABLE gold.mv_dmg")
+    assert(!cat.table("gold", "mv_dmg").exists)
   }
 
   test("DROP TABLE un-arms a routed MV before deleting it") {
@@ -1106,6 +1157,49 @@ class MvSqlSpec extends SparkSpec {
         "append-only incremental path")
     assert(graft.ops.Sketches.withEstimate(mv.read)
       .filter(col("g") === "g1").select("n_rows").as[Long].head() === 2L)
+  }
+
+  test("frequency and quantile rollup DDL guards: group columns refuse " +
+       "RENAME/DROP, item and value columns refuse DROP and re-key on " +
+       "RENAME, and the incremental path survives") {
+    val (cat, sql) = warehouse()
+    val fsrc = cat.table("silver", "fqitems")
+    val qsrc = cat.table("silver", "fqvals")
+    fsrc.append(Seq(("g0", "a"), ("g0", "b"), ("g1", "a")).toDF("g", "item"))
+    qsrc.append(Seq(("g0", 1.0), ("g0", 2.0), ("g1", 3.0)).toDF("g", "v"))
+    val cms = cat.table("gold", "fq_cms")
+    val q = cat.table("gold", "fq_quant")
+    graft.ops.Sketches.createFreq(fsrc, cms, Seq("g"), "item")
+    graft.ops.Sketches.createQuant(qsrc, q, Seq("g"), "v")
+    def refused(stmt: String): String =
+      intercept[IllegalArgumentException](sql.sql(stmt)).getMessage
+    Seq("silver.fqitems" -> "frequency rollup",
+        "silver.fqvals" -> "quantile rollup").foreach { case (t, what) =>
+      Seq("RENAME COLUMN g TO grp", "DROP COLUMN g").foreach { ddl =>
+        val m = refused(s"ALTER TABLE $t $ddl")
+        assert(m.contains(what), s"$t $ddl: $m")
+      }
+    }
+    assert(refused("ALTER TABLE silver.fqitems DROP COLUMN item")
+      .contains("frequency rollup"))
+    assert(refused("ALTER TABLE silver.fqvals DROP COLUMN v")
+      .contains("quantile rollup"))
+    assert(fsrc.read.columns.toSeq === Seq("g", "item"))
+    assert(qsrc.read.columns.toSeq === Seq("g", "v"))
+    // the item and value columns live only in the definition — a
+    // rename re-keys them, and the rename commit is metadata-only
+    sql.sql("ALTER TABLE silver.fqitems RENAME COLUMN item TO sku")
+    sql.sql("ALTER TABLE silver.fqvals RENAME COLUMN v TO val")
+    assert(cms.properties(graft.ops.Sketches.FreqItemProp) === "sku")
+    assert(q.properties(graft.ops.Sketches.QuantValueProp) === "val")
+    fsrc.append(Seq(("g1", "b")).toDF("g", "sku"))
+    qsrc.append(Seq(("g1", 4.0)).toDF("g", "val"))
+    assert(graft.ops.Sketches.refreshFreq(spark, cms) === "incremental")
+    assert(graft.ops.Sketches.refreshQuant(spark, q) === "incremental")
+    assert(cms.read.filter(col("g") === "g1").select("n_rows")
+      .as[Long].head() === 2L)
+    assert(q.read.filter(col("g") === "g1").select("n_vals")
+      .as[Long].head() === 2L)
   }
 
   test("approx_top_k MV: CMS+candidate storage, appends absorb as " +
