@@ -180,20 +180,23 @@ object JoinMv {
     * replace a query's own aggregate (different estimator, silently
     * different numbers), so sketch-bearing definitions drop any stale
     * registration instead (a REPLACE must not leave the old entry
-    * serving). */
-  private[graft] def arm(mv: VersionedTable, d: RollupDef.Join): Unit =
+    * serving). Returns whether `mv` is now registered. */
+  private[graft] def arm(mv: VersionedTable, d: RollupDef.Join): Boolean = {
     // filtered dims narrow the joined row-set: a query over the
     // UNFILTERED join must never transparently read the filtered MV
-    if (d.aggs.exists(a => GraftSql.approxAgg(a._1)) ||
-        d.dims.exists(_.filter.nonEmpty)) MvRewrite.deregisterRoot(mv.root)
-    else MvRewrite.registerJoinChain(d.fact, Some(d.factV),
+    val routable = !d.aggs.exists(a => GraftSql.approxAgg(a._1)) &&
+      d.dims.forall(_.filter.isEmpty)
+    if (routable) MvRewrite.registerJoinChain(d.fact, Some(d.factV),
       d.dims.zip(d.dimVs).map { case (side, v) =>
         MvRewrite.JoinDim(side.table, side.keys, Some(v))
       }, mv, d.groupCols,
       d.aggs.map { case (f, c, o) => MvRewrite.AggSpec(f, c, o) })
+    else MvRewrite.deregisterRoot(mv.root)
+    routable
+  }
 
   /** Re-arm routing from the durable definition (post-restart). */
-  def arm(spark: SparkSession, mv: VersionedTable): Unit =
+  def arm(spark: SparkSession, mv: VersionedTable): Boolean =
     arm(mv, RollupDef.expect[RollupDef.Join](mv, "join MV"))
 
   /** The [[KeysProp]] serialization of per-dim key lists — ONE formatter
@@ -274,7 +277,7 @@ object JoinMv {
     // touching group/key columns and re-key agg specs, so those commits
     // are metadata-only on any side — a dim rename must not trigger
     // an O(fact) re-materialization
-    val absorbless = Maintained.AbsorblessActions
+    val absorbless = VersionedTable.CdfNoChangeActions
     def moved(h: Seq[VersionedTable.LogEntry], lo: Long, hi: Long): Boolean =
       h.exists(e => e.version > lo && e.version <= hi &&
         !absorbless(e.action))

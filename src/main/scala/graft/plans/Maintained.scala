@@ -13,7 +13,7 @@ import graft.tables.{CdfNotExpressible, VersionedTable}
   * rollup up with its source:
   *
   *   - `"noop"`: nothing new, or only data-identical commits
-  *     ([[AbsorblessActions]]);
+  *     ([[VersionedTable.CdfNoChangeActions]]);
   *   - `"incremental"`: an append-only tail absorbs as the partial over
   *     the added rows, combine-merged (O(appended rows));
   *   - `"cdf"`: retractions with the change feed on, for families whose
@@ -34,20 +34,6 @@ import graft.tables.{CdfNotExpressible, VersionedTable}
   * multi-side ladder but shares [[mergeTouchedGroups]] and the absorb
   * step. */
 object Maintained {
-
-  /** History actions that change NO data an incremental maintainer can
-    * observe: compaction/z-order/REORG rewrite identical rows;
-    * rename/drop-column commits are metadata-only (zero rows — the DDL
-    * guards refuse touching maintained columns and re-key the input
-    * columns a definition names on rename); partition-layout evolution
-    * re-tags future writes. A slice of only these is a covered-version bump, and any
-    * of them interleaved with data commits must NOT demote the
-    * incremental path. ONE definition — this driver and the join-MV
-    * refresher both consult it, and they must agree. */
-  private[graft] val AbsorblessActions: Set[String] = Set(
-    "compact", "zorder", "purge_dv",
-    "rename_column", "drop_column", "set_partition_layout",
-    "expire_pins")
 
   /** A rollup family's on-disk names: covered-version and epoch
     * property keys, txn-app prefix, and the epoch a first CREATE gets
@@ -176,12 +162,12 @@ object Maintained {
       try rung catch { case _: CdfNotExpressible => full() }
     val txn = Some((app, head))
     val out =
-      if (later.forall(e => AbsorblessActions(e.action))) "noop"
+      if (later.forall(e => VersionedTable.CdfNoChangeActions(e.action))) "noop"
       // readAddedBetween reads exactly the appended rows under the
       // CURRENT column mapping; addedSetsLive guards the rare vacuum-
       // reclaimed-original case into the fallback
       else if (later.forall(e => e.action == "append" ||
-          AbsorblessActions(e.action)) &&
+          VersionedTable.CdfNoChangeActions(e.action)) &&
           src.addedSetsLive(v0, head)) orFull {
         if (absorb(r.mv, r.partial(r.slice(src.readAddedBetween(v0, head))),
             groupCols, r.combine, txn) > 0L)

@@ -144,19 +144,11 @@ final class Catalog(spark: SparkSession, root: String) {
     ()
   }
 
-  private def writeViews(entries: Seq[(String, String)]): Unit = {
-    val lines = entries.map { case (n, s) =>
+  private def writeViews(entries: Seq[(String, String)]): Unit =
+    MetaJson.replace(viewsPath, entries.map { case (n, s) =>
       s"$n\t${java.util.Base64.getEncoder.encodeToString(
-        s.getBytes(java.nio.charset.StandardCharsets.UTF_8))}"
-    }
-    val tmp = viewsPath.resolveSibling(
-      s".views-${java.util.UUID.randomUUID()}")
-    Files.writeString(tmp, lines.mkString("\n") + (if (lines.isEmpty) "" else "\n"))
-    Files.move(tmp, viewsPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+        s.getBytes(java.nio.charset.StandardCharsets.UTF_8))}\n"
+    }.mkString)
 
   // ------------------------------------------------------ grants ledger
 
@@ -247,16 +239,9 @@ final class Catalog(spark: SparkSession, root: String) {
       writeGrants(grants.filterNot(drop.contains))
     }
 
-  private def writeGrants(entries: Seq[(String, String, String, String)]): Unit = {
-    val lines = entries.map { case (p, t, o, g) => s"$p\t$t\t$o\t$g" }
-    val tmp = grantsPath.resolveSibling(
-      s".grants-${java.util.UUID.randomUUID()}")
-    Files.writeString(tmp, lines.mkString("\n") + (if (lines.isEmpty) "" else "\n"))
-    Files.move(tmp, grantsPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def writeGrants(entries: Seq[(String, String, String, String)]): Unit =
+    MetaJson.replace(grantsPath,
+      entries.map { case (p, t, o, g) => s"$p\t$t\t$o\t$g\n" }.mkString)
 
   /** UC-style conjunctive authorization: `principal` may perform
     * `action` (SELECT or MODIFY) on `layer.table` iff it holds

@@ -1,8 +1,7 @@
 package graft.tables
 
 import org.apache.spark.sql.DataFrame
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.UUID
+import java.nio.file.{Files, Paths}
 
 /** Pull-model change-feed consumption with a durable position — the
   * batch analog of Delta's CDF streaming reader (`readChangeFeed` option
@@ -58,10 +57,7 @@ object ChangeFeedConsumer {
       try src.setPin(s"cdc:$checkpointDir", last)
       catch { case scala.util.control.NonFatal(_) => () }
     f(src.readChangeFeed(last, Some(latest)), last, latest)
-    val tmp = dir.resolve(s".position.tmp-${UUID.randomUUID()}")
-    Files.writeString(tmp, latest.toString)
-    Files.move(tmp, posFile, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    MetaJson.replace(posFile, latest.toString)
     Some((last, latest))
   }
 

@@ -1310,54 +1310,53 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
     * in-memory; the definitions are not), callable right after catalog
     * open instead of waiting for the first REFRESH. An MV whose source
     * has moved stays un-armed (it is stale — REFRESH catches it up);
-    * one whose source vanished is skipped. Metadata-priced per table;
-    * only MV-propertied tables build a snapshot. Returns the armed
-    * `layer.table` identifiers. */
+    * one whose source vanished is skipped, and one whose definition can
+    * never serve a query (filtered, sketch-bearing) is not armed.
+    * Metadata-priced per table; only MV-propertied tables build a
+    * snapshot. Returns the armed `layer.table` identifiers. */
   def armMaterializedViews(): Seq[String] = {
     require(catalog.isDefined,
       "armMaterializedViews needs a catalog-backed GraftSql")
     definitions.collect {
-      case (id, mv, d: RollupDef.SqlMv) if d.where.isEmpty &&
-          !d.aggs.exists(a => GraftSql.approxAgg(a._1)) && d.fresh =>
-        armMvRewrite(mv, d)
-        id
+      case (id, mv, d: RollupDef.SqlMv) if d.fresh => id -> armMvRewrite(mv, d)
       // only the single-dim shape can arm (the rewrite rule matches
       // two-table joins); multi-dim definitions refresh-only
       case (id, mv, d: RollupDef.Join) if d.dims.length == 1 && d.fresh &&
           graft.plans.MvRewrite.isRegistrable(d.fact, Some(d.factV)) &&
           graft.plans.MvRewrite.isRegistrable(d.dims.head.table,
             Some(d.dimVs.head)) =>
-        graft.plans.JoinMv.arm(mv, d)
-        id
-    }
+        id -> graft.plans.JoinMv.arm(mv, d)
+    }.collect { case (id, true) => id }
   }
 
   /** Arm routing for MV `mv` at its covered version. Best-effort:
     * registration covers plain, multi-arm (post-DDL) and DV-bearing
     * snapshots; only a read that decomposes to no recognizable graft
     * scan shape at all skips quietly. The MV itself stays correct and
-    * maintained either way. */
-  private def armMvRewrite(mv: VersionedTable, d: RollupDef.SqlMv): Unit =
-    // explicit pre-check, no blanket catch: an unrecognizable snapshot
+    * maintained either way. Returns whether `mv` is now registered. */
+  private def armMvRewrite(mv: VersionedTable, d: RollupDef.SqlMv): Boolean = {
+    // a filtered definition never serves: the rewrite rule serves only
+    // shapes it can prove equivalent, and a query without the predicate
+    // must keep scanning the source. Nor does a sketch estimate (Spark's
+    // approx_count_distinct is a different estimator — results would
+    // silently change). A REPLACE that turned an armed exact MV into
+    // either must drop the stale registration, not leave it serving.
+    // Explicit pre-check, no blanket catch: an unrecognizable snapshot
     // skips quietly (the conservative matcher could never serve it
     // anyway), while a genuinely broken registration — MV missing
     // declared columns, unreadable roots — still surfaces loudly.
     // Registration pins the COVERED version, never the live head (a
     // concurrent commit between the pin and this call must stay
     // un-served).
-    if (d.where.nonEmpty || d.aggs.exists(a => GraftSql.approxAgg(a._1)))
-      // a filtered definition never serves: the rewrite rule serves only
-      // shapes it can prove equivalent, and a query without the
-      // predicate must keep scanning the source. Nor does a sketch
-      // estimate (Spark's approx_count_distinct is a different
-      // estimator — results would silently change). A REPLACE that
-      // turned an armed exact MV into either must drop the stale
-      // registration, not leave it serving
-      graft.plans.MvRewrite.deregisterRoot(mv.root)
-    else if (graft.plans.MvRewrite.isRegistrable(d.src, Some(d.version)))
-      graft.plans.MvRewrite.register(d.src, mv, d.groupCols,
-        d.aggs.map { case (f, c, o) => graft.plans.MvRewrite.AggSpec(f, c, o) },
-        atVersion = Some(d.version))
+    val routable = d.where.isEmpty && !d.aggs.exists(a => GraftSql.approxAgg(a._1))
+    if (!routable) graft.plans.MvRewrite.deregisterRoot(mv.root)
+    val armed = routable &&
+      graft.plans.MvRewrite.isRegistrable(d.src, Some(d.version))
+    if (armed) graft.plans.MvRewrite.register(d.src, mv, d.groupCols,
+      d.aggs.map { case (f, c, o) => graft.plans.MvRewrite.AggSpec(f, c, o) },
+      atVersion = Some(d.version))
+    armed
+  }
 
   private def optimize(tbl: VersionedTable, zcols: Option[String]): DataFrame = {
     import spark.implicits._
@@ -1666,11 +1665,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
           val unknown = parts.filterNot(df.columns.contains)
           require(unknown.isEmpty,
             s"PARTITIONED BY names unknown column(s): ${unknown.mkString(",")}")
-          t.clearIdentity()
-          t.clearGeneratedColumns()
-          t.clearDefaults()
-          t.clearChecks()
-          t.clearProperties()
+          t.clearDefinition()
           // the schema form declares its layout BEFORE data exists (the
           // empty snapshot stays flat so the partition columns remain in
           // the readable schema); every later INSERT appends hive-layout

@@ -162,12 +162,8 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     val h = historyOnce()
     if (h.isEmpty) return
     val v = h.last.version
-    val tmp = logDir.resolve(s".tmp-cp-${UUID.randomUUID()}")
-    try {
-      Files.writeString(tmp, h.map(_.toJson).mkString("", "\n", "\n"))
-      Files.move(tmp, logDir.resolve(f"$v%020d.checkpoint"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } finally { Files.deleteIfExists(tmp); () } // crash/dirty-exit orphan
+    MetaJson.replace(logDir.resolve(f"$v%020d.checkpoint"),
+      h.map(_.toJson).mkString("", "\n", "\n"))
     val stale = listDir(logDir).filter { p =>
       val n = p.getFileName.toString
       (n.endsWith(".checkpoint") && n.stripSuffix(".checkpoint").toLong < v) ||
@@ -326,12 +322,8 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
       .flatMap(fs => filesUnder(dataDir.resolve(fs)))
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map(_.toAbsolutePath.toString).sorted
-    val dir = Paths.get(root, "_symlink_format_manifest")
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".tmp-${UUID.randomUUID()}")
-    Files.writeString(tmp, files.mkString("", "\n", "\n"))
-    Files.move(tmp, dir.resolve("manifest"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    MetaJson.replace(Paths.get(root, "_symlink_format_manifest", "manifest"),
+      files.mkString("", "\n", "\n"))
     files.length.toLong
   }
 
@@ -565,12 +557,8 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * delete) re-apply it, so compacting a date-partitioned bronze keeps
     * partition pruning instead of silently flattening the layout. */
   def partitionLayout: Seq[String] =
-    if (!Files.exists(layoutPath)) Nil
-    else PartitionLayoutJson.findFirstMatchIn(Files.readString(layoutPath))
-      .map(m => Option(m.group(1)).filter(_.nonEmpty)
-        .map(_.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")))
-        .getOrElse(Nil))
-      .getOrElse(sys.error(s"bad layout file at $layoutPath"))
+    MetaJson.readFile(layoutPath)(MetaJson.strs(_, "partitionBy"))
+      .getOrElse(Nil)
 
   /** `allowExisting=true` (append): an existing recorded layout must
     * match; `false` (overwrite): the new layout replaces the record. */
@@ -592,12 +580,8 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
       return
     }
     if (cols == cur) return
-    Files.createDirectories(Paths.get(root))
     if (cols.isEmpty) { Files.deleteIfExists(layoutPath); return }
-    val tmp = Paths.get(root, s".tmp-layout-${UUID.randomUUID()}")
-    Files.writeString(tmp,
-      s"""{"partitionBy":${cols.map(c => "\"" + c + "\"").mkString("[", ",", "]")}}""")
-    Files.move(tmp, layoutPath, StandardCopyOption.ATOMIC_MOVE)
+    MetaJson.write(layoutPath, MetaJson.obj("partitionBy" -> cols))
   }
 
   /** Iceberg-style partition evolution (Iceberg spec §Partition
@@ -652,10 +636,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
   private def checksPath: Path = Paths.get(root, "_checks.json")
 
   /** Declared CHECK constraints as (name, SQL expression) pairs. */
-  def checks: Seq[(String, String)] =
-    if (!Files.exists(checksPath)) Nil
-    else CheckJson.findAllMatchIn(Files.readString(checksPath))
-      .map(m => (m.group(1), m.group(2))).toSeq
+  def checks: Seq[(String, String)] = namedExprs(checksPath, "checks")
 
   /** Delta `ALTER TABLE … ADD CONSTRAINT name CHECK (expr)` analog. The
     * CURRENT snapshot must already satisfy the constraint — one
@@ -676,19 +657,11 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
         s"cannot add CHECK $name ($sqlExpr) at $root: " +
           s"$bad existing row(s) violate it")
     }
-    writeNamedExprs(checksPath, "checks", checks :+ (name, sqlExpr))
+    setNamedExprs(checksPath, "checks", checks :+ (name, sqlExpr))
   }
 
   def dropCheck(name: String): Unit =
-    writeNamedExprs(checksPath, "checks", checks.filterNot(_._1 == name))
-
-  /** CREATE OR REPLACE reset: a replaced table is a fresh table (Delta
-    * semantics) — its constraint set starts empty. */
-  private[tables] def clearChecks(): Unit = {
-    Files.deleteIfExists(checksPath)
-    Files.deleteIfExists(keysPath)
-    ()
-  }
+    setNamedExprs(checksPath, "checks", checks.filterNot(_._1 == name))
 
   // ------------------------------------------------- informational keys
 
@@ -701,10 +674,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * yields wrong results there too). Stored as (name, spec) with spec
     *   `PRIMARY KEY (c1,c2)[ RELY]`
     *   `FOREIGN KEY (c1,…) REFERENCES <root> (d1,…)[ RELY]` */
-  def keyConstraints: Seq[(String, String)] =
-    if (!Files.exists(keysPath)) Nil
-    else CheckJson.findAllMatchIn(Files.readString(keysPath))
-      .map(m => (m.group(1), m.group(2))).toSeq
+  def keyConstraints: Seq[(String, String)] = namedExprs(keysPath, "keys")
 
   /** The declared primary key: (name, columns, rely). At most one. */
   def primaryKey: Option[(String, Seq[String], Boolean)] =
@@ -738,7 +708,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     val missing = cols.filterNot(read.columns.contains)
     require(missing.isEmpty,
       s"PRIMARY KEY: no column(s) ${missing.mkString(",")} at $root")
-    writeNamedExprs(keysPath, "keys", keyConstraints :+
+    setNamedExprs(keysPath, "keys", keyConstraints :+
       (name, s"PRIMARY KEY (${cols.mkString(",")})" +
         (if (rely) " RELY" else "")))
   }
@@ -757,7 +727,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     val missing = cols.filterNot(read.columns.contains)
     require(missing.isEmpty,
       s"FOREIGN KEY: no column(s) ${missing.mkString(",")} at $root")
-    writeNamedExprs(keysPath, "keys", keyConstraints :+
+    setNamedExprs(keysPath, "keys", keyConstraints :+
       (name, s"FOREIGN KEY (${cols.mkString(",")}) REFERENCES $refRoot " +
         s"(${refCols.mkString(",")})" + (if (rely) " RELY" else "")))
   }
@@ -768,7 +738,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     val cur = keyConstraints
     val next = cur.filterNot(_._1 == name)
     if (next.length == cur.length) false
-    else { writeNamedExprs(keysPath, "keys", next); true }
+    else { setNamedExprs(keysPath, "keys", next); true }
   }
 
   // ------------------------------------------------------- table properties
@@ -793,9 +763,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * Persisted like checks/generated columns: one small JSON file,
     * atomic replace, carried by [[shallowCloneTo]]. */
   def properties: Map[String, String] =
-    if (!Files.exists(propsPath)) Map.empty
-    else CheckJson.findAllMatchIn(Files.readString(propsPath))
-      .map(m => (m.group(1), m.group(2))).toList.toMap
+    namedExprs(propsPath, "properties").toMap
 
   /** `ALTER TABLE … SET TBLPROPERTIES` — upsert semantics, idempotent.
     * `graft.enableChangeFeed` is live like Delta's
@@ -805,7 +773,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
   def setProperties(kvs: Map[String, String]): Unit = {
     kvs.foreach { case (k, v) => requireCleanNamedExpr(k, v, "property") }
     val merged = properties ++ kvs
-    writeNamedExprs(propsPath, "properties",
+    setNamedExprs(propsPath, "properties",
       merged.toSeq.sortBy(_._1))
     kvs.get(CdfProp).foreach { v =>
       if (v.equalsIgnoreCase("true")) enableChangeFeed()
@@ -820,20 +788,9 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * marker must not be flipped off by an unrelated IF EXISTS sweep). */
   def unsetProperties(keys: Seq[String]): Unit = {
     val hadCdfProp = properties.contains(CdfProp)
-    writeNamedExprs(propsPath, "properties",
+    setNamedExprs(propsPath, "properties",
       properties.removedAll(keys).toSeq.sortBy(_._1))
     if (keys.contains(CdfProp) && hadCdfProp) disableChangeFeed()
-  }
-
-  /** CREATE OR REPLACE reset: a replaced table starts with no declared
-    * properties (Delta semantics). A PROPERTY-DRIVEN change feed goes
-    * down with its property — fresh-table semantics — while a marker
-    * enabled purely through the API (no property on record) survives,
-    * it is an independent surface. */
-  private[tables] def clearProperties(): Unit = {
-    val hadCdfProp = properties.contains(CdfProp)
-    Files.deleteIfExists(propsPath)
-    if (hadCdfProp) disableChangeFeed()
   }
 
   /** True iff property `key` is declared `true` (case-insensitive). */
@@ -850,24 +807,24 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
       s"$what: table at $root is append-only (graft.appendOnly=true); " +
         "UNSET the property to mutate existing rows")
 
-  /** Shared persistence for the (name, SQL expr) registries — CHECK
-    * constraints and generated columns use the identical hand-rolled
-    * JSON + atomic-replace scheme. */
   private def requireCleanNamedExpr(name: String, sqlExpr: String,
                                     what: String): Unit =
     require(!name.contains("\"") && !sqlExpr.contains("\"") &&
       !name.contains("\n") && !sqlExpr.contains("\n"),
       s"$what name/expr must not contain double quotes or newlines")
 
-  private def writeNamedExprs(path: Path, key: String,
-                              entries: Seq[(String, String)]): Unit = {
-    Files.createDirectories(Paths.get(root))
-    val body = entries.map { case (n, e) => s"""{"name":"$n","expr":"$e"}""" }
-      .mkString(s"""{"$key":[""", ",", "]}")
-    val tmp = Paths.get(root, s".tmp-$key-${UUID.randomUUID()}")
-    Files.writeString(tmp, body)
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
-  }
+  /** The (name, SQL text) registries — checks, keys, properties,
+    * generated columns and defaults — share one record,
+    * `{"<key>":[{"name":…,"expr":…},…]}`, replaced whole. */
+  private def namedExprs(path: Path, key: String): Seq[(String, String)] =
+    MetaJson.readFile(path)(MetaJson.objs(_, key)
+      .map(e => (MetaJson.str(e, "name"), MetaJson.str(e, "expr"))))
+      .getOrElse(Nil)
+
+  private def setNamedExprs(path: Path, key: String,
+                            entries: Seq[(String, String)]): Unit =
+    MetaJson.write(path, MetaJson.obj(key -> entries.map { case (n, e) =>
+      MetaJson.obj("name" -> n, "expr" -> e) }))
 
   /** Per-row enforcement projection: rows passing every check (or
     * evaluating it to NULL — SQL CHECK semantics, unknown passes) stream
@@ -912,9 +869,10 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
   /** Declared identity columns as (name, start, step) — Delta's
     * `GENERATED ALWAYS AS IDENTITY` surface. */
   def identityColumns: Seq[(String, Long, Long)] =
-    if (!Files.exists(identityPath)) Nil
-    else IdentityJson.findAllMatchIn(Files.readString(identityPath))
-      .map(m => (m.group(1), m.group(2).toLong, m.group(3).toLong)).toSeq
+    MetaJson.readFile(identityPath)(MetaJson.objs(_, "identity").map(e =>
+      (MetaJson.str(e, "name"), MetaJson.long(e, "start"),
+        MetaJson.long(e, "step"))))
+      .getOrElse(Nil)
 
   /** Declare `name` (an existing BIGINT column) GENERATED ALWAYS AS
     * IDENTITY: appends/overwrites must NOT supply it — each write
@@ -925,14 +883,9 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     require(!identityColumns.exists(_._1 == name),
       s"identity column $name already declared at $root")
     val all = identityColumns :+ ((name, start, step))
-    val body = all.map { case (n, st, sp) =>
-      s"""{"name":"$n","start":$st,"step":$sp}"""
-    }.mkString("""{"identity":[""", ",", "]}")
-    val tmp = Paths.get(root, s".tmp-identity-${UUID.randomUUID()}")
-    Files.createDirectories(Paths.get(root))
-    Files.writeString(tmp, body)
-    Files.move(tmp, identityPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    MetaJson.write(identityPath, MetaJson.obj("identity" -> all.map {
+      case (n, st, sp) => MetaJson.obj("name" -> n, "start" -> st, "step" -> sp)
+    }))
   }
 
   /** REPLACE semantics: drop the bucket layout so the replacement's own
@@ -943,17 +896,17 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     ()
   }
 
-  private[tables] def clearIdentity(): Unit = {
-    Files.deleteIfExists(identityPath)
-    Files.deleteIfExists(identityHwmPath)
-    ()
-  }
-
-  /** REPLACE TABLE semantics: generated-column declarations belong to
-    * the definition being replaced. */
-  private[tables] def clearGeneratedColumns(): Unit = {
-    Files.deleteIfExists(generatedPath)
-    ()
+  /** CREATE OR REPLACE reset: a replaced table is a fresh table (Delta
+    * semantics), so the replaced definition's identity columns (with
+    * their high-water mark), generated columns, defaults, constraints
+    * and properties go. A PROPERTY-DRIVEN change feed goes down with its
+    * property, while a marker enabled purely through the API (no
+    * property on record) survives: it is an independent surface. */
+  private[tables] def clearDefinition(): Unit = {
+    val hadCdfProp = properties.contains(CdfProp)
+    Seq(identityPath, identityHwmPath, generatedPath, defaultsPath,
+      checksPath, keysPath, propsPath).foreach(Files.deleteIfExists(_))
+    if (hadCdfProp) disableChangeFeed()
   }
 
   /** Reserve `n` consecutive slots for identity column `name`; returns
@@ -982,11 +935,11 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
         val buf = java.nio.ByteBuffer.allocate(ch.size().toInt)
         ch.read(buf, 0L)
         val txt = new String(buf.array(), java.nio.charset.StandardCharsets.UTF_8)
-        val hwm = HwmJson.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toLong).toMap
+        val hwm = MetaJson.decodeLines(txt, s"bad record at $identityHwmPath")(
+          e => MetaJson.str(e, "name") -> MetaJson.long(e, "next")).toMap
         val next = hwm.getOrElse(name, start)
         val out = (hwm + (name -> (next + step * n))).map { case (k, v) =>
-          s"""{"name":"$k","next":$v}"""
+          MetaJson.render(MetaJson.obj("name" -> k, "next" -> v))
         }.mkString("\n")
         val bytes = out.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         ch.truncate(0L)
@@ -1049,9 +1002,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
 
   /** Declared generated columns as (name, SQL expression) pairs. */
   def generatedColumns: Seq[(String, String)] =
-    if (!Files.exists(generatedPath)) Nil
-    else CheckJson.findAllMatchIn(Files.readString(generatedPath))
-      .map(m => (m.group(1), m.group(2))).toSeq
+    namedExprs(generatedPath, "generated")
 
   /** Delta `GENERATED ALWAYS AS (expr)` analog: on every write, a batch
     * MISSING the column gets it computed inside the write job (one
@@ -1077,7 +1028,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
         s"cannot add generated column $name ($sqlExpr) at $root: " +
           s"$bad existing row(s) disagree with the expression")
     }
-    writeNamedExprs(generatedPath, "generated",
+    setNamedExprs(generatedPath, "generated",
       generatedColumns :+ (name, sqlExpr))
   }
 
@@ -1104,9 +1055,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * scale. Expressions must be constant-foldable (no column references)
     * — validated at DDL time with a row-free evaluation. */
   def defaultColumns: Seq[(String, String)] =
-    if (!Files.exists(defaultsPath)) Nil
-    else CheckJson.findAllMatchIn(Files.readString(defaultsPath))
-      .map(m => (m.group(1), m.group(2))).toSeq
+    namedExprs(defaultsPath, "defaults")
 
   /** `ALTER TABLE … ALTER COLUMN c SET DEFAULT expr` (upsert). */
   def setDefault(name: String, sqlExpr: String): Unit = {
@@ -1118,18 +1067,14 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     // constant-foldability: a default referencing a column would evaluate
     // here against no rows and fail loudly (Spark's DEFAULT contract)
     spark.sql(s"SELECT ($sqlExpr)").collect()
-    writeNamedExprs(defaultsPath, "defaults",
+    setNamedExprs(defaultsPath, "defaults",
       defaultColumns.filterNot(_._1 == name) :+ (name, sqlExpr))
   }
 
   /** `ALTER TABLE … ALTER COLUMN c DROP DEFAULT` — unknown is a no-op. */
   def dropDefault(name: String): Unit =
-    writeNamedExprs(defaultsPath, "defaults",
+    setNamedExprs(defaultsPath, "defaults",
       defaultColumns.filterNot(_._1 == name))
-
-  private[tables] def clearDefaults(): Unit = {
-    Files.deleteIfExists(defaultsPath); ()
-  }
 
   // ------------------------------------------------------------ bucket spec
 
@@ -1138,13 +1083,6 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
   def bucketSpec: Option[BucketSpec] =
     if (Files.exists(specPath)) Some(BucketSpec.parse(Files.readString(specPath)))
     else None
-
-  private def writeSpec(s: BucketSpec): Unit = {
-    Files.createDirectories(Paths.get(root))
-    val tmp = Paths.get(root, s".tmp-spec-${UUID.randomUUID()}")
-    Files.writeString(tmp, s.toJson)
-    Files.move(tmp, specPath, StandardCopyOption.ATOMIC_MOVE)
-  }
 
   /** Bucket id a file-set covers, if it is a bucketed file-set. */
   private def bucketOf(fileSet: String): Option[Int] = fileSet match {
@@ -1596,17 +1534,21 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
 
   /** Column-mapping ledger ops, version-ascending: renames carry
     * `Some(to)`, drops `None`. The mapping is LOGICAL — no file is
-    * rewritten; reads project it. */
+    * rewritten; reads project it. One line per op:
+    * `{"v":…,"from":…,"to":…}` or `{"v":…,"drop":…}`. */
   private def colmapOps: Seq[(Long, String, Option[String])] =
-    if (!Files.exists(colmapPath)) Nil
-    else {
-      val txt = Files.readString(colmapPath)
-      val renames = RenameJson.findAllMatchIn(txt)
-        .map(m => (m.group(1).toLong, m.group(2), Option(m.group(3)))).toSeq
-      val drops = DropJson.findAllMatchIn(txt)
-        .map(m => (m.group(1).toLong, m.group(2), None: Option[String])).toSeq
-      (renames ++ drops).sortBy(_._1)
-    }
+    MetaJson.readLines(colmapPath) { e =>
+      val v = MetaJson.long(e, "v")
+      if (e.has("drop")) (v, MetaJson.str(e, "drop"), None)
+      else (v, MetaJson.str(e, "from"), Some(MetaJson.str(e, "to")))
+    }.sortBy(_._1)
+
+  private def writeColmap(path: Path,
+                          ops: Seq[(Long, String, Option[String])]): Unit =
+    MetaJson.writeLines(path, ops.map {
+      case (v, f, Some(to)) => MetaJson.obj("v" -> v, "from" -> f, "to" -> to)
+      case (v, f, None)     => MetaJson.obj("v" -> v, "drop" -> f)
+    }, terminated = true)
 
   def columnRenames: Seq[(Long, String, String)] =
     colmapOps.collect { case (v, f, Some(t)) => (v, f, t) }
@@ -1619,16 +1561,6 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * version therefore shows the pre-DDL shape. */
   private def activeRenames(v: Long): Seq[(String, Option[String])] =
     colmapOps.filter(_._1 <= v).map { case (_, f, t) => (f, t) }
-
-  private def appendColmapLine(line: String): Unit = {
-    val prev = if (Files.exists(colmapPath)) Files.readString(colmapPath).trim
-               else ""
-    val all = (if (prev.isEmpty) "" else prev + "\n") + line + "\n"
-    val tmp = colmapPath.resolveSibling(s".colmap-${UUID.randomUUID()}")
-    Files.writeString(tmp, all)
-    Files.move(tmp, colmapPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
 
   /** Shared refusals for mapping DDL: the column must not be
     * load-bearing elsewhere in the table's metadata. (CDF tables are
@@ -1724,11 +1656,11 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     requireUnencumbered(from, "RENAME COLUMN")
     val entry = commit("rename_column", snap.fileSets,
       basedOn = Some(snap.version), dvs = snap.dvs)
-    appendColmapLine(s"""{"v":${entry.version},"from":"$from","to":"$to"}""")
+    writeColmap(colmapPath, colmapOps :+ ((entry.version, from, Some(to))))
     // a DEFAULT rides the rename (metadata re-key, like Delta under
     // column mapping)
     if (defaultColumns.exists(_._1 == from))
-      writeNamedExprs(defaultsPath, "defaults",
+      setNamedExprs(defaultsPath, "defaults",
         defaultColumns.map { case (n, e) => (if (n == from) to else n, e) })
     // declared cluster columns re-key too — a stale name would fail
     // every later bare OPTIMIZE
@@ -1768,7 +1700,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     requireUnencumbered(c, "DROP COLUMN")
     val entry = commit("drop_column", snap.fileSets,
       basedOn = Some(snap.version), dvs = snap.dvs)
-    appendColmapLine(s"""{"v":${entry.version},"drop":"$c"}""")
+    writeColmap(colmapPath, colmapOps :+ ((entry.version, c, None)))
     dropDefault(c) // a dropped column's DEFAULT goes with it
     // …and it leaves the cluster declaration (empty list → unset)
     properties.get(ClusterByProp).foreach { cs =>
@@ -1907,10 +1839,9 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * ([[readChangeFeed]] synthesizes their inserts from the file-set
     * diff, Delta's own optimization). Costs one extra write of the
     * CHANGED rows per commit — O(delta), never O(table). */
-  def enableChangeFeed(): Unit = {
-    Files.createDirectories(Paths.get(root))
-    if (!Files.exists(cdfMarker)) Files.writeString(cdfMarker, "{\"enabled\":true}")
-  }
+  def enableChangeFeed(): Unit =
+    if (!Files.exists(cdfMarker))
+      MetaJson.write(cdfMarker, MetaJson.obj("enabled" -> true))
   def disableChangeFeed(): Unit = { Files.deleteIfExists(cdfMarker); () }
   def changeFeedEnabled: Boolean = Files.exists(cdfMarker)
 
@@ -2382,18 +2313,11 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
       .map(f => f.name -> f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
       .toMap
     def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    // Sidecars land via temp-name + atomic rename: most writes happen
-    // before the commit that makes a file-set visible, but ANALYZE
+    // Sidecars land via atomic replace: most writes happen before the
+    // commit that makes a file-set visible, but ANALYZE
     // ([[computeStats]]) backfills onto file-sets readers are already
     // scanning, and a torn _fstats.tsv read there would yield wrong
     // min/max — silent wrong skipping, not a crash.
-    def put(target: Path, write: Path => Unit): Unit = {
-      val tmp = target.resolveSibling(
-        s".${target.getFileName}.tmp-${UUID.randomUUID()}")
-      write(tmp)
-      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-    }
     val expected = fileSets.toSet
     rows.foreach { row =>
       val fs = row.getString(0)
@@ -2407,13 +2331,13 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
           if (mn == null || mx == null) None // all-null column: no skipping
           else Some(s"${enc(c)}\t${enc(mn)}\t${enc(mx)}\t${numeric(c)}")
         }
-        put(dataDir.resolve(fs).resolve("_fstats.tsv"),
-          Files.writeString(_, lines.mkString("\n")))
+        MetaJson.replace(dataDir.resolve(fs).resolve("_fstats.tsv"),
+          lines.mkString("\n"))
       }
       bloomFor.zipWithIndex.foreach { case (c, i) =>
         Option(row.getAs[Array[Byte]](1 + 2 * statsFor.length + i))
-          .foreach(bytes => put(
-            dataDir.resolve(fs).resolve(s"_fbloom2.${enc(c)}"),
+          .foreach(bytes => MetaJson.replaceWith(
+            dataDir.resolve(fs).resolve(s"_fbloom2.${enc(c)}"))(
             Files.write(_, bytes)))
       }
     }
@@ -2817,14 +2741,8 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     // the source's rename/drop versions would otherwise sit in the
     // future and silently deactivate the mapping (old physical names
     // would resurface in every clone read)
-    if (Files.exists(colmapPath)) {
-      val clamped = colmapOps.map {
-        case (_, f, Some(to)) => s"""{"v":0,"from":"$f","to":"$to"}"""
-        case (_, f, None)     => s"""{"v":0,"drop":"$f"}"""
-      }.mkString("", "\n", "\n")
-      Files.writeString(
-        Paths.get(targetRoot).resolve(colmapPath.getFileName.toString), clamped)
-    }
+    if (Files.exists(colmapPath))
+      writeColmap(t.colmapPath, colmapOps.map { case (_, f, to) => (0L, f, to) })
     src.fileSets.foreach(fs =>
       linkTree(dataDir.resolve(fs), t.dataDir.resolve(fs)))
     // deletion vectors are part of the snapshot: link them too (DV paths
@@ -3581,7 +3499,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
         .parquet(staging.toString).drop(BucketCol)
     try {
       if (bucketSpec.isEmpty) {
-        writeSpec(spec)
+        MetaJson.replace(specPath, spec.toJson)
         // the bucketed layout supersedes any recorded hive layout (the
         // migration rewrites every file-set as cells) — a stale
         // _layout.json would misreport partition_columns in detailDf and
@@ -4031,9 +3949,8 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * model trained on" stays reproducible while routine retention keeps
     * reclaiming everything untagged. Metadata-only at any table size. */
   def tags: Map[String, Long] =
-    if (!Files.exists(tagsPath)) Map.empty
-    else VersionedTable.TagJson.findAllMatchIn(Files.readString(tagsPath))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    MetaJson.readLines(tagsPath)(e =>
+      MetaJson.str(e, "name") -> MetaJson.long(e, "v")).toMap
 
   /** Pin `name` to `version` (default: the current head). Tag names are
     * immutable once created — re-pointing a release label silently is
@@ -4065,15 +3982,9 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     readVersion(tags.getOrElse(name,
       sys.error(s"no tag `$name` at $root")))
 
-  private def writeTags(m: Map[String, Long]): Unit = {
-    Files.createDirectories(Paths.get(root))
-    val tmp = Paths.get(root, s".tmp-tags-${UUID.randomUUID()}")
-    Files.writeString(tmp, m.toSeq.sortBy(_._1).map { case (n, v) =>
-      s"""{"name":"$n","v":$v}"""
-    }.mkString("\n"))
-    Files.move(tmp, tagsPath, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeTags(m: Map[String, Long]): Unit =
+    MetaJson.writeLines(tagsPath, m.toSeq.sortBy(_._1).map { case (n, v) =>
+      MetaJson.obj("name" -> n, "v" -> v) }, terminated = false)
 
   // ------------------------------------------------------------------ pins
   // Consumer retention floors. A pin is a durable name → version record
@@ -4110,9 +4021,10 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     listDir(pinsDir)
       .filterNot(_.getFileName.toString.startsWith(".")) // in-flight tmp
       .flatMap { p =>
-      try VersionedTable.PinJson.findFirstMatchIn(Files.readString(p))
-        .map(m => m.group(1) -> ((m.group(2).toLong, m.group(3).toLong)))
-      catch { case _: java.io.IOException => None } // races with drop
+      // a pin dropped mid-listing, or an undecodable one, holds no floor
+      scala.util.Try(MetaJson.decode(Files.readString(p), p.toString)(e =>
+        MetaJson.str(e, "name") ->
+          ((MetaJson.long(e, "v"), MetaJson.long(e, "ts"))))).toOption
     }.toMap
 
   /** Record (or advance) consumer `name`'s retention floor. Unlike
@@ -4145,12 +4057,8 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
       s"setPin: bad pin name `$name`")
     require(history.exists(_.version == version),
       s"setPin: no version $version at $root")
-    Files.createDirectories(pinsDir)
-    val tmp = pinsDir.resolve(s".tmp-${UUID.randomUUID()}")
-    Files.writeString(tmp,
-      s"""{"name":"$name","v":$version,"ts":$tsMillis}""")
-    Files.move(tmp, pinFile(name), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    MetaJson.write(pinFile(name),
+      MetaJson.obj("name" -> name, "v" -> version, "ts" -> tsMillis))
   }
 
   /** `VACUUM … FORCE EXPIRE PINS OLDER THAN`: drop every consumer pin
@@ -4220,11 +4128,6 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     * lease refuses loudly. */
   def claimSinkOwner(owner: String, takeover: Boolean = false): Unit = {
     require(owner.nonEmpty, "claimSinkOwner: empty owner id")
-    def write(opts: java.nio.file.OpenOption*): Unit = {
-      Files.createDirectories(Paths.get(root))
-      Files.write(sinkOwnerPath, owner.getBytes("UTF-8"), opts: _*)
-      ()
-    }
     sinkOwner match {
       case Some(cur) if cur == owner => () // our lease (restart)
       case Some(cur) if !takeover => sys.error(
@@ -4234,14 +4137,11 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
           "stop the other stream, or take the lease over explicitly with " +
           ".option(\"sinkOwnerTakeover\", \"true\"), or release it with " +
           "releaseSinkOwner().")
-      case Some(_) => // takeover: atomic replace
-        val tmp = Paths.get(root, s".tmp-owner-${UUID.randomUUID()}")
-        Files.writeString(tmp, owner)
-        Files.move(tmp, sinkOwnerPath, StandardCopyOption.REPLACE_EXISTING,
-          StandardCopyOption.ATOMIC_MOVE)
-        ()
+      case Some(_) => MetaJson.replace(sinkOwnerPath, owner) // takeover
       case None =>
-        try write(java.nio.file.StandardOpenOption.CREATE_NEW)
+        Files.createDirectories(Paths.get(root))
+        try Files.writeString(sinkOwnerPath, owner,
+          java.nio.file.StandardOpenOption.CREATE_NEW)
         catch {
           case _: java.nio.file.FileAlreadyExistsException =>
             // lost the atomic race — re-enter to refuse (or match) loudly
@@ -4428,9 +4328,6 @@ object VersionedTable {
       exprs: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Row =
     spark.sql("SELECT 1").select(exprs: _*).head()
 
-  private val TagJson = """\{"name":"([^"]+)","v":(\d+)\}""".r
-  private val PinJson = """\{"name":"([^"]+)","v":(\d+),"ts":(\d+)\}""".r
-
   /** How often a same-version [[setPin]] rewrites its pin file purely to
     * refresh the liveness timestamp (see [[setPin]]'s doc). One minute
     * bounds small-file churn for a per-batch streaming consumer while
@@ -4465,15 +4362,14 @@ object VersionedTable {
     * DV-bearing read. */
   private[graft] val DataDirMarker = "/data/"
 
-  /** Actions the change feed reports ZERO rows for: data-identical
-    * rewrites (compact/zorder/purge_dv) and metadata-only column/layout
-    * DDL (the mapping applies to every feed arm, so reads stay
-    * consistent ACROSS the DDL). ONE definition consulted by BOTH
-    * [[VersionedTable.readChangeFeed]] and
-    * [[VersionedTable.changeFeedExpressible]] — when the two were
-    * separate hand-maintained whitelists, any action added to one
-    * silently diverged the other (conservatively: a needless snapshot
-    * bootstrap — but only by luck of which side drifted). */
+  /** Actions that change NO row a reader can observe: data-identical
+    * rewrites (compact/zorder/purge_dv), metadata-only column/layout DDL
+    * and pin expiry. The change feed reports zero rows for them (the
+    * column mapping applies to every feed arm, so reads stay consistent
+    * ACROSS the DDL), and for the incremental maintainers
+    * (`plans.Maintained`, `plans.JoinMv`) a slice of only these is a
+    * covered-version bump. ONE definition, so [[readChangeFeed]],
+    * [[changeFeedExpressible]] and the maintainers cannot drift apart. */
   private[graft] val CdfNoChangeActions: Set[String] = Set(
     "compact", "zorder", "purge_dv",
     "rename_column", "drop_column", "set_partition_layout",
@@ -4606,149 +4502,70 @@ object VersionedTable {
     * far above any plausible concurrent-writer count. */
   private val MaxCommitRetries = 20
 
-  private val PartitionLayoutJson = """\{"partitionBy":\[([^\]]*)\]\}""".r
   /** Per-hwm-file JVM monitors for identity range reservation — see
     * reserveIdentity (OS file locks do not serialize same-JVM threads). */
   private val identityLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  private val CheckJson = """\{"name":"([^"]*)","expr":"([^"]*)"\}""".r
   private[tables] val PkSpec =
     """PRIMARY KEY \(([^)]*)\)( RELY)?""".r
   private[tables] val FkSpec =
     """FOREIGN KEY \(([^)]*)\) REFERENCES (.+) \(([^)]*)\)( RELY)?""".r
-  private val RenameJson = """\{"v":(\d+),"from":"([^"]*)","to":"([^"]*)"\}""".r
-  private val DropJson = """\{"v":(\d+),"drop":"([^"]*)"\}""".r
-  private val IdentityJson =
-    """\{"name":"([^"]*)","start":(-?\d+),"step":(-?\d+)\}""".r
-  private val HwmJson = """\{"name":"([^"]*)","next":(-?\d+)\}""".r
 
-  /** One version-log record. Minimal hand-rolled JSON (flat strings/longs
-    * only) to avoid pulling a JSON dependency. `txn` is the Delta
-    * `txnAppId`/`txnVersion` idempotence marker: riding IN the entry
-    * makes it atomic with the data commit, so "was this batch already
-    * applied?" and "what does the table contain?" can never disagree. */
   /** One staged-but-not-appended merge commit ([[VersionedTable
     * .mergePrepared]]): everything durable except the log entry. JSON
     * round-trips so a multi-table intent record can survive a crash
-    * and be rolled forward. */
+    * and be rolled forward. `mergePrepared` is public API, so a txn app
+    * id or a name here may hold any character; the codec escapes it and
+    * the record stays one line. */
   final case class PreparedCommit(action: String, consumed: Seq[String],
       produced: Seq[String], basedOn: Option[Long],
       txn: Option[(String, Long)], dvs: Seq[String], cdf: Option[String],
       cellRebase: Boolean, autoCompact: Boolean) {
-    def toJson: String = {
-      import PreparedCommit.esc
-      def arr(xs: Seq[String]) =
-        xs.map(f => "\"" + esc(f) + "\"").mkString("[", ",", "]")
-      val b = basedOn.fold("")(v => s""","basedOn":$v""")
-      val tx = txn.fold("") { case (app, v) =>
-        s""","txnApp":"${esc(app)}","txnVersion":$v""" }
-      val cd = cdf.fold("")(c => s""","cdf":"${esc(c)}"""")
-      s"""{"action":"${esc(action)}","consumed":${arr(consumed)},""" +
-        s""""produced":${arr(produced)}$b$tx,"dvs":${arr(dvs)}$cd,""" +
-        s""""cellRebase":$cellRebase,"autoCompact":$autoCompact}"""
-    }
+    def toJson: String = MetaJson.render(MetaJson.obj(
+      "action" -> action, "consumed" -> consumed, "produced" -> produced,
+      "basedOn" -> basedOn, "txnApp" -> txn.map(_._1),
+      "txnVersion" -> txn.map(_._2), "dvs" -> dvs, "cdf" -> cdf,
+      "cellRebase" -> cellRebase, "autoCompact" -> autoCompact))
   }
   object PreparedCommit {
-    // mergePrepared is public API: a caller-supplied txn appId (or a
-    // table root) may contain quotes, commas, backslashes — anything.
-    // toJson escapes per JSON; fromJson's string pattern is
-    // escape-aware, so round-trips are lossless and an intent line can
-    // never be rendered unparseable by its own writer. ']' escapes to
-    // the (JSON-legal) unicode form u005d because fromJson captures
-    // ARRAY bodies with "any non-']' char" — a raw ']' inside an
-    // element would end the body early and break the claimed lossless
-    // round-trip.
-    private[tables] def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case ']'  => "\\u005d"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    private def unesc(s: String): String = {
-      val b = new StringBuilder(s.length)
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '\\' && i + 1 < s.length) {
-          s.charAt(i + 1) match {
-            case '"'  => b += '"';  i += 2
-            case '\\' => b += '\\'; i += 2
-            case 'n'  => b += '\n'; i += 2
-            case 'r'  => b += '\r'; i += 2
-            case 't'  => b += '\t'; i += 2
-            case 'u' if i + 5 < s.length =>
-              b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-              i += 6
-            case o => b += o; i += 2
-          }
-        } else { b += c; i += 1 }
+    def fromJson(line: String): PreparedCommit =
+      MetaJson.decode(line, "unparseable PreparedCommit") { n =>
+        import MetaJson._
+        PreparedCommit(str(n, "action"), strs(n, "consumed"),
+          strs(n, "produced"), opt(n, "basedOn")(long), txnOf(n),
+          strs(n, "dvs"), opt(n, "cdf")(str), bool(n, "cellRebase"),
+          bool(n, "autoCompact"))
       }
-      b.result()
-    }
-    // a JSON string body: any run of non-quote/non-backslash chars or
-    // backslash-escaped pairs — raw commas and escaped quotes included
-    private val Str = """(?:[^"\\]|\\.)*"""
-    private val Elem = ("\"(" + Str + ")\"").r
-    private val Pattern =
-      ("""\{"action":"(""" + Str + """)","consumed":\[([^\]]*)\],""" +
-        """"produced":\[([^\]]*)\](?:,"basedOn":(\d+))?""" +
-        """(?:,"txnApp":"(""" + Str + """)","txnVersion":(\d+))?""" +
-        ""","dvs":\[([^\]]*)\]""" +
-        """(?:,"cdf":"(""" + Str + """)")?,"cellRebase":(true|false),""" +
-        """"autoCompact":(true|false)\}""").r
-    private def arr(s: String): Seq[String] =
-      if (s == null || s.isEmpty) Nil
-      else Elem.findAllMatchIn(s).map(m => unesc(m.group(1))).toSeq
-    def fromJson(line: String): PreparedCommit = line.trim match {
-      case Pattern(action, consumed, produced, basedOn, app, txv, dvs,
-          cdf, cell, ac) =>
-        PreparedCommit(unesc(action), arr(consumed), arr(produced),
-          Option(basedOn).map(_.toLong),
-          Option(app).map(a => (unesc(a), txv.toLong)), arr(dvs),
-          Option(cdf).map(unesc),
-          cell.toBoolean, ac.toBoolean)
-      case other => sys.error(s"unparseable PreparedCommit: $other")
-    }
   }
 
+  /** The flat `txnApp`/`txnVersion` pair of log entries and intent lines. */
+  private def txnOf(n: com.fasterxml.jackson.databind.JsonNode)
+      : Option[(String, Long)] =
+    MetaJson.opt(n, "txnApp")(MetaJson.str)
+      .map(app => (app, MetaJson.long(n, "txnVersion")))
+
+  /** One version-log record. `txn` is the Delta `txnAppId`/`txnVersion`
+    * idempotence marker: riding IN the entry makes it atomic with the
+    * data commit, so "was this batch already applied?" and "what does
+    * the table contain?" can never disagree. */
   final case class LogEntry(version: Long, tsMillis: Long, action: String,
                             fileSets: Seq[String],
                             txn: Option[(String, Long)] = None,
                             dvs: Seq[String] = Nil,
                             cdf: Option[String] = None) {
-    def toJson: String = {
-      def arr(xs: Seq[String]) = xs.map(f => "\"" + f + "\"")
-        .mkString("[", ",", "]")
-      // dvs/cdf omitted when empty: entries written by older code parse
-      // identically, and most entries carry neither
-      val dv = if (dvs.isEmpty) "" else s""","dvs":${arr(dvs)}"""
-      val cd = cdf.fold("")(c => s""","cdf":"$c"""")
-      val tx = txn.fold("") { case (app, v) =>
-        s""","txnApp":"$app","txnVersion":$v"""
-      }
-      s"""{"version":$version,"tsMillis":$tsMillis,"action":"$action","fileSets":${arr(fileSets)}$dv$cd$tx}"""
-    }
+    // dvs/cdf/txn omitted when empty: entries written by older code parse
+    // identically, and most entries carry none of them
+    def toJson: String = MetaJson.render(MetaJson.obj(
+      "version" -> version, "tsMillis" -> tsMillis, "action" -> action,
+      "fileSets" -> fileSets, "dvs" -> Some(dvs).filter(_.nonEmpty),
+      "cdf" -> cdf, "txnApp" -> txn.map(_._1), "txnVersion" -> txn.map(_._2)))
   }
   object LogEntry {
-    private val Pattern =
-      ("""\{"version":(\d+),"tsMillis":(\d+),"action":"([^"]*)","fileSets":\[([^\]]*)\]""" +
-        """(?:,"dvs":\[([^\]]*)\])?""" +
-        """(?:,"cdf":"([^"]*)")?""" +
-        """(?:,"txnApp":"([^"]*)","txnVersion":(\d+))?\}""").r
-    private def arr(s: String): Seq[String] =
-      if (s == null || s.isEmpty) Nil
-      else s.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    def parse(s: String): LogEntry = s.trim match {
-      case Pattern(v, ts, a, fs, dv, cd, txnApp, txnVer) =>
-        LogEntry(v.toLong, ts.toLong, a, arr(fs),
-          Option(txnApp).map(app => (app, txnVer.toLong)), arr(dv),
-          Option(cd))
-      case other => sys.error(s"bad log entry: $other")
+    def parse(s: String): LogEntry = MetaJson.decode(s, "bad log entry") { n =>
+      import MetaJson._
+      LogEntry(long(n, "version"), long(n, "tsMillis"), str(n, "action"),
+        strs(n, "fileSets"), txnOf(n), strs(n, "dvs"), opt(n, "cdf")(str))
     }
   }
 
@@ -4777,21 +4594,14 @@ object VersionedTable {
     require(numBuckets <= 99999, "numBuckets must be <= 99999")
     require(keys.intersect(partitionKeys).isEmpty,
       "partitionKeys must be disjoint from bucket keys")
-    def toJson: String = {
-      def arr(xs: Seq[String]) =
-        xs.map(k => "\"" + k + "\"").mkString("[", ",", "]")
-      s"""{"keys":${arr(keys)},"numBuckets":$numBuckets,"partitionKeys":${arr(partitionKeys)}}"""
-    }
+    def toJson: String = MetaJson.render(MetaJson.obj("keys" -> keys,
+      "numBuckets" -> numBuckets, "partitionKeys" -> partitionKeys))
   }
   object BucketSpec {
-    private val Pattern =
-      """\{"keys":\[([^\]]*)\],"numBuckets":(\d+)(?:,"partitionKeys":\[([^\]]*)\])?\}""".r
-    private def arr(s: String): Seq[String] =
-      if (s == null || s.isEmpty) Nil
-      else s.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    def parse(s: String): BucketSpec = s.trim match {
-      case Pattern(ks, n, ps) => BucketSpec(arr(ks), n.toInt, arr(ps))
-      case other => sys.error(s"bad bucket spec: $other")
+    def parse(s: String): BucketSpec = MetaJson.decode(s, "bad bucket spec") { n =>
+      BucketSpec(MetaJson.strs(n, "keys"),
+        Math.toIntExact(MetaJson.long(n, "numBuckets")),
+        MetaJson.strs(n, "partitionKeys"))
     }
   }
 }

@@ -114,4 +114,44 @@ class PropertiesSpec extends SparkSpec {
       assert(out.map(_.getInt(0)).toSet === rs.map(_._1).toSet)
     }
   }
+
+  test("property: log entries and intent lines round-trip arbitrary strings") {
+    import graft.tables.VersionedTable.{LogEntry, PreparedCommit}
+    // the characters a hand-rolled codec trips on: JSON syntax, escapes,
+    // every control character, separators and non-BMP code points
+    val char: Gen[String] = Gen.frequency(
+      4 -> Gen.oneOf("\"", "\\", "]", "[", ",", ";", "{", "}", ":", "/",
+        "\\u005d", "\u007f", "\u2028"),
+      2 -> Gen.choose(0, 0x1f).map(_.toChar.toString),
+      2 -> Gen.choose(0x10000, 0x10ffff).map(cp => new String(Character.toChars(cp))),
+      3 -> Gen.alphaNumChar.map(_.toString))
+    val str: Gen[String] =
+      Gen.choose(0, 10).flatMap(n => Gen.listOfN(n, char).map(_.mkString))
+    val strs: Gen[List[String]] = Gen.choose(0, 3).flatMap(Gen.listOfN(_, str))
+    val txn: Gen[Option[(String, Long)]] =
+      Gen.option(Gen.zip(str, Gen.choose(0L, Long.MaxValue)))
+    val entry: Gen[LogEntry] = for {
+      v <- Gen.choose(0L, Long.MaxValue); ts <- Gen.choose(0L, Long.MaxValue)
+      action <- str; sets <- strs; tx <- txn; dvs <- strs
+      cdf <- Gen.option(str)
+    } yield LogEntry(v, ts, action, sets, tx, dvs, cdf)
+    val intent: Gen[PreparedCommit] = for {
+      action <- str; consumed <- strs; produced <- strs
+      basedOn <- Gen.option(Gen.choose(0L, Long.MaxValue)); tx <- txn
+      dvs <- strs; cdf <- Gen.option(str)
+      cell <- Gen.oneOf(true, false); ac <- Gen.oneOf(true, false)
+    } yield PreparedCommit(action, consumed, produced, basedOn, tx, dvs, cdf,
+      cell, ac)
+    for (seed <- 1 to 200) {
+      def sample[A](g: Gen[A]): A = g(Gen.Parameters.default, Seed(seed.toLong))
+        .getOrElse(sys.error("gen failed"))
+      val e = sample(entry)
+      assert(LogEntry.parse(e.toJson) === e, e.toJson)
+      assert(!e.toJson.contains('\n'), "log records are line-framed")
+      val pc = sample(intent)
+      assert(PreparedCommit.fromJson(pc.toJson) === pc, pc.toJson)
+      // intent lines are `<root>\t<json>\n`-framed
+      assert(pc.toJson.forall(_ >= ' '), pc.toJson)
+    }
+  }
 }

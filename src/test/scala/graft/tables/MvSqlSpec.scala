@@ -491,7 +491,11 @@ class MvSqlSpec extends SparkSpec {
         "sum(pts) AS s FROM silver.jshf JOIN silver.jshd USING (team) " +
         "GROUP BY color")
       graft.ops.Sketches.create(src, cat.table("gold", "sk_smv"), Seq("k"), "v")
-      assert(sql.armMaterializedViews().contains("gold.mv_jsh_all"))
+      // the dim-filtered join MV is fresh but can never serve a query,
+      // so it is not reported armed
+      val armed = sql.armMaterializedViews()
+      assert(armed.contains("gold.mv_jsh_all"))
+      assert(!armed.contains("gold.mv_jsh"), s"armed: $armed")
       dim.append(Seq((3, "teal", true)).toDF("team", "color", "cur"))
       val rows = sql.sql("SHOW MATERIALIZED VIEWS")
         .as[(String, String, String, Long, Boolean, String)].collect()

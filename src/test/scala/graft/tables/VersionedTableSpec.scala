@@ -1145,6 +1145,38 @@ class VersionedTableSpec extends SparkSpec {
     assert(t2.lastTxnVersion(app) === Some(1L))
   }
 
+  test("a txn app id holding quotes, a backslash, a tab and ']' keeps the " +
+       "table readable and replay-safe, through a checkpoint and a " +
+       "prepared commit") {
+    val app = "job \"nightly\" \\ run\t]"
+    val t = VersionedTable(spark, tmpDir("vt-txn-quoted-"))
+    t.append(Seq((1, "a")).toDF("id", "v"), txn = Some((app, 0L)))
+    def readableAndIdempotent(): Unit = {
+      assert(t.history.map(_.txn) === Seq(Some((app, 0L))))
+      assert(t.read.count() === 1)
+      assert(t.lastTxnVersion(app) === Some(0L))
+      val replay = t.append(Seq((1, "a")).toDF("id", "v"), txn = Some((app, 0L)))
+      assert(replay.version === 0L && t.latestVersion === Some(0L))
+      assert(t.read.count() === 1)
+    }
+    readableAndIdempotent()
+    t.checkpointLog()
+    readableAndIdempotent()
+
+    val m = VersionedTable(spark, tmpDir("vt-txn-quoted-prep-"))
+    m.merge(Seq((1, "a")).toDF("k", "v"), Seq("k"), numBuckets = 2)
+    val pc = m.mergePrepared(Seq((2, "b")).toDF("k", "v"), Seq("k"),
+      numBuckets = 2, txn = Some((app, 1L))).get
+    val back = VersionedTable.PreparedCommit.fromJson(pc.toJson)
+    assert(back === pc)
+    m.commitPrepared(back)
+    assert(m.lastTxnVersion(app) === Some(1L))
+    assert(m.read.as[(Int, String)].collect().toSet === Set((1, "a"), (2, "b")))
+    val head = m.latestVersion
+    m.commitPrepared(back) // replayed intent: the marker makes it a no-op
+    assert(m.latestVersion === head)
+  }
+
   test("CHECK constraints refuse violating writes, Delta-style") {
     val t = VersionedTable(spark, tmpDir("vt-check-"))
     t.append(Seq((1, 10L)).toDF("id", "price"))
