@@ -145,7 +145,7 @@ final class Catalog(spark: SparkSession, root: String) {
   }
 
   private def writeViews(entries: Seq[(String, String)]): Unit =
-    MetaJson.replace(viewsPath, entries.map { case (n, s) =>
+    AtomicFile.replace(viewsPath, entries.map { case (n, s) =>
       s"$n\t${java.util.Base64.getEncoder.encodeToString(
         s.getBytes(java.nio.charset.StandardCharsets.UTF_8))}\n"
     }.mkString)
@@ -240,7 +240,7 @@ final class Catalog(spark: SparkSession, root: String) {
     }
 
   private def writeGrants(entries: Seq[(String, String, String, String)]): Unit =
-    MetaJson.replace(grantsPath,
+    AtomicFile.replace(grantsPath,
       entries.map { case (p, t, o, g) => s"$p\t$t\t$o\t$g\n" }.mkString)
 
   /** UC-style conjunctive authorization: `principal` may perform

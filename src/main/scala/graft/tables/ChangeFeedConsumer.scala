@@ -57,7 +57,7 @@ object ChangeFeedConsumer {
       try src.setPin(s"cdc:$checkpointDir", last)
       catch { case scala.util.control.NonFatal(_) => () }
     f(src.readChangeFeed(last, Some(latest)), last, latest)
-    MetaJson.replace(posFile, latest.toString)
+    AtomicFile.replace(posFile, latest.toString)
     Some((last, latest))
   }
 

@@ -4,23 +4,30 @@ import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.UUID
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 import scala.util.control.NonFatal
 
 /** The one JSON codec for the version log, prepared-commit intent lines
   * and every table-metadata file: one shared Jackson mapper over the
-  * tree model, plus the one atomic-replace file write.
+  * tree model; files are written through [[AtomicFile]].
   *
-  * Writers list their fields in order ([[obj]]), and the compact
-  * rendering is byte-for-byte what the earlier string-built records
-  * were for every value those could carry. Strings escape per JSON
-  * (quotes, backslashes, control characters), so a rendered record
-  * never holds a raw newline and stays one line of a line-framed file.
-  * Readers look fields up by name and fail loudly on a missing or
-  * mistyped one; raw control characters inside strings (which older
-  * writers emitted unescaped) still parse. */
+  * Writers list their fields in order ([[obj]]). Strings escape per JSON
+  * (quotes, backslashes, control characters), so a rendered record never
+  * holds a raw newline and stays one line of a line-framed file. Readers
+  * look fields up by name and fail loudly on a missing or mistyped one;
+  * raw control characters inside strings still parse.
+  *
+  * Log entries and side files written before this codec stored every
+  * string raw, and their readers took each backslash literally. So a
+  * record whose rendering needs an escape (it then holds a backslash)
+  * gets a last field `"escaped":true`, and an unmarked record holding a
+  * backslash is read with its backslashes literal: legacy `it\'s` and
+  * `\\d` read back as written. A record whose strings need no escape
+  * renders byte-for-byte as the older writers rendered it. Intent lines
+  * always escaped, so they are plain JSON ([[json]], `decode(plain =
+  * true)`). */
 private[graft] object MetaJson {
 
   private val mapper = JsonMapper.builder()
@@ -28,6 +35,7 @@ private[graft] object MetaJson {
     .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
     .build()
   private val nodes = mapper.getNodeFactory
+  private val Escaped = "escaped"
 
   /** An object whose fields render in the order given. Values are
     * strings, longs, ints, booleans, nodes, or sequences of those
@@ -50,13 +58,25 @@ private[graft] object MetaJson {
     o
   }
 
-  def render(n: JsonNode): String = mapper.writeValueAsString(n)
+  def json(n: JsonNode): String = mapper.writeValueAsString(n)
 
-  /** Parse one object record and read it with `f`; `what` names the
-    * record in the error when either fails. */
-  def decode[A](text: String, what: => String)(f: JsonNode => A): A =
+  /** A log or side-file record, marked when it carries an escape. */
+  def render(n: ObjectNode): String = {
+    val s = json(n)
+    if (s.indexOf('\\') < 0) s else json(n.put(Escaped, true))
+  }
+
+  /** Parse one record and read it with `f`; `what` names the record in
+    * the error when either fails. A `plain` record (an intent line) takes
+    * every backslash as a JSON escape; others follow the marker rule. */
+  def decode[A](text: String, what: => String, plain: Boolean = false)
+      (f: JsonNode => A): A =
     try {
-      val n = mapper.readTree(text)
+      def parse(t: String) = mapper.readTree(t)
+      val n =
+        if (plain || text.indexOf('\\') < 0) parse(text)
+        else Try(parse(text)).filter(_.has(Escaped))
+          .getOrElse(parse(text.replace("\\", "\\\\")))
       require(n != null && n.isObject, "not a JSON object")
       f(n)
     } catch {
@@ -95,26 +115,10 @@ private[graft] object MetaJson {
     if (!Files.exists(path)) Nil
     else decodeLines(Files.readString(path), s"bad record at $path")(f)
 
-  def write(path: Path, n: JsonNode): Unit = replace(path, render(n))
+  def write(path: Path, n: ObjectNode): Unit = AtomicFile.replace(path, render(n))
 
   /** One record per line; `terminated` ends the last line too. */
-  def writeLines(path: Path, ns: Seq[JsonNode], terminated: Boolean): Unit =
-    replace(path, ns.map(render).mkString("", "\n", if (terminated) "\n" else ""))
-
-  def replace(path: Path, text: String): Unit =
-    replaceWith(path)(Files.writeString(_, text))
-
-  /** The one atomic replace for metadata files: `write` fills a
-    * `.`-prefixed temp sibling (listings and parquet readers skip it),
-    * which then moves over `path`; the temp is deleted when the write or
-    * the move fails. */
-  def replaceWith(path: Path)(write: Path => Any): Unit = {
-    Files.createDirectories(path.getParent)
-    val tmp = path.resolveSibling(s".${path.getFileName}.tmp-${UUID.randomUUID()}")
-    try {
-      write(tmp)
-      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    } finally { Files.deleteIfExists(tmp); () }
-  }
+  def writeLines(path: Path, ns: Seq[ObjectNode], terminated: Boolean): Unit =
+    AtomicFile.replace(path,
+      ns.map(render).mkString("", "\n", if (terminated) "\n" else ""))
 }

@@ -162,7 +162,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     val h = historyOnce()
     if (h.isEmpty) return
     val v = h.last.version
-    MetaJson.replace(logDir.resolve(f"$v%020d.checkpoint"),
+    AtomicFile.replace(logDir.resolve(f"$v%020d.checkpoint"),
       h.map(_.toJson).mkString("", "\n", "\n"))
     val stale = listDir(logDir).filter { p =>
       val n = p.getFileName.toString
@@ -322,7 +322,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
       .flatMap(fs => filesUnder(dataDir.resolve(fs)))
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map(_.toAbsolutePath.toString).sorted
-    MetaJson.replace(Paths.get(root, "_symlink_format_manifest", "manifest"),
+    AtomicFile.replace(Paths.get(root, "_symlink_format_manifest", "manifest"),
       files.mkString("", "\n", "\n"))
     files.length.toLong
   }
@@ -2331,12 +2331,12 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
           if (mn == null || mx == null) None // all-null column: no skipping
           else Some(s"${enc(c)}\t${enc(mn)}\t${enc(mx)}\t${numeric(c)}")
         }
-        MetaJson.replace(dataDir.resolve(fs).resolve("_fstats.tsv"),
+        AtomicFile.replace(dataDir.resolve(fs).resolve("_fstats.tsv"),
           lines.mkString("\n"))
       }
       bloomFor.zipWithIndex.foreach { case (c, i) =>
         Option(row.getAs[Array[Byte]](1 + 2 * statsFor.length + i))
-          .foreach(bytes => MetaJson.replaceWith(
+          .foreach(bytes => AtomicFile.replaceWith(
             dataDir.resolve(fs).resolve(s"_fbloom2.${enc(c)}"))(
             Files.write(_, bytes)))
       }
@@ -3499,7 +3499,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
         .parquet(staging.toString).drop(BucketCol)
     try {
       if (bucketSpec.isEmpty) {
-        MetaJson.replace(specPath, spec.toJson)
+        AtomicFile.replace(specPath, spec.toJson)
         // the bucketed layout supersedes any recorded hive layout (the
         // migration rewrites every file-set as cells) — a stale
         // _layout.json would misreport partition_columns in detailDf and
@@ -4021,10 +4021,11 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
     listDir(pinsDir)
       .filterNot(_.getFileName.toString.startsWith(".")) // in-flight tmp
       .flatMap { p =>
-      // a pin dropped mid-listing, or an undecodable one, holds no floor
-      scala.util.Try(MetaJson.decode(Files.readString(p), p.toString)(e =>
-        MetaJson.str(e, "name") ->
-          ((MetaJson.long(e, "v"), MetaJson.long(e, "ts"))))).toOption
+      // a pin dropped mid-listing holds no floor; an undecodable one
+      // fails loudly rather than silently releasing its versions to vacuum
+      try MetaJson.readFile(p)(e => MetaJson.str(e, "name") ->
+        ((MetaJson.long(e, "v"), MetaJson.long(e, "ts"))))
+      catch { case _: java.nio.file.NoSuchFileException => None }
     }.toMap
 
   /** Record (or advance) consumer `name`'s retention floor. Unlike
@@ -4137,7 +4138,7 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
           "stop the other stream, or take the lease over explicitly with " +
           ".option(\"sinkOwnerTakeover\", \"true\"), or release it with " +
           "releaseSinkOwner().")
-      case Some(_) => MetaJson.replace(sinkOwnerPath, owner) // takeover
+      case Some(_) => AtomicFile.replace(sinkOwnerPath, owner) // takeover
       case None =>
         Files.createDirectories(Paths.get(root))
         try Files.writeString(sinkOwnerPath, owner,
@@ -4522,7 +4523,7 @@ object VersionedTable {
       produced: Seq[String], basedOn: Option[Long],
       txn: Option[(String, Long)], dvs: Seq[String], cdf: Option[String],
       cellRebase: Boolean, autoCompact: Boolean) {
-    def toJson: String = MetaJson.render(MetaJson.obj(
+    def toJson: String = MetaJson.json(MetaJson.obj(
       "action" -> action, "consumed" -> consumed, "produced" -> produced,
       "basedOn" -> basedOn, "txnApp" -> txn.map(_._1),
       "txnVersion" -> txn.map(_._2), "dvs" -> dvs, "cdf" -> cdf,
@@ -4530,7 +4531,7 @@ object VersionedTable {
   }
   object PreparedCommit {
     def fromJson(line: String): PreparedCommit =
-      MetaJson.decode(line, "unparseable PreparedCommit") { n =>
+      MetaJson.decode(line, "unparseable PreparedCommit", plain = true) { n =>
         import MetaJson._
         PreparedCommit(str(n, "action"), strs(n, "consumed"),
           strs(n, "produced"), opt(n, "basedOn")(long), txnOf(n),

@@ -163,6 +163,42 @@ class MetaFormatSpec extends SparkSpec {
     assert(pins.map(Files.readString) === Seq(pin))
   }
 
+  test("records older writers stored with raw backslashes read back as written") {
+    // those writers never escaped and their readers took every backslash
+    // literally: `\'` is no JSON escape, and JSON would read `\\d` as `\d`
+    val checks = """{"checks":[{"name":"s_ok","expr":"s <> 'it\'s  x'"},""" +
+      """{"name":"digits","expr":"d RLIKE '^\\d+$'"}]}"""
+    val props = """{"properties":[{"name":"graft.mv.where",""" +
+      """"expr":"d RLIKE '^\\d'"},{"name":"note","expr":"C:\temp\new"}]}"""
+    val t = VersionedTable(spark, tmpDir("fmt-raw-"))
+    put(t.root, "_checks.json", checks)
+    put(t.root, "_props.json", props)
+    put(t.root, f"_log/${0}%020d.json", """{"version":0,"tsMillis":1,""" +
+      """"action":"append","fileSets":[],"txnApp":"C:\jobs\nightly","txnVersion":3}""")
+    put(t.root, "_colmap.json", """{"v":0,"drop":"c\x"}""" + "\n")
+    put(t.root, "_pins/0123456789abcdef0123456789abcdef01234567.json",
+      """{"name":"cdc:/ck\new","v":0,"ts":1700000000000}""")
+    val expectedChecks =
+      Seq(("s_ok", """s <> 'it\'s  x'"""), ("digits", """d RLIKE '^\\d+$'"""))
+    val expectedProps = Map("graft.mv.where" -> """d RLIKE '^\\d'""",
+      "note" -> """C:\temp\new""")
+    assert(t.checks === expectedChecks)
+    assert(t.properties === expectedProps)
+    assert(t.lastTxnVersion("""C:\jobs\nightly""") === Some(3L))
+    assert(t.columnDrops === Seq((0L, """c\x""")))
+    assert(t.pinsDetail === Map("""cdc:/ck\new""" -> ((0L, 1700000000000L))))
+    // the stored CHECKs keep their meaning on writes
+    t.append(Seq(("ok", "12")).toDF("s", "d"))
+    intercept[Throwable](t.append(Seq(("it's  x", "12")).toDF("s", "d")))
+    intercept[Throwable](t.append(Seq(("ok", "x12")).toDF("s", "d")))
+    assert(t.read.count() === 1L)
+    // and a rewrite of each registry reads back the same
+    t.dropCheck("absent")
+    t.setProperties(Map.empty)
+    assert(t.checks === expectedChecks)
+    assert(t.properties === expectedProps)
+  }
+
   test("intent lines, including the escaped form older writers used for ']'") {
     val u005d = "\\" + "u005d"
     val old =

@@ -1177,6 +1177,29 @@ class VersionedTableSpec extends SparkSpec {
     assert(m.latestVersion === head)
   }
 
+  test("metadata that needs JSON escapes is written marked and reads back; " +
+       "an undecodable pin fails loudly") {
+    val t = VersionedTable(spark, tmpDir("vt-escaped-"))
+    t.append(Seq(("12", "a")).toDF("d", "s"))
+    t.addCheck("digits", """d RLIKE '^\\d+$'""")
+    t.setProperties(Map("note" -> "C:\\temp\tx"))
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(t.root,
+      "_checks.json")) === """{"checks":[{"name":"digits",""" +
+      """"expr":"d RLIKE '^\\\\d+$'"}],"escaped":true}""")
+    assert(t.checks === Seq(("digits", """d RLIKE '^\\d+$'""")))
+    assert(t.properties === Map("note" -> "C:\\temp\tx"))
+    intercept[Throwable](t.append(Seq(("x", "b")).toDF("d", "s")))
+    assert(t.read.count() === 1L)
+
+    t.setPinAt("cdc:/ck\\x", 0L, 1L)
+    assert(t.pinsDetail === Map("cdc:/ck\\x" -> ((0L, 1L))))
+    val pin = java.nio.file.Files.list(java.nio.file.Paths.get(t.root, "_pins"))
+      .iterator().asScala.toList.head
+    java.nio.file.Files.writeString(pin, "{\"name\":")
+    val e = intercept[RuntimeException](t.pinsDetail)
+    assert(e.getMessage.contains("bad record"), e.getMessage)
+  }
+
   test("CHECK constraints refuse violating writes, Delta-style") {
     val t = VersionedTable(spark, tmpDir("vt-check-"))
     t.append(Seq((1, 10L)).toDF("id", "price"))
