@@ -207,4 +207,92 @@ class MaintainedSpec extends SparkSpec {
     assert(mv.latestVersion.get === before + 1)
     assert(mv.read.select("g").as[String].collect().toSet === Set("g0", "g1"))
   }
+
+  /** The join family through the same ladder: a single-dim join MV
+    * (`fact ⋈ dim` on `t`, grouped on the dim's `color`; the dim's
+    * `t = 4` row has a NULL color and no fact rows) built fresh per
+    * history shape. After `shape` and one REFRESH: the mode, no MV
+    * commit for a `noop` (or any refresh, with `noCommit`), both
+    * covered-version properties at their sides' heads, and the state a
+    * rebuild of the join would produce. */
+  private def joinLadder(expected: String, feed: Boolean = true,
+                         withMax: Boolean = false, noCommit: Boolean = false)
+                        (shape: (VersionedTable, VersionedTable, VersionedTable,
+                          () => String) => Unit): Unit = {
+    val root = tmpDir("graft-ladder-join-")
+    val fact = VersionedTable(spark, s"$root/fact")
+    val dim = VersionedTable(spark, s"$root/dim")
+    val mv = VersionedTable(spark, s"$root/mv")
+    if (feed) { fact.enableChangeFeed(); dim.enableChangeFeed() }
+    fact.append(rows(0, 300).withColumn("t", (col("v") % 4).cast("int"))
+      .drop("g"))
+    dim.append(Seq[(Int, String)]((0, "red"), (1, "blue"), (2, "red"),
+      (3, "gold"), (4, null)).toDF("t", "color"))
+    val aggs = Seq(MvRewrite.AggSpec("sum", "v", "s"),
+      MvRewrite.AggSpec("count", "v", "n_v"),
+      MvRewrite.AggSpec("count", "*", "n")) ++
+      (if (withMax) Seq(MvRewrite.AggSpec("max", "v", "m")) else Nil)
+    JoinMv.create(fact, dim, Seq(("t", "t")), Seq("color"), aggs, mv)
+    val view = Seq(col("color"), col("s"), col("n_v"), col("n")) ++
+      (if (withMax) Seq(col("m")) else Nil)
+    def rebuild: DataFrame = fact.read.join(dim.read, "t").groupBy("color")
+      .agg(sum("v").as("s"), count("v").as("n_v"), count(lit(1)).as("n"),
+        max("v").as("m"))
+    try {
+      shape(fact, dim, mv, () => JoinMv.refresh(spark, mv))
+      val before = mv.latestVersion
+      val mode = JoinMv.refresh(spark, mv)
+      assert(mode === expected, "join mode")
+      if (mode == "noop" || noCommit)
+        assert(mv.latestVersion === before, "join: no MV commit")
+      assert(mv.properties(JoinMv.FactVersionProp).toLong ===
+        fact.latestVersion.get, "join covered fact version")
+      assert(mv.properties(JoinMv.DimVersionProp).toLong ===
+        dim.latestVersion.get, "join covered dim version")
+      assert(mv.read.select(view: _*).collect().toSet ===
+        rebuild.select(view: _*).collect().toSet,
+        "join state must equal a rebuild")
+    } finally MvRewrite.deregister(mv)
+  }
+
+  test("join ladder: every history shape takes the rung the single-source " +
+       "ladder's rules give a fact⋈dim rollup, covering both heads") {
+    def factRows(tag: Int, n: Int, t: Int): DataFrame =
+      rows(tag, n).select(lit(t).as("t"), col("v"))
+    joinLadder("noop")((_, _, _, _) => ())
+    joinLadder("noop")((fact, _, _, _) => { fact.compact(); () })
+    joinLadder("noop")((_, dim, _, _) => { dim.compact(); () })
+    joinLadder("cdf")((fact, _, _, _) => { fact.append(factRows(1, 60, 1)); () })
+    joinLadder("full", feed = false)((fact, _, _, _) => {
+      fact.append(factRows(1, 60, 1)); ()
+    })
+    joinLadder("full")((fact, _, _, _) => {
+      fact.append(factRows(2, 30, 4)); ()  // t = 4 joins the NULL color
+    })
+    joinLadder("cdf")((fact, _, _, _) => {
+      fact.delete(col("v") < 20L)
+      fact.delete(col("t") === 1)          // blue vanishes
+      ()
+    })
+    joinLadder("groups", withMax = true)((fact, _, _, _) => {
+      fact.delete(col("v") < 20L)
+      fact.delete(col("t") === 1)
+      ()
+    })
+    joinLadder("cdf", noCommit = true)((fact, _, _, _) => {
+      fact.delete(col("v") < -1L); ()
+    })
+    joinLadder("cdf-dims")((_, dim, _, _) => {
+      dim.update(Map("color" -> lit("blue")), col("t") === 0)
+      dim.delete(col("t") === 3)
+      ()
+    })
+    joinLadder("noop")((fact, _, mv, refresh) => {
+      val covered = mv.properties(JoinMv.FactVersionProp)
+      fact.append(factRows(3, 60, 2))
+      assert(refresh() === "cdf")
+      // the crash window: the merge committed, the property bump was lost
+      mv.setProperties(Map(JoinMv.FactVersionProp -> covered))
+    })
+  }
 }
