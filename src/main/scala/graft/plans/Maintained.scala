@@ -6,33 +6,39 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
 import graft.ops.Merge
 import graft.tables.{CdfNotExpressible, VersionedTable}
 
-/** The one maintenance driver for single-source rollups — exact SQL
-  * MVs and the HLL, CMS and quantile sketch families. Each family is a
-  * [[Rollup]] spec (partial aggregate, per-column combines, optional
-  * signed partial); this object alone decides HOW a refresh catches the
-  * rollup up with its source:
+/** The one maintenance driver for every rollup family — exact SQL MVs,
+  * join MVs and the HLL, CMS and quantile sketch families. Each family
+  * is a [[Rollup]] spec (partial aggregate, per-column combines,
+  * optional signed partial, per-side row filter and relation); this
+  * object alone decides HOW a refresh catches the rollup up with its
+  * sources, numbered as [[RollupDef]] numbers them (0 is the single
+  * source or a join's fact, `i` ≥ 1 is dim `i-1`):
   *
-  *   - `"noop"`: nothing new, or only data-identical commits
-  *     ([[VersionedTable.CdfNoChangeActions]]);
-  *   - `"incremental"`: an append-only tail absorbs as the partial over
-  *     the added rows, combine-merged (O(appended rows));
+  *   - `"noop"`: nothing new on any side, or only data-identical
+  *     commits ([[VersionedTable.CdfNoChangeActions]]);
+  *   - `"incremental"`: a single source's append-only tail absorbs as
+  *     the partial over the added rows, combine-merged (O(appended
+  *     rows));
   *   - `"cdf"`: retractions with the change feed on, for families whose
   *     state can retract (sum/count/quant histograms) — the signed
-  *     partial over the feed absorbs the same way;
-  *   - `"groups"`: retractions with the feed on for state that cannot
-  *     retract (HLL registers, CMS counters, min/max) — the feed names
-  *     the touched groups, only those recompute ([[mergeTouchedGroups]]);
-  *   - `"full"`: anything else — no feed, a feed-inexpressible slice, or
-  *     NULL group keys in the slice.
+  *     partial over the feed absorbs the same way; `"cdf-dims"` when a
+  *     side ≥ 1 moved too: one telescoped slice per moved side;
+  *   - `"groups"`: side-0 retractions with the feed on for state that
+  *     cannot retract (HLL registers, CMS counters, min/max) — the feed
+  *     names the touched groups, only those recompute
+  *     ([[mergeTouchedGroups]]);
+  *   - `"full"`: anything else — a moved side without a feed, a
+  *     feed-inexpressible slice, NULL group keys in a slice, a side ≥ 1
+  *     snapshot vacuumed from under its pin, or a side ≥ 1 move that
+  *     state without a signed partial cannot absorb.
   *
-  * The mode names the rung the slice's history selects: a slice that
+  * The mode names the rung the sides' history selects: a slice that
   * turns out to carry zero rows (a DML commit that matched nothing, an
   * append a filtered MV's WHERE excludes) keeps its rung's mode and
   * takes no MV commit. Every merge is txn-markered with the covered
-  * version, so a crash replay is a ledger no-op. What a rollup covers
-  * comes from its [[RollupDef]]; the join-MV refresher keeps its own
-  * multi-side ladder but shares [[mergeTouchedGroups]] and the absorb
-  * step. */
+  * version of its side, so a crash replay is a ledger no-op. What a
+  * rollup covers, and the properties that record it, come from its
+  * [[RollupDef]]. */
 object Maintained {
 
   /** A rollup family's on-disk names: covered-version and epoch
@@ -47,21 +53,33 @@ object Maintained {
   final case class Retract(partial: DataFrame => DataFrame,
                            repair: Merge.PostCombine)
 
-  /** One single-source rollup, as its refresh runs it: `defn` is the
-    * stored definition (source, groups, covered version, epoch);
-    * `partial` aggregates a slice into MV-shaped rows (a full recompute
-    * is the partial over the pinned snapshot); `combine` folds a
-    * partial row into the stored one, per non-key column; `slice`
-    * narrows every source read (a filtered MV's WHERE); `afterAppend`
-    * runs after a non-empty append absorb with the (txn app, version)
-    * of its merge. */
-  final case class Rollup(defn: RollupDef.Single, mv: VersionedTable,
+  /** One rollup, as its refresh runs it: `defn` is the stored
+    * definition (sources, groups, covered versions, epoch); `partial`
+    * aggregates a relation into MV-shaped rows (a full recompute is the
+    * partial over every side at its head); `combine` folds a partial row
+    * into the stored one, per non-key column; `slice(i, rows)` narrows
+    * every read of side `i` (a filtered MV's WHERE, a join dim's row
+    * filter); `relate(i, rows, pins)` relates side `i`'s rows to every
+    * other side read at its version in `pins` — a join spec joins there,
+    * one side is its own relation — and may persist `rows`, which the
+    * driver unpersists once the slice is absorbed; `afterAppend` runs
+    * after a non-empty append absorb with the (txn app, version) of its
+    * merge. */
+  final case class Rollup(defn: RollupDef, mv: VersionedTable,
                           partial: DataFrame => DataFrame,
                           combine: Map[String, (Column, Column) => Column],
                           retract: Option[Retract] = None,
-                          slice: DataFrame => DataFrame = identity,
+                          slice: (Int, DataFrame) => DataFrame =
+                            (_, rows) => rows,
+                          relate: (Int, DataFrame, Seq[Long]) => DataFrame =
+                            (_, rows, _) => rows,
                           afterAppend: (String, Long) => Unit =
                             (_, _) => ())
+
+  /** The consumer-pin name a rollup registers on its sources — the
+    * rollup's root IS the name, so SHOW PINS identifies the consumer
+    * directly. */
+  private[graft] def pinName(mv: VersionedTable): String = s"mv:${mv.root}"
 
   /** Pre-REPLACE sweep shared by all rollup creators: drop the old
     * definition's merge bucketing (the overwrite would try to bucket by
@@ -110,7 +128,7 @@ object Maintained {
     mv.overwrite(rows(vs))
     mv.setProperties(props(vs) ++ Map(family.versionProp -> vs.head.toString,
       family.epochProp -> epoch.toString))
-    srcs.zip(vs).foreach { case (s, v) => s.setPin(JoinMv.pinName(mv), v) }
+    srcs.zip(vs).foreach { case (s, v) => s.setPin(pinName(mv), v) }
     vs
   }
 
@@ -121,13 +139,18 @@ object Maintained {
     createFrom(family, Seq(src), mv, _ => props)(vs =>
       partial(src.readVersion(vs.head))).head
 
-  /** Catch `r` up with its source; returns (mode, covered version). */
-  def refresh(r: Rollup): (String, Long) = {
-    val (src, groupCols) = (r.defn.src, r.defn.groupCols)
-    // the txn app every maintenance merge carries: family prefix,
-    // CREATE epoch, MV root
-    val app = r.defn.family.txnPrefix + r.defn.epoch + ":" + r.mv.root
-    val vProp = r.defn.version
+  /** Catch `r` up with its sources; returns the mode and the covered
+    * versions, by side. */
+  def refresh(r: Rollup): (String, Seq[Long]) = {
+    val d = r.defn
+    val (srcs, groupCols) = (d.sources, d.groupCols)
+    // the txn app every maintenance merge of a side carries: family
+    // prefix, CREATE epoch, MV root, and `:dim<i-1>` on side i ≥ 1 — one
+    // ledger per side, so a crash anywhere in a slice sequence resumes
+    // with every already-absorbed side advanced (side 0 keeps the
+    // unsuffixed name existing ledgers resume from)
+    val apps = srcs.indices.map(i => d.family.txnPrefix + d.epoch + ":" +
+      r.mv.root + (if (i == 0) "" else s":dim${i - 1}"))
     // exactly-once across crash+retry: the txn ledger is the record of
     // the last slice actually ABSORBED. A crash between a merge commit
     // and the covered-version bump leaves the ledger ahead of the
@@ -136,22 +159,37 @@ object Maintained {
     // passes the replay guard and double-counts the merged prefix.
     // Resuming from max(property, ledger) applies only the uncovered
     // tail; when they agree this is the property.
-    val ledgerV = r.mv.lastTxnVersion(app)
-    val v0 = math.max(vProp, ledgerV.getOrElse(vProp))
+    val ledger = apps.map(r.mv.lastTxnVersion)
+    val v0 = d.covered.zip(ledger).map { case (c, l) =>
+      math.max(c, l.getOrElse(c)) }
     // ledger-healed resume of a retractable rollup: a slice committed
     // by an older binary ran its emptied-group repair OUTSIDE the
     // marker, and a resume that reads that slice as covered would keep
     // serving its phantoms — entry is the one place left to repair them
-    if (ledgerV.exists(_ > vProp)) r.retract.foreach(x => sweep(r.mv, x.repair))
-    // ONE history read: the covered version and the slice maintained
-    // over must agree even while concurrent writers advance the head.
-    // Every rung reads the PINNED range (v0, head] — never the live
-    // head — so concurrent commits stay uncovered until the next refresh
-    val hist = src.history
-    val head = hist.lastOption.map(_.version).getOrElse(v0)
-    val later = hist.filter(e => e.version > v0 && e.version <= head)
+    if (ledger.zip(d.covered).exists { case (l, c) => l.exists(_ > c) })
+      r.retract.foreach(x => sweep(r.mv, x.repair))
+    // ONE history read per side: the covered versions and the slices
+    // maintained over must agree even while concurrent writers advance
+    // the heads. Every rung reads PINNED ranges (v0, head] — never a
+    // live head — so concurrent commits stay uncovered until the next
+    // refresh
+    val hists = srcs.map(_.history)
+    val heads = hists.zip(v0).map { case (h, v) =>
+      h.lastOption.map(_.version).getOrElse(v) }
+    val later = srcs.indices.map(i =>
+      hists(i).filter(e => e.version > v0(i) && e.version <= heads(i)))
+    // the shared set INCLUDES rename/drop-column: the DDL guards refuse
+    // touching keyed columns and re-key agg inputs, so those commits are
+    // metadata-only on any side
+    val moved = later.map(_.exists(e =>
+      !VersionedTable.CdfNoChangeActions(e.action)))
+    // where each side is read while relating slices: a side that did not
+    // move reads at its head, data-identical to its pin
+    val pins = srcs.indices.map(i => if (moved(i)) v0(i) else heads(i))
+    val src = srcs.head
     def full(): String = {
-      r.mv.overwrite(r.partial(r.slice(src.readVersion(head))))
+      r.mv.overwrite(r.partial(
+        r.relate(0, r.slice(0, src.readVersion(heads(0))), heads)))
       "full"
     }
     // only the curated refusals (a feed-inexpressible slice: overwrite/
@@ -160,45 +198,82 @@ object Maintained {
     // masking a misconfiguration as a recompute would hide the bug
     def orFull(rung: => String): String =
       try rung catch { case _: CdfNotExpressible => full() }
-    val txn = Some((app, head))
+    def feed(i: Int): DataFrame =
+      r.slice(i, srcs(i).readChangeFeed(pins(i), Some(heads(i))))
+    // telescoped per-side slices, side 0 first: the rollup's invariant
+    // is its state over every side at its pin; each slice advances ONE
+    // side to its head, related to every other side at its CURRENT pin,
+    // so the sequence composes to the all-heads state whatever subset
+    // moved (the relation distributes over either side's row-set delta)
+    def telescope(x: Retract): String = {
+      val at = pins.toArray
+      val slices = srcs.indices.filter(moved)
+      slices.foreach { i =>
+        val rows = feed(i)
+        try absorb(r.mv, x.partial(r.relate(i, rows, at.toSeq)), groupCols,
+            r.combine, Some((apps(i), heads(i))), Some(x.repair))
+        finally { rows.unpersist(); () }
+        at(i) = heads(i)
+        // each pin advance is DURABLE before the next slice starts: the
+        // merge's txn marker covers a non-empty slice, and this bump
+        // alone covers an EMPTY one — it writes no marker, and without
+        // the bump a crash after a LATER side's merge would replay it
+        // against that side's ADVANCED pin, absorbing a cross-term twice
+        // (an empty ΔF ⋈ D@old can be non-empty as ΔF ⋈ D@new)
+        if (i != slices.last) r.mv.setProperties(d.coveredProps(at.toSeq))
+      }
+      if (moved.tail.contains(true)) "cdf-dims" else "cdf"
+    }
     val out =
-      if (later.forall(e => VersionedTable.CdfNoChangeActions(e.action))) "noop"
+      if (!moved.contains(true)) "noop"
       // readAddedBetween reads exactly the appended rows under the
       // CURRENT column mapping; addedSetsLive guards the rare vacuum-
       // reclaimed-original case into the fallback
-      else if (later.forall(e => e.action == "append" ||
-          VersionedTable.CdfNoChangeActions(e.action)) &&
-          src.addedSetsLive(v0, head)) orFull {
-        if (absorb(r.mv, r.partial(r.slice(src.readAddedBetween(v0, head))),
-            groupCols, r.combine, txn) > 0L)
-          r.afterAppend(app, head)
+      else if (srcs.size == 1 && later.head.forall(e =>
+          e.action == "append" ||
+            VersionedTable.CdfNoChangeActions(e.action)) &&
+          src.addedSetsLive(v0.head, heads.head)) orFull {
+        if (absorb(r.mv, r.partial(r.slice(0,
+            src.readAddedBetween(v0.head, heads.head))),
+            groupCols, r.combine, Some((apps.head, heads.head))) > 0L)
+          r.afterAppend(apps.head, heads.head)
         "incremental"
       }
-      else if (!src.changeFeedEnabled) full()
-      else orFull {
-        val feed = r.slice(src.readChangeFeed(v0, Some(head)))
-        r.retract match {
-          case Some(x) =>
-            absorb(r.mv, x.partial(feed), groupCols, r.combine, txn,
-              Some(x.repair))
-            "cdf"
-          case None =>
-            mergeTouchedGroups(r.mv,
-              feed.select(groupCols.map(col): _*).distinct(),
-              r.slice(src.readVersion(head)), groupCols, r.partial,
-              r.combine.keys.toSeq, app, head)
-            "groups"
+      else if (srcs.indices.exists(i =>
+          moved(i) && !srcs(i).changeFeedEnabled)) full()
+      // clean degrade: a side ≥ 1 snapshot vacuumed out from under its
+      // pin (operator VACUUM … IGNORE PINS, or retention that ran before
+      // the rollup registered its pins) cannot serve the related reads —
+      // recompute from the heads, which re-advances every pin past the
+      // damage. Checked while PLANNING, so no slice merge ever starts
+      // against a half-readable side
+      else if (srcs.indices.tail.exists(i =>
+          !srcs(i).snapshotLive(pins(i)))) full()
+      else r.retract match {
+        case Some(x) => orFull(telescope(x))
+        // state that cannot retract absorbs a side ≥ 1 move only by
+        // recomputing every group it touches — all of them, in general
+        case None if moved.tail.contains(true) => full()
+        case None => orFull {
+          mergeTouchedGroups(r.mv,
+            r.relate(0, feed(0), pins).select(groupCols.map(col): _*)
+              .distinct(),
+            r.relate(0, r.slice(0, src.readVersion(heads(0))), pins),
+            groupCols, r.partial, r.combine.keys.toSeq, apps.head, heads.head)
+          "groups"
         }
       }
     // bump on PROPERTY lag, not on mode: a ledger-healed retry whose
     // uncovered tail is empty reads as noop but must still repair the
-    // stale property. The retention floor advances with it (a crash
+    // stale property. The retention floors advance with it (a crash
     // before this just retains more until the next refresh).
-    if (head > vProp)
-      r.mv.setProperties(Map(r.defn.family.versionProp -> head.toString))
-    if (hist.exists(_.version == head))
-      src.setPin(JoinMv.pinName(r.mv), head)
-    (out, head)
+    if (heads.zip(d.covered).exists { case (h, c) => h > c })
+      r.mv.setProperties(d.coveredProps(heads))
+    srcs.indices.foreach { i =>
+      if (hists(i).exists(_.version == heads(i)))
+        srcs(i).setPin(pinName(r.mv), heads(i))
+    }
+    (out, heads)
   }
 
   /** ONE full-consumption pass over a PERSISTED group-count-sized

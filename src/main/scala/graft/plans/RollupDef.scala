@@ -36,6 +36,15 @@ sealed trait RollupDef {
   def rekey(from: String, to: String): Map[String, String]
   /** The stored `(fn, col, out)` agg specs (the MV families'). */
   def aggs: Seq[(String, String, String)] = Nil
+  /** The rollup's group columns. */
+  def groupCols: Seq[String]
+  /** The CREATE epoch namespacing the rollup's txn ledger. */
+  def epoch: String
+  /** The family's on-disk names. */
+  def family: Maintained.Family
+  /** The covered-version properties recording `vs`, by side. */
+  def coveredProps(vs: Seq[Long]): Map[String, String] =
+    Map(family.versionProp -> vs.head.toString)
 
   /** Every source exists and its head is still the covered version:
     * REFRESH would be a noop and routing is armable. */
@@ -50,13 +59,10 @@ sealed trait RollupDef {
 
 object RollupDef {
 
-  /** A single-source rollup, caught up by [[Maintained.refresh]]. */
+  /** A single-source rollup. */
   sealed trait Single extends RollupDef {
     def src: VersionedTable
-    def groupCols: Seq[String]
     def version: Long
-    def epoch: String
-    def family: Maintained.Family
     def label: String = family.label
     def sources: Seq[VersionedTable] = Seq(src)
     def covered: Seq[Long] = Seq(version)
@@ -86,14 +92,19 @@ object RollupDef {
   }
 
   /** A join MV ([[JoinMv]]): the fact, and each dim with its keys and
-    * optional row filter, every side with its own covered version. */
+    * optional row filter, every side with its own covered version
+    * (the fact's in the family's version property, the dims' `;`-joined
+    * in [[JoinMv.DimVersionProp]]). */
   final case class Join(fact: VersionedTable, dims: Seq[JoinMv.DimSide],
                         groupCols: Seq[String],
                         override val aggs: Seq[(String, String, String)],
                         factV: Long, dimVs: Seq[Long], epoch: String)
       extends RollupDef {
+    def family: Maintained.Family = Join.family
     def sources: Seq[VersionedTable] = fact +: dims.map(_.table)
     def covered: Seq[Long] = factV +: dimVs
+    override def coveredProps(vs: Seq[Long]): Map[String, String] =
+      super.coveredProps(vs) + (JoinMv.DimVersionProp -> vs.tail.mkString(";"))
     def label: String = "join materialized view"
     def keyRole: String = "GROUP, JOIN-KEY, or dim-FILTER"
     // a dim filter that fails to parse protects nothing: the next
@@ -106,6 +117,11 @@ object RollupDef {
     def inputs: Set[String] = aggInputs(aggs)
     def rekey(from: String, to: String): Map[String, String] =
       Map(JoinMv.AggsProp -> rekeyAggs(aggs, from, to))
+  }
+
+  object Join {
+    val family: Maintained.Family = Maintained.Family(
+      JoinMv.FactVersionProp, JoinMv.EpochProp, "graft-mvjoin:", 0L, "join MV")
   }
 
   /** An HLL distinct-count rollup ([[Sketches.create]]). */

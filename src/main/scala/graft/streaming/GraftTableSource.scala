@@ -552,9 +552,10 @@ final class GraftTableSink(root: String, appId: String,
     if (aggregate.nonEmpty) {
       // Continuous MV maintenance over a CDF stream: each micro-batch's
       // change rows land as SIGNED deltas into the aggregate table
-      // (same math as REFRESH MATERIALIZED VIEW's cdf path, shared via
-      // GraftSql.applyCdfDelta) — the streaming form of incremental-MV
-      // maintenance: O(changed rows) per trigger, retractions included,
+      // (REFRESH MATERIALIZED VIEW's cdf-rung partial,
+      // GraftSql.mvRetract, absorbed by GraftSql.applyCdfDelta) — the
+      // streaming form of incremental-MV maintenance: O(changed rows)
+      // per trigger, retractions included,
       // exactly-once via the markered merge — the emptied-group delete
       // and sum NULL-fix ride INSIDE that one commit (PostCombine), so
       // a crash replay no-ops the whole trigger atomically and no

@@ -1240,11 +1240,11 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
   }
 
   /** REFRESH MATERIALIZED VIEW mv, dispatched on its stored definition:
-    * a join MV catches up through [[graft.plans.JoinMv]]'s multi-side
-    * ladder; a single-source MV takes the cheapest maintenance the
-    * source's history shape allows, O(changed data) whenever
-    * expressible, through the shared rollup driver
-    * ([[graft.plans.Maintained.refresh]]):
+    * both a single-source MV and a join MV ([[graft.plans.JoinMv]], one
+    * side per joined table) take the cheapest maintenance their sources'
+    * history allows, O(changed data) whenever expressible, through the
+    * shared rollup driver ([[graft.plans.Maintained.refresh]]). A
+    * single-source MV's rungs:
     *
     *   - append-only tail → delta aggregate over the added rows +
     *     combining bucket-COW merge ("incremental");
@@ -1270,7 +1270,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
   private def refreshMaterializedView(mvIdent: String): DataFrame = {
     import spark.implicits._
     val mv = resolve(mvIdent)
-    val (mode, srcV) = RollupDef.read(spark, mv.properties) match {
+    val (mode, covered) = RollupDef.read(spark, mv.properties) match {
       case Some(d: RollupDef.Join) => graft.plans.JoinMv.maintain(mv, d)
       case Some(d: RollupDef.SqlMv) =>
         GraftSql.registerMvFunctions(spark)
@@ -1279,13 +1279,13 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
             GraftSql.mvAggregate(d.groupCols, d.aggs),
             GraftSql.mvCombines(d.aggs),
             retract = GraftSql.mvRetract(d.groupCols, d.aggs),
-            slice = df => d.where.fold(df)(p => df.filter(expr(p)))))
-        armMvRewrite(mv, d.copy(version = out._2))
+            slice = (_, df) => d.where.fold(df)(p => df.filter(expr(p)))))
+        armMvRewrite(mv, d.copy(version = out._2.head))
         out
       case _ => sys.error(s"$mvIdent is not a materialized view (no " +
         s"${GraftSql.MvSourceProp} property)")
     }
-    Seq((mvIdent, mode, srcV)).toDF("mv", "mode", "source_version")
+    Seq((mvIdent, mode, covered.head)).toDF("mv", "mode", "source_version")
   }
 
   /** Columns the table's OWN governance policies reference: masked
@@ -1862,7 +1862,7 @@ final class GraftSql(spark: SparkSession, catalog: Option[Catalog]) {
       if (t.exists)
         RollupDef.tryRead(spark, t.properties).toSeq
           .flatMap(_.sources.distinctBy(_.root)).foreach { src =>
-            try src.dropPin(graft.plans.JoinMv.pinName(t))
+            try src.dropPin(graft.plans.Maintained.pinName(t))
             catch { case scala.util.control.NonFatal(_) => () }
           }
       cat.dropTable(layer, name)
@@ -2680,14 +2680,14 @@ object GraftSql {
     }
 
   /** Apply one slice of a row-level change feed to an MV table as
-    * SIGNED deltas through the shared absorb step — used by the join-MV
-    * refresher (each telescoped slice) and the `graft-table` sink's
-    * `aggregate` mode (one micro-batch per call, `txn`-markered for
-    * exactly-once replay). O(changed rows) + the touched MV cells; the
-    * emptied-group drop and sum NULL-fix ride INSIDE the markered merge
-    * commit ([[mvRetract]]), so a replayed batch no-ops the whole thing
-    * atomically. An empty slice commits nothing; NULL group keys throw
-    * [[CdfNotExpressible]] (REFRESH recomputes, the sink surfaces it). */
+    * SIGNED deltas through the shared absorb step — the `graft-table`
+    * sink's `aggregate` mode (one micro-batch per call, `txn`-markered
+    * for exactly-once replay); REFRESH absorbs its slices inside
+    * [[graft.plans.Maintained.refresh]]. O(changed rows) + the touched
+    * MV cells; the emptied-group drop and sum NULL-fix ride INSIDE the
+    * markered merge commit ([[mvRetract]]), so a replayed batch no-ops
+    * the whole thing atomically. An empty slice commits nothing; NULL
+    * group keys throw [[CdfNotExpressible]] (the sink surfaces it). */
   private[graft] def applyCdfDelta(mv: VersionedTable, feed: DataFrame,
                                    groupCols: Seq[String],
                                    aggs: Seq[(String, String, String)],
@@ -2709,8 +2709,9 @@ object GraftSql {
     * ([[mvRetract]]'s in-commit repair as probe-guarded commits). It
     * runs only where a slice committed by an older binary — whose
     * process died between the markered merge and the then-separate
-    * follow-ups — could have left phantoms: REFRESH entry on a
-    * ledger-healed resume, and a CDF sink's first trigger. */
+    * follow-ups — could have left phantoms: a CDF sink's first trigger
+    * (REFRESH sweeps with the same repair on a ledger-healed resume,
+    * inside [[graft.plans.Maintained.refresh]]). */
   private[graft] def sweepCdfPhantoms(mv: VersionedTable,
       aggs: Seq[(String, String, String)]): Unit =
     mvRetract(Nil, aggs).foreach(x => graft.plans.Maintained.sweep(mv, x.repair))

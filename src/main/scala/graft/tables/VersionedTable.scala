@@ -2230,17 +2230,28 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
 
   // ------------------------------------------------------- file-set stats
 
-  /** Delta-style data skipping: per-file-set min/max of declared columns,
-    * written as a sidecar at append time (one tiny agg over the NEW
-    * file-set only — O(new data)), consumed by [[readRange]] to prune
-    * whole file-sets without opening them. Values are URL-encoded so any
-    * string content round-trips; numeric columns compare numerically,
-    * everything else lexically (correct for ISO dates/timestamps). */
-  /** One grouped pass over ALL the new file-sets (they share a schema —
-    * written together): min/max AND bloom sketches per (file-set,
-    * column) from a single job instead of one read+agg+collect per
-    * sidecar kind — rewrite paths regenerate both coverages without
-    * scanning the new data twice. */
+  /** Delta-style data skipping, in ONE grouped pass over ALL the new
+    * file-sets (they share a schema — written together): min/max AND
+    * bloom sketches per (file-set, column) from a single job instead of
+    * one read+agg+collect per sidecar kind — rewrite paths regenerate
+    * both coverages without scanning the new data twice.
+    *
+    * Min/max stats (the `_fstats.tsv` sidecar, O(new data)) are consumed
+    * by [[readRange]] to prune whole file-sets without opening them.
+    * Values are URL-encoded so any string content round-trips; numeric
+    * columns compare numerically, everything else lexically (correct for
+    * ISO dates/timestamps).
+    *
+    * Bloom sketches are the Delta bloom-filter-index analog, consumed by
+    * [[readEquals]] to prune file-sets for point lookups on UNSORTED
+    * high-cardinality columns — exactly where min/max stats overlap
+    * everything and help nothing. They are Spark's own
+    * BloomFilterAggregate — the aggregate the optimizer injects for
+    * runtime join filters — over `xxhash64(column)`; probes hash through
+    * the identical expression, type-cast first (xxhash64 is
+    * type-sensitive, like the bucket routing). ~[[DefaultBloomItems]]
+    * capacity at [[DefaultBloomFpp]] ≈ 0.9 MB per (file-set, column):
+    * metadata-scale next to the data it prunes. */
   private def writeSkippingSidecars(fileSets: Seq[String],
                                     statsRequested: Seq[String],
                                     bloomRequested: Seq[String],
@@ -2415,24 +2426,6 @@ final class VersionedTable(val spark: SparkSession, val root: String) {
   }
 
   // ---------------------------------------------------- bloom sidecars
-
-  /** Delta bloom-filter-index analog: per-file-set Bloom sketches over
-    * declared columns, consumed by [[readEquals]] to prune file-sets for
-    * point lookups on UNSORTED high-cardinality columns — exactly where
-    * min/max stats overlap everything and help nothing (an id scattered
-    * uniformly makes every file-set's [min,max] cover every probe).
-    * Built in ONE grouped job over the new file-sets (the same pass
-    * shape as [[writeStatsSidecars]]) via Spark's own
-    * BloomFilterAggregate — the aggregate the optimizer injects for
-    * runtime join filters — over `xxhash64(column)`; probes hash through
-    * the identical expression, type-cast first (xxhash64 is
-    * type-sensitive, like the bucket routing). ~[[DefaultBloomItems]]
-    * capacity at [[DefaultBloomFpp]] ≈ 0.9 MB per (file-set, column):
-    * metadata-scale next to the data it prunes. */
-  private def writeBloomSidecars(fileSets: Seq[String], columns: Seq[String],
-                                 expectedItems: Long = DefaultBloomItems,
-                                 fpp: Double = DefaultBloomFpp): Unit =
-    writeSkippingSidecars(fileSets, Nil, columns, expectedItems, fpp)
 
   private def readBloomSidecar(fileSet: String, column: String,
                                legacyOk: Boolean) = {
